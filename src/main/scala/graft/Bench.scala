@@ -1,41 +1,65 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 
 /** Benchmark main: runs the headline queries against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line. Each
   * query is fully materialized through a noop sink (count() would let
   * Catalyst prune the compute columns). */
 object Bench {
+  /** The quiet anchors in `path`: tier key → sentinel floor. A missing
+    * or unreadable file reads as no anchors. */
+  private[graft] def readAnchors(path: Path): Map[String, Double] =
+    try {
+      if (!Files.isRegularFile(path)) Map.empty
+      else new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
+        .linesIterator.flatMap { l =>
+          l.split("\t") match {
+            case Array(k, v) => Some(k -> v.toDouble)
+            case _ => None
+          }
+        }.toMap
+    } catch { case _: Throwable => Map.empty }
+
+  /** Min-merges `floor` into the anchor for `key` in `path`. The
+    * read-modify-write holds an exclusive lock on a sibling lock file
+    * (file locks are per JVM, so threads also serialize on this
+    * object), so concurrent benches cannot lose each other's anchor;
+    * the new content lands by an atomic rename of a temp file, so a
+    * reader never sees a torn file (which would read as no anchor). */
+  private[graft] def mergeAnchor(path: Path, key: String, floor: Double)
+      : Unit = synchronized {
+    Files.createDirectories(path.getParent)
+    val lock = FileChannel.open(
+      path.resolveSibling(path.getFileName.toString + ".lock"),
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try {
+      lock.lock()
+      val m = readAnchors(path)
+      val merged =
+        m.updated(key, math.min(m.getOrElse(key, Double.MaxValue), floor))
+      val tmp = Files.createTempFile(path.getParent,
+        path.getFileName.toString, ".tmp")
+      try {
+        Files.write(tmp, merged.toSeq.sorted.map { case (k, v) => s"$k\t$v" }
+          .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+        Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+      } finally Files.deleteIfExists(tmp)
+    } finally lock.close() // releases the lock
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus()
     // optional comma-separated subset (scale-tier runs time only the
     // heavyweights)
     val wanted = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
     val benchSet = SparkEntry.benchQueries
       .filter(q => wanted.forall(_.contains(q)))
-    // Shuffle partitions must SCALE WITH DATA, not cores: at sf100 a
-    // 32-partition shuffle packs ~10× the per-task data of sf10 and
-    // spills (q41 sf100 diagnosis — 89.6 → 47.0 s best repeat at 256).
-    // Sized the way a cluster sizes it: tier bytes ÷ 128 MB target
-    // partition, floored at the core count (sf0.1–sf10 land exactly on
-    // the old core-count value, so small-tier artifacts are unchanged).
-    // SPARK_GRAFT_SHUFFLE overrides for experiments.
-    val tierBytes = {
-      val dir = java.nio.file.Paths.get(sfDir)
-      if (!java.nio.file.Files.isDirectory(dir)) 0L
-      else {
-        val s = java.nio.file.Files.walk(dir)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-    }
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(cpus.toInt, math.min(2048L,
-        tierBytes / (128L << 20) + 1).toInt).toString)
+    val tierBytes = GraftSession.tierBytes(sfDir)
     // Tier fingerprint: (relative path, size, head+tail content blocks)
     // of every file under the tier dir, hashed — cross-round ratio
     // moves then separate CODE from DATA (the r16 q68 attribution
@@ -79,50 +103,14 @@ object Bench {
         md.digest().map("%02x".format(_)).mkString.take(16)
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bench tiers write fact tables as 32×~44 MB files; the 128 MB
-      // default packs ~3 files per scan task (1/3 parallelism on 32
-      // cores). ≤44 MB keeps one file per task — q06 sf10 2.2× → ~1.3×
-      // (Sweep06). Production rule: maxPartitionBytes ≤ file size so a
-      // scan fans out to ≥ the core count.
-      .config("spark.sql.files.maxPartitionBytes", "32m")
-      // shuffle files are only reclaimed when the driver GCs the stage
-      // objects (ContextCleaner); with a 24g heap and a multi-query
-      // session, full GCs are rare enough that a decade-tier basket
-      // accumulated 37 GB of dead shuffle files and ENOSPC'd q42 at
-      // sf100 (r11). The default periodicGC is 30min — longer than the
-      // whole basket; 2min bounds dead-shuffle residency at tier scale.
-      .config("spark.cleaner.periodicGC.interval", sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
-      // Tier-adaptive shuffle codec. zstd blocks are ~35% smaller than
-      // lz4 for the dedup queries' hash-key streams — at the decade
-      // tier q42's verification spill is disk-bound, so the smaller
-      // blocks are the difference between finishing and ENOSPC. But at
-      // the committed small tiers nothing spills and zstd's extra CPU
-      // is a pure tax on every shuffle block (r11 A/B at sf0.1: +4-10%
-      // on the shuffle-heavy rows). The codec is context-level (not
-      // settable per-query via SQLConf), so pick by tier size: disk
-      // pressure only exists when the tier is within ~2 decades of
-      // free disk. SPARK_GRAFT_CODEC overrides for experiments.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC",
-          if (tierBytes >= (4L << 30)) "zstd" else "lz4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.DuckAliases.register(spark)
+    val spark = GraftSession.tierSized(cpus, sfDir)
     // JVM + codegen warmup on the smallest sf, so measured numbers are the
     // steady-state throughput a long-lived cluster session would see.
     // production formulation per query: the override map swaps in the
     // sketch-only q94 (audit excluded — it's per-snapshot, not per-query);
     // each query runs under its execution profile (NamedQuery.conf)
     def runQuery(name: String, dir: String): Unit =
-      graft.operators.NamedQuery.withConf(spark,
-        SparkEntry.queryConf.getOrElse(name, Map.empty)) {
+      SparkEntry.withProfile(spark, name) {
         SparkEntry.benchOverrides.getOrElse(name, SparkEntry.queries(name))
           .apply(spark, dir)
           .write.mode("overwrite").format("noop").save()
@@ -243,19 +231,7 @@ object Bench {
     val baselinePath = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_floor_baseline.txt")
     val baselineKey = s"$sfDir@$tierHash"
-    def readBaseline(): Map[String, Double] =
-      try {
-        if (!java.nio.file.Files.isRegularFile(baselinePath)) Map.empty
-        else new String(java.nio.file.Files.readAllBytes(baselinePath),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .linesIterator.flatMap { l =>
-            l.split("\t") match {
-              case Array(k, v) => Some(k -> v.toDouble)
-              case _ => None
-            }
-          }.toMap
-      } catch { case _: Throwable => Map.empty }
-    val baseFloor: Option[Double] = readBaseline().get(baselineKey)
+    val baseFloor: Option[Double] = readAnchors(baselinePath).get(baselineKey)
     // The certification floor is the LOWER QUARTILE of all calibration
     // points, not the sample minimum. The min of N medians is a
     // biased-low order statistic that keeps tightening as passes add
@@ -355,16 +331,8 @@ object Bench {
     // (SPARK_GRAFT_QUERIES experiments) never seed it — their shorter
     // warmup would anchor future gates on an under-warmed sentinel.
     if (!contended && wanted.isEmpty)
-      try {
-        val m = readBaseline()
-        val merged = m.updated(baselineKey,
-          math.min(m.getOrElse(baselineKey, Double.MaxValue), calFloor))
-        java.nio.file.Files.createDirectories(baselinePath.getParent)
-        java.nio.file.Files.write(baselinePath,
-          merged.toSeq.sorted.map { case (k, v) => s"$k\t$v" }
-            .mkString("", "\n", "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch { case e: Throwable =>
+      try mergeAnchor(baselinePath, baselineKey, calFloor)
+      catch { case e: Throwable =>
         System.err.println(s"[bench] baseline write failed: ${e.getMessage}")
       }
     // per-query load stamps: each row is certifiable on its own terms

@@ -450,15 +450,8 @@ object Engine {
     * here is local-mode-specific. */
   def start(master: String = "local[4]", appName: String = "graft",
       shufflePartitions: Int = 32): Engine =
-    apply(SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    apply(GraftSession.open(
+      GraftSession.builder(master, shufflePartitions).appName(appName)))
 
   def apply(spark: SparkSession): Engine = {
     graft.functions.DuckAliases.register(spark)

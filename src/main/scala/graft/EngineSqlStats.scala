@@ -105,35 +105,41 @@ private[graft] trait EngineSqlStats { self: Engine =>
         history.add((q, durNs / 1000L))
         df
       case None =>
-        val df0 = parseStatement(q)
-        // engine plan rewrites run on the ANALYZED plan — after the main
-        // optimizer they would miss filters it already collapsed into
-        // literal relations: (1) covered aggregates re-target fresh
-        // materialized aggregates; (2) enum declaration-order semantics
-        // (ORDER BY / MIN / MAX / comparisons)
-        val analyzed0 = castToImpl(df0).queryExecution.analyzed
-        var plan = analyzed0
-        // bare COUNT(*)/integer MIN/MAX over an unmodified
-        // path-registered parquet table folds to footer statistics —
-        // metadata, no scan job
-        plan = graft.plans.FooterAggRewrite.rewrite(plan, this)
-        if (freshMatViews.nonEmpty)
-          plan = graft.plans.MatViewRewrite.rewrite(plan, this)
-        if (!(enumCols.isEmpty && typeOrigins.isEmpty))
-          plan = graft.plans.EnumOrderRewrite.rewrite(plan, this)
-        val df =
-          if (plan eq analyzed0) df0
-          else org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
+        val df = planStatement(q)
         val qe = castToImpl(df).queryExecution
         pending.put(qe.analyzed.semanticHash().toLong, (q, qe))
         df
     }
   }
 
+  /** A non-routed statement as the (lazy) DataFrame execution runs:
+    * [[parseStatement]], then the engine's plan rewrites. Shared by
+    * [[sql]] and [[explain]], so a query is explained in the mode it
+    * is recorded in. The rewrites run on the ANALYZED plan — after the
+    * main optimizer they would miss filters it already collapsed into
+    * literal relations. */
+  private def planStatement(q: String): DataFrame = {
+    val df0 = parseStatement(q)
+    val analyzed0 = castToImpl(df0).queryExecution.analyzed
+    var plan = analyzed0
+    // bare COUNT(*)/integer MIN/MAX over an unmodified path-registered
+    // parquet table folds to footer statistics — metadata, no scan job
+    plan = graft.plans.FooterAggRewrite.rewrite(plan, this)
+    // covered aggregates re-target fresh materialized aggregates
+    if (freshMatViews.nonEmpty)
+      plan = graft.plans.MatViewRewrite.rewrite(plan, this)
+    // enum declaration-order semantics (ORDER BY / MIN / MAX /
+    // comparisons)
+    if (!(enumCols.isEmpty && typeOrigins.isEmpty))
+      plan = graft.plans.EnumOrderRewrite.rewrite(plan, this)
+    if (plan eq analyzed0) df0
+    else org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
+  }
+
   /** Parse a non-routed statement to a (lazy) DataFrame, applying the
     * engine's literal-spelling rewrites and relation substitutions
-    * (time travel, `table_changes`) — shared by [[sql]] and [[explain]]
-    * so classification sees exactly the surface execution sees.
+    * (time travel, `table_changes`); [[planStatement]] applies the
+    * plan rewrites on top.
     * DuckDB literal spellings Spark's parser rejects: hex-escape BLOB
     * casts, ::UUID, >38-digit integer literals; multi-unit INTERVAL
     * literals only when the engine actually owns interval columns. */
@@ -204,7 +210,7 @@ private[graft] trait EngineSqlStats { self: Engine =>
         .toDF("sql", "execution_mode", "merge_strategy",
           "num_tasks", "plan")
     }
-    val qe = castToImpl(parseStatement(q)).queryExecution
+    val qe = castToImpl(planStatement(q)).queryExecution
     val rows = scanRows(qe)
     val workers = workerCount
     val mode = PlanClassifier.executionMode(qe, rows, workers)

@@ -41,6 +41,11 @@ object SparkEntry {
   def queryConf: Map[String, Map[String, String]] =
     all.filter(_.conf.nonEmpty).map(q => q.name -> q.conf).toMap
 
+  /** Run `body` (which builds or executes query `name`) under that
+    * query's execution profile, restoring the session confs after. */
+  def withProfile[T](spark: SparkSession, name: String)(body: => T): T =
+    NamedQuery.withConf(spark, queryConf.getOrElse(name, Map.empty))(body)
+
   /** Corpus-level stages shared across bench queries: Bench materializes
     * each once per session (timed as its own JSON entry) and re-warms it
     * after its honesty cache-clear, so per-query numbers measure the

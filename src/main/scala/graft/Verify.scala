@@ -1,22 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.DuckAliases.register(spark)
+    val cpus = GraftSession.cpus(default = 4)
+    val spark = GraftSession(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for fast local iteration (the
     // driver never sets it — full dump)
@@ -25,8 +15,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => wanted.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try graft.operators.NamedQuery.withConf(spark,
-        SparkEntry.queryConf.getOrElse(name, Map.empty)) {
+      try SparkEntry.withProfile(spark, name) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       }

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Whole-inventory timed sweep (r11 verdict item 7): every
   * SparkEntry.queries key, timed at one tier (default benchdata/sf1),
@@ -23,36 +21,11 @@ object InventorySweep {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "2").toInt
     val wanted = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
-    val tierBytes = {
-      val dir = java.nio.file.Paths.get(sfDir)
-      if (!java.nio.file.Files.isDirectory(dir)) 0L
-      else {
-        val s = java.nio.file.Files.walk(dir)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-    }
     // session shape identical to Bench so sweep rows are comparable to
     // basket rows at the same tier
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        math.max(32L, math.min(2048L, tierBytes / (128L << 20) + 1)).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "32m")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.io.compression.codec",
-        if (tierBytes >= (4L << 30)) "zstd" else "lz4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.DuckAliases.register(spark)
+    val spark = GraftSession.tierSized(GraftSession.cpus(), sfDir)
     def runQuery(name: String, dir: String): Unit =
-      graft.operators.NamedQuery.withConf(spark,
-        SparkEntry.queryConf.getOrElse(name, Map.empty)) {
+      SparkEntry.withProfile(spark, name) {
         SparkEntry.queries(name)(spark, dir)
           .write.mode("overwrite").format("noop").save()
       }

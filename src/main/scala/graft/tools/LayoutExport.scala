@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.Tables.t
 import graft.operators.LayoutMaintenance
 
@@ -16,14 +16,7 @@ import graft.operators.LayoutMaintenance
 object LayoutExport {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.files(s"local[${GraftSession.cpus()}]", 32)
     LayoutMaintenance.minutePartials(t(spark, sfDir, "events"))
       .repartition(graft.operators.BucketedOps.RollupBuckets,
         col("event_type"))

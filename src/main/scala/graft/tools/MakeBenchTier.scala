@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-tier generator: replicates an sf directory `factor`× into a new
@@ -23,14 +23,8 @@ object MakeBenchTier {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.files(
+      s"local[${graft.GraftSession.cpus()}]", 32)
     import spark.implicits._
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan dump for a named query: prints the formatted executed
   * plan so layout/ordering laws can be diagnosed outside the test
   * harness. Usage: runMain graft.tools.PlanDump <queryName> [sfDir] */
@@ -9,17 +7,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.DuckAliases.register(spark)
-    graft.operators.NamedQuery.withConf(spark,
-      graft.SparkEntry.queryConf.getOrElse(name, Map.empty)) {
+    val spark = graft.GraftSession("local[8]", 8)
+    graft.SparkEntry.withProfile(spark, name) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       // collect() (not a noop write) so THIS df's AdaptiveSparkPlan is
       // the one that finalizes — the printed plan then shows runtime

@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Timed standalone runner matching Bench's session shape (tier-scaled
-  * shuffle partitions, tier-adaptive codec, per-query execution
-  * profiles applied): `runMain graft.tools.RunQ <sfDir> <query>...`
-  * with SPARK_GRAFT_REPEATS repeats (default 3), medians printed.
+/** Timed standalone runner on Bench's session
+  * ([[graft.GraftSession.tierSized]] on `local[$SPARK_GRAFT_CPUS]`,
+  * default 32; per-query execution profiles applied):
+  * `runMain graft.tools.RunQ <sfDir> <query>...` with
+  * SPARK_GRAFT_REPEATS repeats (default 3), medians printed.
   * Shared corpus stages (shingle index) warm untimed first, like
   * Bench. */
 object RunQ {
@@ -13,36 +12,10 @@ object RunQ {
     val sfDir = args.head
     val names = args.tail
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    val tierBytes = {
-      val dir = java.nio.file.Paths.get(sfDir)
-      if (!java.nio.file.Files.isDirectory(dir)) 0L
-      else {
-        val s = java.nio.file.Files.walk(dir)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-    }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          math.max(32L, math.min(2048L, tierBytes / (128L << 20) + 1)).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "32m")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.io.compression.codec",
-        if (tierBytes >= (4L << 30)) "zstd" else "lz4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.DuckAliases.register(spark)
+    val spark = graft.GraftSession.tierSized(graft.GraftSession.cpus(), sfDir)
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      graft.operators.NamedQuery.withConf(spark,
-        graft.SparkEntry.queryConf.getOrElse(name, Map.empty)) {
+      graft.SparkEntry.withProfile(spark, name) {
         graft.SparkEntry.benchOverrides
           .getOrElse(name, graft.SparkEntry.queries(name))
           .apply(spark, dir)

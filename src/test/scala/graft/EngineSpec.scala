@@ -739,6 +739,49 @@ class EngineSpec extends SparkSpec {
     engine.unregisterTable("exp_li")
   }
 
+  test("explain classifies the plan execution records: footer fold and " +
+      "MV rewrite apply to both") {
+    // law: explain(q).execution_mode == the mode executionStats records
+    // after sql(q) executes, for queries an engine rewrite changes
+    val engine = Engine(spark)
+    def recorded(q: String): String = {
+      engine.clearStats()
+      engine.sql(q).collect()
+      val rows = engine.executionStats.collect()
+      assert(rows.length == 1, s"expected one stats row for: $q")
+      rows.head.getAs[String]("execution_mode")
+    }
+    def law(q: String): org.apache.spark.sql.Row = {
+      val e = engine.explain(q).head()
+      val rec = recorded(q)
+      assert(e.getAs[String]("execution_mode") == rec,
+        s"explain said ${e.getAs[String]("execution_mode")}, execution " +
+          s"recorded $rec for: $q")
+      e
+    }
+    // bare COUNT(*) over a path-registered parquet table folds to the
+    // footer count: no scan left, so LOCAL on both sides
+    val li = s"exl_li_${System.nanoTime()}"
+    engine.registerTable(li, s"$sf/lineitem.parquet")
+    assert(law(s"SELECT count(*) FROM $li")
+      .getAs[String]("execution_mode") == "LOCAL")
+    engine.unregisterTable(li)
+    // a covered aggregate re-targets the MV partials: the base is large
+    // enough (2 row groups) that classifying it unrewritten would
+    // report a partitioned mode
+    val t = s"exl_mv_base_${System.nanoTime()}"
+    val mv = s"exl_mv_${System.nanoTime()}"
+    engine.registerTable(t, spark.range(0L, 200000L)
+      .select((col("id") % 7).as("g"), col("id").cast("double").as("x")))
+    engine.createMaterializedAggregate(mv, t, dims = Seq("g"),
+      measures = Seq("x"), path =
+        s"${sys.props("java.io.tmpdir")}/graft_test_mv_${System.nanoTime()}")
+    val covered = law(s"SELECT g, sum(x) AS s FROM $t GROUP BY g")
+    assert(covered.getAs[String]("plan").contains("sum_x"),
+      "explain did not see the MV rewrite")
+    engine.dropTable(mv); engine.dropTable(t)
+  }
+
   test("persisted ANN index: build once, probe with bounded scans") {
     import spark.implicits._
     engine.registerTable("ann_emb", s"$sf/embeddings.parquet")

@@ -409,8 +409,7 @@ class PlanQualitySpec extends SparkSpec {
       case other => Seq(other)
     }.flatten
     def lawFor(bucketed: String, baseline: String): Unit = {
-      val df = operators.NamedQuery.withConf(spark,
-        SparkEntry.queryConf(bucketed)) {
+      val df = SparkEntry.withProfile(spark, bucketed) {
         val d = SparkEntry.queries(bucketed)(spark, sf)
         d.collect()
         d
@@ -442,8 +441,7 @@ class PlanQualitySpec extends SparkSpec {
     // window may sort/shuffle; the corpus may not — so the law is
     // shape-precise: no repartition-by-column exchange (q97's corpus
     // movement) and no sort ordered on doc_id (the corpus sort).
-    val q163 = operators.NamedQuery.withConf(spark,
-      SparkEntry.queryConf("q163_shard_packing_bucketed")) {
+    val q163 = SparkEntry.withProfile(spark, "q163_shard_packing_bucketed") {
       val df = SparkEntry.queries("q163_shard_packing_bucketed")(spark, sf)
       df.collect()
       df
@@ -482,8 +480,7 @@ class PlanQualitySpec extends SparkSpec {
     // the bucket key → no exchange) and must never touch the raw events
     // table — the Q30Probe scan floor is paid in the rollup write, not
     // per query.
-    val q164 = operators.NamedQuery.withConf(spark,
-      SparkEntry.queryConf("q164_events_hourly_rollup")) {
+    val q164 = SparkEntry.withProfile(spark, "q164_events_hourly_rollup") {
       val df = SparkEntry.queries("q164_events_hourly_rollup")(spark, sf)
       df.collect()
       df
@@ -505,8 +502,7 @@ class PlanQualitySpec extends SparkSpec {
     }
     assert(scanned.nonEmpty && scanned.forall(_.contains("bk_evr_")),
       s"q164 read outside the rollup artifact: $scanned")
-    val q30 = operators.NamedQuery.withConf(spark,
-      SparkEntry.queryConf("q30_events_hourly")) {
+    val q30 = SparkEntry.withProfile(spark, "q30_events_hourly") {
       SparkEntry.queries("q30_events_hourly")(spark, sf)
     }
     assert(q164.exceptAll(q30).count() == 0 &&

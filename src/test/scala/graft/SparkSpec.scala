@@ -46,23 +46,15 @@ object SparkSpec {
     // need the compiled test/main classes on their classpath —
     // GRAFT_TEST_CLASSPATH carries `sbt "export Test/fullClasspath"`.
     val master = sys.env.getOrElse("GRAFT_TEST_MASTER", "local[4]")
-    val b0 = SparkSession.builder()
-      .master(master)
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val b0 = GraftSession.builder(master, 4).appName("graft-test")
     val b =
       if (master.startsWith("local-cluster"))
         b0.config("spark.executor.memory", "3g")
           .config("spark.executor.extraClassPath",
             sys.env.getOrElse("GRAFT_TEST_CLASSPATH", ""))
       else b0
-    val s = b.getOrCreate()
+    val s = GraftSession.open(b)
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.DuckAliases.register(s)
     s
   }
 }
