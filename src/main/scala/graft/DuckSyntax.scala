@@ -2,8 +2,8 @@ package graft
 
 /** DuckDB literal spellings Spark's parser rejects, rewritten at the SQL
   * text level before parsing (ref surface: type_support.test:42,213,242,
-  * 305-318). Pure string→string — no catalog access, applied by
-  * [[Engine.sql]] and the router's INSERT payload path.
+  * 305-318). Pure, idempotent string→string, applied by [[GraftParser]]
+  * to every statement and by the router to VALUES [[valuesPayload]]s.
   */
 private[graft] object DuckSyntax {
 
@@ -57,8 +57,16 @@ private[graft] object DuckSyntax {
 
   /** True when the payload carries a (now-quoted) beyond-DECIMAL(38)
     * integer literal. */
-  def hasHugeLiteral(q: String): Boolean =
+  private def hasHugeLiteral(q: String): Boolean =
     "'-?\\d{39,}'".r.findFirstIn(q).isDefined
+
+  /** An `INSERT … VALUES` payload: [[rewriteCasts]], intervals as
+    * structs (only here — a SELECT may do native interval arithmetic),
+    * and every numeric quoted once a HUGEINT extreme forces text. */
+  def valuesPayload(values: String): String = {
+    val s = rewriteIntervals(rewriteCasts(values))
+    if (hasHugeLiteral(s)) quoteNumerics(s) else s
+  }
 
   private val BareNumeric = "(?<![\\w.'])(-?\\d+(?:\\.\\d+)?)(?![\\w.'])".r
 

@@ -86,7 +86,7 @@ class Engine private[graft] (val spark: SparkSession)
   private[graft] val registry = TrieMap.empty[String, TableEntry]
   // ENUM type catalog — per-engine, like one DuckDB database instance's
   // type catalog (a second Engine on the same JVM gets a fresh catalog;
-  // the session-level optimizer rule resolves through Engine.forSession)
+  // the extension's rules resolve through GraftExtensions.engineFor)
   private[graft] val enums = TrieMap.empty[String, Seq[String]]
   private[graft] val indexRegistry = TrieMap.empty[String, (String, Seq[String])]
   // column-level constraint metadata (ref ALTER matrix,
@@ -105,25 +105,6 @@ class Engine private[graft] (val spark: SparkSession)
     * TIME / TIMESTAMP_NS (canonical text), HUGEINT / UHUGEINT (canonical
     * decimal text + order-key rewrite), INTERVAL (comparable struct). */
   private[graft] val typeOrigins = TrieMap.empty[(String, String), String]
-
-
-  // declaration-order rank of enum values, callable from SQL:
-  // enum_ord('mood', col) — the piece that makes ORDER BY / MIN / MAX on
-  // enum columns reproduce DuckDB's declaration-order semantics in pure
-  // SQL (enum_type_support.test:62-81)
-  locally {
-    // capture ONLY the catalog map (TrieMap serializes its current
-    // content per job) — referencing the field directly would drag the
-    // whole non-serializable Engine into the executor closure
-    val enumCatalog = enums
-    spark.udf.register("enum_ord", (tpe: String, v: String) => {
-      if (v == null) null
-      else {
-        val i = enumCatalog.getOrElse(tpe, Seq.empty).indexOf(v)
-        if (i < 0) null else Integer.valueOf(i + 1)
-      }
-    }: Integer)
-  }
 
   /** ≈ PRAGMA duckherder_register_remote_table(local, remote): register a
     * file-backed table. Row count (parquet footer metadata only — no
@@ -342,10 +323,9 @@ object Engine {
     try rmTree(new java.io.File(path)) catch { case _: Throwable => () }
   }
 
-  /** Latest Engine per SparkSession — lets the session-level
-    * [[graft.plans.EnumOrderRewrite]] extension rule find the catalogs of
-    * the engine driving that session (reference semantics: one server per
-    * session; a fresh Engine supersedes the previous one). */
+  /** The session's serving engine, the latest [[apply]] on it (one
+    * server per session, like the reference): the extension acts for it
+    * outside an engine's own `sql`/`explain` call. */
   private val bySession = TrieMap.empty[SparkSession, Engine]
   private[graft] def forSession(s: SparkSession): Option[Engine] =
     bySession.get(s)
@@ -453,21 +433,30 @@ object Engine {
     apply(GraftSession.open(
       GraftSession.builder(master, shufflePartitions).appName(appName)))
 
-  def apply(spark: SparkSession): Engine = {
-    graft.functions.DuckAliases.register(spark)
-    val e = new Engine(spark)
-    bySession.put(spark, e)
-    e
-  }
+  def apply(spark: SparkSession): Engine = serving(requireExtensions(spark))
 
   /** An engine that does NOT become the session's serving engine
     * ([[forSession]] keeps resolving to the previous one): for
     * query-local catalogs (q197 export round-trip, q198 index
     * maintenance) whose construction must not hijack the memoized
     * hyb_* serving artifacts out from under q188/q189/q196. */
-  def scratch(spark: SparkSession): Engine = {
-    graft.functions.DuckAliases.register(spark)
-    new Engine(spark)
+  def scratch(spark: SparkSession): Engine =
+    new Engine(requireExtensions(spark))
+
+  /** [[apply]] without the extension check, for the retrieval stages'
+    * index registry (TextRetrieval): no SQL, any session. */
+  private[graft] def serving(spark: SparkSession): Engine = {
+    val e = new Engine(spark)
+    bySession.put(spark, e)
+    e
+  }
+
+  // without the extensions `sql` would silently lose graft's semantics
+  private def requireExtensions(spark: SparkSession): SparkSession = {
+    require(spark.sessionState.sqlParser.isInstanceOf[GraftParser],
+      "graft.Engine needs a session with graft's SQL extensions: open it " +
+        "through GraftSession, or set spark.sql.extensions=" +
+        "graft.GraftExtensions (withExtensions(new GraftExtensions))")
+    spark
   }
 }
-

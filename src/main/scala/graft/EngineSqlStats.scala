@@ -56,18 +56,18 @@ private[graft] trait EngineSqlStats { self: Engine =>
   spark.listenerManager.register(listener)
 
   private def record(sqlText: String, qe: QueryExecution, durNs: Long): Unit = {
-    val rows = scanRows(qe)
-    val workers = workerCount
-    val mode = PlanClassifier.executionMode(qe, rows, workers)
-    val tasks = PlanClassifier.numTasks(mode, rows, workers)
-    stats.add(StatRow(
-      sqlText,
-      mode,
-      PlanClassifier.mergeStrategy(qe),
-      durNs / 1000000L,
-      math.min(workers.toLong, tasks),
-      tasks,
+    val (mode, merge, tasks) = classify(qe)
+    stats.add(StatRow(sqlText, mode, merge, durNs / 1000000L,
+      math.min(workerCount.toLong, tasks), tasks,
       new Timestamp(System.currentTimeMillis() - durNs / 1000000L)))
+  }
+
+  /** (execution mode, merge strategy, tasks): recorded and explained. */
+  private def classify(qe: QueryExecution): (String, String, Long) = {
+    val rows = scanRows(qe)
+    val mode = PlanClassifier.executionMode(qe, rows, workerCount)
+    (mode, PlanClassifier.mergeStrategy(qe),
+      PlanClassifier.numTasks(mode, rows, workerCount))
   }
 
   /** Largest registered-table cardinality referenced by the plan — the
@@ -91,8 +91,10 @@ private[graft] trait EngineSqlStats { self: Engine =>
   /** Run SQL against the engine catalog, recording execution stats when an
     * action executes the plan. DDL/DML statements route to the engine
     * catalog (the reference drives its whole surface through SQL —
-    * duckherder_schema_catalog_entry.cpp intercepts the same verbs). */
-  def sql(q: String): DataFrame = {
+    * duckherder_schema_catalog_entry.cpp intercepts the same verbs);
+    * everything else is `spark.sql`, with graft's semantics from
+    * [[GraftExtensions]] acting for this engine. */
+  def sql(q: String): DataFrame = GraftExtensions.actingFor(this) {
     val t0 = System.nanoTime()
     SqlRouter.route(this, q) match {
       case Some(df) =>
@@ -105,62 +107,11 @@ private[graft] trait EngineSqlStats { self: Engine =>
         history.add((q, durNs / 1000L))
         df
       case None =>
-        val df = planStatement(q)
+        val df = spark.sql(q)
         val qe = castToImpl(df).queryExecution
         pending.put(qe.analyzed.semanticHash().toLong, (q, qe))
         df
     }
-  }
-
-  /** A non-routed statement as the (lazy) DataFrame execution runs:
-    * [[parseStatement]], then the engine's plan rewrites. Shared by
-    * [[sql]] and [[explain]], so a query is explained in the mode it
-    * is recorded in. The rewrites run on the ANALYZED plan — after the
-    * main optimizer they would miss filters it already collapsed into
-    * literal relations. */
-  private def planStatement(q: String): DataFrame = {
-    val df0 = parseStatement(q)
-    val analyzed0 = castToImpl(df0).queryExecution.analyzed
-    var plan = analyzed0
-    // bare COUNT(*)/integer MIN/MAX over an unmodified path-registered
-    // parquet table folds to footer statistics — metadata, no scan job
-    plan = graft.plans.FooterAggRewrite.rewrite(plan, this)
-    // covered aggregates re-target fresh materialized aggregates
-    if (freshMatViews.nonEmpty)
-      plan = graft.plans.MatViewRewrite.rewrite(plan, this)
-    // enum declaration-order semantics (ORDER BY / MIN / MAX /
-    // comparisons)
-    if (!(enumCols.isEmpty && typeOrigins.isEmpty))
-      plan = graft.plans.EnumOrderRewrite.rewrite(plan, this)
-    if (plan eq analyzed0) df0
-    else org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
-  }
-
-  /** Parse a non-routed statement to a (lazy) DataFrame, applying the
-    * engine's literal-spelling rewrites and relation substitutions
-    * (time travel, `table_changes`); [[planStatement]] applies the
-    * plan rewrites on top.
-    * DuckDB literal spellings Spark's parser rejects: hex-escape BLOB
-    * casts, ::UUID, >38-digit integer literals; multi-unit INTERVAL
-    * literals only when the engine actually owns interval columns. */
-  private def parseStatement(q: String): DataFrame = {
-    var q2 = DuckSyntax.rewriteCasts(q)
-    // serving-observability table function (the index-probe analog of
-    // duckherder_get_query_execution_stats, which the reference exposes
-    // as a SQL table function — query_execution_stats_query_function
-    // .cpp:22-60): the probe buffer is driver-local metadata, so the
-    // substitution view is a local frame, never a scan
-    if (q2.contains("graft_probe_stats()")) {
-      probeStats.createOrReplaceTempView("graft_probe_stats_view")
-      q2 = q2.replace("graft_probe_stats()", "graft_probe_stats_view")
-    }
-    if (typeOrigins.values.exists(_ == "INTERVAL"))
-      q2 = DuckSyntax.rewriteIntervals(q2)
-    if (q2.toUpperCase.contains("ASOF"))
-      q2 = DuckSyntax.rewriteAsofJoin(q2)
-    if (q2.toUpperCase.contains(" AS OF ")) timeTravelSql(q2)
-    else if (q2.toUpperCase.contains("TABLE_CHANGES")) tableChangesSql(q2)
-    else spark.sql(q2)
   }
 
   /** ≈ duckherder_get_query_execution_stats() — identical 7-col schema. */
@@ -201,24 +152,19 @@ private[graft] trait EngineSqlStats { self: Engine =>
   /** Classify a query WITHOUT executing it: execution mode + merge
     * strategy (the reference's QueryPlanAnalyzer surface, exposed
     * up-front instead of only in post-hoc stats). */
-  def explain(q: String): DataFrame = {
+  def explain(q: String): DataFrame = GraftExtensions.actingFor(this) {
+    import spark.implicits._
     // routed DDL/DML executes eagerly on the driver (and Spark itself
     // runs command statements at sql()): classify WITHOUT executing
-    if (SqlRouter.wouldRoute(this, q)) {
-      import spark.implicits._
-      return Seq((q, "LOCAL", "CONCATENATE", 1L, "routed DDL/DML"))
-        .toDF("sql", "execution_mode", "merge_strategy",
-          "num_tasks", "plan")
-    }
-    val qe = castToImpl(planStatement(q)).queryExecution
-    val rows = scanRows(qe)
-    val workers = workerCount
-    val mode = PlanClassifier.executionMode(qe, rows, workers)
-    import spark.implicits._
-    Seq((q, mode, PlanClassifier.mergeStrategy(qe),
-      PlanClassifier.numTasks(mode, rows, workers),
-      qe.optimizedPlan.toString))
-      .toDF("sql", "execution_mode", "merge_strategy",
-        "num_tasks", "plan")
+    val row =
+      if (SqlRouter.wouldRoute(this, q))
+        (q, "LOCAL", "CONCATENATE", 1L, "routed DDL/DML")
+      else {
+        val qe = castToImpl(spark.sql(q)).queryExecution
+        val (mode, merge, tasks) = classify(qe)
+        (q, mode, merge, tasks, qe.optimizedPlan.toString)
+      }
+    Seq(row).toDF("sql", "execution_mode", "merge_strategy", "num_tasks",
+      "plan")
   }
 }

@@ -2,7 +2,10 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
@@ -207,85 +210,56 @@ private[graft] trait EngineVersioning { self: Engine =>
     } else steps.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** `SELECT … FROM table_changes('t', start[, end[, idColumns]])` — the
-    * lakehouse CDC spelling (Delta's TVF of the same name); `idColumns`
-    * is a comma-separated identity key, composite allowed. The SQL form
-    * follows Delta's INCLUSIVE-start convention: `start` is the first
-    * commit whose changes appear, so it maps to
-    * `tableChanges(t, start - 1, end)` over the exclusive-base API.
-    * Spark's parser yields an UnresolvedTableValuedFunction no catalog
-    * answers; the engine splices the resolved feed's plan in before
-    * analysis, so the TVF composes with WHERE/joins/aggregates like any
-    * relation. */
-  private[graft] def tableChangesSql(q2: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedTableValuedFunction
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    def argStr(e: org.apache.spark.sql.catalyst.expressions.Expression,
-        what: String): String = e match {
+  /** The plan of `table_changes('t', start[, end[, idColumns]])`, the
+    * lakehouse CDC table function (Delta's TVF of the same name;
+    * [[GraftExtensions]] injects it); `idColumns` is a comma-separated
+    * identity key. Delta's INCLUSIVE start: `start` is the first commit
+    * whose changes appear, i.e. `tableChanges(t, start - 1, end)`. */
+  private[graft] def tableChangesPlan(args: Seq[Expression]): LogicalPlan = {
+    def argStr(e: Expression, what: String): String = e match {
       case Literal(v, _) if v != null => v.toString
       case other => throw new IllegalArgumentException(
         s"Parser Error: table_changes expects a literal $what, got $other")
     }
-    def argLong(e: org.apache.spark.sql.catalyst.expressions.Expression,
-        what: String): Long =
-      try argStr(e, what).toLong
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"Parser Error: table_changes expects an integer $what")
-      }
-    val parsed = spark.sessionState.sqlParser.parsePlan(q2)
-    var touched = false
-    val rewritten = parsed.transformDownWithSubqueries {
-      case tvf: UnresolvedTableValuedFunction
-          if tvf.name.map(_.toLowerCase(java.util.Locale.ROOT)) ==
-            Seq("table_changes") =>
-        val args = tvf.functionArgs
-        if (args.size < 2 || args.size > 4)
-          throw new IllegalArgumentException("Parser Error: " +
-            "table_changes(table, startVersion[, endVersion[, idColumns]])")
-        val name = argStr(args(0), "table name")
-        if (!registry.contains(name))
-          throw new IllegalArgumentException(
-            s"Catalog Error: table $name does not exist")
-        val start = argLong(args(1), "startVersion")
-        val end = if (args.size >= 3) argLong(args(2), "endVersion") else -1L
-        val idCol =
-          if (args.size == 4)
-            argStr(args(3), "idColumns").split(",").map(_.trim)
-              .filter(_.nonEmpty).toSeq
-          else Nil
-        touched = true
-        // Delta's INCLUSIVE start=0 reaches the creation commit: emit
-        // the version-0 snapshot as 'insert' rows at _commit_version 0
-        // (the exclusive-base API has no base older than version 0).
-        // entryAtVersion raises a targeted error if version 0 has
-        // fallen out of the retention window.
-        val feed =
-          if (start == 0L) {
-            val creation = entryAtVersion(name, 0L).df
-              .withColumn("_change_type", lit("insert"))
-              .withColumn("_commit_version", lit(0L))
-            creation.unionByName(tableChanges(name, 0L, end, idCol),
-              allowMissingColumns = true)
-          } else tableChanges(name, start - 1, end, idCol)
-        castToImpl(feed).queryExecution.analyzed
-    }
-    if (touched)
-      org.apache.spark.sql.GraftSqlBridge.ofRows(spark, rewritten)
-    else spark.sql(q2)
+    def argLong(e: Expression, what: String): Long =
+      argStr(e, what).toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"Parser Error: table_changes expects an integer $what"))
+    if (args.size < 2 || args.size > 4)
+      throw new IllegalArgumentException("Parser Error: " +
+        "table_changes(table, startVersion[, endVersion[, idColumns]])")
+    val name = argStr(args(0), "table name")
+    if (!registry.contains(name))
+      throw new IllegalArgumentException(
+        s"Catalog Error: table $name does not exist")
+    val start = argLong(args(1), "startVersion")
+    val end = if (args.size >= 3) argLong(args(2), "endVersion") else -1L
+    val idCol =
+      if (args.size == 4)
+        argStr(args(3), "idColumns").split(",").map(_.trim)
+          .filter(_.nonEmpty).toSeq
+      else Nil
+    // Delta's INCLUSIVE start=0 reaches the creation commit: emit the
+    // version-0 snapshot as 'insert' rows at _commit_version 0 (the
+    // exclusive-base API has no base older than version 0).
+    // entryAtVersion raises a targeted error if version 0 has fallen
+    // out of the retention window.
+    val feed =
+      if (start == 0L) {
+        val creation = entryAtVersion(name, 0L).df
+          .withColumn("_change_type", lit("insert"))
+          .withColumn("_commit_version", lit(0L))
+        creation.unionByName(tableChanges(name, 0L, end, idCol),
+          allowMissingColumns = true)
+      } else tableChanges(name, start - 1, end, idCol)
+    castToImpl(feed).queryExecution.analyzed
   }
 
-  /** `SELECT … FROM t VERSION AS OF v` over managed tables: Spark's
-    * parser produces [[org.apache.spark.sql.catalyst.analysis.RelationTimeTravel]]
-    * nodes (temp views cannot answer them), so the engine substitutes
-    * the retained snapshot's plan before analysis. Unmanaged relations
-    * fall through to Spark untouched; TIMESTAMP AS OF on a managed
-    * table raises (in-session snapshots are version-numbered). */
-  private[graft] def timeTravelSql(q2: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
-    val parsed = spark.sessionState.sqlParser.parsePlan(q2)
-    var touched = false
-    val rewritten = parsed.transformDownWithSubqueries {
+  /** `t VERSION AS OF v` on managed tables, swapped for the retained
+    * snapshot's plan in a PARSED plan ([[GraftParser]]); unmanaged
+    * relations pass through, TIMESTAMP AS OF on a managed table raises
+    * (in-session snapshots are version-numbered). */
+  private[graft] def resolveTimeTravel(parsed: LogicalPlan): LogicalPlan =
+    parsed.transformDownWithSubqueries {
       case RelationTimeTravel(r: UnresolvedRelation, ts, ver)
           if registry.contains(r.multipartIdentifier.mkString(".")) =>
         val name = r.multipartIdentifier.mkString(".")
@@ -296,19 +270,10 @@ private[graft] trait EngineVersioning { self: Engine =>
             "VERSION AS OF <n>")
         val v = ver.getOrElse(throw new IllegalArgumentException(
           s"Parser Error: missing version for time travel on $name"))
-        val vNum =
-          try v.toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException("Parser Error: VERSION " +
-              s"AS OF expects an integer version, got '$v'")
-          }
-        touched = true
+        val vNum = v.toLongOption.getOrElse(throw new IllegalArgumentException(
+          s"Parser Error: VERSION AS OF expects an integer version, got '$v'"))
         castToImpl(tableAtVersion(name, vNum)).queryExecution.analyzed
     }
-    if (touched)
-      org.apache.spark.sql.GraftSqlBridge.ofRows(spark, rewritten)
-    else spark.sql(q2)
-  }
 
   /** Number of retained PRIOR versions (current is not counted). */
   def versionCount(name: String): Int = {

@@ -1,46 +1,45 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{ArrayContains, ElementAt, Explode, Expression, ExpressionInfo, Size}
+import java.util.Locale
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
+import org.apache.spark.sql.catalyst.expressions.{ArrayContains, ArrayPosition, Cast, ElementAt, Explode, Expression, ExpressionInfo, Literal, NullIf, Size}
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructType}
 
 import graft.functions.{CosineSimilarity, RollingHashFingerprint, ShingleArray, ShingleHashArray, TermCounts, WordChunks}
+import graft.plans.{EnumOrderRewrite, FooterAggRewrite, MatViewRewrite}
 
-/** SparkSessionExtensions entry point — the standard deployment path for
-  * a Spark library's Catalyst extensions:
-  *
-  * {{{
-  * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * }}}
-  *
-  * Injects the engine's custom expressions (cosine_similarity,
-  * shingle_array, rolling_fingerprint) and the DuckDB-name aliases
-  * (len, list_contains, list_extract) into every session derived from
-  * the extended builder. `Engine.apply` registers the same set
-  * imperatively for sessions built without extensions.
-  */
+/** graft's SQL surface through Spark's own hooks (as the reference plugs
+  * into DuckDB's planner), deployed by setting `spark.sql.extensions` to
+  * this class or by `builder().withExtensions(new GraftExtensions)`:
+  * the engine's functions and DuckDB aliases,
+  * `enum_ord`, the `table_changes`/`graft_probe_stats` table functions,
+  * [[GraftParser]], and the post-hoc resolution [[GraftExtensions.rules]]
+  * (on the ANALYZED plan, before the optimizer collapses filters into
+  * literal relations). Catalog-dependent pieces act for
+  * [[GraftExtensions.engineFor]] the session: one with no engine (a
+  * `newSession()` clone too) gets functions and spellings, no rewrite. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, builder) =>
-      ext.injectFunction(
-        (FunctionIdentifier(name),
-          new ExpressionInfo("graft", name),
-          builder))
+    def info(name: String) = new ExpressionInfo("graft", name)
+    (GraftExtensions.functions :+ ("enum_ord" -> GraftExtensions.enumOrd))
+      .foreach { case (n, b) =>
+        ext.injectFunction((FunctionIdentifier(n), info(n), b))
+      }
+    GraftExtensions.tableFunctions.foreach { case (n, b) =>
+      ext.injectTableFunction((FunctionIdentifier(n), info(n), b))
     }
-    // ORDER BY / MIN / MAX / comparisons on registered enum and hugeint
-    // columns follow declaration/numeric order; post-hoc resolution runs
-    // on the analyzed plan, before literal-relation collapse. The rule
-    // resolves through the session's current Engine (per-engine catalogs).
-    ext.injectPostHocResolutionRule(session =>
-      graft.plans.EnumOrderRewrite(() => Engine.forSession(session)))
-    // covered aggregates over a managed base table re-target its fresh
-    // materialized aggregate (partial re-aggregation)
-    ext.injectPostHocResolutionRule(session =>
-      graft.plans.MatViewRewrite(() => Engine.forSession(session)))
+    ext.injectParser((session, spark) => new GraftParser(session, spark))
+    GraftExtensions.rules.foreach { case (name, rewrite) =>
+      ext.injectPostHocResolutionRule(session =>
+        GraftExtensions.EngineRule(name, rewrite, session))
+    }
   }
 }
 
@@ -71,4 +70,105 @@ object GraftExtensions {
     "unnest" -> (e => Explode(e.head)),
     "list_contains" -> (e => ArrayContains(e(0), e(1))),
     "list_extract" -> (e => ElementAt(e(0), e(1))))
+
+  /** `enum_ord('mood', col)`: declaration-order rank in the acting
+    * engine's type catalog, NULL for a non-member (DuckDB enum order in
+    * pure SQL — enum_type_support.test:62-81). */
+  private val enumOrd: Seq[Expression] => Expression = { case Seq(tpe, c) =>
+    val values = engineFor(SparkSession.active)
+      .map(_.enumValues(tpe.eval().toString)).getOrElse(Nil)
+    Cast(new NullIf(ArrayPosition(Literal.create(values, ArrayType(StringType)),
+      c), Literal(0L)), IntegerType)
+  }
+
+  /** The post-hoc resolution rules, in the order they run. */
+  val rules: Seq[(String, (LogicalPlan, Engine) => LogicalPlan)] = Seq(
+    "FooterAggRewrite" -> FooterAggRewrite.rewrite,
+    "MatViewRewrite" -> MatViewRewrite.rewrite,
+    "EnumOrderRewrite" -> EnumOrderRewrite.rewrite)
+
+  /** A plan rewrite acting for [[engineFor]] `session`. */
+  private[graft] final case class EngineRule(override val ruleName: String,
+      rewrite: (LogicalPlan, Engine) => LogicalPlan, session: SparkSession)
+      extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      engineFor(session).fold(plan)(rewrite(plan, _))
+  }
+
+  /** Engine table functions, acting for the (active) analyzing session. */
+  val tableFunctions: Seq[(String, Seq[Expression] => LogicalPlan)] = Seq(
+    "table_changes" -> (args =>
+      activeEngine("table_changes").tableChangesPlan(args)),
+    // the index-probe analog of duckherder_get_query_execution_stats
+    // (query_execution_stats_query_function.cpp:22-60): a local frame
+    "graft_probe_stats" -> { args =>
+      require(args.isEmpty, "graft_probe_stats() takes no arguments")
+      castToImpl(activeEngine("graft_probe_stats").probeStats)
+        .queryExecution.analyzed
+    })
+
+  private def activeEngine(fn: String): Engine =
+    engineFor(SparkSession.active).getOrElse(throw new IllegalArgumentException(
+      s"Catalog Error: $fn() needs a graft Engine on this session"))
+
+  private val acting = new ThreadLocal[Engine]
+
+  /** Runs `body` acting for `e` on this thread (`Engine.sql`/`explain`),
+    * so a scratch engine's SQL sees its own catalogs. Not inheritable:
+    * pool threads must not keep a binding. */
+  private[graft] def actingFor[A](e: Engine)(body: => A): A = {
+    val prev = acting.get
+    acting.set(e)
+    try body finally acting.set(prev)
+  }
+
+  /** The engine whose `sql`/`explain` runs on this thread for
+    * `session`, else the session's serving engine. */
+  private[graft] def engineFor(session: SparkSession): Option[Engine] =
+    Option(acting.get).filter(_.spark eq session)
+      .orElse(Engine.forSession(session))
+}
+
+/** Spark's parser plus DuckDB literal spellings ([[DuckSyntax]]; INTERVAL
+  * literals only when the engine owns INTERVAL columns) and `VERSION AS
+  * OF` on engine tables — not a rule: Spark rejects time travel on temp
+  * views before injected rules run. Everything else delegates. */
+private[graft] final class GraftParser(session: SparkSession,
+    delegate: ParserInterface) extends ParserInterface {
+
+  private def engine: Option[Engine] = GraftExtensions.engineFor(session)
+
+  private def spell(q: String): String = {
+    var s = DuckSyntax.rewriteCasts(q)
+    if (engine.exists(_.typeOrigins.values.exists(_ == "INTERVAL")))
+      s = DuckSyntax.rewriteIntervals(s)
+    if (s.toUpperCase(Locale.ROOT).contains("ASOF"))
+      s = DuckSyntax.rewriteAsofJoin(s)
+    s
+  }
+
+  private def timeTravel(p: LogicalPlan): LogicalPlan =
+    engine.fold(p)(_.resolveTimeTravel(p))
+
+  override def parsePlan(s: String): LogicalPlan =
+    timeTravel(delegate.parsePlan(spell(s)))
+  // the entry point `spark.sql` calls
+  override def parsePlanWithParameters(s: String,
+      ctx: ParameterContext): LogicalPlan =
+    timeTravel(delegate.parsePlanWithParameters(spell(s), ctx))
+
+  override def parseExpression(s: String): Expression =
+    delegate.parseExpression(s)
+  override def parseTableIdentifier(s: String): TableIdentifier =
+    delegate.parseTableIdentifier(s)
+  override def parseFunctionIdentifier(s: String): FunctionIdentifier =
+    delegate.parseFunctionIdentifier(s)
+  override def parseMultipartIdentifier(s: String): Seq[String] =
+    delegate.parseMultipartIdentifier(s)
+  override def parseQuery(s: String): LogicalPlan = delegate.parseQuery(s)
+  override def parseRoutineParam(s: String): StructType =
+    delegate.parseRoutineParam(s)
+  override def parseTableSchema(s: String): StructType =
+    delegate.parseTableSchema(s)
+  override def parseDataType(s: String): DataType = delegate.parseDataType(s)
 }

@@ -17,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   *    carries nanosecond timestamps Spark otherwise refuses to read
   *  - `spark.ui.enabled=false`: no UI server per runner
   * Query sessions ([[builder]], [[open]], [[apply]], [[tierSized]])
-  * also set `spark.sql.adaptive.enabled=true` and register the
-  * [[functions.DuckAliases]] SQL surface. */
+  * also set `spark.sql.adaptive.enabled=true` and carry
+  * [[GraftExtensions]] (graft's SQL surface, which [[Engine]] requires;
+  * a builder property, not a conf key). */
 object GraftSession {
 
   /** Cores for a runner: `$SPARK_GRAFT_CPUS`, else `default`. */
@@ -34,19 +35,15 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  /** A query-session builder: base confs plus AQE. Callers that need
-    * more (an app name, executor sizing) add it before [[open]]. */
+  /** A query-session builder: base confs, AQE and [[GraftExtensions]];
+    * callers add more (app name, executor sizing) before [[open]]. */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     base(master, shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
+      .withExtensions(new GraftExtensions)
 
-  /** Opens `b`'s session (or joins the running one) and registers the
-    * DuckDB-spelling function aliases. */
-  def open(b: SparkSession.Builder): SparkSession = {
-    val s = b.getOrCreate()
-    graft.functions.DuckAliases.register(s)
-    s
-  }
+  /** Opens `b`'s session, or joins the running one. */
+  def open(b: SparkSession.Builder): SparkSession = b.getOrCreate()
 
   /** A runner's query session, logging at WARN. */
   def apply(master: String, shufflePartitions: Int): SparkSession =
@@ -54,8 +51,8 @@ object GraftSession {
 
   /** A session for tools that only rewrite parquet files (tier
     * generation, layout export): base confs only, Spark's own AQE
-    * default and no SQL aliases, so the files they write do not move
-    * with the query-session shape. */
+    * default and no graft extensions, so the files they write do not
+    * move with the query-session shape. */
   def files(master: String, shufflePartitions: Int): SparkSession =
     quiet(base(master, shufflePartitions).getOrCreate())
 

@@ -599,7 +599,7 @@ private[graft] object SqlRouter {
     val inner = s.substring(open + 1, close)
     s.substring(close + 1) match {
       case CopyToTail(path, opts) =>
-        val df = e.spark.sql(DuckSyntax.rewriteCasts(inner))
+        val df = e.spark.sql(inner)
         val n = e.copyTo(df, path, copyOpts(opts))
         import e.spark.implicits._
         Some(Seq(n).toDF("copied_rows"))
@@ -962,7 +962,7 @@ private[graft] object SqlRouter {
   private def updateSource(e: Engine, src: String): (DataFrame, String) =
     src match {
       case UpdateSrcSubquery(inner, alias) =>
-        (e.spark.sql(DuckSyntax.rewriteCasts(inner)), alias)
+        (e.spark.sql(inner), alias)
       case UpdateSrcTable(n, alias) =>
         val tn = unq(n)
         val df = if (e.tableExists(tn)) e.table(tn) else e.spark.table(tn)
@@ -1045,7 +1045,7 @@ private[graft] object SqlRouter {
     val (src, srcName, afterSrc) =
       if (rest.startsWith("(")) {
         val close = matchParen(rest, 0)
-        (e.spark.sql(DuckSyntax.rewriteCasts(rest.substring(1, close))),
+        (e.spark.sql(rest.substring(1, close)),
           None, rest.substring(close + 1))
       } else """(?s)\s*([\w.]+)(.*)""".r.findFirstMatchIn(rest) match {
         case Some(m) =>
@@ -1125,18 +1125,10 @@ private[graft] object SqlRouter {
     Some(Seq((updated, inserted)).toDF("updated_rows", "inserted_rows"))
   }
 
-  private def sourceDf(e: Engine, source: String): DataFrame = {
-    // DuckDB literal spellings (blob hex escapes, ::UUID, >38-digit
-    // integers) never parse in Spark — rewrite before parsing. Interval
-    // literals become comparable structs only in VALUES payloads (a
-    // SELECT payload may legitimately do native interval arithmetic).
-    val s0 = DuckSyntax.rewriteCasts(source)
-    if (s0.trim.toUpperCase.startsWith("VALUES")) {
-      var s1 = DuckSyntax.rewriteIntervals(s0)
-      if (DuckSyntax.hasHugeLiteral(s1)) s1 = DuckSyntax.quoteNumerics(s1)
-      e.spark.sql(s"SELECT * FROM ($s1) AS __v")
-    } else e.spark.sql(s0)
-  }
+  private def sourceDf(e: Engine, source: String): DataFrame =
+    if (source.trim.toUpperCase.startsWith("VALUES"))
+      e.spark.sql(s"SELECT * FROM (${DuckSyntax.valuesPayload(source)}) AS __v")
+    else e.spark.sql(source)
 
   private def emptyOk(e: Engine): DataFrame = {
     import e.spark.implicits._

@@ -10,6 +10,8 @@ import org.apache.spark.sql.SparkSession
   * `array_contains`, `explode`); we register thin aliases in the session
   * FunctionRegistry so the reference's SQL runs verbatim. `element_at` is
   * already 1-based, matching DuckDB list indexing.
+  * `register` is the functions-only entry point for a session built
+  * without [[graft.GraftExtensions]].
   */
 object DuckAliases {
   def register(spark: SparkSession): Unit = {

@@ -781,13 +781,15 @@ object DedupOps {
       val pairs = a.join(b, Seq("s")).filter(col("id_a") < col("id_b"))
         .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
       val cont = col("inter") * lit(1.0) / least(col("na"), col("nb"))
+      // q41's footprint-gated size broadcast (jaccardPairs), per attach
+      def sizes(id: String, n: String) = NamedQuery
+        .maybeBroadcastByFootprint(sz.toDF(id, n), d, "documents", 2L << 30)
       pairs
-        .join(sz.toDF("id_a", "na"), "id_a")
-        .join(sz.toDF("id_b", "nb"), "id_b")
+        .join(sizes("id_a", "na"), "id_a")
+        .join(sizes("id_b", "nb"), "id_b")
         .filter(cont >= 0.9)
         .select(col("id_a"), col("id_b"), round(cont, 3).as("containment"))
-    }, conf = Map( // same pair-stage profile as q41 (r18)
-      "spark.sql.autoBroadcastJoinThreshold" -> "256m"))
+    })
 
   /** Cross-source overlap matrix — dataset-level diagnostics: for every
     * (source_a, source_b) pair, how many near-dup pairs (Jaccard ≥ 0.5)

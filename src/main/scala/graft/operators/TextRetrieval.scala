@@ -122,7 +122,7 @@ private[graft] trait TextRetrieval extends Serializable {
     // loser's index build landing in a discarded instance and being
     // silently rebuilt sequentially afterwards
     engineLock.synchronized {
-      graft.Engine.forSession(s).getOrElse(graft.Engine(s))
+      graft.Engine.forSession(s).getOrElse(graft.Engine.serving(s))
     }
 
   /** Bench shared stage: build (or re-point) both hyb_* serving

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions.{ArrayPosition, Attribute, BinaryComparison, CreateNamedStruct, ExprId, Expression, GreaterThan, GreaterThanOrEqual, If, LessThan, LessThanOrEqual, Length, Literal, SortOrder, StartsWith, StringTranslate, UnaryMinus}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, MaxBy, Min, MinBy}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Sort, SubqueryAlias}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,16 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * actually comes from (the SubqueryAlias node wrapping the table's plan),
   * never by name alone — a column in an unrelated table that merely shares
   * a name with an enum column keeps Spark's lexical semantics. Catalogs
-  * are per-[[graft.Engine]]; the session-level extension instance finds
-  * its engine via [[graft.Engine.forSession]]. Equality is untouched
-  * (string equality IS enum/canonical-integer equality).
+  * are per-[[graft.Engine]]; this [[graft.GraftExtensions]] rule acts
+  * for [[graft.GraftExtensions.engineFor]] the session. Equality is
+  * untouched (string equality IS enum/canonical-integer equality). A
+  * rewrite replaces the attribute it matched with an order key, so
+  * re-applying the rule changes nothing.
   */
-case class EnumOrderRewrite(engineFor: () => Option[graft.Engine])
-    extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    engineFor().map(EnumOrderRewrite.rewrite(plan, _)).getOrElse(plan)
-}
-
 object EnumOrderRewrite {
 
   private[graft] def rewrite(plan: LogicalPlan,

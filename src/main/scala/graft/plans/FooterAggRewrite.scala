@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LeafNode, LocalRelation, LogicalPlan, View}
 import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
 
 import graft.Engine
@@ -32,7 +32,8 @@ import graft.Engine
   *
   * The fold substitutes a [[LocalRelation]] carrying the SAME output
   * attributes, so aliases, downstream operators, and the stats
-  * recorder see an unchanged schema. */
+  * recorder see an unchanged schema. A [[graft.GraftExtensions]] rule;
+  * it matches the plan root only, so its output never matches again. */
 object FooterAggRewrite {
 
   private def bare(e: AggregateExpression): Boolean =
@@ -53,9 +54,18 @@ object FooterAggRewrite {
       case _ => None
     }
 
+  /** A scan behind aliases/views, the only input a path-registered table
+    * can equal — checked before canonicalizing a whole DML lineage. */
+  private def isScan(p: LogicalPlan): Boolean =
+    EliminateSubqueryAliases(p) match {
+      case v: View => isScan(v.child)
+      case _: LeafNode => true
+      case _ => false
+    }
+
   def rewrite(plan: LogicalPlan, engine: Engine): LogicalPlan = plan match {
     case agg @ Aggregate(Nil, exprs, child, _)
-        if exprs.nonEmpty && exprs.forall {
+        if exprs.nonEmpty && isScan(child) && exprs.forall {
           case Alias(ae: AggregateExpression, _) => foldKey(ae).isDefined
           case _ => false
         } =>

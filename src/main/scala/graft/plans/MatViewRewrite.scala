@@ -1,9 +1,10 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, Expression, If, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, SubqueryAlias}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.AGGREGATE
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Aggregate → materialized-aggregate rewrite (beyond the reference —
@@ -43,20 +44,16 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * the entry and silently disables the rewrite until
   * `refreshMaterializedAggregate`. Correctness never depends on the
   * MV being fresh.
+  * A [[graft.GraftExtensions]] rule; its output aggregates the MV, not
+  * the base, so re-applying it changes nothing.
   */
-case class MatViewRewrite(engineFor: () => Option[graft.Engine])
-    extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    engineFor().map(MatViewRewrite.rewrite(plan, _)).getOrElse(plan)
-}
-
 object MatViewRewrite {
 
   private[graft] def rewrite(plan: LogicalPlan,
       engine: graft.Engine): LogicalPlan = {
     val mvs = engine.freshMatViews
     if (mvs.isEmpty) return plan
-    plan transform {
+    plan.transformWithPruning(_.containsPattern(AGGREGATE)) {
       case agg: Aggregate =>
         mvs.view.flatMap(tryRewrite(agg, _, engine)).headOption.getOrElse(agg)
     }
@@ -64,14 +61,18 @@ object MatViewRewrite {
 
   /** The base-table reference under an Aggregate: the temp-view
     * SubqueryAlias (possibly under further user aliases), optionally
-    * below a WHERE Filter. */
-  private def baseOf(child: LogicalPlan,
-      base: String): Option[Option[Expression]] = {
-    def isBase(p: LogicalPlan): Boolean = p match {
+    * below a WHERE Filter — by name AND plan: a same-named view someone
+    * else registered on the session is not the base. */
+  private def baseOf(child: LogicalPlan, base: String,
+      engine: graft.Engine): Option[Option[Expression]] = {
+    def named(p: LogicalPlan): Boolean = p match {
       case sa: SubqueryAlias =>
-        sa.alias.equalsIgnoreCase(base) || isBase(sa.child)
+        sa.alias.equalsIgnoreCase(base) || named(sa.child)
       case _ => false
     }
+    def isBase(sa: SubqueryAlias): Boolean = named(sa) &&
+      EliminateSubqueryAliases(sa).sameResult(
+        EliminateSubqueryAliases(engine.analyzedPlanOf(base)))
     child match {
       case sa: SubqueryAlias if isBase(sa) => Some(None)
       case Filter(cond, sa: SubqueryAlias) if isBase(sa) => Some(Some(cond))
@@ -84,7 +85,7 @@ object MatViewRewrite {
     val dims = mv.dims.map(_.toLowerCase).toSet
     def isDim(a: Attribute): Boolean = dims.contains(a.name.toLowerCase)
 
-    baseOf(agg.child, mv.base).flatMap { cond =>
+    baseOf(agg.child, mv.base, engine).flatMap { cond =>
       // grouping: plain dimension columns only
       val groupOk = agg.groupingExpressions.forall {
         case a: Attribute => isDim(a)

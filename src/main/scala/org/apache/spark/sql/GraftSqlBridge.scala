@@ -10,14 +10,6 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** DataFrame from a logical plan (private[sql] Dataset.ofRows) — lets
-    * the engine apply plan rewrites on ANALYZED plans, before the main
-    * optimizer can collapse literal relations. */
-  def ofRows(spark: SparkSession,
-      plan: catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(
-      spark.asInstanceOf[classic.SparkSession], plan)
-
   /** Build the V2 parquet Table for a path (internal constructor —
     * bridged for the GraftCatalog TableCatalog plugin). */
   def parquetTable(name: String, path: String): connector.catalog.Table =

@@ -121,6 +121,9 @@ class EngineSpec extends SparkSpec {
     assert(engine.tableHistory(t).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).toSet ==
       Set((2L, 0, true), (1L, 1, false), (0L, 2, false)))
+    // the snapshot is a relation to nested SELECTs too
+    SqlRouterSpec.nestedSelectLaw(engine,
+      s"SELECT id, name FROM $t VERSION AS OF 1")
     // future / non-integer versions and TIMESTAMP AS OF raise
     intercept[IllegalArgumentException](
       engine.sql(s"SELECT * FROM $t VERSION AS OF 9"))
@@ -1056,8 +1059,7 @@ class EngineSpec extends SparkSpec {
                 |WHERE l_quantity > 25 GROUP BY l_returnflag""".stripMargin
     Seq(q1, q2, q3).foreach { q =>
       val viaEngine = engine.sql(q).collect().toSet
-      val direct = spark.sql(q).collect().toSet // no extensions → no rewrite
-      assert(viaEngine == direct, s"mismatch for: $q")
+      assert(viaEngine == direct(engine, q, t), s"mismatch for: $q")
     }
     // the covered query re-aggregates the MV partials (path-level scan
     // assertion lives in PlanQualitySpec's q159 law)
@@ -1138,7 +1140,7 @@ class EngineSpec extends SparkSpec {
     val q = s"SELECT grp, sum(x) AS s, round(avg(x), 6) AS a, " +
       s"min(x) AS mn, max(x) AS mx, count(*) AS n, count(y) AS nv " +
       s"FROM $t GROUP BY grp"
-    assert(engine.sql(q).collect().toSet == spark.sql(q).collect().toSet)
+    assert(engine.sql(q).collect().toSet == direct(engine, q, t))
     val planStr = org.apache.spark.sql.classic.ClassicConversions
       .castToImpl(engine.sql(q)).queryExecution.optimizedPlan.toString()
     assert(planStr.contains("sum_x"), s"not served by the MV:\n$planStr")
@@ -1146,17 +1148,17 @@ class EngineSpec extends SparkSpec {
     // still correct
     engine.sql(s"DELETE FROM $t WHERE grp = 'a'")
     assert(engine.refreshMaterializedAggregate(mv) == "rebuild")
-    assert(engine.sql(q).collect().toSet == spark.sql(q).collect().toSet)
+    assert(engine.sql(q).collect().toSet == direct(engine, q, t))
     // ...and an insert AFTER the rebuild is incremental again
     engine.sql(s"INSERT INTO $t VALUES ('d', 9.5, 2)")
     assert(engine.refreshMaterializedAggregate(mv) == "incremental")
-    assert(engine.sql(q).collect().toSet == spark.sql(q).collect().toSet)
+    assert(engine.sql(q).collect().toSet == direct(engine, q, t))
     // MERGE rewrites rows too — it must also break the chain
     import spark.implicits._
     engine.mergeInto(t, Seq(("b", 100.0, 1)).toDF("grp", "x", "y"),
       keys = Seq("grp"))
     assert(engine.refreshMaterializedAggregate(mv) == "rebuild")
-    assert(engine.sql(q).collect().toSet == spark.sql(q).collect().toSet)
+    assert(engine.sql(q).collect().toSet == direct(engine, q, t))
     engine.dropTable(mvRef); engine.dropTable(mv); engine.dropTable(t)
   }
 
@@ -1254,15 +1256,13 @@ class EngineSpec extends SparkSpec {
       val q = s"SELECT ${(gdims ++ calls).mkString(", ")} FROM $t" +
         filter + group
       val viaEngine = engine.sql(q).collect().toSet
-      val direct = spark.sql(q).collect().toSet // no extensions → no rewrite
-      assert(viaEngine == direct, s"law violated (i=$i): $q")
+      assert(viaEngine == direct(engine, q, t), s"law violated (i=$i): $q")
     }
     // deterministic pin of the empty-global edge: a no-match dim filter
     // with no GROUP BY must count 0, not NULL (sum-over-empty)
     val edge = s"SELECT count(*) AS n, count(l_quantity) AS nv, " +
       s"round(avg(l_discount), 4) AS a FROM $t WHERE l_returnflag = 'Z'"
-    assert(engine.sql(edge).collect().toSeq ==
-      spark.sql(edge).collect().toSeq)
+    assert(engine.sql(edge).collect().toSet == direct(engine, edge, t))
     engine.dropTable(mv); engine.dropTable(t)
   }
 
@@ -1475,6 +1475,9 @@ class EngineSpec extends SparkSpec {
       s"SELECT * FROM table_changes('$t', 2, 2, 'id')")
       .collect().map(_.getAs[String]("_change_type")).toSet
     assert(upd == Set("delete"))
+    // ... and to nested SELECTs
+    SqlRouterSpec.nestedSelectLaw(engine,
+      s"SELECT id, _change_type, _commit_version FROM table_changes('$t', 1)")
     intercept[IllegalArgumentException](
       engine.sql("SELECT * FROM table_changes('no_such_table', 1)"))
     intercept[IllegalArgumentException](
@@ -2068,6 +2071,184 @@ class EngineSpec extends SparkSpec {
       hc.unset("fs.probe.impl")
       hc.unset("fs.probe.impl.disable.cache")
     }
+  }
+
+  // ---- one query path: GraftExtensions owns graft's SQL surface --------
+
+  test("one-path law: engine.sql(q) and plain spark.sql(q) on the " +
+      "engine's session give the same optimized plan and rows for every " +
+      "non-routed SELECT graft changes") {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val engine = Engine(spark) // the session's serving engine
+    val id = System.nanoTime()
+    val li = s"op_li_$id"
+    engine.registerTable(li, s"$sf/lineitem.parquet")
+    val base = s"op_mv_base_$id"
+    val mv = s"op_mv_$id"
+    engine.registerTable(base, spark.range(0L, 2000L)
+      .select((col("id") % 7).as("g"), col("id").cast("double").as("x")))
+    engine.createMaterializedAggregate(mv, base, dims = Seq("g"),
+      measures = Seq("x"),
+      path = s"${sys.props("java.io.tmpdir")}/graft_test_mv_$id")
+    val ty = s"op_mood_$id"
+    val et = s"op_enum_$id"
+    engine.sql(s"CREATE TYPE $ty AS ENUM ('happy', 'sad', 'neutral')")
+    engine.sql(s"CREATE TABLE $et (id INTEGER, m $ty)")
+    engine.sql(s"INSERT INTO $et VALUES (1, 'sad'), (2, 'happy'), " +
+      "(3, 'neutral')")                                   // v1
+    engine.sql(s"DELETE FROM $et WHERE id = 3")           // v2
+    val ev = s"op_ev_$id"
+    engine.registerTable(ev, graft.Tables.t(spark, sf, "events"))
+    val corpus = Seq(
+      s"SELECT count(*) AS n, max(l_orderkey) AS hi FROM $li",
+      s"SELECT g, sum(x) AS s, count(*) AS n FROM $base GROUP BY g",
+      s"SELECT m FROM $et ORDER BY m",
+      s"SELECT min(m) AS lo, max(m) AS hi FROM $et",
+      s"SELECT id, m FROM $et VERSION AS OF 1",
+      s"SELECT id, _change_type, _commit_version " +
+        s"FROM table_changes('$et', 1)",
+      "SELECT count(*) AS n FROM graft_probe_stats()",
+      "SELECT hex('\\xAA\\xBB'::BLOB) AS h",
+      s"""SELECT e.event_id, s.ts AS signup_ts
+         |FROM (SELECT * FROM $ev WHERE event_type = 'error') e
+         |ASOF JOIN (SELECT * FROM $ev WHERE event_type = 'signup') s
+         |ON e.user_id = s.user_id AND e.ts >= s.ts""".stripMargin)
+    corpus.foreach { q =>
+      val viaEngine = engine.sql(q)
+      val viaSpark = engine.spark.sql(q)
+      val pe = castToImpl(viaEngine).queryExecution.optimizedPlan
+      val ps = castToImpl(viaSpark).queryExecution.optimizedPlan
+      assert(pe.sameResult(ps),
+        s"plans differ for: $q\nengine.sql:\n$pe\nspark.sql:\n$ps")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(viaEngine) == rows(viaSpark), s"rows differ for: $q")
+    }
+    // the corpus exercises the rewrites, not just agreement: the
+    // footer fold, the MV partials and declaration order all show
+    val fold = castToImpl(spark.sql(corpus.head)).queryExecution.analyzed
+    assert(fold.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(castToImpl(spark.sql(corpus(1))).queryExecution.optimizedPlan
+      .toString.contains("sum_x"))
+    assert(spark.sql(corpus(2)).collect().map(_.getString(0)).toSeq ==
+      Seq("happy", "sad"))
+    engine.dropTable(mv); engine.dropTable(base); engine.dropTable(et)
+    engine.unregisterTable(li); engine.unregisterTable(ev)
+  }
+
+  test("engine binding: a scratch engine's SQL rewrites against its own " +
+      "catalog while another engine serves the session; a newSession() " +
+      "clone gets no rewrite") {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val serving = Engine(spark)
+    val scratch = Engine.scratch(spark)
+    assert(Engine.forSession(spark).contains(serving))
+    val id = System.nanoTime()
+    val ty = s"bind_mood_$id"
+    val t = s"bind_enum_$id"
+    scratch.sql(s"CREATE TYPE $ty AS ENUM ('happy', 'sad', 'neutral')")
+    scratch.sql(s"CREATE TABLE $t (id INTEGER, m $ty)")
+    scratch.sql(s"INSERT INTO $t VALUES (1, 'neutral'), (2, 'sad'), " +
+      "(3, 'happy')")
+    assert(!serving.tableExists(t))
+    // declaration order, not lexical (happy, neutral, sad)
+    assert(scratch.sql(s"SELECT m FROM $t ORDER BY m").collect()
+      .map(_.getString(0)).toSeq == Seq("happy", "sad", "neutral"))
+    assert(scratch.sql(s"SELECT count(*) AS n FROM table_changes('$t', 1)")
+      .head().getLong(0) == 3L)
+    // the serving engine does not know the scratch table
+    intercept[IllegalArgumentException](
+      serving.sql(s"SELECT * FROM table_changes('$t', 1)"))
+    assert(Engine.forSession(spark).contains(serving))
+    scratch.dropTable(t)
+
+    // a clone inherits the extensions but no engine: plain Spark plans
+    val li = s"bind_li_$id"
+    val base = s"bind_mv_base_$id"
+    val mv = s"bind_mv_$id"
+    serving.registerTable(li, s"$sf/lineitem.parquet")
+    val baseDf = spark.range(0L, 2000L)
+      .select((col("id") % 7).as("g"), col("id").cast("double").as("x"))
+    serving.registerTable(base, baseDf)
+    serving.createMaterializedAggregate(mv, base, dims = Seq("g"),
+      measures = Seq("x"),
+      path = s"${sys.props("java.io.tmpdir")}/graft_test_mv_$id")
+    val countQ = s"SELECT count(*) AS n FROM $li"
+    val mvQ = s"SELECT g, sum(x) AS s FROM $base GROUP BY g"
+    assert(castToImpl(spark.sql(countQ)).queryExecution.analyzed
+      .isInstanceOf[LocalRelation])
+    val clone = spark.newSession()
+    assert(clone.sessionState.sqlParser.isInstanceOf[GraftParser])
+    clone.read.parquet(s"$sf/lineitem.parquet").createOrReplaceTempView(li)
+    clone.range(0L, 2000L)
+      .select((col("id") % 7).as("g"), col("id").cast("double").as("x"))
+      .createOrReplaceTempView(base)
+    val cCount = clone.sql(countQ)
+    assert(!castToImpl(cCount).queryExecution.analyzed
+      .isInstanceOf[LocalRelation], "footer fold leaked into a clone")
+    assert(cCount.head().getLong(0) == serving.table(li).count())
+    assert(!castToImpl(clone.sql(mvQ)).queryExecution.optimizedPlan
+      .toString.contains("sum_x"), "MV rewrite leaked into a clone")
+    serving.dropTable(mv); serving.dropTable(base)
+    serving.unregisterTable(li)
+  }
+
+  test("post-hoc rule laws: each graft rule is idempotent on its own " +
+      "output, and DataFrame-API re-analysis re-runs the rules") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import graft.plans.{EnumOrderRewrite, FooterAggRewrite, MatViewRewrite}
+    val engine = Engine(spark)
+    val id = System.nanoTime()
+    val li = s"idem_li_$id"
+    val base = s"idem_mv_base_$id"
+    val mv = s"idem_mv_$id"
+    val ty = s"idem_mood_$id"
+    val t = s"idem_enum_$id"
+    engine.registerTable(li, s"$sf/lineitem.parquet")
+    engine.registerTable(base, spark.range(0L, 2000L)
+      .select((col("id") % 7).as("g"), col("id").cast("double").as("x")))
+    engine.createMaterializedAggregate(mv, base, dims = Seq("g"),
+      measures = Seq("x"),
+      path = s"${sys.props("java.io.tmpdir")}/graft_test_mv_$id")
+    engine.sql(s"CREATE TYPE $ty AS ENUM ('happy', 'sad', 'neutral')")
+    engine.sql(s"CREATE TABLE $t (id INTEGER, m $ty)")
+    engine.sql(s"INSERT INTO $t VALUES (1, 'neutral'), (2, 'sad'), " +
+      "(3, 'happy')")
+    val rules = Seq("FooterAggRewrite" -> FooterAggRewrite.rewrite _,
+      "MatViewRewrite" -> MatViewRewrite.rewrite _,
+      "EnumOrderRewrite" -> EnumOrderRewrite.rewrite _)
+    Seq(s"SELECT count(*) AS n FROM $li",
+      s"SELECT g, sum(x) AS s FROM $base WHERE g < 5 GROUP BY g",
+      s"SELECT m FROM $t WHERE m > 'happy' ORDER BY m",
+      s"SELECT min(m) AS lo, max(m) AS hi FROM $t")
+      .foreach { q =>
+        val once = castToImpl(engine.sql(q)).queryExecution.analyzed
+        rules.foreach { case (name, rewrite) =>
+          assert(rewrite(once, engine) eq once,
+            s"$name changed its own output for: $q")
+        }
+      }
+    // DataFrame operators over an engine.sql result are re-analyzed with
+    // the rules: a new Sort on the enum column is ranked, the MV rewrite
+    // survives a filter, and neither applies twice
+    val sorted = engine.sql(s"SELECT id, m FROM $t").orderBy(col("m"))
+    assert(sorted.collect().map(_.getString(1)).toSeq ==
+      Seq("happy", "sad", "neutral"))
+    val filtered = engine.sql(s"SELECT g, sum(x) AS s FROM $base GROUP BY g")
+      .filter(col("g") > 3)
+    assert(castToImpl(filtered).queryExecution.optimizedPlan.toString
+      .contains("sum_x"))
+    assert(filtered.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      (0L until 2000L).groupBy(_ % 7).filter(_._1 > 3)
+        .map { case (g, xs) => g -> xs.map(_.toDouble).sum })
+    assert(castToImpl(engine.sql(s"SELECT count(*) AS n FROM $li")
+      .filter(col("n") > 0)).queryExecution.analyzed.collectFirst {
+        case l: LocalRelation => l }.isDefined)
+    engine.dropTable(t); engine.dropTable(mv); engine.dropTable(base)
+    engine.unregisterTable(li)
   }
 }
 

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** The SparkSessionExtensions entry point injects without error and its
-  * builders construct working expressions (exercised through SQL via the
-  * same builder list in DuckAliases). */
+/** [[GraftExtensions]] is graft's SQL surface: it injects without
+  * error, its functions work from plain SQL on a graft session, its
+  * rules fire on a session built with only `withExtensions` (the
+  * `spark.sql.extensions` deployment path), and an [[Engine]] refuses a
+  * session built without it. */
 class ExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions injects all engine functions") {
@@ -74,6 +76,32 @@ class ExtensionsSpec extends SparkSpec {
       assert(stale.filter("l_returnflag = 'Z'").count() == 1)
     } finally {
       // never ext.stop(): it would kill the shared SparkContext
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("Engine refuses a session built without GraftExtensions, naming " +
+      "both ways to deploy them") {
+    import org.apache.spark.sql.SparkSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val plain = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .getOrCreate()
+    try {
+      assert(plain ne spark, "plain session must be a fresh session")
+      assert(!plain.sessionState.sqlParser.isInstanceOf[GraftParser])
+      Seq(() => Engine(plain), () => Engine.scratch(plain)).foreach { mk =>
+        val e = intercept[IllegalArgumentException](mk())
+        assert(e.getMessage.contains("GraftSession") &&
+          e.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"),
+          e.getMessage)
+      }
+      assert(Engine.forSession(plain).isEmpty)
+    } finally {
+      // never plain.stop(): it would kill the shared SparkContext
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)
     }

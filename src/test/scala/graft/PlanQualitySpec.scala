@@ -561,7 +561,8 @@ class PlanQualitySpec extends SparkSpec {
     assert(scanned.forall(_.contains("graft_mv_")),
       s"rewritten aggregate reads non-MV files: $scanned")
     // row-identity against the unrewritten formulation (plain spark.sql
-    // has no engine extension, so it aggregates the base table)
+    // acts for the session's serving engine, not q159's scratch engine
+    // that owns the MV, so it aggregates the base table)
     val direct = spark.sql(
       """SELECT l_returnflag, l_linestatus,
         |round(sum(l_quantity), 2) AS sum_qty,

@@ -36,6 +36,20 @@ trait SparkSpec extends AnyFunSuite {
     df.collect()
     ss.map(_.metrics("numOutputRows").value).sum
   }
+
+  /** Rows of `q` on a `newSession()` clone that sees each of `tables`
+    * as a plain view of `e`'s current data: the clone carries graft's
+    * extensions but no engine, so no rewrite applies — the direct
+    * computation an engine rewrite must match. */
+  protected def direct(e: Engine, q: String,
+      tables: String*): Set[org.apache.spark.sql.Row] = {
+    val plain = spark.newSession()
+    tables.foreach { t =>
+      val df = e.table(t)
+      plain.createDataFrame(df.rdd, df.schema).createOrReplaceTempView(t)
+    }
+    plain.sql(q).collect().toSet
+  }
 }
 
 object SparkSpec {

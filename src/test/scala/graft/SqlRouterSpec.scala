@@ -109,9 +109,9 @@ class SqlRouterSpec extends SparkSpec {
       s"SELECT person_mood FROM $t ORDER BY enum_ord('$ty', person_mood)")
       .collect().map(_.getString(0))
     assert(ordered.sameElements(Array("happy", "sad", "neutral")))
-    // ... and via PLAIN ORDER BY on the enum column: the
-    // EnumOrderRewrite optimizer rule substitutes the declaration rank
-    // (lexical order would be happy, neutral, sad)
+    // ... and via PLAIN ORDER BY on the enum column: GraftExtensions'
+    // EnumOrderRewrite post-hoc resolution rule substitutes the
+    // declaration rank (lexical order would be happy, neutral, sad)
     val plain = engine.sql(
       s"SELECT person_mood FROM $t ORDER BY person_mood")
       .collect().map(_.getString(0))
@@ -1135,6 +1135,23 @@ class SqlRouterSpec extends SparkSpec {
     // aggregation over the function composes like any relation
     assert(eng.sql("SELECT count(*) AS n FROM graft_probe_stats()")
       .head().getLong(0) >= 1L)
+    // a table function, not a text substitution: any spelling resolves,
+    // a string literal that mentions it stays data, nested SELECTs see
+    // it, and no helper view is left in the session catalog
+    assert(eng.sql("SELECT count(*) AS n FROM GRAFT_PROBE_STATS( )")
+      .head().getLong(0) >= 1L)
+    assert(eng.sql("SELECT 'graft_probe_stats()' AS s").head().getString(0) ==
+      "graft_probe_stats()")
+    SqlRouterSpec.nestedSelectLaw(eng,
+      "SELECT index_name, verb, rows FROM graft_probe_stats()")
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.contains("graft_probe_stats")))
+  }
+
+  test("DuckDB literal spellings reach nested SELECTs: CTAS and " +
+      "INSERT … SELECT over a ::BLOB literal") {
+    SqlRouterSpec.nestedSelectLaw(engine,
+      "SELECT '\\xAA\\xBB'::BLOB AS b, 'x'::UUID AS u")
   }
 
   test("bm25Search pads zero-score docs in doc_id order when fewer " +
@@ -1339,15 +1356,15 @@ class SqlRouterSpec extends SparkSpec {
     // covered query rewrites to the MV partials and matches direct
     val q = s"SELECT grp, round(sum(x), 2) AS sx, round(avg(y), 4) " +
       s"AS ay, count(*) AS n FROM $t GROUP BY grp"
-    assert(engine.sql(q).collect().toSet == spark.sql(q).collect().toSet)
+    assert(engine.sql(q).collect().toSet == direct(engine, q, t))
     val planStr = org.apache.spark.sql.classic.ClassicConversions
       .castToImpl(engine.sql(q)).queryExecution.optimizedPlan.toString()
     assert(planStr.contains("sum_x"), s"not rewritten:\n$planStr")
     // DML → stale (served from base), REFRESH re-arms
     engine.sql(s"INSERT INTO $t VALUES ('b', 2, 6.0, 60.0)")
-    assert(engine.sql(q).collect().toSet == spark.sql(q).collect().toSet)
+    assert(engine.sql(q).collect().toSet == direct(engine, q, t))
     engine.sql(s"REFRESH MATERIALIZED VIEW $mv")
-    assert(engine.sql(q).collect().toSet == spark.sql(q).collect().toSet)
+    assert(engine.sql(q).collect().toSet == direct(engine, q, t))
     val planFresh = org.apache.spark.sql.classic.ClassicConversions
       .castToImpl(engine.sql(q)).queryExecution.optimizedPlan.toString()
     assert(planFresh.contains("sum_x"), s"refresh did not re-arm")
@@ -1547,5 +1564,32 @@ class SqlRouterSpec extends SparkSpec {
     engine.createTableAs(s"${t}_d", engine.table(t).limit(5))
     intercept[IllegalArgumentException](engine.tableStats(s"${t}_d"))
     Seq(t, s"${t}_d").foreach(engine.unregisterTable)
+  }
+}
+
+object SqlRouterSpec {
+  private def render(r: org.apache.spark.sql.Row): String =
+    r.toSeq.map {
+      case b: Array[Byte] => b.map("%02X".format(_)).mkString("X'", "", "'")
+      case v => String.valueOf(v)
+    }.mkString("|")
+
+  /** `q` answers the same rows as a top-level SELECT, as the SELECT of
+    * a CTAS, and as the SELECT of an INSERT into an empty table of its
+    * schema: the router hands nested SELECTs to `spark.sql`, which
+    * carries the whole graft SQL surface. */
+  def nestedSelectLaw(e: Engine, q: String): Unit = {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(render).sorted.toSeq
+    val want = rows(e.sql(q))
+    val ctas = s"nested_ctas_${System.nanoTime()}"
+    e.sql(s"CREATE TABLE $ctas AS $q")
+    assert(rows(e.table(ctas)) == want, s"CREATE TABLE … AS over: $q")
+    val ins = s"nested_ins_${System.nanoTime()}"
+    e.createTableAs(ins, e.table(ctas).limit(0))
+    e.sql(s"INSERT INTO $ins $q")
+    assert(rows(e.table(ins)) == want, s"INSERT INTO … SELECT over: $q")
+    e.dropTable(ctas)
+    e.dropTable(ins)
   }
 }
