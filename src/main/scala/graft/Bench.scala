@@ -4,11 +4,23 @@ import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: runs the headline queries against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line. Each
   * query is fully materialized through a noop sink (count() would let
   * Catalyst prune the compute columns). */
 object Bench {
+  /** One timed run of query `name` on `dir`, fully materialized through
+    * a noop sink. The production formulation: the override map swaps in
+    * the sketch-only q94 (audit excluded — it's per-snapshot, not
+    * per-query). */
+  private[graft] def runQuery(spark: SparkSession, name: String, dir: String)
+      : Unit =
+    SparkEntry.benchOverrides.getOrElse(name, SparkEntry.queries(name))
+      .apply(spark, dir)
+      .write.mode("overwrite").format("noop").save()
+
   /** The quiet anchors in `path`: tier key → sentinel floor. A missing
     * or unreadable file reads as no anchors. */
   private[graft] def readAnchors(path: Path): Map[String, Double] =
@@ -106,15 +118,8 @@ object Bench {
     val spark = GraftSession.tierSized(cpus, sfDir)
     // JVM + codegen warmup on the smallest sf, so measured numbers are the
     // steady-state throughput a long-lived cluster session would see.
-    // production formulation per query: the override map swaps in the
-    // sketch-only q94 (audit excluded — it's per-snapshot, not per-query);
-    // each query runs under its execution profile (NamedQuery.conf)
     def runQuery(name: String, dir: String): Unit =
-      SparkEntry.withProfile(spark, name) {
-        SparkEntry.benchOverrides.getOrElse(name, SparkEntry.queries(name))
-          .apply(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-      }
+      Bench.runQuery(spark, name, dir)
     benchSet.foreach { name =>
       try runQuery(name, "/root/testdata/sf0.001")
       catch { case _: Throwable => () }

@@ -17,29 +17,49 @@ import org.apache.spark.sql.SparkSession
   *    carries nanosecond timestamps Spark otherwise refuses to read
   *  - `spark.ui.enabled=false`: no UI server per runner
   * Query sessions ([[builder]], [[open]], [[apply]], [[tierSized]])
-  * also set `spark.sql.adaptive.enabled=true` and carry
-  * [[GraftExtensions]] (graft's SQL surface, which [[Engine]] requires;
-  * a builder property, not a conf key). */
+  * also carry [[GraftExtensions]] (graft's SQL surface, which [[Engine]]
+  * requires; a builder property, not a conf key) and set:
+  *  - `spark.sql.adaptive.enabled=true`
+  *  - `spark.sql.legacy.bucketedTableScan.outputOrdering=true`: a
+  *    bucketed scan reports its bucket sort order, so the layouts
+  *    written one file per bucket ([[operators.BucketedOps]]) feed
+  *    windows and joins without a sort. Spark reports the order only
+  *    when every bucket holds exactly one file; a multi-file bucket is
+  *    sorted per file only, and its plan gets its `SortExec` back
+  *    (EngineSpec's layout-maintenance law). Not set on [[files]]
+  *    sessions, whose written bytes must not move with query shape.
+  * A named query therefore gets one plan whoever runs it: no runner
+  * sets confs around it. */
 object GraftSession {
 
   /** Cores for a runner: `$SPARK_GRAFT_CPUS`, else `default`. */
   def cpus(default: Int = 32): Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(default)
 
+  /** The base confs, set on every session. */
+  private[graft] val baseConfs: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  /** The confs query sessions set on top of [[baseConfs]]. */
+  private[graft] val querySessionConfs: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
+
   private def base(master: String, shufflePartitions: Int)
       : SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      .config(baseConfs)
 
-  /** A query-session builder: base confs, AQE and [[GraftExtensions]];
-    * callers add more (app name, executor sizing) before [[open]]. */
+  /** A query-session builder: base confs, [[querySessionConfs]] and
+    * [[GraftExtensions]]; callers add more (app name, executor sizing)
+    * before [[open]]. */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     base(master, shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
+      .config(querySessionConfs)
       .withExtensions(new GraftExtensions)
 
   /** Opens `b`'s session, or joins the running one. */

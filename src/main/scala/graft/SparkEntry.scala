@@ -34,17 +34,7 @@ object SparkEntry {
     * engine-defined hashes (minhash/simhash/LSH/rolling fingerprints) —
     * those get the driver's rows-only check. */
   def oracleSql: Map[String, String] =
-    all.collect { case NamedQuery(n, Some(sql), _, _) => n -> sql }.toMap
-
-  /** Per-query execution profiles (session confs the runners apply
-    * around the query and restore): see [[operators.NamedQuery.conf]]. */
-  def queryConf: Map[String, Map[String, String]] =
-    all.filter(_.conf.nonEmpty).map(q => q.name -> q.conf).toMap
-
-  /** Run `body` (which builds or executes query `name`) under that
-    * query's execution profile, restoring the session confs after. */
-  def withProfile[T](spark: SparkSession, name: String)(body: => T): T =
-    NamedQuery.withConf(spark, queryConf.getOrElse(name, Map.empty))(body)
+    all.collect { case NamedQuery(n, Some(sql), _) => n -> sql }.toMap
 
   /** Corpus-level stages shared across bench queries: Bench materializes
     * each once per session (timed as its own JSON entry) and re-warms it

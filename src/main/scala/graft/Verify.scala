@@ -15,10 +15,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => wanted.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try SparkEntry.withProfile(spark, name) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -223,15 +223,6 @@ object BucketedOps {
     factPair(s, d); ()
   }
 
-  /** Execution profile for the zero-exchange bucketed plans: AQE only
-    * re-plans EXCHANGES at stage boundaries; these plans have none on
-    * the fact path (PlanQualitySpec zero-exchange law), so AQE
-    * contributes only its per-stage materialization barriers — measured
-    * 0.2-0.25 s/query at sf10 (StageAccount r10: q155 1.06->0.83 s,
-    * q156 1.52->1.29 s). The same holds at cluster scale: the LAYOUT,
-    * not the runtime re-planner, is what co-locates these joins. */
-  private val NoAqe = NamedQuery.NoAqe
-
   /** q12 on the bucketed layout. The per-order pre-aggregation groups
     * on the bucket key, so even the PARTIAL aggregate consumes the
     * scan's partitioning — the only shuffle left in the whole plan is
@@ -257,7 +248,7 @@ object BucketedOps {
         .groupBy("c_mktsegment")
         .agg(round(sum(col("rev")), 2).as("revenue"),
           count(lit(1)).as("n_orders"))
-    }, conf = NoAqe)
+    })
 
   /** q68 (TPC-H Q3 shape) on the bucketed layout: the customer join
     * broadcasts and PRESERVES orders' bucket partitioning, the fact
@@ -306,7 +297,7 @@ object BucketedOps {
         .select("l_orderkey", "revenue", "odate", "o_orderpriority")
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
-    }, conf = NoAqe)
+    })
 
   /** q69 (TPC-H Q5 shape) on the bucketed layout: the broadcast
     * supplier prune preserves lineitem's bucket partitioning into the
@@ -360,21 +351,21 @@ object BucketedOps {
           col("l_suppkey") === col("s_suppkey"))
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"),
           col("s_nationkey"))
-        // the optimizer folds this filter into the fact join as a second
-        // equi-key pair (l_orderkey,s_nationkey)↔(o_orderkey,c_nationkey);
-        // the SubsetCoPartition profile below lets the single-bucket-key
-        // layout still co-partition that join (both sides hash on key
-        // index 0), so the nation match prunes DURING the probe with
-        // zero fact exchange — StageAccount r10: 1.20 → 0.69 s at sf10,
-        // result-identical, one exchange left (the 5-row n_name rollup)
-        .join(oc, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("s_nationkey") === col("c_nationkey"))
+        // the nation match is a RESIDUAL condition of the fact join:
+        // spelled as an equality the optimizer extracts it as a second
+        // equi-key, (l_orderkey, s_nationkey) ↔ (o_orderkey, c_nationkey),
+        // which the l_orderkey bucketing does not satisfy, and both fact
+        // sides re-shuffle. As a difference (nation keys are small
+        // non-null ints, so `a - b = 0` ≡ `a = b`) it stays a condition
+        // evaluated during the probe of the co-partitioned l_orderkey
+        // join: zero fact exchange, one left (the 5-row n_name rollup)
+        .join(oc, col("l_orderkey") === col("o_orderkey") &&
+          (col("s_nationkey") - col("c_nationkey")) === 0)
         .join(broadcast(asiaN), col("c_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
         .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
           .as("revenue"))
-    }, conf = NoAqe +
-      ("spark.sql.requireAllClusterKeysForCoPartition" -> "false"))
+    })
 
   /** q57 (sessionization) on the user-bucketed event log. Identical
     * semantics and oracle SQL; the window's PARTITION BY user_id ORDER
@@ -408,13 +399,11 @@ object BucketedOps {
             .otherwise(0))
         .groupBy("user_id")
         .agg((sum("brk") + 1).as("n_sessions"))
-      // bucketedTableScan.outputOrdering: since 3.0 Spark ignores bucket
-      // sort metadata by default because a multi-file bucket only sorts
-      // per-file; [[writeBucketed]] repartitions on the bucket key so
-      // every bucket is EXACTLY one file — the one case the ordering is
-      // sound — and the law in PlanQualitySpec pins the sort-free plan
-    }, conf = NoAqe +
-      ("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true"))
+      // the scan reports the (user_id, ts) order because query sessions
+      // trust single-file bucket sort metadata ([[graft.GraftSession]]);
+      // [[writeBucketed]] writes every bucket as EXACTLY one file, and
+      // the law in PlanQualitySpec pins the sort-free plan
+    })
 
   /** q58 (as-of join) on the user-bucketed event log. q58's window
     * orders by (ts, is_signup DESC) so that at equal timestamps the
@@ -442,8 +431,7 @@ object BucketedOps {
           max(when(col("is_signup"), col("ts"))).over(w))
         .filter(!col("is_signup") && col("signup_ts").isNotNull)
         .select("event_id", "signup_ts")
-    }, conf = NoAqe +
-      ("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true"))
+    })
 
   /** q30 (hourly events dashboard) on the minute-grain rollup.
     * Identical semantics and oracle SQL: hour-grain count and sum fold
@@ -466,8 +454,7 @@ object BucketedOps {
       // no-op on a freshly-written rollup; on a fold-maintained one
       // (LayoutMaintenance) it drops hours whose events were all
       // deleted — signed partials net such groups to count 0
-      .filter(col("n") =!= 0),
-    conf = NoAqe)
+      .filter(col("n") =!= 0))
 
   /** Warm hook for Bench: ALL event-log layouts (user-bucketed,
     * minute rollup, Z-order, time-sorted) in ONE maintenance pass with
@@ -491,19 +478,14 @@ object BucketedOps {
     // finally-restore landing between the other's set and its write
     // planning, silently losing the micros row-group stats the layouts
     // exist for (ADVICE r18). Inside the hoisted window each builder's
-    // own set/restore is a no-op (prev == MICROS).
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "TIMESTAMP_MICROS")
-    try NamedQuery.inParallel(
-      () => { eventsByUser(s, d); () },
-      () => { eventsMinuteRollup(s, d); () },
-      () => { eventsZOrder(s, d); () },
-      () => { eventsByTime(s, d); () })
-    finally {
-      prev.fold(s.conf.unset(key))(s.conf.set(key, _))
-      ev.unpersist(); ()
-    }
+    // own scope is a no-op (the value is already MICROS).
+    try NamedQuery.withConf(s, MicrosTimestamps) {
+      NamedQuery.inParallel(
+        () => { eventsByUser(s, d); () },
+        () => { eventsMinuteRollup(s, d); () },
+        () => { eventsZOrder(s, d); () },
+        () => { eventsByTime(s, d); () })
+    } finally { ev.unpersist(); () }
   }
 
   /** Warm hook for Bench (documents token manifest). */
@@ -535,6 +517,10 @@ object BucketedOps {
     * of file count), and row-group stats carry the skipping. */
   private[graft] val clusterFiles: Int = 256
 
+  /** The sort-clustered layouts' timestamp encoding (see [[writeSorted]]). */
+  private val MicrosTimestamps =
+    Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+
   /** Range-partition on `sortCol` and sort within partitions, so each
     * written file covers a disjoint `sortCol` range. Timestamps go out
     * as TIMESTAMP_MICROS — INT96 (a Spark default elsewhere) carries no
@@ -548,20 +534,17 @@ object BucketedOps {
   private[graft] def writeSorted(df: DataFrame, name: String,
       sortCol: org.apache.spark.sql.Column, files: Int,
       append: Boolean = false): Unit = {
-    val s = df.sparkSession
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "TIMESTAMP_MICROS")
     // rows within a file are sorted, so each ROW GROUP covers a
     // contiguous sort-key range too — 4 MB groups keep the pruning
     // unit fine-grained even when decade-tier files grow past it
     // (the sf100 A/B at [[clusterFiles]] fixed this size)
-    try df.repartitionByRange(files, sortCol)
-      .sortWithinPartitions(sortCol)
-      .write.mode(if (append) "append" else "overwrite")
-      .option("parquet.block.size", (4L << 20).toString)
-      .saveAsTable(name)
-    finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    NamedQuery.withConf(df.sparkSession, MicrosTimestamps) {
+      df.repartitionByRange(files, sortCol)
+        .sortWithinPartitions(sortCol)
+        .write.mode(if (append) "append" else "overwrite")
+        .option("parquet.block.size", (4L << 20).toString)
+        .saveAsTable(name)
+    }
   }
 
   /** Collision-free DIRECTED repartition: routes each row to exactly
@@ -604,16 +587,13 @@ object BucketedOps {
   private[graft] def writeSortedDirected(df: DataFrame, name: String,
       sortCol: org.apache.spark.sql.Column,
       cell: org.apache.spark.sql.Column, cells: Int): Unit = {
-    val s = df.sparkSession
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "TIMESTAMP_MICROS")
-    try repartitionDirected(df, cells, cell)
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite")
-      .option("parquet.block.size", (4L << 20).toString)
-      .saveAsTable(name)
-    finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    NamedQuery.withConf(df.sparkSession, MicrosTimestamps) {
+      repartitionDirected(df, cells, cell)
+        .sortWithinPartitions(sortCol)
+        .write.mode("overwrite")
+        .option("parquet.block.size", (4L << 20).toString)
+        .saveAsTable(name)
+    }
   }
 
   /** The Z-rank grid a Z-ordered layout was written against, persisted
@@ -753,7 +733,7 @@ object BucketedOps {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v"))
         .orderBy("event_type")
-    }, conf = NoAqe)
+    })
 
   /** Week-window daily rollup on the time-sorted layout — the
     * dashboard query an event store answers all day. The window
@@ -776,8 +756,7 @@ object BucketedOps {
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("dau"),
         round(sum("value"), 2).as("sum_v"))
-      .orderBy("day"),
-    conf = NoAqe)
+      .orderBy("day"))
 
   def defs: Seq[NamedQuery] =
     Seq(joinAggBucketed, tpchQ3Bucketed, tpchQ5Bucketed, sessionsBucketed,

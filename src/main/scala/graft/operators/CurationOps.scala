@@ -174,9 +174,6 @@ object CurationOps {
       t(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           graft.functions.TokenCount.tokenCount(col("text")).as("tok"))))
-    // (AQE stays ON here: an A/B measured the NoAqe profile 20% SLOWER
-    // — the runtime coalescing of the tiny tail-stage shuffles is worth
-    // more than the stage barriers cost on this 6-stage plan)
 
   /** q97 on the ingest-time token manifest
     * ([[BucketedOps.docsTokens]]): the narrow (doc_id, lang, tok, b)
@@ -206,10 +203,7 @@ object CurationOps {
           ((col("cum") - col("tok")) / 2000L).cast("long").as("shard"))
         .agg(count(lit(1)).as("n_docs"), sum("tok").as("sum_tokens"))
         .orderBy("lang", "shard")
-    }, conf = Map(
-      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true"))
-    // (AQE stays ON: NoAqe A/B read 0.82 vs 0.68 s — coalescing the
-    // three tiny tail exchanges outweighs the stage barriers)
+    })
 
   /** Vocabulary building: top-10 tokens per language by frequency (the
     * seed statistics a tokenizer trainer consumes). Explode → two-level

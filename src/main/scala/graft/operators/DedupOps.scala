@@ -432,7 +432,7 @@ object DedupOps {
     // hundred 16-byte rows at sf0.1 — but ran at the session's
     // tier-sized shuffle width under AQE's per-stage barriers: pure
     // scheduling floor, ~6 jobs/round (CcProbe sf0.1: 1.3-3.3 s as
-    // shipped, 0.7-0.9 s at NoAqe + width 4). Size the reducer count
+    // shipped, 0.7-0.9 s at AQE off + width 4). Size the reducer count
     // to the MEASURED edge count (guide §2.2 — partitions from data,
     // not a constant: ~1M 16-byte edges per task, floored at 4, never
     // above the session width) and drop AQE inside the loop: its only
@@ -884,13 +884,14 @@ object DedupOps {
         posexplode(graft.functions.ShingleHashArray
           .positionalShingleHashArray(col("text"), k)))
         .toDF("doc_id", "pos", "h")
-      // (r18 A/B note: an explicit footprint-derived exchange on the
-      // gram stream — shared by aggregation and semi-join via
-      // ReusedExchange — was tried in place of the wide-start profile
-      // below; it was a wash at sf0.1/sf1 but regressed sf10 4.6 →
-      // 6.8 s back-to-back, because the wide start helps EVERY shuffle
-      // of this distinct-heavy plan and AQE's coalescing already makes
-      // it scale-adaptive downward. Reverted to the measured profile.)
+      // ~94% of windows are DISTINCT grams (Q173Probe): map-side
+      // combine buys nothing, so the aggregation hash tables carry the
+      // full keyspace. The sf100 fix (a 1024-wide AQE start, 88 → 44 s)
+      // was a runner-only conf profile that no other caller got, and is
+      // gone; an explicit footprint-derived exchange on the gram stream
+      // regressed sf10 4.6 → 6.8 s (r18). Sizing reducers from the
+      // DISTINCT keyspace rather than input bytes is ROADMAP
+      // direction 5.
       val dup = toks.groupBy("h").agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") > 1).select("h")
       val marked = toks.join(dup, Seq("h"), "left_semi")
@@ -908,16 +909,7 @@ object DedupOps {
           coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
           round(coalesce(col("dup_tokens"), lit(0L)) * lit(1.0) /
             col("n_tokens"), 4).as("dup_fraction"))
-    }, conf = Map(
-      // ~94% of windows are DISTINCT grams (Q173Probe): map-side
-      // combine buys nothing, so the aggregation hash tables carry the
-      // full keyspace and the tier-sized default partition count
-      // spills (sf100: 88 s at 121 partitions, 44 s at 256). Start the
-      // shuffle wide and let AQE coalesce small tiers back down — the
-      // per-query analog of sizing reducers to the DISTINCT keyspace,
-      // not the input bytes.
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-        -> "1024"))
+    })
 
   def defs: Seq[NamedQuery] =
     Seq(exact, ngramJaccard, minhashLsh, simhash, nearDupClusters,

@@ -9,31 +9,18 @@ import graft.Tables.t
 /** A query exposed through SparkEntry: Spark implementation + (optionally)
   * the equivalent DuckDB SQL used as a correctness oracle. Column names are
   * aligned on both sides (the driver's comparator sorts columns by name).
-  *
-  * `conf` is the query's execution profile: session confs the runners
-  * (Bench/Verify) set around the query and restore after — the analog of
-  * the reference's per-query mode classification (task_partitioner.cpp
-  * short-circuits small inputs to one task; here, e.g., a zero-exchange
-  * bucketed plan turns AQE off because AQE's only value is runtime
-  * exchange re-planning, so an exchange-free plan pays its per-stage
-  * materialization barriers for nothing — measured 0.2-0.25 s/query at
-  * sf10, StageAccount r10). */
+  * A named query has one plan, whoever runs it: its execution shape lives
+  * in the plan itself or in the query session ([[graft.GraftSession]]),
+  * never in confs a runner sets around it. */
 case class NamedQuery(name: String,
     oracle: Option[String],
-    fn: (SparkSession, String) => DataFrame,
-    conf: Map[String, String] = Map.empty)
+    fn: (SparkSession, String) => DataFrame)
 
 object NamedQuery {
-  /** Profile for plans with zero (or one tiny) exchange: AQE's value is
-    * runtime re-planning of exchanges, so such plans pay only its
-    * per-stage materialization barriers (~0.1-0.25 s each at sf10,
-    * StageAccount/FloorProbe r10). Everything with a data-bearing
-    * shuffle keeps AQE (skew-join splitting, runtime broadcast). */
-  val NoAqe: Map[String, String] =
-    Map("spark.sql.adaptive.enabled" -> "false")
-
-  /** Run `body` with the query's execution profile applied, restoring
-    * prior session values after (exception-safe). */
+  /** Run `body` with the session confs `conf` applied, restoring the
+    * prior values after (exception-safe). For scopes inside an operator
+    * (a loop's shuffle width, a layout write's timestamp encoding), so
+    * every caller of the operator gets the same plan. */
   def withConf[T](s: SparkSession, conf: Map[String, String])(body: => T): T =
     if (conf.isEmpty) body
     else {
@@ -200,22 +187,7 @@ object Relational {
         round(sum("l_quantity"), 2).as("sum_qty"),
         round(avg("l_extendedprice"), 4).as("avg_price"),
         round(min("l_discount"), 2).as("min_disc"),
-        round(max("l_tax"), 2).as("max_tax")),
-      // scan + one 32-row exchange: tiny-exchange NoAqe profile
-      // (AqeProbe sf10 interleaved: 0.51 -> 0.29 s), and coarse splits —
-      // the 4-column double read decodes far fewer bytes than the file
-      // footprint the splitter sizes tasks by, so small splits
-      // over-fragment it into task-launch constants. Q05Probe r11 sweep
-      // (sf10, med-of-7): 32m 0.38, 128m 0.31, 256m 0.27, 512m 0.25,
-      // 1g/2g/8g 0.25-0.27 s — flat past 256m, so the residual over
-      // DuckDB (0.16 s) is the fixed job constant (the empty-data sf0.1
-      // run costs 0.19 s by itself). 512m is the knee: ~45 tasks at the
-      // sf100 decade tier keeps 32 cores fed while amortizing launch
-      // cost. The reference's task partitioner makes the same per-query
-      // granularity choice (task_partitioner.cpp: row-group vs range vs
-      // single-task short-circuit).
-      conf = NamedQuery.NoAqe +
-        ("spark.sql.files.maxPartitionBytes" -> "512m")),
+        round(max("l_tax"), 2).as("max_tax"))),
 
     // -- the driver-contract example ---------------------------------------
     NamedQuery("q1_agg",
@@ -251,8 +223,7 @@ object Relational {
           round(avg("l_quantity"), 4).as("avg_qty"),
           round(avg("l_extendedprice"), 4).as("avg_price"),
           round(avg("l_discount"), 4).as("avg_disc"),
-          count(lit(1)).as("count_order")),
-      conf = NamedQuery.NoAqe),
+          count(lit(1)).as("count_order"))),
 
     NamedQuery("q07_groupby_having",
       Some("""SELECT l_partkey, count(*) AS cnt, round(sum(l_quantity), 2) AS sum_qty
@@ -514,8 +485,7 @@ object Relational {
              |FROM events GROUP BY 1, 2""".stripMargin),
       (s, d) => t(s, d, "events")
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v")),
-      conf = NamedQuery.NoAqe),
+        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v"))),
 
     NamedQuery("q31_events_user_stats",
       Some("""SELECT user_id, count(*) AS n_events,

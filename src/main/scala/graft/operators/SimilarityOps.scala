@@ -109,7 +109,7 @@ object SimilarityOps extends SimilarityPq {
       // service; here it comes from the data, so fetch it with one
       // pushed-filter point lookup and inline it as a literal — the
       // main job is then ONE stage (scan → cosine → TakeOrdered), no
-      // broadcast build (FloorProbe sf10: 0.37 → 0.26 s with NoAqe)
+      // broadcast build
       val qv = e.filter(col("vec_id") === 0)
         .select("embedding").head().getSeq[Float](0).toArray
       val cos = round(cosineSim(col("embedding"), typedlit(qv)), 4)
@@ -117,7 +117,7 @@ object SimilarityOps extends SimilarityPq {
         .select(col("vec_id").as("neighbor"), cos.as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("neighbor"))
         .limit(10)
-    }, conf = NamedQuery.NoAqe)
+    })
 
   /** Hyperplane count sized to the corpus: 2^p buckets ≈ N / occupancy,
     * so the in-bucket self-join does O(N · occupancy) comparisons —

@@ -90,7 +90,7 @@ private[graft] trait TextRetrieval extends Serializable {
               |ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin),
       (s, d) => Bm25.scored(s, d)
         .orderBy(col("bm25").desc, col("doc_id"))
-        .limit(10), conf = NamedQuery.NoAqe)
+        .limit(10))
 
   /** The dense top-20 for the hybrid probe (doc 1's embedding, self
     * excluded), SERVED from the engine's persisted IVF-PQ index —
@@ -267,7 +267,7 @@ private[graft] trait TextRetrieval extends Serializable {
         .select(col("doc_id"), col("rl").as("r_lex"),
           col("rv").as("r_vec"), col("rrf"))
         .orderBy(col("rrf").desc, col("doc_id")).limit(10)
-    }, conf = NamedQuery.NoAqe)
+    })
 
   /** Hash-checked audit of the ANN-served dense list (the q42/q119
     * convention: the approximate op's laws are oracle-proven even
@@ -307,7 +307,7 @@ private[graft] trait TextRetrieval extends Serializable {
           (count(col("e_id")) >= lit(11)).as("recall_ok"),
           (count_if(col("s_cos") =!= col("true_cos")) === 0)
             .as("rescore_ok"))
-    }, conf = NamedQuery.NoAqe)
+    })
 
   /** The lexical top-k SERVED from the engine's persisted inverted
     * index ([[graft.EngineIndexes.buildTextIndex]] /
@@ -329,7 +329,7 @@ private[graft] trait TextRetrieval extends Serializable {
     * recall floor. */
   val bm25Served: NamedQuery = NamedQuery("q196_bm25_served",
     bm25.oracle,
-    (s, d) => lexServed(s, d, 10), conf = NamedQuery.NoAqe)
+    (s, d) => lexServed(s, d, 10))
 
   /** The full index-MAINTENANCE lifecycle, hash-proven end-to-end:
     * build the inverted index over HALF the corpus (even doc_ids),
@@ -357,7 +357,7 @@ private[graft] trait TextRetrieval extends Serializable {
         s"refresh appended $appended docs, corpus grew by $odd")
       eng.sql("OPTIMIZE TEXT INDEX mnt_tix")
       eng.bm25Search("mnt_tix", Bm25.terms, k = 10)
-    }, conf = NamedQuery.NoAqe)
+    })
 
   /** The hybrid fusion SERVED the way a production retrieval stack
     * runs it: q184's RRF composition with the dense list probed from
@@ -395,5 +395,5 @@ private[graft] trait TextRetrieval extends Serializable {
           coalesce(col("r_vec"), lit(0L)).as("r_vec"),
           rrf.as("rrf"))
         .orderBy(col("rrf").desc, col("doc_id")).limit(10)
-    }, conf = NamedQuery.NoAqe)
+    })
 }

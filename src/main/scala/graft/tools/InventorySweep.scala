@@ -25,10 +25,8 @@ object InventorySweep {
     // basket rows at the same tier
     val spark = GraftSession.tierSized(GraftSession.cpus(), sfDir)
     def runQuery(name: String, dir: String): Unit =
-      SparkEntry.withProfile(spark, name) {
-        SparkEntry.queries(name)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-      }
+      SparkEntry.queries(name)(spark, dir)
+        .write.mode("overwrite").format("noop").save()
     def calibrate(): Double = {
       val t0 = System.nanoTime()
       try SparkEntry.queries("q05_agg_global")(spark, "/root/testdata/sf0.001")

@@ -2,7 +2,7 @@ package graft.tools
 
 /** Timed standalone runner on Bench's session
   * ([[graft.GraftSession.tierSized]] on `local[$SPARK_GRAFT_CPUS]`,
-  * default 32; per-query execution profiles applied):
+  * default 32) and Bench's timed run ([[graft.Bench.runQuery]]):
   * `runMain graft.tools.RunQ <sfDir> <query>...` with
   * SPARK_GRAFT_REPEATS repeats (default 3), medians printed.
   * Shared corpus stages (shingle index) warm untimed first, like
@@ -15,12 +15,7 @@ object RunQ {
     val spark = graft.GraftSession.tierSized(graft.GraftSession.cpus(), sfDir)
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      graft.SparkEntry.withProfile(spark, name) {
-        graft.SparkEntry.benchOverrides
-          .getOrElse(name, graft.SparkEntry.queries(name))
-          .apply(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-      }
+      graft.Bench.runQuery(spark, name, dir)
       (System.nanoTime() - t0) / 1e9
     }
     names.foreach { name =>

@@ -1690,9 +1690,9 @@ class EngineSpec extends SparkSpec {
       case q: QueryStageExec => deep(q.plan)
       case other => Seq(other)
     }.flatten
+    // (the session's own bucket sort trust: GraftSession sets it)
     def windowNodes(n: String): Seq[SparkPlan] =
       graft.operators.NamedQuery.withConf(spark, Map(
-        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
         "spark.sql.adaptive.enabled" -> "false")) {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy("ts")

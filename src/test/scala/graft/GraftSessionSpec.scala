@@ -64,4 +64,15 @@ class GraftSessionSpec extends AnyFunSuite {
         "EnumOrderRewrite"), graftRules)
     }
   }
+
+  test("query sessions trust single-file bucket sort order; file " +
+      "sessions keep Spark's default") {
+    val key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
+    // opened through GraftSession.builder
+    assert(SparkSpec.session.conf.get(key) == "true")
+    assert(GraftSession.querySessionConfs.get(key).contains("true"))
+    // GraftSession.files sets the base confs only (a second session
+    // cannot be opened in this JVM: getOrCreate() joins the first)
+    assert(!GraftSession.baseConfs.contains(key))
+  }
 }

@@ -17,6 +17,20 @@ class PlanQualitySpec extends SparkSpec {
     qe.executedPlan.toString() + "\n" + qe.optimizedPlan.toString()
   }
 
+  /** Every node of `df`'s executed plan, descending through AQE's
+    * query stages. */
+  private def executedNodes(df: DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    def deep(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        deep(q.plan)
+      case other => Seq(other)
+    }.flatten
+    deep(castToImpl(df).queryExecution.executedPlan)
+  }
+
   private def scans(df: DataFrame) =
     castToImpl(df).queryExecution.executedPlan.collect {
       case s: FileSourceScanExec => s
@@ -392,6 +406,30 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("q156 fact join stays co-partitioned on the order key: only the " +
+      "n_name rollup exchanges") {
+    // the nation match is a residual condition of the l_orderkey join;
+    // were it a second equi-key, (orderkey, nationkey) would not be
+    // satisfied by the l_orderkey bucketing under Spark's default
+    // co-partition rule and both fact sides would re-shuffle. Broadcast
+    // is disabled as in the zero-exchange law above (the query's own
+    // broadcast hints still apply), so the law pins bucket co-location.
+    operators.NamedQuery.withConf(spark,
+        Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+      val df = SparkEntry.queries("q156_tpch_q5_bucketed")(spark, sf)
+      df.collect()
+      val keys = executedNodes(df).collect {
+        case e: ShuffleExchangeExec => e.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            h.expressions.flatMap(_.references.map(_.name)).toSet
+          case other => Set(other.toString)
+        }
+      }
+      assert(keys.nonEmpty && keys.forall(_ == Set("n_name")),
+        s"q156 exchanged on more than the n_name rollup: $keys")
+    }
+  }
+
   test("user-bucketed sessionization runs with ZERO exchanges and ZERO " +
       "sorts, and matches q57") {
     // the events-layout law behind q161: events are bucketed on user_id
@@ -401,20 +439,10 @@ class PlanQualitySpec extends SparkSpec {
     // per-user rollup consumes the same distribution. q57's stage
     // accounting put the user-key shuffle+sort at 94% of the query;
     // this law pins that the layout formulation never re-pays it.
-    def deep(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p.collect {
-      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        deep(q.plan)
-      case other => Seq(other)
-    }.flatten
     def lawFor(bucketed: String, baseline: String): Unit = {
-      val df = SparkEntry.withProfile(spark, bucketed) {
-        val d = SparkEntry.queries(bucketed)(spark, sf)
-        d.collect()
-        d
-      }
-      val nodes = deep(castToImpl(df).queryExecution.executedPlan)
+      val df = SparkEntry.queries(bucketed)(spark, sf)
+      df.collect()
+      val nodes = executedNodes(df)
       assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeExec]),
         s"$bucketed shuffled: the bucketed events scan must satisfy the " +
           "window's user_id clustering")
@@ -441,19 +469,9 @@ class PlanQualitySpec extends SparkSpec {
     // window may sort/shuffle; the corpus may not — so the law is
     // shape-precise: no repartition-by-column exchange (q97's corpus
     // movement) and no sort ordered on doc_id (the corpus sort).
-    val q163 = SparkEntry.withProfile(spark, "q163_shard_packing_bucketed") {
-      val df = SparkEntry.queries("q163_shard_packing_bucketed")(spark, sf)
-      df.collect()
-      df
-    }
-    def deep(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p.collect {
-      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        deep(q.plan)
-      case other => Seq(other)
-    }.flatten
-    val nodes = deep(castToImpl(q163).queryExecution.executedPlan)
+    val q163 = SparkEntry.queries("q163_shard_packing_bucketed")(spark, sf)
+    q163.collect()
+    val nodes = executedNodes(q163)
     assert(!nodes.exists {
       case e: ShuffleExchangeExec => e.shuffleOrigin.toString.contains(
         "REPARTITION_BY_COL")
@@ -480,19 +498,9 @@ class PlanQualitySpec extends SparkSpec {
     // the bucket key → no exchange) and must never touch the raw events
     // table — the Q30Probe scan floor is paid in the rollup write, not
     // per query.
-    val q164 = SparkEntry.withProfile(spark, "q164_events_hourly_rollup") {
-      val df = SparkEntry.queries("q164_events_hourly_rollup")(spark, sf)
-      df.collect()
-      df
-    }
-    def deep(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p.collect {
-      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        deep(q.plan)
-      case other => Seq(other)
-    }.flatten
-    val nodes = deep(castToImpl(q164).queryExecution.executedPlan)
+    val q164 = SparkEntry.queries("q164_events_hourly_rollup")(spark, sf)
+    q164.collect()
+    val nodes = executedNodes(q164)
     assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeExec]),
       "q164 shuffled: the rollup's event_type bucketing must satisfy " +
         "the (event_type, hour) aggregation clustering")
@@ -502,9 +510,7 @@ class PlanQualitySpec extends SparkSpec {
     }
     assert(scanned.nonEmpty && scanned.forall(_.contains("bk_evr_")),
       s"q164 read outside the rollup artifact: $scanned")
-    val q30 = SparkEntry.withProfile(spark, "q30_events_hourly") {
-      SparkEntry.queries("q30_events_hourly")(spark, sf)
-    }
+    val q30 = SparkEntry.queries("q30_events_hourly")(spark, sf)
     assert(q164.exceptAll(q30).count() == 0 &&
       q30.exceptAll(q164).count() == 0,
       "q164 diverged from q30 on the same data")
