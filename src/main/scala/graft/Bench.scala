@@ -35,6 +35,11 @@ object Bench {
         }.toMap
     } catch { case _: Throwable => Map.empty }
 
+  /** The quiet-anchor file: `~/.cache/graft/graft_floor_baseline.txt`,
+    * its directory created on the first merge. */
+  private[graft] def anchorPath: Path = java.nio.file.Paths.get(
+    sys.props("user.home"), ".cache", "graft", "graft_floor_baseline.txt")
+
   /** Min-merges `floor` into the anchor for `key` in `path`. The
     * read-modify-write holds an exclusive lock on a sibling lock file
     * (file locks are per JVM, so threads also serialize on this
@@ -230,11 +235,11 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WINDOW", "1.5").toDouble
     // r19: keyed by dir AND tier_hash — a regenerated tier under the
     // same path must not inherit the old tier's quiet anchor (its
-    // sentinel cost is tier-content-specific); and persisted under the
-    // system tmpdir, not the repo tree, so a bench run no longer
-    // dirties the worktree (both r18 verdict item 3).
-    val baselinePath = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_floor_baseline.txt")
+    // sentinel cost is tier-content-specific); and persisted in the
+    // per-user state dir, not the repo tree, so a bench run does not
+    // dirty the worktree (r18 verdict item 3), and not tmpdir, so the
+    // anchor survives a reboot.
+    val baselinePath = anchorPath
     val baselineKey = s"$sfDir@$tierHash"
     val baseFloor: Option[Double] = readAnchors(baselinePath).get(baselineKey)
     // The certification floor is the LOWER QUARTILE of all calibration

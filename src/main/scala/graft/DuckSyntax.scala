@@ -3,7 +3,9 @@ package graft
 /** DuckDB literal spellings Spark's parser rejects, rewritten at the SQL
   * text level before parsing (ref surface: type_support.test:42,213,242,
   * 305-318). Pure, idempotent string→string, applied by [[GraftParser]]
-  * to every statement and by the router to VALUES [[valuesPayload]]s.
+  * to every statement and to an INSERT's VALUES list ([[insertValues]]),
+  * plus the one quote- and paren-aware scanner the rewrites and
+  * [[SqlRouter]]'s grammar share.
   */
 private[graft] object DuckSyntax {
 
@@ -12,31 +14,89 @@ private[graft] object DuckSyntax {
   private val HugeLiteral =
     "(?<![\\w.'])(-?\\d{39,})(?![\\w.'])".r
 
-  /** Apply `f` to the segments of `s` OUTSIDE single-quoted string
-    * literals (with `''` as the escaped quote), leaving literal bodies
-    * byte-identical — so a document text mentioning `::UUID` or a
-    * VALUES string containing digits is never rewritten. The literal
-    * scan is the same tokenization SqlRouter uses: regex rewrites are
-    * only ever trusted between literals. */
+  // ---- the SQL text scanner: Spark's lexer view of quotes and parens ----
+
+  private def isQuote(c: Char): Boolean = c == '\'' || c == '"' || c == '`'
+
+  /** End (exclusive) of the quoted span opening at `i`, as Spark's lexer
+    * reads it: `\` escapes the next character inside '…' and "…"
+    * literals; a doubled quote is an adjacent span, so re-entering at it
+    * covers the `''` escape. Backquoted identifiers have no `\`. */
+  private def quotedEnd(s: String, i: Int): Int = {
+    val q = s.charAt(i); var j = i + 1
+    while (j < s.length && s.charAt(j) != q)
+      j += (if (q != '`' && s.charAt(j) == '\\') 2 else 1)
+    math.min(j + 1, s.length)
+  }
+
+  /** Calls `f(i, depth)` for each index of `s` from `from` on that lies
+    * outside quoted spans; `depth` counts the parens open around `i` (a
+    * paren itself reports the depth outside it). `f` returns false to
+    * stop. */
+  private def walk(s: String, from: Int = 0)(f: (Int, Int) => Boolean): Unit = {
+    var i = from; var depth = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (isQuote(c)) i = quotedEnd(s, i)
+      else {
+        if (c == ')') depth -= 1
+        if (!f(i, depth)) return
+        if (c == '(') depth += 1
+        i += 1
+      }
+    }
+  }
+
+  private def isWord(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
+
+  /** (start, end) of the first match of `re` that starts a word at paren
+    * depth 0, outside quoted spans: a keyword inside a string literal, a
+    * subquery or a call (`extract(year FROM d)`) never matches. */
+  def findTop(s: String, re: scala.util.matching.Regex): Option[(Int, Int)] = {
+    val m = re.pattern.matcher(s)
+    var hit = Option.empty[(Int, Int)]
+    walk(s) { (i, depth) =>
+      if (depth == 0 && (i == 0 || !isWord(s.charAt(i - 1))) &&
+          m.region(i, s.length).lookingAt()) hit = Some((i, m.end))
+      hit.isEmpty
+    }
+    hit
+  }
+
+  /** `s` split on its top-level commas (assignment lists, option lists). */
+  def splitTop(s: String): Seq[String] = {
+    val cuts = scala.collection.mutable.ArrayBuffer[Int](-1)
+    walk(s) { (i, depth) =>
+      if (depth == 0 && s.charAt(i) == ',') cuts += i
+      true
+    }
+    (cuts :+ s.length).sliding(2).map(c => s.substring(c(0) + 1, c(1))).toSeq
+  }
+
+  /** Index of the ')' closing the '(' at `open`, or -1 if it never closes. */
+  def matchParen(s: String, open: Int): Int = {
+    var close = -1
+    walk(s, open) { (i, depth) =>
+      if (depth == 0 && s.charAt(i) == ')') close = i
+      close < 0
+    }
+    close
+  }
+
+  /** Apply `f` to the stretches of `s` OUTSIDE quoted spans, leaving
+    * every literal body byte-identical — so a document text mentioning
+    * `::UUID` or a VALUES string containing digits is never rewritten.
+    * Regex rewrites are only ever trusted between literals. */
   private def outsideLiterals(s: String)(f: String => String): String = {
     val out = new StringBuilder
     var i = 0; var start = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\'') {
-        out.append(f(s.substring(start, i)))
-        var j = i + 1; var closed = false
-        while (j < s.length && !closed) {
-          if (s.charAt(j) == '\'') {
-            if (j + 1 < s.length && s.charAt(j + 1) == '\'') j += 2
-            else { closed = true; j += 1 }
-          } else j += 1
-        }
-        out.append(s.substring(i, j))
+    while (i < s.length)
+      if (isQuote(s.charAt(i))) {
+        val j = quotedEnd(s, i)
+        out.append(f(s.substring(start, i))).append(s.substring(i, j))
         i = j; start = j
       } else i += 1
-    }
-    out.append(f(s.substring(start)))
-    out.toString
+    out.append(f(s.substring(start))).toString
   }
 
   /** `'\xDE\xAD'::BLOB` → `X'DEAD'`; text `::BLOB` → `::BINARY`;
@@ -60,13 +120,15 @@ private[graft] object DuckSyntax {
   private def hasHugeLiteral(q: String): Boolean =
     "'-?\\d{39,}'".r.findFirstIn(q).isDefined
 
-  /** An `INSERT … VALUES` payload: [[rewriteCasts]], intervals as
-    * structs (only here — a SELECT may do native interval arithmetic),
-    * and every numeric quoted once a HUGEINT extreme forces text. */
-  def valuesPayload(values: String): String = {
-    val s = rewriteIntervals(rewriteCasts(values))
-    if (hasHugeLiteral(s)) quoteNumerics(s) else s
-  }
+  /** An INSERT whose source is a top-level VALUES list, with that list
+    * spelled as a payload: [[rewriteCasts]], intervals as structs (only
+    * here — a SELECT may do native interval arithmetic), and every
+    * numeric quoted once a HUGEINT extreme forces text. */
+  def insertValues(q: String): String =
+    findTop(q, "(?i)VALUES\\b".r).fold(q) { case (i, _) =>
+      val s = rewriteIntervals(rewriteCasts(q.substring(i)))
+      q.substring(0, i) + (if (hasHugeLiteral(s)) quoteNumerics(s) else s)
+    }
 
   private val BareNumeric = "(?<![\\w.'])(-?\\d+(?:\\.\\d+)?)(?![\\w.'])".r
 

@@ -202,14 +202,25 @@ private[graft] trait EngineDml { self: Engine =>
   def mergeIntoColumns(name: String, source: DataFrame, keys: Seq[String],
       ta: String, sa: String,
       updateSet: Option[Seq[(String, String)]],
-      insertSpec: Option[(Seq[String], Seq[String])]): (Long, Long) =
-    mergeIntoColumnsCore(name, source, keys, ta, sa, updateSet,
-      insertSpec)._1
+      insertSpec: Option[(Seq[String], Seq[String])]): (Long, Long) = {
+    insertSpec.foreach { case (cols, vals) =>
+      if (cols.size != vals.size)
+        throw new IllegalArgumentException(
+          "Parser Error: MERGE INSERT column list and VALUES arity differ")
+    }
+    mergeIntoColumnsCore(name, source, keys, ta, sa, updateSet.map(exprs),
+      insertSpec.map { case (cols, vals) => cols.zip(vals.map(expr)) })._1
+  }
 
-  private def mergeIntoColumnsCore(name: String, source: DataFrame,
+  private def exprs(sets: Seq[(String, String)]): Seq[(String, Column)] =
+    sets.map { case (c, ex) => c -> expr(ex) }
+
+  /** [[mergeIntoColumns]] over parsed assignments, returning the counts
+    * and the changed delta (the rows an upsert's RETURNING projects). */
+  private[graft] def mergeIntoColumnsCore(name: String, source: DataFrame,
       keys: Seq[String], ta: String, sa: String,
-      updateSet: Option[Seq[(String, String)]],
-      insertSpec: Option[(Seq[String], Seq[String])])
+      updateSet: Option[Seq[(String, Column)]],
+      insertSpec: Option[Seq[(String, Column)]])
       : ((Long, Long), DataFrame) = withTableLock(name) {
     require(keys.nonEmpty, "MERGE requires at least one key column")
     require(updateSet.isDefined || insertSpec.isDefined,
@@ -227,15 +238,10 @@ private[graft] trait EngineDml { self: Engine =>
         throw new IllegalArgumentException(
           s"Binder Error: key column $k not in MERGE source")
     }
-    insertSpec.foreach { case (cols, vals) =>
-      if (cols.size != vals.size)
-        throw new IllegalArgumentException(
-          "Parser Error: MERGE INSERT column list and VALUES arity differ")
-    }
     val updMap = updateSet.getOrElse(Nil)
       .map { case (c, ex) => canon(c) -> ex }.toMap
-    val insMap = insertSpec.map { case (cols, vals) =>
-      cols.map(canon).zip(vals).toMap }.getOrElse(Map.empty)
+    val insMap = insertSpec.getOrElse(Nil)
+      .map { case (c, ex) => canon(c) -> ex }.toMap
     // dup-source probe only matters when matched rows are rewritten;
     // an insert-only MERGE legitimately inserts duplicate-key sources
     val (updated, inserted) =
@@ -244,8 +250,8 @@ private[graft] trait EngineDml { self: Engine =>
     val s = source.alias(sa)
     val joinCond = keys.map(k => col(s"$ta.$k") === col(s"$sa.$k"))
       .reduce(_ && _)
-    def assigned(c: String, ex: String): Column =
-      expr(ex).cast(e.df.schema(c).dataType).as(c)
+    def assigned(c: String, ex: Column): Column =
+      ex.cast(e.df.schema(c).dataType).as(c)
     val (untouched, updatedRows) = updateSet match {
       case Some(_) =>
         // NULL-key target rows never equi-match — they stay untouched,
@@ -312,15 +318,12 @@ private[graft] trait EngineDml { self: Engine =>
     * the table untouched. Nothing ever collects to the driver; the
     * row count is unchanged by construction. Returns rows updated. */
   def updateWhere(name: String, sets: Seq[(String, String)],
-      cond: Option[Column]): Long = updateWhereCore(name, sets, cond)._1
+      cond: Option[Column]): Long = updateWhereCore(name, exprs(sets), cond)._1
 
-  /** UPDATE returning the post-assignment rows ([[updateWhere]]'s delta
-    * slice) — what `UPDATE … RETURNING` projects. */
-  private[graft] def updateWhereReturning(name: String,
-      sets: Seq[(String, String)], cond: Option[Column]): DataFrame =
-    updateWhereCore(name, sets, cond)._2
-
-  private def updateWhereCore(name: String, sets: Seq[(String, String)],
+  /** [[updateWhere]] over parsed assignments, returning the count and
+    * the post-assignment rows (what `UPDATE … RETURNING` projects). */
+  private[graft] def updateWhereCore(name: String,
+      sets: Seq[(String, Column)],
       cond: Option[Column]): (Long, DataFrame) = withTableLock(name) {
     require(sets.nonEmpty,
       "Parser Error: UPDATE requires at least one SET assignment")
@@ -338,14 +341,14 @@ private[graft] trait EngineDml { self: Engine =>
     // non-deterministic rand()/uuid() would lose or duplicate rows and
     // desync the returned count from the persisted state — reject it
     sets.foreach { case (c, ex) =>
-      requireDeterministic(e.df, expr(ex), s"UPDATE SET $c") }
+      requireDeterministic(e.df, ex, s"UPDATE SET $c") }
     cond.foreach(requireDeterministic(e.df, _, "UPDATE WHERE"))
     val hit = cond.map(c => coalesce(c, lit(false))).getOrElse(lit(true))
     val before = e.rowsIfKnown
     val untouched = e.df.filter(!hit)
     val updatedRows = e.df.filter(hit).select(e.df.columns.map { c =>
       setMap.get(c)
-        .map(ex => expr(ex).cast(e.df.schema(c).dataType).as(c))
+        .map(ex => ex.cast(e.df.schema(c).dataType).as(c))
         .getOrElse(col(c))
     }.toIndexedSeq: _*)
     val delta = coerceAndValidate(name, e, updatedRows)
@@ -373,19 +376,14 @@ private[graft] trait EngineDml { self: Engine =>
   def updateFrom(name: String, sets: Seq[(String, String)],
       source: DataFrame, sourceAlias: String,
       cond: Option[String]): Long =
-    updateFromCore(name, sets, source, sourceAlias, cond)._1
+    updateFromCore(name, exprs(sets), source, sourceAlias, cond.map(expr))._1
 
-  /** Join-form UPDATE returning the post-assignment target rows — what
-    * `UPDATE … FROM … RETURNING` projects (target columns; standard
-    * target-row RETURNING scope). */
-  private[graft] def updateFromReturning(name: String,
-      sets: Seq[(String, String)], source: DataFrame,
-      sourceAlias: String, cond: Option[String]): DataFrame =
-    updateFromCore(name, sets, source, sourceAlias, cond)._2
-
-  private def updateFromCore(name: String, sets: Seq[(String, String)],
-      source: DataFrame, sourceAlias: String,
-      cond: Option[String]): (Long, DataFrame) = withTableLock(name) {
+  /** [[updateFrom]] over parsed assignments, returning the count and the
+    * post-assignment target rows — what `UPDATE … FROM … RETURNING`
+    * projects (target columns; standard target-row RETURNING scope). */
+  private[graft] def updateFromCore(name: String,
+      sets: Seq[(String, Column)], source: DataFrame, sourceAlias: String,
+      cond: Option[Column]): (Long, DataFrame) = withTableLock(name) {
     require(sets.nonEmpty,
       "Parser Error: UPDATE requires at least one SET assignment")
     val e = registry.getOrElse(name, missing(name))
@@ -403,13 +401,13 @@ private[graft] trait EngineDml { self: Engine =>
           "collides with the target table name")
     val t = e.df.alias(name)
     val s = source.alias(sourceAlias)
-    val on = cond.map(expr).getOrElse(lit(true))
+    val on = cond.getOrElse(lit(true))
     // determinism check resolves over the joined shape (SET/WHERE may
     // reference both sides); crossJoin here is analysis-only, lazy
     val probe = t.crossJoin(s)
-    cond.foreach(c => requireDeterministic(probe, expr(c), "UPDATE WHERE"))
+    cond.foreach(requireDeterministic(probe, _, "UPDATE WHERE"))
     sets.foreach { case (c, ex) =>
-      requireDeterministic(probe, expr(ex), s"UPDATE SET $c") }
+      requireDeterministic(probe, ex, s"UPDATE SET $c") }
     // multi-match probe: eager, aggregate-only; the row id is discarded
     // with this action (monotonically_increasing_id is stable within
     // the single evaluation, which is all the probe needs)
@@ -425,7 +423,7 @@ private[graft] trait EngineDml { self: Engine =>
     val before = e.rowsIfKnown
     val updatedRows = t.join(s, on, "inner").select(e.df.columns.map { c =>
       setMap.get(c)
-        .map(ex => expr(ex).cast(e.df.schema(c).dataType).as(c))
+        .map(ex => ex.cast(e.df.schema(c).dataType).as(c))
         .getOrElse(col(s"$name.$c").as(c))
     }.toIndexedSeq: _*)
     val untouched = t.join(s, on, "left_anti")
@@ -442,12 +440,10 @@ private[graft] trait EngineDml { self: Engine =>
   def deleteFrom(name: String, cond: Column): Long =
     deleteFromCore(name, cond)._1
 
-  /** DELETE returning the removed rows (the predicate's TRUE slice over
-    * the pre-swap lineage) — what `DELETE … RETURNING` projects. */
-  private[graft] def deleteFromReturning(name: String,
-      cond: Column): DataFrame = deleteFromCore(name, cond)._2
-
-  private def deleteFromCore(name: String,
+  /** [[deleteFrom]] returning the count and the removed rows (the
+    * predicate's TRUE slice over the pre-swap lineage) — what `DELETE …
+    * RETURNING` projects. */
+  private[graft] def deleteFromCore(name: String,
       cond: Column): (Long, DataFrame) = withTableLock(name) {
     val e = registry.getOrElse(name, missing(name))
     // same double-evaluation hazard as updateWhere
@@ -473,19 +469,15 @@ private[graft] trait EngineDml { self: Engine =>
     * nothing driver-side but the counters. */
   def deleteUsing(name: String, source: DataFrame, sourceAlias: String,
       cond: Option[String]): Long =
-    deleteUsingCore(name, source, sourceAlias, cond)._1
+    deleteUsingCore(name, source, sourceAlias, cond.map(expr))._1
 
-  /** Join-form DELETE returning the removed target rows (the semi-join
-    * complement of the kept anti-join slice, over the pre-swap
-    * lineage) — what `DELETE … USING … RETURNING` projects. */
-  private[graft] def deleteUsingReturning(name: String,
-      source: DataFrame, sourceAlias: String,
-      cond: Option[String]): DataFrame =
-    deleteUsingCore(name, source, sourceAlias, cond)._2
-
-  private def deleteUsingCore(name: String, source: DataFrame,
+  /** [[deleteUsing]] over a parsed predicate, returning the count and the
+    * removed target rows (the semi-join complement of the kept anti-join
+    * slice, over the pre-swap lineage) — what `DELETE … USING …
+    * RETURNING` projects. */
+  private[graft] def deleteUsingCore(name: String, source: DataFrame,
       sourceAlias: String,
-      cond: Option[String]): (Long, DataFrame) = withTableLock(name) {
+      cond: Option[Column]): (Long, DataFrame) = withTableLock(name) {
     val e = registry.getOrElse(name, missing(name))
     if (sourceAlias.equalsIgnoreCase(name))
       throw new IllegalArgumentException(
@@ -493,9 +485,8 @@ private[graft] trait EngineDml { self: Engine =>
           "collides with the target table name")
     val t = e.df.alias(name)
     val s = source.alias(sourceAlias)
-    val on = cond.map(expr).getOrElse(lit(true))
-    cond.foreach(c =>
-      requireDeterministic(t.crossJoin(s), expr(c), "DELETE WHERE"))
+    val on = cond.getOrElse(lit(true))
+    cond.foreach(requireDeterministic(t.crossJoin(s), _, "DELETE WHERE"))
     val remaining = t.join(s, on, "left_anti")
       .select(e.df.columns.map(c => col(s"$name.$c").as(c))
         .toIndexedSeq: _*)
@@ -521,26 +512,21 @@ private[graft] trait EngineDml { self: Engine =>
   def insertOnConflict(name: String, source: DataFrame,
       conflictCols: Seq[String],
       updateSet: Option[Seq[(String, String)]]): (Long, Long) =
-    insertOnConflictCore(name, source, conflictCols, updateSet)._1
+    insertOnConflictCore(name, source, conflictCols,
+      updateSet.map(exprs))._1
 
-  /** Upsert returning the affected rows — DO UPDATE's post-assignment
-    * matched rows plus the inserted rows (DuckDB's `ON CONFLICT …
-    * RETURNING` scope: rows the statement wrote, not rows it
-    * skipped). */
-  private[graft] def insertOnConflictReturning(name: String,
-      source: DataFrame, conflictCols: Seq[String],
-      updateSet: Option[Seq[(String, String)]]): DataFrame =
-    insertOnConflictCore(name, source, conflictCols, updateSet)._2
-
-  private def insertOnConflictCore(name: String, source: DataFrame,
+  /** [[insertOnConflict]] over parsed assignments, returning the counts
+    * and the affected rows — DO UPDATE's post-assignment matched rows
+    * plus the inserted rows (DuckDB's `ON CONFLICT … RETURNING` scope:
+    * rows the statement wrote, not rows it skipped). */
+  private[graft] def insertOnConflictCore(name: String, source: DataFrame,
       conflictCols: Seq[String],
-      updateSet: Option[Seq[(String, String)]])
+      updateSet: Option[Seq[(String, Column)]])
       : ((Long, Long), DataFrame) = withTableLock(name) {
     // the whole verb runs under the (reentrant) table lock — the arity
     // check and positional alignment below read the schema, and a
     // concurrent ALTER TABLE between them and the merge would misalign
     // the frame (updateFrom/deleteUsing take the same whole-verb lock)
-    val doUpdate = updateSet.map(_.toSeq)
     val e = registry.getOrElse(name, missing(name))
     val insertAll = e.df.columns.toSeq
     if (source.columns.length != e.df.columns.length)
@@ -572,8 +558,8 @@ private[graft] trait EngineDml { self: Engine =>
     }
     mergeIntoColumnsCore(name, aligned, conflictCols,
       ta = name, sa = "excluded",
-      updateSet = doUpdate,
-      insertSpec = Some((insertAll, insertAll.map(c => s"excluded.$c"))))
+      updateSet = updateSet,
+      insertSpec = Some(insertAll.map(c => c -> col(s"excluded.$c"))))
   }
 
   // ---- COPY TO / FROM — the DuckDB file-connector verbs ----------------

@@ -89,29 +89,31 @@ private[graft] trait EngineSqlStats { self: Engine =>
   }
 
   /** Run SQL against the engine catalog, recording execution stats when an
-    * action executes the plan. DDL/DML statements route to the engine
-    * catalog (the reference drives its whole surface through SQL —
-    * duckherder_schema_catalog_entry.cpp intercepts the same verbs);
-    * everything else is `spark.sql`, with graft's semantics from
-    * [[GraftExtensions]] acting for this engine. */
+    * action executes the plan: `spark.sql` with graft's semantics from
+    * [[GraftExtensions]] acting for this engine. DDL/DML statements parse
+    * to [[GraftCommand]]s (the reference drives its whole surface through
+    * SQL — duckherder_schema_catalog_entry.cpp intercepts the same verbs),
+    * which Spark runs eagerly and which record themselves. */
   def sql(q: String): DataFrame = GraftExtensions.actingFor(this) {
+    val df = spark.sql(q)
+    val qe = castToImpl(df).queryExecution
+    if (!qe.analyzed.isInstanceOf[GraftCommand])
+      pending.put(qe.analyzed.semanticHash().toLong, (q, qe))
+    df
+  }
+
+  /** Runs a [[GraftCommand]]'s verb and records it: DDL/DML execute
+    * eagerly on the driver — recorded as LOCAL, like the reference's
+    * HandleExecuteSQL path (distributed_flight_server.cpp:281-340 →
+    * RecordQueryExecution). */
+  private[graft] def recordCommand[A](q: String)(body: => A): A = {
     val t0 = System.nanoTime()
-    SqlRouter.route(this, q) match {
-      case Some(df) =>
-        // DDL/DML execute eagerly on the driver — recorded as LOCAL,
-        // like the reference's HandleExecuteSQL path
-        // (distributed_flight_server.cpp:281-340 → RecordQueryExecution).
-        val durNs = System.nanoTime() - t0
-        stats.add(StatRow(q, "LOCAL", "CONCATENATE", durNs / 1000000L,
-          1L, 1L, new Timestamp(System.currentTimeMillis() - durNs / 1000000L)))
-        history.add((q, durNs / 1000L))
-        df
-      case None =>
-        val df = spark.sql(q)
-        val qe = castToImpl(df).queryExecution
-        pending.put(qe.analyzed.semanticHash().toLong, (q, qe))
-        df
-    }
+    val out = body
+    val durNs = System.nanoTime() - t0
+    stats.add(StatRow(q, "LOCAL", "CONCATENATE", durNs / 1000000L,
+      1L, 1L, new Timestamp(System.currentTimeMillis() - durNs / 1000000L)))
+    history.add((q, durNs / 1000L))
+    out
   }
 
   /** ≈ duckherder_get_query_execution_stats() — identical 7-col schema. */
@@ -151,19 +153,18 @@ private[graft] trait EngineSqlStats { self: Engine =>
 
   /** Classify a query WITHOUT executing it: execution mode + merge
     * strategy (the reference's QueryPlanAnalyzer surface, exposed
-    * up-front instead of only in post-hoc stats). */
+    * up-front instead of only in post-hoc stats). A statement that parses
+    * to a [[GraftCommand]] is classified from its parse: the command runs
+    * only when executed. */
   def explain(q: String): DataFrame = GraftExtensions.actingFor(this) {
     import spark.implicits._
-    // routed DDL/DML executes eagerly on the driver (and Spark itself
-    // runs command statements at sql()): classify WITHOUT executing
-    val row =
-      if (SqlRouter.wouldRoute(this, q))
-        (q, "LOCAL", "CONCATENATE", 1L, "routed DDL/DML")
-      else {
-        val qe = castToImpl(spark.sql(q)).queryExecution
+    val row = spark.sessionState.sqlParser.parsePlan(q) match {
+      case _: GraftCommand => (q, "LOCAL", "CONCATENATE", 1L, "routed DDL/DML")
+      case parsed =>
+        val qe = castToImpl(spark).sessionState.executePlan(parsed)
         val (mode, merge, tasks) = classify(qe)
         (q, mode, merge, tasks, qe.optimizedPlan.toString)
-      }
+    }
     Seq(row).toDF("sql", "execution_mode", "merge_strategy", "num_tasks",
       "plan")
   }

@@ -129,16 +129,17 @@ object GraftExtensions {
       .orElse(Engine.forSession(session))
 }
 
-/** Spark's parser plus DuckDB literal spellings ([[DuckSyntax]]; INTERVAL
-  * literals only when the engine owns INTERVAL columns) and `VERSION AS
-  * OF` on engine tables — not a rule: Spark rejects time travel on temp
-  * views before injected rules run. Everything else delegates. */
+/** Spark's parser plus graft's SQL surface: DuckDB literal spellings
+  * ([[DuckSyntax]]; INTERVAL literals only when the engine owns INTERVAL
+  * columns), `VERSION AS OF` on engine tables (not a rule: Spark rejects
+  * time travel on temp views before injected rules run), and — for a
+  * session with an engine — the engine's DDL/DML verbs as
+  * [[GraftCommand]]s ([[SqlRouter]]). Everything else delegates; a
+  * session with no engine gets the spellings and plain Spark. */
 private[graft] final class GraftParser(session: SparkSession,
     delegate: ParserInterface) extends ParserInterface {
 
-  private def engine: Option[Engine] = GraftExtensions.engineFor(session)
-
-  private def spell(q: String): String = {
+  private def spell(q: String, engine: Option[Engine]): String = {
     var s = DuckSyntax.rewriteCasts(q)
     if (engine.exists(_.typeOrigins.values.exists(_ == "INTERVAL")))
       s = DuckSyntax.rewriteIntervals(s)
@@ -147,15 +148,18 @@ private[graft] final class GraftParser(session: SparkSession,
     s
   }
 
-  private def timeTravel(p: LogicalPlan): LogicalPlan =
-    engine.fold(p)(_.resolveTimeTravel(p))
+  private def plan(q: String)(parse: String => LogicalPlan): LogicalPlan = {
+    val engine = GraftExtensions.engineFor(session)
+    def parsed(s: String) = engine.fold(parse(s))(_.resolveTimeTravel(parse(s)))
+    val s = spell(q, engine)
+    engine.fold(parsed(s))(SqlRouter.plan(_, q, s, parsed))
+  }
 
-  override def parsePlan(s: String): LogicalPlan =
-    timeTravel(delegate.parsePlan(spell(s)))
+  override def parsePlan(s: String): LogicalPlan = plan(s)(delegate.parsePlan)
   // the entry point `spark.sql` calls
   override def parsePlanWithParameters(s: String,
       ctx: ParameterContext): LogicalPlan =
-    timeTravel(delegate.parsePlanWithParameters(spell(s), ctx))
+    plan(s)(delegate.parsePlanWithParameters(_, ctx))
 
   override def parseExpression(s: String): Expression =
     delegate.parseExpression(s)

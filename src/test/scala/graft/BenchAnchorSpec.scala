@@ -25,4 +25,11 @@ class BenchAnchorSpec extends AnyFunSuite {
       .filter(_.endsWith(".tmp")).toVector
     assert(left.isEmpty, s"temp files left behind: $left")
   }
+
+  test("the anchor lives in the per-user state dir, not tmpdir") {
+    val p = Bench.anchorPath
+    assert(p.getParent == java.nio.file.Paths.get(sys.props("user.home"),
+      ".cache", "graft"))
+    assert(!p.startsWith(java.nio.file.Paths.get(sys.props("java.io.tmpdir"))))
+  }
 }

@@ -2137,6 +2137,136 @@ class EngineSpec extends SparkSpec {
     engine.unregisterTable(li); engine.unregisterTable(ev)
   }
 
+  test("write one-path law: every routed verb family through plain " +
+      "spark.sql on the serving engine's session ≡ engine.sql on a " +
+      "scratch engine's identical copy") {
+    val serving = Engine(spark)
+    val scratch = Engine.scratch(spark)
+    val id = System.nanoTime()
+    val dir = java.nio.file.Files.createTempDirectory("graft_w1p").toString
+    // the same script per engine, on its own table names (one session);
+    // SELECTs check contents mid-script, and the tables are compared at
+    // the end (the copy-on-write lineage makes per-statement reads slow)
+    def script(p: String): Seq[String] = Seq(
+      s"CREATE TYPE ${p}_mood AS ENUM ('sad', 'ok')",
+      s"CREATE TABLE ${p}_t (id INT, v INT, tag STRING)",
+      s"CREATE TABLE ${p}_s (id INT, v INT)",
+      s"INSERT INTO ${p}_t VALUES (1, 10, 'a'), (2, 20, 'b'), (3, 30, NULL)",
+      s"INSERT INTO ${p}_s VALUES (1, 100), (4, 400)",
+      s"INSERT INTO ${p}_t (id, v) VALUES (5, 50) RETURNING id, tag",
+      s"UPDATE ${p}_t SET v = v + 1 WHERE id <= 2",
+      s"UPDATE ${p}_t SET v = s.v FROM ${p}_s s WHERE ${p}_t.id = s.id " +
+        "RETURNING id, v",
+      s"DELETE FROM ${p}_t WHERE id = 5",
+      s"MERGE INTO ${p}_t AS t USING ${p}_s AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v + 1 " +
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)",
+      s"MERGE INTO ${p}_s AS t USING (SELECT id, v * 2 AS v FROM ${p}_s) " +
+        "AS s ON t.id = s.id WHEN MATCHED THEN UPDATE SET * " +
+        "WHEN NOT MATCHED THEN INSERT *",
+      s"CREATE INDEX ${p}_ix ON ${p}_t (id)",
+      s"INSERT INTO ${p}_t VALUES (1, 7, 'c'), (6, 60, 'f') " +
+        "ON CONFLICT (id) DO UPDATE SET v = excluded.v",
+      s"INSERT OR IGNORE INTO ${p}_t VALUES (2, 0, 'x'), (7, 70, 'g')",
+      s"INSERT OR REPLACE INTO ${p}_t VALUES (2, 22, 'r')",
+      s"DELETE FROM ${p}_t USING ${p}_s s WHERE ${p}_t.id = s.id " +
+        "AND s.v > 700",
+      s"SELECT * FROM ${p}_t",
+      s"OPTIMIZE ${p}_t INTO 1 FILES",
+      s"ALTER TABLE ${p}_t ADD COLUMN w INT DEFAULT 7",
+      s"ALTER TABLE ${p}_t ALTER COLUMN w SET DEFAULT 8",
+      s"INSERT INTO ${p}_t (id) VALUES (8)",
+      s"ALTER TABLE ${p}_t ALTER COLUMN w TYPE BIGINT",
+      s"ALTER TABLE ${p}_t RENAME COLUMN w TO w2",
+      s"SELECT * FROM ${p}_t",
+      s"ALTER TABLE ${p}_t DROP COLUMN w2",
+      s"CREATE MATERIALIZED VIEW ${p}_mv AS SELECT tag, sum(v) AS sv " +
+        s"FROM ${p}_t GROUP BY tag",
+      s"REFRESH MATERIALIZED VIEW ${p}_mv",
+      s"SELECT * FROM ${p}_mv",
+      s"DROP MATERIALIZED VIEW ${p}_mv",
+      s"CREATE TABLE ${p}_c AS SELECT id, v FROM ${p}_t WHERE id < 4",
+      s"ALTER TABLE ${p}_c RENAME TO ${p}_c2",
+      s"SELECT * FROM ${p}_c2",
+      s"TRUNCATE TABLE ${p}_c2",
+      s"SELECT * FROM ${p}_c2",
+      s"DROP TABLE ${p}_c2",
+      s"COPY ${p}_t TO '$dir/${p}_t.parquet'",
+      s"CREATE TABLE ${p}_back (id INT, v INT, tag STRING)",
+      s"COPY ${p}_back FROM '$dir/${p}_t.parquet'",
+      s"COPY (SELECT id FROM ${p}_t WHERE id > 1) TO '$dir/${p}_q.parquet'",
+      s"CREATE TABLE ${p}_docs (doc_id BIGINT, text STRING)",
+      s"INSERT INTO ${p}_docs VALUES (1, 'alpha beta'), (2, 'beta gamma')",
+      s"CREATE TEXT INDEX ${p}_tix ON ${p}_docs (text)",
+      s"INSERT INTO ${p}_docs VALUES (3, 'gamma gamma')",
+      s"REFRESH TEXT INDEX ${p}_tix",
+      s"OPTIMIZE TEXT INDEX ${p}_tix",
+      s"DROP INDEX ${p}_ix",
+      s"EXPORT DATABASE '$dir/${p}_db'",
+      s"DROP TYPE ${p}_mood")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val a = s"w1p_a_$id"
+    val b = s"w1p_b_$id"
+    script(a).zip(script(b)).foreach { case (qa, qb) =>
+      // plain Spark on the session acts for its serving engine …
+      val viaSpark = rows(spark.sql(qa))
+      // … and engine.sql for the engine it is called on
+      assert(viaSpark == rows(scratch.sql(qb)), s"result rows differ for: $qa")
+    }
+    Seq("t", "s", "back", "docs", "tix_postings").foreach { x =>
+      assert(rows(serving.table(s"${a}_$x")) == rows(scratch.table(s"${b}_$x")),
+        s"table ${a}_$x differs")
+    }
+    // each statement acted on its own engine's registry only
+    assert(serving.tableNames.forall(!_.startsWith(b)))
+    assert(scratch.tableNames.forall(!_.startsWith(a)))
+    assert(serving.tableExists(s"${a}_t") && scratch.tableExists(s"${b}_t"))
+    Seq(serving -> a, scratch -> b).foreach { case (e, p) =>
+      e.tableNames.filter(_.startsWith(p)).foreach(e.unregisterTable)
+    }
+  }
+
+  test("Spark catalog DDL stays Spark's: warehouse tables drop and " +
+      "rename through spark.sql on the engine's session; a newSession() " +
+      "clone gets plain Spark for every verb") {
+    val engine = Engine(spark)
+    val id = System.nanoTime()
+    val wh = s"wh_tbl_$id"
+    val et = s"wh_eng_$id"
+    spark.range(3).selectExpr("id", "id * 2 AS v").write.saveAsTable(wh)
+    engine.registerTable(et, spark.range(3).selectExpr("id", "id * 2 AS v"))
+    spark.sql(s"ALTER TABLE $wh RENAME TO ${wh}_r")
+    assert(spark.catalog.tableExists(s"${wh}_r"))
+    assert(!engine.tableExists(s"${wh}_r"))
+    spark.sql(s"ALTER TABLE ${wh}_r SET TBLPROPERTIES ('k' = 'v')")
+    spark.sql(s"DROP TABLE IF EXISTS ${wh}_r")
+    assert(!spark.catalog.tableExists(s"${wh}_r"))
+    assert(engine.table(et).count() == 3, "engine table touched")
+    // a name neither side knows keeps the engine's catalog error
+    assert(intercept[IllegalArgumentException](
+      spark.sql(s"TRUNCATE TABLE no_such_$id")).getMessage
+      .contains("Catalog Error"))
+    // a clone has no engine: its DML is Spark's own, even on a name the
+    // serving engine owns (Spark cannot update a temp view)
+    val clone = spark.newSession()
+    clone.range(3).selectExpr("id", "id * 2 AS v")
+      .createOrReplaceTempView("clone_view")
+    Seq(s"DELETE FROM clone_view WHERE id = 1",
+      s"UPDATE clone_view SET v = 0",
+      s"TRUNCATE TABLE clone_view").foreach { q =>
+      val err = intercept[Exception](clone.sql(q))
+      assert(!err.isInstanceOf[IllegalArgumentException], q)
+    }
+    Seq(s"CREATE TYPE clone_mood AS ENUM ('a')", s"OPTIMIZE $et",
+      s"COPY $et TO '/nonexistent/x.parquet'").foreach { q =>
+      intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+        clone.sql(q))
+    }
+    assert(engine.table(et).count() == 3)
+    engine.unregisterTable(et)
+  }
+
   test("engine binding: a scratch engine's SQL rewrites against its own " +
       "catalog while another engine serves the session; a newSession() " +
       "clone gets no rewrite") {

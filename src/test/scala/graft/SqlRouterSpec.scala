@@ -470,6 +470,71 @@ class SqlRouterSpec extends SparkSpec {
     engine.sql(s"DROP TABLE $t"); engine.sql(s"DROP TABLE $src")
   }
 
+  test("explain is side-effect-free for every command family: LOCAL / " +
+      "routed DDL/DML, and tables, indexes and files are unchanged") {
+    val id = System.nanoTime()
+    val t = s"expl_all_$id"
+    val src = s"expl_all_src_$id"
+    val docs = s"expl_all_docs_$id"
+    val mv = s"expl_all_mv_$id"
+    val dir = java.nio.file.Files.createTempDirectory("graft_expl").toString
+    engine.sql(s"CREATE TABLE $t (id INT, v INT)")
+    engine.sql(s"CREATE TABLE $src (id INT, v INT)")
+    engine.sql(s"INSERT INTO $t VALUES (1, 10), (2, 20)")
+    engine.sql(s"INSERT INTO $src VALUES (2, 200), (3, 300)")
+    engine.sql(s"CREATE TABLE $docs (doc_id BIGINT, text STRING)")
+    engine.sql(s"INSERT INTO $docs VALUES (1, 'alpha beta')")
+    engine.sql(s"CREATE TEXT INDEX ${docs}_tix ON $docs (text)")
+    engine.sql(s"CREATE MATERIALIZED VIEW $mv AS SELECT id, sum(v) AS sv " +
+      s"FROM $t GROUP BY id")
+    engine.sql(s"INSERT INTO $docs VALUES (2, 'gamma')")
+    def state = (engine.tableNames, engine.tableNames.filter(_.contains(s"$id"))
+      .map(n => engine.table(n).collect().map(_.toString).sorted.toSeq),
+      engine.indexes.collect().map(_.toString).sorted.toSeq,
+      new java.io.File(dir).list().toSeq)
+    val before = state
+    Seq(
+      s"MERGE INTO $t AS t USING $src AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+      s"MERGE INTO $t AS t USING $src AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v + 1",
+      s"UPDATE $t SET v = 0 WHERE id = 1",
+      s"UPDATE $t SET v = s.v FROM $src s WHERE $t.id = s.id",
+      s"DELETE FROM $t WHERE id = 1",
+      s"INSERT INTO $t VALUES (9, 90) RETURNING *",
+      s"CREATE TABLE ${t}_ctas AS SELECT * FROM $t",
+      s"ALTER TABLE $t ADD COLUMN w INT",
+      s"ALTER TABLE $t RENAME TO ${t}_renamed",
+      s"COPY $t TO '$dir/t.parquet'",
+      s"EXPORT DATABASE '$dir/db'",
+      s"CREATE TEXT INDEX ${docs}_tix2 ON $docs (text)",
+      s"REFRESH TEXT INDEX ${docs}_tix",
+      s"REFRESH MATERIALIZED VIEW $mv"
+    ).foreach { q =>
+      val exp = engine.explain(q).head()
+      assert(exp.getAs[String]("execution_mode") == "LOCAL", q)
+      assert(exp.getAs[String]("plan") == "routed DDL/DML", q)
+      assert(state == before, s"explain changed state: $q")
+    }
+    engine.sql(s"DROP MATERIALIZED VIEW $mv")
+    Seq(t, src, docs).foreach(x => engine.sql(s"DROP TABLE $x"))
+    Seq("postings", "doclens", "stats").foreach(x =>
+      engine.unregisterTable(s"${docs}_tix_$x"))
+  }
+
+  test("DuckDB spellings leave string literals alone, backslash-escaped " +
+      "quotes included") {
+    // Spark's lexer reads \' as an escaped quote: the ::uuid and the
+    // 39-digit run stay inside the literal
+    assert(engine.sql("SELECT 'a\\'::uuid' AS s").head().getString(0) ==
+      "a'::uuid")
+    val huge = "1" * 40
+    assert(engine.sql(s"SELECT 'x\\' $huge::uuid' AS s").head()
+      .getString(0) == s"x' $huge::uuid")
+    assert(DuckSyntax.rewriteCasts(s"SELECT 'a\\'::uuid $huge', v::UUID") ==
+      s"SELECT 'a\\'::uuid $huge', v::STRING")
+  }
+
   test("ON CONFLICT keyword matching: any whitespace between ON and " +
       "CONFLICT; a join column named `conflict` never trips the route") {
     val t = s"confws_${System.nanoTime()}"
@@ -629,6 +694,9 @@ class SqlRouterSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException](
       engine.sql(s"COPY $t TO '$base/noext'")).getMessage
       .contains("FORMAT"))
+    assert(intercept[IllegalArgumentException](
+      engine.sql(s"COPY (SELECT (1 FROM $t TO '$base/x.parquet'")).getMessage
+      .contains("unbalanced parentheses in COPY"))
     Seq(t, t2, t3).foreach(x => engine.sql(s"DROP TABLE $x"))
   }
 
