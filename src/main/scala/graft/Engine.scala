@@ -10,7 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DayTimeIntervalType, StructType,
+  YearMonthIntervalType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.plans.PlanClassifier
@@ -77,7 +78,13 @@ private[graft] final class TableEntry(val df: DataFrame, known: Long = -1L,
   * inverted predicate rather than row collection — the reference's
   * collect-then-`DELETE WHERE col IN (...)` (distributed_delete.cpp:27-126)
   * would materialize matched rows on the driver, which is exactly the
-  * anti-pattern to avoid at 100 TB.
+  * anti-pattern to avoid at 100 TB. INSERT, UPDATE, UPDATE … FROM,
+  * DELETE, DELETE … USING and whole-row MERGE store a plan that reads
+  * the prior version exactly once (UPDATE is one projection, the join
+  * forms one join), so their base scans do not multiply with the
+  * write history; column-wise MERGE and the upserts on it read it once
+  * per branch (see [[mergeIntoColumns]]). A plan still deepens by one
+  * layer per write until [[compact]] re-roots it.
   */
 class Engine private[graft] (val spark: SparkSession)
     extends EngineVersioning with EngineSqlStats with EngineLayout
@@ -292,8 +299,8 @@ class Engine private[graft] (val spark: SparkSession)
 
 object Engine {
   /** Retained prior versions per table for time travel ([[Engine.tableAt]]);
-    * versions are lazy plan objects, so the cap bounds plan-graph growth,
-    * not data. */
+    * versions are lazy plan objects over their predecessors, so the cap
+    * bounds how many plans are retained, not data. */
   val MaxVersions = 10
 
   // ---- tmpdir artifact lifecycle ------------------------------------
@@ -409,8 +416,12 @@ object Engine {
   private[graft] def canonIntegerText(c: Column): Column =
     regexp_replace(c, "^(-?)0+(?=\\d)", "$1")
 
-  /** ANSI interval column → the comparable interval struct. */
-  private[graft] def intervalToStruct(c: Column, yearMonth: Boolean): Column = {
+  /** ANSI interval column → the comparable interval struct. The input
+    * widens to the full YEAR TO MONTH / DAY TO SECOND range first, so a
+    * single-field interval (`INTERVAL '3' DAY`) has every field to
+    * extract. */
+  private[graft] def intervalToStruct(c0: Column, yearMonth: Boolean): Column = {
+    val c = c0.cast(if (yearMonth) YearMonthIntervalType() else DayTimeIntervalType())
     val m = if (yearMonth)
       (date_part(lit("YEAR"), c) * 12 + date_part(lit("MONTH"), c)).cast("int")
     else lit(0)

@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DayTimeIntervalType, StructField,
+  YearMonthIntervalType}
 
 /** DML verbs on managed tables — INSERT (distributed append, ≈
   * distributed_insert.cpp), whole-row and column-wise MERGE,
@@ -13,20 +15,22 @@ import org.apache.spark.sql.functions._
   * seam; state and semantics unchanged. */
 private[graft] trait EngineDml { self: Engine =>
 
-  /** Reject rand()/uuid()-class expressions in copy-on-write DML: the
-    * rewrite evaluates the predicate on both the hit and miss slices
-    * and the plan re-evaluates between the delta count and the final
-    * union read, so a non-deterministic expression could lose or
-    * duplicate rows and desync the returned count from the persisted
-    * state. Resolution against the table runs first — an UNRESOLVED
-    * function node does not yet expose its determinism. */
+  /** Reject rand()/uuid()-class expressions in copy-on-write DML: a
+    * verb evaluates the predicate and the SET expressions once in the
+    * stored plan and again in the statement-time actions (the affected
+    * count, the constraint probes, the RETURNING delta), so a
+    * non-deterministic expression could make the returned count and
+    * rows disagree with the persisted state. Resolution against the
+    * table runs first — an UNRESOLVED function node does not yet expose
+    * its determinism. Returns the type `c` resolves to. */
   private def requireDeterministic(df: DataFrame, c: Column,
-      ctx: String): Unit = {
+      ctx: String): DataType = {
     val analyzed = df.select(c).queryExecution.analyzed
     if (analyzed.expressions.exists(e => !e.deterministic))
       throw new IllegalArgumentException(
         s"Binder Error: non-deterministic expression in $ctx is not " +
           "supported (copy-on-write DML evaluates it more than once)")
+    analyzed.schema.head.dataType
   }
 
   /** INSERT: the reference buffers all rows driver-side then replays one
@@ -49,70 +53,71 @@ private[graft] trait EngineDml { self: Engine =>
     delta
   }
 
-  /** Shared INSERT/MERGE ingress path: positional column alignment, the
-    * implicit DuckDB-style coercions, and the delta-bounded NOT NULL +
-    * ENUM constraint probes. Throws (table untouched) on violation. */
+  /** One column's ingress — the expression shared by every row a verb
+    * writes (INSERT rows, UPDATE and MERGE assignments, MERGE inserts):
+    * an ANSI interval into a degraded INTERVAL carry becomes the
+    * comparable struct (cast cannot), anything else casts to the column
+    * type (DuckDB casts VALUES to the column type: '2023-01-01' into
+    * DATE[], [] into a typed empty list, …), and degraded text carries
+    * canonicalize so rendering and string ordering match DuckDB:
+    * temporal text drops trailing fraction zeros, hugeint text drops
+    * leading zeros. `from` is the type `c` resolves to. */
+  private def ingress(name: String, f: StructField, c: Column,
+      from: DataType): Column = {
+    val origin = typeOrigins.get((name, f.name))
+    val typed = (origin, from) match {
+      case (Some("INTERVAL"), _: YearMonthIntervalType) =>
+        Engine.intervalToStruct(c, yearMonth = true).cast(f.dataType)
+      case (Some("INTERVAL"), _: DayTimeIntervalType) =>
+        Engine.intervalToStruct(c, yearMonth = false).cast(f.dataType)
+      case _ => if (from == f.dataType) c else c.cast(f.dataType)
+    }
+    origin match {
+      case Some("TIME") | Some("TIMESTAMP_NS") => Engine.canonTemporalText(typed)
+      case Some("HUGEINT") | Some("UHUGEINT") => Engine.canonIntegerText(typed)
+      case _ => typed
+    }
+  }
+
+  /** Shared INSERT/MERGE ingress path: positional column alignment,
+    * [[ingress]] per column, and the delta-bounded NOT NULL + ENUM
+    * constraint probes. Throws (table untouched) on violation. */
   private def coerceAndValidate(name: String, e: TableEntry,
       df: DataFrame): DataFrame = {
-    val aligned0 = df.toDF(e.df.columns.toIndexedSeq: _*)
-    // degraded-carry columns first: ANSI interval input → comparable
-    // struct (cast cannot), before the generic cast pass below
-    val pre = e.df.schema.fields.foldLeft(aligned0) { (acc, f) =>
-      (typeOrigins.get((name, f.name)), acc.schema(f.name).dataType) match {
-        case (Some("INTERVAL"),
-            _: org.apache.spark.sql.types.YearMonthIntervalType) =>
-          acc.withColumn(f.name,
-            Engine.intervalToStruct(acc.col(f.name), yearMonth = true))
-        case (Some("INTERVAL"),
-            _: org.apache.spark.sql.types.DayTimeIntervalType) =>
-          acc.withColumn(f.name,
-            Engine.intervalToStruct(acc.col(f.name), yearMonth = false))
-        case _ => acc
-      }
-    }
-    // implicit insert coercion (DuckDB casts VALUES to the column type:
-    // '2023-01-01' into DATE[], [] into a typed empty list, …)
-    val cast = e.df.schema.fields.foldLeft(pre) { (acc, f) =>
-      if (acc.schema(f.name).dataType == f.dataType) acc
-      else acc.withColumn(f.name, acc.col(f.name).cast(f.dataType))
-    }
-    // canonicalize degraded text carries so rendering and string ordering
-    // match DuckDB: temporal text drops trailing fraction zeros, hugeint
-    // text drops leading zeros
-    val aligned = e.df.schema.fields.foldLeft(cast) { (acc, f) =>
-      typeOrigins.get((name, f.name)) match {
-        case Some("TIME") | Some("TIMESTAMP_NS") =>
-          acc.withColumn(f.name, Engine.canonTemporalText(acc.col(f.name)))
-        case Some("HUGEINT") | Some("UHUGEINT") =>
-          acc.withColumn(f.name, Engine.canonIntegerText(acc.col(f.name)))
-        case _ => acc
-      }
-    }
-    // NOT NULL enforcement probes only the incoming delta (bounded by the
-    // insert, early-terminating) so a rejected insert leaves the table
-    // untouched — atomic like the reference's per-row constraint check
+    val aligned = df.toDF(e.df.columns.toIndexedSeq: _*)
+    val delta = aligned.select(e.df.schema.fields.map(f =>
+      ingress(name, f, aligned.col(f.name), aligned.schema(f.name).dataType)
+        .as(f.name)).toIndexedSeq: _*)
+    validate(name, e, delta)
+    delta
+  }
+
+  /** The NOT NULL and ENUM constraint probes over the rows a verb writes
+    * (already through [[ingress]]). Both probe only that delta (bounded
+    * by the write, early-terminating), so a rejected write leaves the
+    * table untouched — atomic like the reference's per-row check. */
+  private def validate(name: String, e: TableEntry, delta: DataFrame): Unit = {
     val nn = e.df.columns.filter(c => notNullCols.contains((name, c)))
     if (nn.nonEmpty) {
-      val anyNull = nn.map(aligned.col(_).isNull).reduce(_ || _)
-      if (aligned.filter(anyNull).head(1).nonEmpty)
+      val anyNull = nn.map(delta.col(_).isNull).reduce(_ || _)
+      if (delta.filter(anyNull).head(1).nonEmpty)
         throw new IllegalArgumentException(
           s"Constraint Error: NOT NULL constraint failed: " +
             s"$name(${nn.mkString(",")})")
     }
     // ENUM domain check (DuckDB raises a Conversion Error for a value
-    // outside the type) — same bounded delta-only probe
+    // outside the type)
     e.df.columns.foreach { c =>
       enumCols.get((name, c)).foreach { en =>
         val values = enums.getOrElse(en, Seq.empty)
-        val bad = aligned.filter(aligned.col(c).isNotNull &&
-          !aligned.col(c).isin(values: _*)).select(c).head(1)
+        val bad = delta.filter(delta.col(c).isNotNull &&
+          !delta.col(c).isin(values: _*)).select(c).head(1)
         if (bad.nonEmpty)
           throw new IllegalArgumentException(
             s"Conversion Error: Could not convert string '${bad.head.get(0)}'" +
               s" to enum type $en")
       }
     }
-    aligned
   }
 
   /** MERGE (upsert) as copy-on-write — beyond the reference's DML verb
@@ -132,8 +137,8 @@ private[graft] trait EngineDml { self: Engine =>
     * source row. Returns (updated = matched source rows, inserted =
     * unmatched source rows); both counters and the duplicate probe come
     * from ONE aggregation action (group source by key, left-join the
-    * distinct target keys, fold to a single row) so a MERGE in a loop
-    * pays one job, not three. */
+    * target keys that semi-join into the source's, fold to a single
+    * row) so a MERGE in a loop pays one job, not three. */
   def mergeInto(name: String, source: DataFrame,
       keys: Seq[String]): (Long, Long) = withTableLock(name) {
     require(keys.nonEmpty, "MERGE requires at least one key column")
@@ -161,7 +166,11 @@ private[graft] trait EngineDml { self: Engine =>
     val keysNonNull = keys.map(col(_).isNotNull).reduce(_ && _)
     val perKey = src.groupBy(keys.map(src.col): _*)
       .agg(count(lit(1)).as("__n"))
-    val tgtKeys = e.df.select(keys.map(e.df.col): _*).distinct()
+    // matched keys: the target's keys semi-joined against the source's,
+    // so the target is scanned and filtered, never shuffled whole; the
+    // distinct runs over at most the source's key count
+    val tgtKeys = e.df.select(keys.map(e.df.col): _*)
+      .join(perKey.select(keys.map(col): _*), keys, "left_semi").distinct()
       .withColumn("__m", lit(1))
     val stats = perKey.join(tgtKeys, keys, "left_outer").agg(
       // duplicate probe: only non-NULL-key groups can collide on a target
@@ -190,15 +199,22 @@ private[graft] trait EngineDml { self: Engine =>
     * the source row); unnamed columns fill from their SET DEFAULT
     * expression, NULL otherwise. Either clause may be absent: no
     * MATCHED clause leaves matched target rows untouched, no NOT
-    * MATCHED clause drops unmatched source rows. Distributed shape
-    * matches [[mergeInto]] — one anti-join for the untouched rows, one
-    * equi-join for the updates, unions for assembly, all shuffling on
-    * the key columns only; the counters come from the same single
-    * aggregation action. Unlike the whole-row form, N target rows
-    * sharing a key are EACH updated (standard per-target-row MERGE
-    * semantics) rather than collapsed. NOT NULL / ENUM constraint
-    * probes run on the changed delta only, before the table is
-    * swapped — a rejected MERGE leaves the table untouched. */
+    * MATCHED clause drops unmatched source rows. The stored plan reads
+    * the target's rows once: with a MATCHED clause one left-outer join
+    * to the source (whose keys are then unique) assigns the matched rows
+    * and keeps the rest, as in [[updateFrom]]; unmatched source rows
+    * come from the source anti-joined to the target, which reads only
+    * the target's keys. Both joins stream the target past a broadcast
+    * source, so no whole target row moves, and a later key filter still
+    * reaches the base scan. (A full-outer join or key window would read
+    * the target once without the key probe, but shuffles whole target
+    * rows on every later read and hides the key from pushdown.) The
+    * counters come from the single aggregation action of [[mergeInto]].
+    * Unlike the whole-row form, N target rows sharing a key are EACH
+    * updated (standard per-target-row MERGE semantics) rather than
+    * collapsed. NOT NULL / ENUM constraint probes run on the changed
+    * delta only, before the table is swapped — a rejected MERGE leaves
+    * the table untouched. */
   def mergeIntoColumns(name: String, source: DataFrame, keys: Seq[String],
       ta: String, sa: String,
       updateSet: Option[Seq[(String, String)]],
@@ -246,42 +262,43 @@ private[graft] trait EngineDml { self: Engine =>
     // an insert-only MERGE legitimately inserts duplicate-key sources
     val (updated, inserted) =
       mergeStats(e, source, keys, forbidDupMatches = updateSet.isDefined)
+    val fields = e.df.schema.fields.toIndexedSeq
     val t = e.df.alias(ta)
     val s = source.alias(sa)
     val joinCond = keys.map(k => col(s"$ta.$k") === col(s"$sa.$k"))
       .reduce(_ && _)
-    def assigned(c: String, ex: Column): Column =
-      ex.cast(e.df.schema(c).dataType).as(c)
-    val (untouched, updatedRows) = updateSet match {
+    def cur(c: String): Column = col(s"$ta.$c")
+    // every target row, matched ones assigned: one left-outer join that
+    // repeats no target row, because a MATCHED clause makes the source
+    // keys unique (mergeStats raises otherwise); NULL-key rows of either
+    // side never match, same as the whole-row path
+    val (kept, updatedRows) = updateSet match {
       case Some(_) =>
-        // NULL-key target rows never equi-match — they stay untouched,
-        // same as the whole-row path
-        (e.df.join(source.select(keys.map(source.col): _*), keys,
-          "left_anti"),
-          t.join(s, joinCond, "inner").select(e.df.columns.map { c =>
-            updMap.get(c).map(assigned(c, _))
-              .getOrElse(col(s"$ta.$c").as(c))
-          }.toIndexedSeq: _*))
-      case None => (e.df, e.df.limit(0))
+        val joined = t.join(source.withColumn("__graft_hit", lit(true))
+          .alias(sa), joinCond, "left_outer")
+        val assigned = updMap.map { case (c, ex) => c -> ingress(name,
+          e.df.schema(c), ex, joined.select(ex).schema.head.dataType) }
+        val (all, hits) = assignWhere(e, joined, assigned,
+          col("__graft_hit").isNotNull, cur)
+        (all, Some(hits))
+      case None => (e.df, None)
     }
-    val insertedRows = insertSpec match {
-      case Some(_) =>
-        s.join(t, joinCond, "left_anti").select(e.df.columns.map { c =>
-          insMap.get(c).map(assigned(c, _)).getOrElse {
-            // omitted columns fill like an explicit-column INSERT:
-            // SET DEFAULT expression when registered, NULL otherwise
-            columnDefault(name, c).map(expr).getOrElse(lit(null))
-              .cast(e.df.schema(c).dataType).as(c)
-          }
-        }.toIndexedSeq: _*)
-      case None => e.df.limit(0)
+    // unmatched source rows: the source anti-joined to the target's keys;
+    // omitted columns fill like an explicit-column INSERT: SET DEFAULT
+    // expression when registered, NULL otherwise
+    val insertedRows = insertSpec.map { _ =>
+      val rows = s.join(t, joinCond, "left_anti")
+      rows.select(fields.map { f =>
+        val ex = insMap.getOrElse(f.name, columnDefault(name, f.name)
+          .map(expr).getOrElse(lit(null)))
+        ingress(name, f, ex, rows.select(ex).schema.head.dataType).as(f.name)
+      }: _*)
     }
     // constraint probes on the changed delta only (the untouched rows
-    // were valid already); coerceAndValidate also re-canonicalizes any
-    // degraded text-carry columns the assignments produced
-    val delta = coerceAndValidate(name, e,
-      updatedRows.unionByName(insertedRows))
-    put(name, untouched.unionByName(delta))
+    // were valid already)
+    val delta = (updatedRows.toSeq ++ insertedRows).reduce(_ unionByName _)
+    validate(name, e, delta)
+    put(name, insertedRows.fold(kept)(kept.unionByName(_)))
     ((if (updateSet.isDefined) updated else 0L,
       if (insertSpec.isDefined) inserted else 0L), delta)
   }
@@ -308,17 +325,62 @@ private[graft] trait EngineDml { self: Engine =>
   /** Plain `UPDATE t SET c = expr, … [WHERE cond]` as copy-on-write —
     * the week-one DML verb the reference stops short of (its verb set
     * ends at INSERT/DELETE; column assignment exists only inside its
-    * MERGE form). Same distributed shape as [[deleteFrom]]: rows where
-    * the predicate is TRUE take the assignment expressions (evaluated
-    * over the row — `SET price = price * 1.1` reads the old value),
-    * rows where it is FALSE or NULL pass through untouched (the SQL
-    * tri-state rule). Assignments on the hit slice run through the
-    * shared INSERT/MERGE ingress (type coercion + NOT NULL / ENUM
-    * probes on the changed delta only), so a rejected UPDATE leaves
-    * the table untouched. Nothing ever collects to the driver; the
-    * row count is unchanged by construction. Returns rows updated. */
+    * MERGE form). The stored plan is ONE projection over the prior
+    * version: each assigned column becomes `when(hit, ingress(expr))
+    * .otherwise(col)`, where `hit` is the predicate being TRUE (rows
+    * where it is FALSE or NULL keep their values — the SQL tri-state
+    * rule) and the expression is evaluated over the row (`SET price =
+    * price * 1.1` reads the old value). The hit rows, projected the
+    * same way, are the delta the NOT NULL / ENUM probes check and the
+    * affected count comes from, so a rejected UPDATE leaves the table
+    * untouched. Nothing ever collects to the driver; the row count is
+    * unchanged by construction. Returns rows updated. */
   def updateWhere(name: String, sets: Seq[(String, String)],
       cond: Option[Column]): Long = updateWhereCore(name, exprs(sets), cond)._1
+
+  /** SET assignments resolved to target column names, in statement
+    * order (case-insensitive, like Spark's identifier resolution); a
+    * column named twice is a Parser Error. */
+  private def resolveSets(name: String, e: TableEntry,
+      sets: Seq[(String, Column)]): Seq[(String, Column)] = {
+    def canon(c: String): String =
+      e.df.columns.find(_.equalsIgnoreCase(c)).getOrElse(
+        throw new IllegalArgumentException(
+          s"Binder Error: column $c not in table $name"))
+    val resolved = sets.map { case (c, ex) => canon(c) -> ex }
+    if (resolved.map(_._1).distinct.size != sets.size)
+      throw new IllegalArgumentException(
+        "Parser Error: duplicate column in UPDATE SET list")
+    resolved
+  }
+
+  /** The UPDATE projection over `rows` (the table, or the table
+    * left-joined to a source): each assigned column takes its ingressed
+    * expression where `hit` holds and keeps `cur(c)` elsewhere. Returns
+    * (every row, the hit rows), both projected to the table's columns. */
+  private def assignWhere(e: TableEntry, rows: DataFrame,
+      assigned: Map[String, Column], hit: Column,
+      cur: String => Column): (DataFrame, DataFrame) = {
+    val fields = e.df.schema.fields.toIndexedSeq
+    (rows.select(fields.map(f => assigned.get(f.name)
+      .fold(cur(f.name))(when(hit, _).otherwise(cur(f.name))).as(f.name)): _*),
+      rows.filter(hit).select(fields.map(f =>
+        assigned.getOrElse(f.name, cur(f.name)).as(f.name)): _*))
+  }
+
+  /** The UPDATE shape shared by the plain and join forms: the
+    * [[assignWhere]] projection stored, its hit rows validated and
+    * counted. Returns the affected count and the hit rows. */
+  private def updateRows(name: String, e: TableEntry, rows: DataFrame,
+      assigned: Map[String, Column], hit: Column,
+      cur: String => Column): (Long, DataFrame) = {
+    val before = e.rowsIfKnown
+    val (all, delta) = assignWhere(e, rows, assigned, hit, cur)
+    validate(name, e, delta)
+    val n = delta.count()
+    put(name, all, before)
+    (n, delta)
+  }
 
   /** [[updateWhere]] over parsed assignments, returning the count and
     * the post-assignment rows (what `UPDATE … RETURNING` projects). */
@@ -328,33 +390,13 @@ private[graft] trait EngineDml { self: Engine =>
     require(sets.nonEmpty,
       "Parser Error: UPDATE requires at least one SET assignment")
     val e = registry.getOrElse(name, missing(name))
-    def canon(c: String): String =
-      e.df.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(
-          s"Binder Error: column $c not in table $name"))
-    val setMap = sets.map { case (c, ex) => canon(c) -> ex }.toMap
-    if (setMap.size != sets.size)
-      throw new IllegalArgumentException(
-        "Parser Error: duplicate column in UPDATE SET list")
-    // copy-on-write evaluates the predicate twice (hit / !hit slices)
-    // and the SET expressions again on the union read: a
-    // non-deterministic rand()/uuid() would lose or duplicate rows and
-    // desync the returned count from the persisted state — reject it
-    sets.foreach { case (c, ex) =>
-      requireDeterministic(e.df, ex, s"UPDATE SET $c") }
+    val assigned = resolveSets(name, e, sets).map { case (c, ex) =>
+      c -> ingress(name, e.df.schema(c), ex,
+        requireDeterministic(e.df, ex, s"UPDATE SET $c"))
+    }.toMap
     cond.foreach(requireDeterministic(e.df, _, "UPDATE WHERE"))
     val hit = cond.map(c => coalesce(c, lit(false))).getOrElse(lit(true))
-    val before = e.rowsIfKnown
-    val untouched = e.df.filter(!hit)
-    val updatedRows = e.df.filter(hit).select(e.df.columns.map { c =>
-      setMap.get(c)
-        .map(ex => ex.cast(e.df.schema(c).dataType).as(c))
-        .getOrElse(col(c))
-    }.toIndexedSeq: _*)
-    val delta = coerceAndValidate(name, e, updatedRows)
-    val n = delta.count()
-    put(name, untouched.unionByName(delta), before)
-    (n, delta)
+    updateRows(name, e, e.df, assigned, hit, col)
   }
 
   /** Join-form UPDATE — `UPDATE t SET c = expr, … FROM src WHERE cond`
@@ -362,15 +404,17 @@ private[graft] trait EngineDml { self: Engine =>
     * plain UPDATE). Target rows with a join match take the SET
     * expressions, which may reference source columns (target resolves
     * under the table name, source under `sourceAlias`); unmatched rows
-    * pass through untouched. Distributed shape: one join on the
-    * condition for the updated slice, one anti-join for the untouched
-    * slice, both shuffling on the extracted equi-keys (AQE handles
-    * skew); no driver materialization beyond the counters.
+    * pass through untouched. The stored plan is one left-outer join on
+    * the condition (shuffling on its extracted equi-keys, or
+    * broadcasting the source; AQE handles skew) plus the projection of
+    * [[updateWhere]], keyed on whether the row found a match; no driver
+    * materialization beyond the counters.
     *
     * Deliberate divergence from DuckDB: a target row matching MORE THAN
     * ONE source row raises a Constraint Error instead of updating with
     * an arbitrary match (DuckDB/Postgres document the pick as
-    * unpredictable) — same determinism stance as [[mergeIntoColumns]].
+    * unpredictable) — same determinism stance as [[mergeIntoColumns]],
+    * and what keeps the left-outer join from duplicating a target row.
     * The probe is a statement-time action over a row-id'd target frame;
     * the id never enters the stored lineage. */
   def updateFrom(name: String, sets: Seq[(String, String)],
@@ -387,14 +431,7 @@ private[graft] trait EngineDml { self: Engine =>
     require(sets.nonEmpty,
       "Parser Error: UPDATE requires at least one SET assignment")
     val e = registry.getOrElse(name, missing(name))
-    def canon(c: String): String =
-      e.df.columns.find(_.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(
-          s"Binder Error: column $c not in table $name"))
-    val setMap = sets.map { case (c, ex) => canon(c) -> ex }.toMap
-    if (setMap.size != sets.size)
-      throw new IllegalArgumentException(
-        "Parser Error: duplicate column in UPDATE SET list")
+    val setList = resolveSets(name, e, sets)
     if (sourceAlias.equalsIgnoreCase(name))
       throw new IllegalArgumentException(
         s"Binder Error: UPDATE FROM source alias '$sourceAlias' " +
@@ -406,8 +443,10 @@ private[graft] trait EngineDml { self: Engine =>
     // reference both sides); crossJoin here is analysis-only, lazy
     val probe = t.crossJoin(s)
     cond.foreach(requireDeterministic(probe, _, "UPDATE WHERE"))
-    sets.foreach { case (c, ex) =>
-      requireDeterministic(probe, ex, s"UPDATE SET $c") }
+    val assigned = setList.map { case (c, ex) =>
+      c -> ingress(name, e.df.schema(c), ex,
+        requireDeterministic(probe, ex, s"UPDATE SET $c"))
+    }.toMap
     // multi-match probe: eager, aggregate-only; the row id is discarded
     // with this action (monotonically_increasing_id is stable within
     // the single evaluation, which is all the probe needs)
@@ -420,19 +459,11 @@ private[graft] trait EngineDml { self: Engine =>
       throw new IllegalArgumentException(
         "Constraint Error: UPDATE FROM source matches the same target " +
           "row more than once")
-    val before = e.rowsIfKnown
-    val updatedRows = t.join(s, on, "inner").select(e.df.columns.map { c =>
-      setMap.get(c)
-        .map(ex => ex.cast(e.df.schema(c).dataType).as(c))
-        .getOrElse(col(s"$name.$c").as(c))
-    }.toIndexedSeq: _*)
-    val untouched = t.join(s, on, "left_anti")
-      .select(e.df.columns.map(c => col(s"$name.$c").as(c))
-        .toIndexedSeq: _*)
-    val delta = coerceAndValidate(name, e, updatedRows)
-    val n = delta.count()
-    put(name, untouched.unionByName(delta), before)
-    (n, delta)
+    val joined = t.join(
+      source.withColumn("__graft_hit", lit(true)).alias(sourceAlias),
+      on, "left_outer")
+    updateRows(name, e, joined, assigned, col("__graft_hit").isNotNull,
+      c => col(s"$name.$c"))
   }
 
   /** DELETE as predicate inversion — a full-scan copy-on-write rewrite
@@ -451,12 +482,11 @@ private[graft] trait EngineDml { self: Engine =>
     // SQL DELETE removes only rows where the predicate is TRUE; a row
     // where it evaluates NULL must be KEPT (plain `!cond` would drop it)
     val hit = coalesce(cond, lit(false))
-    val remaining = e.df.filter(!hit)
-    val deleted = e.df.filter(hit)
-    val kept = remaining.count()
-    val before = e.rows
-    put(name, remaining, kept)
-    (before - kept, deleted)
+    // the rows before and the rows removed, from ONE aggregate
+    val counts = e.df.agg(count(lit(1)), count_if(hit)).head()
+    val removed = counts.getLong(1)
+    put(name, e.df.filter(!hit), counts.getLong(0) - removed)
+    (removed, e.df.filter(hit))
   }
 
   /** Join-form DELETE — `DELETE FROM t USING src WHERE cond` (the
@@ -493,8 +523,17 @@ private[graft] trait EngineDml { self: Engine =>
     val deleted = t.join(s, on, "left_semi")
       .select(e.df.columns.map(c => col(s"$name.$c").as(c))
         .toIndexedSeq: _*)
-    val kept = remaining.count()
-    val before = e.rows
+    // the rows before and the rows kept from ONE job: the known count
+    // plus the kept slice's, else one aggregate over the kept and removed
+    // slices (a left-outer join would repeat a row per source match)
+    val (before, kept) =
+      if (e.rowsIfKnown >= 0L) (e.rowsIfKnown, remaining.count())
+      else {
+        val c = remaining.select(lit(true).as("__graft_kept"))
+          .union(deleted.select(lit(false).as("__graft_kept")))
+          .agg(count(lit(1)), count_if(col("__graft_kept"))).head()
+        (c.getLong(0), c.getLong(1))
+      }
     put(name, remaining, kept)
     (before - kept, deleted)
   }

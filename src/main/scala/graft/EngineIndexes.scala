@@ -1053,6 +1053,8 @@ private[graft] trait EngineIndexes { self: Engine =>
   private val textTermCache = TrieMap.empty[(String, String), Option[TermMeta]]
   private val textStatsCache = TrieMap.empty[String, (Long, Long)]
   private val textFracCache = TrieMap.empty[String, Double]
+  /** [[textFracCache]] value for a term set no cut depth certifies. */
+  private val Bm25Declines = -1.0
 
   private[graft] def invalidateTextCaches(indexName: String): Unit = {
     textStatsCache.remove(indexName)
@@ -1126,7 +1128,9 @@ private[graft] trait EngineIndexes { self: Engine =>
     * Declines (returns None → classic path) on: legacy/dirty
     * artifacts, duplicate probe terms, < k matching docs, a k-th score
     * rounding to 0 (pad semantics), or failed certification after one
-    * prefix deepening — every decline is correctness-neutral. */
+    * prefix deepening (remembered per term set until the index is
+    * refreshed, so later probes skip phase 1) — every decline is
+    * correctness-neutral. */
   private[graft] def fastBm25(indexName: String, terms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): Option[DataFrame] = {
     if (terms.distinct.size != terms.size) return None
@@ -1169,8 +1173,12 @@ private[graft] trait EngineIndexes { self: Engine =>
     // Bm25Probe A/B in OPTIMIZATION_r19.md. Warm probes keep the
     // one-deepening retry (their cached depth certifying is the
     // steady state; a corpus drift that breaks it re-certifies once).
+    // A term set that fails at every depth it tried holds the
+    // [[Bm25Declines]] sentinel: later probes go straight to the
+    // classic plan, with no phase-1 job, until a refresh clears it.
     val fracKey = indexName + "|" + terms.sorted.mkString(",")
     val cachedFrac = textFracCache.get(fracKey)
+    if (cachedFrac.contains(Bm25Declines)) return None
     val fracs = cachedFrac match {
       case Some(f) => Seq(f, 0.5).distinct
       case None => Seq(0.25)
@@ -1243,11 +1251,11 @@ private[graft] trait EngineIndexes { self: Engine =>
       attempt += 1 // warm: deepen the prefix once, then give up
     }
     // cold decline: remember the deeper cut so the next probe on this
-    // term set certifies in one attempt (bounded map, same cap rule)
-    if (cachedFrac.isEmpty) {
-      if (textFracCache.size > 4096) textFracCache.clear()
-      textFracCache.put(fracKey, 0.5)
-    }
+    // term set certifies in one attempt; warm decline (the deeper cut
+    // failed too): remember to decline without probing (bounded map,
+    // same cap rule)
+    if (textFracCache.size > 4096) textFracCache.clear()
+    textFracCache.put(fracKey, if (cachedFrac.isEmpty) 0.5 else Bm25Declines)
     None
   }
 

@@ -17,10 +17,11 @@ private[graft] trait EngineLayout { self: Engine =>
     * balanced parquet files and re-root the live snapshot at the
     * rewritten data — the 100 TB maintenance verb (lakehouse OPTIMIZE).
     * Beyond file sizing, this is the copy-on-write chain's safety
-    * valve: every DML verb layers plan nodes over the previous
-    * snapshot, so a long-lived table's analysis cost grows one
-    * union/filter/join layer per commit; compaction collapses the live
-    * plan to a plain scan. Retained history still addresses the
+    * valve: every DML verb layers one union/filter/projection/join over
+    * the previous snapshot (reading it once; column-wise MERGE once per
+    * branch), so a long-lived table's
+    * analysis cost grows one layer per commit; compaction collapses the
+    * live plan to a plain scan. Retained history still addresses the
     * pre-compaction plans (the artifact path carries the version so a
     * later compaction can never clobber data an older retained
     * snapshot reads). Like any row-rewriting verb it breaks the append

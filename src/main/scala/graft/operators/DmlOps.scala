@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Engine, Tables}
@@ -12,14 +13,25 @@ import graft.{Engine, Tables}
   * distributed_delete.cpp:27-126). */
 object DmlOps {
 
+  /** Runs a query body on a scratch engine (a query-local catalog that
+    * keeps the session's serving memo) and unregisters every table it
+    * registered before returning. The frame the body returns keeps its
+    * analyzed plan; the session keeps no temp view of the query, so a
+    * second run in one JVM starts from the same empty catalog. */
+  private def onScratch(s: SparkSession)(
+      body: Engine => DataFrame): DataFrame = {
+    val engine = Engine.scratch(s)
+    try body(engine)
+    finally engine.tableNames.foreach(engine.unregisterTable)
+  }
+
   val dmlRoundtrip: NamedQuery = NamedQuery("q32_dml_roundtrip",
     Some("""SELECT l_orderkey, l_linenumber, round(l_quantity, 2) AS qty
            |FROM lineitem WHERE l_orderkey <= 200 AND NOT (round(l_quantity, 2) < 5)
            |UNION ALL
            |SELECT l_orderkey, l_linenumber, round(l_quantity, 2) AS qty
            |FROM lineitem WHERE l_orderkey <= 50""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val name = "graft_dml_roundtrip"
       engine.dropTable(name, ifExists = true)
       val base = Tables.t(s, d, "lineitem")
@@ -46,8 +58,7 @@ object DmlOps {
            |CASE WHEN l_orderkey <= 100 THEN 'bumped'
            |     ELSE l_returnflag END AS f
            |FROM lineitem WHERE l_orderkey <= 300""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val name = "graft_update_roundtrip"
       engine.dropTable(name, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "lineitem")
@@ -82,8 +93,7 @@ object DmlOps {
            |  (SELECT * FROM orders WHERE o_totalprice > 150000) o
            |  ON l.l_orderkey = o.o_orderkey
            |WHERE l.l_orderkey <= 300""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val name = "graft_updfrom_tgt"
       val src = "graft_updfrom_src"
       engine.dropTable(name, ifExists = true)
@@ -116,8 +126,7 @@ object DmlOps {
            |  SELECT 1 FROM orders o
            |  WHERE o.o_orderkey = l.l_orderkey
            |    AND o.o_totalprice > 150000)""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val name = "graft_delu_tgt"
       val src = "graft_delu_src"
       engine.dropTable(name, ifExists = true)
@@ -163,8 +172,7 @@ object DmlOps {
            |FROM src s WHERE NOT EXISTS (
            |  SELECT 1 FROM orders t2 WHERE t2.o_orderkey <= 400
            |    AND t2.o_orderkey = s.o_orderkey)""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val name = "graft_conf_tgt"
       engine.dropTable(name, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "orders")
@@ -186,6 +194,7 @@ object DmlOps {
         "ON CONFLICT (o_orderkey) DO UPDATE SET " +
         s"price = round(excluded.price + 1, 2), " +
         s"tag = concat($name.tag, '+', excluded.tag)")
+      s.catalog.dropTempView("graft_conf_src")
       engine.table(name)
     })
 
@@ -207,8 +216,7 @@ object DmlOps {
            |count(*) AS n
            |FROM lineitem WHERE l_returnflag IN ('A', 'R')
            |GROUP BY l_returnflag, l_linestatus""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val base = "graft_mv_lineitem"
       val mv = "graft_mv_li_agg"
       engine.dropTable(mv, ifExists = true)
@@ -250,8 +258,7 @@ object DmlOps {
            |FROM (SELECT * FROM lineitem UNION ALL
            |      SELECT * FROM lineitem WHERE l_orderkey <= 100) u
            |GROUP BY l_returnflag, l_linestatus""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val base = "graft_mvr_lineitem"
       val mv = "graft_mvr_li_agg"
       engine.dropTable(mv, ifExists = true)
@@ -300,8 +307,7 @@ object DmlOps {
            |  round(sum(round(c_acctbal, 2)), 2) AS total,
            |  CAST(0 AS BIGINT) AS n_mismatch
            |FROM customer GROUP BY c_mktsegment""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val name = "graft_copy_src"
       val back = "graft_copy_back"
       engine.dropTable(name, ifExists = true)
@@ -345,8 +351,7 @@ object DmlOps {
            |UNION ALL
            |SELECT o_orderkey + 10000, round(o_totalprice, 2), 'del'
            |FROM orders WHERE o_orderkey <= 50""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val name = "graft_ret_tgt"
       engine.dropTable(name, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "orders")
@@ -363,6 +368,7 @@ object DmlOps {
       // >= : the smallest shifted key is o_orderkey 0 → exactly 10000
       val del = engine.sql(s"DELETE FROM $name WHERE k >= 10000 " +
         "RETURNING k, price AS val, 'del' AS verb")
+      s.catalog.dropTempView("graft_ret_orders")
       ins.unionAll(upd).unionAll(del)
     })
 
@@ -379,8 +385,7 @@ object DmlOps {
            |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum,
            |  CAST(2 AS BIGINT) AS n_tables
            |FROM nation GROUP BY n_regionkey""".stripMargin),
-    (s, d) => {
-      val engine = Engine.scratch(s) // query-local catalog: keep the serving memo
+    (s, d) => onScratch(s) { engine =>
       val dir = s"${sys.props("java.io.tmpdir")}/graft_export_rt"
       engine.createTableAs("graft_exp_nation", Tables.t(s, d, "nation"))
       engine.sql("CREATE TABLE graft_exp_meta (id INT, tag STRING)")
@@ -392,25 +397,26 @@ object DmlOps {
       val exported =
         engine.sql(s"EXPORT DATABASE '$dir'").head().getLong(0)
       // restore into a FRESH engine — nothing session-side may leak
-      val e2 = Engine.scratch(s)
-      val imported = e2.sql(s"IMPORT DATABASE '$dir'").head().getLong(0)
-      require(exported == 2 && imported == 2,
-        s"catalog scope drifted: exported $exported, imported $imported")
-      // constraint metadata survived the manifest round-trip
-      val nnHeld =
-        try { e2.sql("INSERT INTO graft_exp_meta VALUES (NULL, 'x')")
-          false }
-        catch { case _: IllegalArgumentException => true }
-      require(nnHeld, "NOT NULL did not survive IMPORT DATABASE")
-      e2.sql("INSERT INTO graft_exp_meta (id) VALUES (2)")
-      require(e2.table("graft_exp_meta").filter(col("id") === 2)
-        .head().getString(1) == "dft",
-        "SET DEFAULT did not survive IMPORT DATABASE")
-      e2.table("graft_exp_nation")
-        .groupBy(col("n_regionkey"))
-        .agg(count(lit(1)).as("n"),
-          sum("n_nationkey").cast("long").as("key_sum"),
-          lit(2L).as("n_tables"))
+      onScratch(s) { e2 =>
+        val imported = e2.sql(s"IMPORT DATABASE '$dir'").head().getLong(0)
+        require(exported == 2 && imported == 2,
+          s"catalog scope drifted: exported $exported, imported $imported")
+        // constraint metadata survived the manifest round-trip
+        val nnHeld =
+          try { e2.sql("INSERT INTO graft_exp_meta VALUES (NULL, 'x')")
+            false }
+          catch { case _: IllegalArgumentException => true }
+        require(nnHeld, "NOT NULL did not survive IMPORT DATABASE")
+        e2.sql("INSERT INTO graft_exp_meta (id) VALUES (2)")
+        require(e2.table("graft_exp_meta").filter(col("id") === 2)
+          .head().getString(1) == "dft",
+          "SET DEFAULT did not survive IMPORT DATABASE")
+        e2.table("graft_exp_nation")
+          .groupBy(col("n_regionkey"))
+          .agg(count(lit(1)).as("n"),
+            sum("n_nationkey").cast("long").as("key_sum"),
+            lit(2L).as("n_tables"))
+      }
     })
 
   def defs: Seq[NamedQuery] =

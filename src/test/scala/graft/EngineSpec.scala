@@ -2380,6 +2380,210 @@ class EngineSpec extends SparkSpec {
     engine.dropTable(t); engine.dropTable(mv); engine.dropTable(base)
     engine.unregisterTable(li)
   }
+  test("plan-shape law: a write reads the prior version once (an insert " +
+      "clause adds one key-only probe) over 14 mixed writes, and each " +
+      "step's rows equal the same statement on a copy materialized from " +
+      "parquet") {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val dir = java.nio.file.Files.createTempDirectory("graft_shape").toString
+    val t = s"shape_${System.nanoTime()}"
+    spark.range(1, 21).select(col("id").cast("int").as("id"),
+        (col("id") * 10).cast("int").as("v"), lit("b").as("s"))
+      .write.parquet(s"$dir/base")
+    engine.registerTable(t, s"$dir/base")
+    engine.createIndex(s"${t}_ix", t, Seq("id"))
+    // merge and join sources are engine tables over one VALUES list
+    // each, so every file scan in the target's plan is a read of its
+    // prior version (a source that is itself a union would repeat the
+    // source anti-join's target read once per branch)
+    val Seq(s1, s2, s3) = Seq(1, 2, 3).map(i => s"${t}_src$i")
+    Seq(s1 -> "(1, 100, 'x'), (2, 200, 'y'), (30, 300, 'z')",
+        s2 -> "(3, 7, 'p'), (40, 400, 'p')",
+        s3 -> "(8, 1, 'd'), (80, 2, 'd'), (80, 3, 'd'), (NULL, 4, 'd')")
+      .foreach { case (n, values) => engine.registerTable(n, spark.sql(
+        s"SELECT CAST(id AS INT) id, CAST(v AS INT) v, s FROM VALUES $values AS r(id, v, s)")) }
+    // (statement, reads of the prior version in the stored plan): one
+    // whole-row read each; a column-wise MERGE insert clause (ON CONFLICT
+    // and INSERT OR REPLACE included) adds the source anti-join's
+    // key-only probe — see EngineDml.mergeIntoColumns
+    val script: Seq[(String => String, Int)] = Seq(
+      (n => s"INSERT INTO $n VALUES (21, 210, 'i'), (22, 220, 'i')", 1),
+      (n => s"UPDATE $n SET v = v + 1, s = 'u' WHERE id % 3 = 0", 1),
+      (n => s"UPDATE $n SET v = src.v * 10 FROM $s1 src WHERE $n.id = src.id", 1),
+      (n => s"DELETE FROM $n WHERE id = 5", 1),
+      (n => s"DELETE FROM $n USING $s1 d WHERE $n.id = d.id AND d.v > 150", 1),
+      (n => s"MERGE INTO $n AS t USING $s1 AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *", 1),
+      (n => s"MERGE INTO $n AS t USING $s2 AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = t.v + s.v " +
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)", 2),
+      (n => s"MERGE INTO $n AS t USING $s2 AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET s = 'm'", 1),
+      (n => s"INSERT INTO $n VALUES (4, 44, 'q'), (50, 500, 'q') " +
+        "ON CONFLICT (id) DO UPDATE SET v = excluded.v, s = 'c'", 2),
+      (n => s"INSERT INTO $n VALUES (6, 66, 'n'), (60, 600, 'n'), " +
+        "(60, 601, 'n2') ON CONFLICT (id) DO NOTHING", 2),
+      (n => s"INSERT OR REPLACE INTO $n VALUES (7, 77, 'r'), (70, 700, 'r')", 2),
+      // insert-only: repeated and NULL source keys all insert when unmatched
+      (n => s"MERGE INTO $n AS t USING $s3 AS s ON t.id = s.id " +
+        "WHEN NOT MATCHED THEN INSERT (id, v, s) VALUES (s.id, s.v, 'ins')", 2),
+      (n => s"UPDATE $n SET s = 'z' WHERE v > 100", 1),
+      (n => s"DELETE FROM $n WHERE id = 80 OR id IS NULL", 1))
+    def roots(n: String) = castToImpl(engine.table(n)).queryExecution
+      .optimizedPlan.collectLeaves().collect { case l: LogicalRelation =>
+        l.relation match {
+          case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+          case other => Seq(other.toString)
+        }
+      }
+    def rows(n: String) = engine.table(n).collect().map(_.toString).sorted.toSeq
+    // the one path the table's current version was materialized at
+    var root = Seq(s"$dir/base")
+    script.zipWithIndex.foreach { case ((stmt, reads), i) =>
+      // the copy: the previous step's rows, materialized as a fresh base
+      val copy = s"${t}_copy$i"
+      engine.table(t).write.parquet(s"$dir/step$i")
+      engine.registerTable(copy, s"$dir/step$i")
+      engine.createIndex(s"${copy}_ix", copy, Seq("id"))
+      val got = engine.sql(stmt(t)).collect().toSeq
+      val want = engine.sql(stmt(copy)).collect().toSeq
+      assert(got == want, s"step $i result diverges: ${stmt(t)}")
+      val leaves = roots(t)
+      val wholeRows = scansOf(engine.table(t))
+        .count(_.requiredSchema.fieldNames.exists(_ != "id"))
+      assert(wholeRows == 1, s"step $i reads whole rows $wholeRows times")
+      assert(leaves.size == reads && leaves.forall(_.map(_.stripPrefix(
+          "file:")) == root), s"step $i reads ${root.mkString} " +
+        s"${leaves.size} times, want $reads: ${stmt(t)} ($leaves)\n" +
+        castToImpl(engine.table(t)).queryExecution.optimizedPlan)
+      assert(rows(t) == rows(copy), s"step $i rows diverge: ${stmt(t)}")
+      engine.dropTable(copy)
+      // a probed step is materialized, so the next starts from one read
+      if (reads > 1) {
+        engine.compact(t)
+        root = roots(t).flatten.map(_.stripPrefix("file:"))
+        assert(roots(t).size == 1 && root.size == 1, roots(t))
+      }
+    }
+    assert(rows(t).size == 26)
+    Seq(t, s1, s2, s3).foreach(engine.dropTable(_))
+  }
+
+  test("UPDATE of degraded-carry and constrained columns: the canonical " +
+      "values of an INSERT, and rejected writes leave table and version") {
+    val p = s"upd_carry_${System.nanoTime()}"
+    engine.sql(s"CREATE TYPE ${p}_mood AS ENUM ('sad', 'ok', 'happy')")
+    engine.sql(s"CREATE TABLE $p (id INT, tm TIME, tsn TIMESTAMP_NS, " +
+      s"h HUGEINT, iv INTERVAL, m ${p}_mood)")
+    val values = "'10:20:30.500', '2024-01-02 03:04:05.120000000', " +
+      "'00042', INTERVAL '3' DAY, 'ok'"
+    engine.sql(s"INSERT INTO $p VALUES (1, $values), (2, '00:00:00', " +
+      "'2000-01-01 00:00:00', '7', INTERVAL '1' DAY, 'sad')")
+    val cols = Seq("tm", "tsn", "h", "iv", "m")
+    val n = engine.sql(s"UPDATE $p SET " + cols.zip(values.split(", "))
+      .map { case (c, v) => s"$c = $v" }.mkString(", ") + " WHERE id = 2")
+    assert(n.head().getLong(0) == 1L)
+    def row(id: Int) = engine.table(p).filter(col("id") === id)
+      .select(cols.map(col): _*).head().toSeq
+    assert(row(2) == row(1), s"UPDATE wrote ${row(2)}, INSERT wrote ${row(1)}")
+    assert(row(1).take(3) == Seq("10:20:30.5", "2024-01-02 03:04:05.12", "42"))
+    engine.sql(s"ALTER TABLE $p ALTER COLUMN h SET NOT NULL")
+    val before = engine.table(p).collect().map(_.toString).sorted.toSeq
+    val version = engine.currentVersion(p)
+    val rejected = Seq(
+      s"UPDATE $p SET m = 'angry' WHERE id = 1" ->
+        s"Could not convert string 'angry' to enum type ${p}_mood",
+      s"UPDATE $p SET h = NULL WHERE id = 2" ->
+        s"NOT NULL constraint failed: $p(h)")
+    rejected.foreach { case (q, msg) =>
+      val err = intercept[IllegalArgumentException](engine.sql(q))
+      assert(err.getMessage.contains(msg), err.getMessage)
+      assert(engine.table(p).collect().map(_.toString).sorted.toSeq == before)
+      assert(engine.currentVersion(p) == version)
+    }
+    engine.dropTable(p)
+  }
+
+  test("DmlOps queries unregister their scratch tables: q159 twice in one " +
+      "JVM gives one digest and leaves no graft_* temp view") {
+    def graftViews = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name).toSet
+    def digest = java.security.MessageDigest.getInstance("MD5").digest(
+        SparkEntry.queries("q159_matview_agg")(spark, sf).collect()
+          .map(_.toString).sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    val views = graftViews
+    val first = digest
+    assert(graftViews == views, s"first run left ${graftViews -- views}")
+    assert(digest == first)
+    assert(graftViews == views, s"second run left ${graftViews -- views}")
+    assert(!views.exists(_.startsWith("graft_mv_")), views)
+  }
+
+  test("bm25 decline sentinel: a term set no cut depth certifies stops " +
+      "paying the phase-1 job until a refresh; results stay exact") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val t = s"tiedbm_docs_${System.nanoTime()}"
+    // one term at tf 1 in docs of 20-26 tokens: the best unseen doc's
+    // bound ties the k-th seen score at every prefix depth below the
+    // whole posting list, so the cut never certifies
+    engine.registerTable(t, spark.range(6000).select(col("id").as("doc_id"),
+      when(col("id") < 3000, concat(lit("tied"),
+        expr("repeat(' fill', 19 + cast(id % 7 AS INT))")))
+        .otherwise(expr("trim(repeat('fill ', 20))")).as("text")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_tiedbm").toString
+    engine.buildTextIndex("tiedbm", t, s"$dir/index")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def classic = engine.bm25Matched("tiedbm", Seq("tied"))
+      .orderBy(col("bm25").desc, col("doc_id")).limit(10).collect().toSeq
+    // (rows, jobs, plan path) of one probe
+    def probe(fast: Boolean) = {
+      spark.conf.set("graft.bm25.fastPathMinRows",
+        if (fast) "0" else Long.MaxValue.toString)
+      engine.clearProbeStats()
+      org.apache.spark.GraftSparkBridge.waitForListeners(spark.sparkContext)
+      jobs.set(0)
+      val rows = engine.bm25Search("tiedbm", Seq("tied"), 10).collect().toSeq
+      org.apache.spark.GraftSparkBridge.waitForListeners(spark.sparkContext)
+      (rows, jobs.get(), engine.probeStats.head().getAs[String]("plan_path"))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val cold = probe(fast = true) // fails at 0.25, records 0.5
+      val warm = probe(fast = true) // fails at 0.5 too
+      val third = probe(fast = true)
+      val gated = probe(fast = false) // never enters the cut path
+      val want = classic
+      Seq(cold, warm, third, gated).foreach(p => assert(p._1 == want))
+      assert(Seq(cold, warm, third).forall(_._3 == gated._3) &&
+        gated._3 != "cut", s"plan paths ${Seq(cold, warm, third, gated)}")
+      assert(warm._2 > gated._2, s"warm probe ran no phase-1 job: $warm")
+      assert(third._2 == gated._2,
+        s"third probe ran ${third._2} jobs, the classic plan ${gated._2}")
+      // a refresh clears the sentinel: the cut path is tried again
+      engine.insertInto(t, spark.range(1).select(lit(9000L).as("doc_id"),
+        lit("tied fill").as("text")))
+      engine.refreshTextIndex("tiedbm", t, s"$dir/index")
+      val fresh = probe(fast = true)
+      val freshGated = probe(fast = false)
+      assert(fresh._1 == freshGated._1 && fresh._1 == classic)
+      assert(fresh._2 > freshGated._2, s"refreshed probe skipped phase 1: $fresh")
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.conf.unset("graft.bm25.fastPathMinRows")
+      engine.clearProbeStats()
+    }
+    engine.dropIndex("tiedbm")
+    engine.unregisterTable(t)
+    Seq("postings", "doclens", "stats", "termstats").foreach(s =>
+      engine.unregisterTable(s"tiedbm_$s"))
+  }
 }
 
 /** A local filesystem under a custom scheme, registered only through
