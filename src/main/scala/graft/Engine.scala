@@ -157,24 +157,6 @@ class Engine private[graft] (val spark: SparkSession)
 
   def registerTable(name: String, df: DataFrame): Unit = put(name, df)
 
-  /** Register a parquet table under a bucketed co-located LAYOUT: the
-    * data is rewritten once into the session warehouse, hash-bucketed
-    * and sorted on `key`, and the engine table reads the bucketed
-    * catalog table. Two tables registered with the same key semantics
-    * and bucket count (lineitem on l_orderkey, orders on o_orderkey)
-    * join WITHOUT a shuffle exchange — the layout is the storage-side
-    * answer to the fact-join exchange that no join strategy can avoid
-    * on unbucketed files. One write, every subsequent join free; the
-    * production cadence re-buckets per ingest snapshot. See
-    * [[graft.operators.BucketedOps]] for the query-layer variants. */
-  def registerBucketedTable(name: String, path: String, key: String,
-      buckets: Int = graft.operators.BucketedOps.BucketCount): Unit = {
-    val catalogName = s"bk_eng_${ProcessHandle.current.pid}_$name"
-    graft.operators.BucketedOps.writeBucketed(
-      spark.read.parquet(path), catalogName, Seq(key), buckets)
-    put(name, spark.table(catalogName))
-  }
-
   def unregisterTable(name: String): Unit = {
     registry.remove(name)
     versions.remove(name)

@@ -202,7 +202,7 @@ private[graft] trait EngineDml { self: Engine =>
     * MATCHED clause drops unmatched source rows. The stored plan reads
     * the target's rows once: with a MATCHED clause one left-outer join
     * to the source (whose keys are then unique) assigns the matched rows
-    * and keeps the rest, as in [[updateFrom]]; unmatched source rows
+    * and keeps the rest, as in [[updateFromCore]]; unmatched source rows
     * come from the source anti-joined to the target, which reads only
     * the target's keys. Both joins stream the target past a broadcast
     * source, so no whole target row moves, and a later key filter still
@@ -322,22 +322,6 @@ private[graft] trait EngineDml { self: Engine =>
     before - kept
   }
 
-  /** Plain `UPDATE t SET c = expr, … [WHERE cond]` as copy-on-write —
-    * the week-one DML verb the reference stops short of (its verb set
-    * ends at INSERT/DELETE; column assignment exists only inside its
-    * MERGE form). The stored plan is ONE projection over the prior
-    * version: each assigned column becomes `when(hit, ingress(expr))
-    * .otherwise(col)`, where `hit` is the predicate being TRUE (rows
-    * where it is FALSE or NULL keep their values — the SQL tri-state
-    * rule) and the expression is evaluated over the row (`SET price =
-    * price * 1.1` reads the old value). The hit rows, projected the
-    * same way, are the delta the NOT NULL / ENUM probes check and the
-    * affected count comes from, so a rejected UPDATE leaves the table
-    * untouched. Nothing ever collects to the driver; the row count is
-    * unchanged by construction. Returns rows updated. */
-  def updateWhere(name: String, sets: Seq[(String, String)],
-      cond: Option[Column]): Long = updateWhereCore(name, exprs(sets), cond)._1
-
   /** SET assignments resolved to target column names, in statement
     * order (case-insensitive, like Spark's identifier resolution); a
     * column named twice is a Parser Error. */
@@ -382,8 +366,20 @@ private[graft] trait EngineDml { self: Engine =>
     (n, delta)
   }
 
-  /** [[updateWhere]] over parsed assignments, returning the count and
-    * the post-assignment rows (what `UPDATE … RETURNING` projects). */
+  /** Plain `UPDATE t SET c = expr, … [WHERE cond]` as copy-on-write —
+    * the week-one DML verb the reference stops short of (its verb set
+    * ends at INSERT/DELETE; column assignment exists only inside its
+    * MERGE form). The stored plan is ONE projection over the prior
+    * version: each assigned column becomes `when(hit, ingress(expr))
+    * .otherwise(col)`, where `hit` is the predicate being TRUE (rows
+    * where it is FALSE or NULL keep their values — the SQL tri-state
+    * rule) and the expression is evaluated over the row (`SET price =
+    * price * 1.1` reads the old value). The hit rows, projected the
+    * same way, are the delta the NOT NULL / ENUM probes check and the
+    * affected count comes from, so a rejected UPDATE leaves the table
+    * untouched. Nothing ever collects to the driver; the row count is
+    * unchanged by construction. Returns the count and the
+    * post-assignment rows (what `UPDATE … RETURNING` projects). */
   private[graft] def updateWhereCore(name: String,
       sets: Seq[(String, Column)],
       cond: Option[Column]): (Long, DataFrame) = withTableLock(name) {
@@ -407,7 +403,7 @@ private[graft] trait EngineDml { self: Engine =>
     * pass through untouched. The stored plan is one left-outer join on
     * the condition (shuffling on its extracted equi-keys, or
     * broadcasting the source; AQE handles skew) plus the projection of
-    * [[updateWhere]], keyed on whether the row found a match; no driver
+    * [[updateWhereCore]], keyed on whether the row found a match; no driver
     * materialization beyond the counters.
     *
     * Deliberate divergence from DuckDB: a target row matching MORE THAN
@@ -416,13 +412,7 @@ private[graft] trait EngineDml { self: Engine =>
     * unpredictable) — same determinism stance as [[mergeIntoColumns]],
     * and what keeps the left-outer join from duplicating a target row.
     * The probe is a statement-time action over a row-id'd target frame;
-    * the id never enters the stored lineage. */
-  def updateFrom(name: String, sets: Seq[(String, String)],
-      source: DataFrame, sourceAlias: String,
-      cond: Option[String]): Long =
-    updateFromCore(name, exprs(sets), source, sourceAlias, cond.map(expr))._1
-
-  /** [[updateFrom]] over parsed assignments, returning the count and the
+    * the id never enters the stored lineage. Returns the count and the
     * post-assignment target rows — what `UPDATE … FROM … RETURNING`
     * projects (target columns; standard target-row RETURNING scope). */
   private[graft] def updateFromCore(name: String,
@@ -477,7 +467,7 @@ private[graft] trait EngineDml { self: Engine =>
   private[graft] def deleteFromCore(name: String,
       cond: Column): (Long, DataFrame) = withTableLock(name) {
     val e = registry.getOrElse(name, missing(name))
-    // same double-evaluation hazard as updateWhere
+    // same double-evaluation hazard as updateWhereCore
     requireDeterministic(e.df, cond, "DELETE WHERE")
     // SQL DELETE removes only rows where the predicate is TRUE; a row
     // where it evaluates NULL must be KEPT (plain `!cond` would drop it)
@@ -496,12 +486,7 @@ private[graft] trait EngineDml { self: Engine =>
     * no multi-match hazard — any number of matches deletes the row
     * once — so the shape is a single anti-join on the condition
     * (shuffling on the extracted equi-keys), copy-on-write swap,
-    * nothing driver-side but the counters. */
-  def deleteUsing(name: String, source: DataFrame, sourceAlias: String,
-      cond: Option[String]): Long =
-    deleteUsingCore(name, source, sourceAlias, cond.map(expr))._1
-
-  /** [[deleteUsing]] over a parsed predicate, returning the count and the
+    * nothing driver-side but the counters. Returns the count and the
     * removed target rows (the semi-join complement of the kept anti-join
     * slice, over the pre-swap lineage) — what `DELETE … USING …
     * RETURNING` projects. */
@@ -547,17 +532,10 @@ private[graft] trait EngineDml { self: Engine =>
     * target; managed tables here carry no uniqueness, so the conflict
     * columns act directly as merge keys (a source row "conflicts" iff
     * a target row matches on them) — same keys, same answer, no
-    * constraint catalog required. Returns (updated, inserted). */
-  def insertOnConflict(name: String, source: DataFrame,
-      conflictCols: Seq[String],
-      updateSet: Option[Seq[(String, String)]]): (Long, Long) =
-    insertOnConflictCore(name, source, conflictCols,
-      updateSet.map(exprs))._1
-
-  /** [[insertOnConflict]] over parsed assignments, returning the counts
-    * and the affected rows — DO UPDATE's post-assignment matched rows
-    * plus the inserted rows (DuckDB's `ON CONFLICT … RETURNING` scope:
-    * rows the statement wrote, not rows it skipped). */
+    * constraint catalog required. Returns (updated, inserted) and the
+    * affected rows — DO UPDATE's post-assignment matched rows plus the
+    * inserted rows (DuckDB's `ON CONFLICT … RETURNING` scope: rows the
+    * statement wrote, not rows it skipped). */
   private[graft] def insertOnConflictCore(name: String, source: DataFrame,
       conflictCols: Seq[String],
       updateSet: Option[Seq[(String, Column)]])
@@ -565,7 +543,7 @@ private[graft] trait EngineDml { self: Engine =>
     // the whole verb runs under the (reentrant) table lock — the arity
     // check and positional alignment below read the schema, and a
     // concurrent ALTER TABLE between them and the merge would misalign
-    // the frame (updateFrom/deleteUsing take the same whole-verb lock)
+    // the frame (updateFromCore/deleteUsingCore take the same lock)
     val e = registry.getOrElse(name, missing(name))
     val insertAll = e.df.columns.toSeq
     if (source.columns.length != e.df.columns.length)

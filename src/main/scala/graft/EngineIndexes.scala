@@ -244,7 +244,7 @@ private[graft] trait EngineIndexes { self: Engine =>
     val newVecs =
       df.join(cells.select("vec_id"), Seq("vec_id"), "left_anti")
         .persist() // one anti-join pass feeds both the count and the
-                   // assignment write (the LayoutMaintenance pattern)
+                   // assignment write
     try {
       val added = newVecs.count()
       if (added > 0) {

@@ -90,6 +90,8 @@ object SparkEntry {
       "q196_bm25_served" ->
         (("serving_index_stage", TextOps.warmServing _)),
       "q189_hybrid_served" ->
+        (("serving_index_stage", TextOps.warmServing _)),
+      "q188_hybrid_dense_audit" ->
         (("serving_index_stage", TextOps.warmServing _)))
 
   /** Bench-time PRODUCTION formulations for queries whose correctness

@@ -479,7 +479,7 @@ private[graft] object SqlRouter {
   /** INSERT … ON CONFLICT and INSERT OR REPLACE/IGNORE: the insert frame
     * builds like a plain INSERT's, then upserts through the MERGE
     * machinery with the conflict columns as keys
-    * ([[graft.EngineDml.insertOnConflict]]). `conflict` resolves the
+    * ([[graft.EngineDml.insertOnConflictCore]]). `conflict` resolves the
     * keys and DO UPDATE set under the table lock. */
   private def upsert(e: Engine, sql: String, h: InsertHead,
       returning: Option[Seq[String]])(

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -55,60 +55,44 @@ object Tables {
             "(expected int64 nanos, TIMESTAMP, or TIMESTAMP_NTZ)")
     }
 
-  /** A non-wildcard `glob` naming a DIRECTORY under `dir` (the layout
+  /** A feed file `name` under `dir` that is a DIRECTORY (the layout
     * Spark itself writes: `events.parquet/part-*.parquet` + _SUCCESS)
     * resolves to that directory with a part-file glob, so the stream
     * readers accept both the single-file testdata shape and the
     * directory shape every Spark-written feed has. Storage-agnostic
     * (Hadoop FileSystem), so the same resolution runs on HDFS/S3. */
   private def resolveFeed(spark: SparkSession, dir: String,
-      glob: String): (String, String) = {
-    if (glob.exists(c => "*?[{".indexOf(c) >= 0)) return (dir, glob)
-    val p = new org.apache.hadoop.fs.Path(dir, glob)
+      name: String): (String, String) = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p) && fs.getFileStatus(p).isDirectory)
       (p.toString, "*.parquet")
-    else (dir, glob)
-  }
-
-  /** On-disk schema of the events files under `dir` (footer-only read;
-    * cheap). Streaming sources require an explicit schema — deriving it
-    * from the files themselves is what keeps the stream readers in the
-    * same encoding matrix as the batch loader. */
-  def eventsDiskSchema(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
-      recursive: Boolean = false): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (path, g) = resolveFeed(spark, dir, glob)
-    spark.read
-      .option("pathGlobFilter", g)
-      .option("recursiveFileLookup", recursive.toString)
-      .parquet(path).schema
+    else (dir, name)
   }
 
   /** Schema-adaptive streaming reader over the events feed at `dir`:
     * the single entry point every streaming module uses, returning the
     * canonical (`ts` µs timestamp, `ts_ns` nanos) shape regardless of
-    * the feed's physical encoding. */
-  def eventsStream(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
-      recursive: Boolean = false): DataFrame = {
-    val disk = eventsDiskSchema(spark, dir, glob, recursive)
-    val (path, g) = resolveFeed(spark, dir, glob)
+    * the feed's physical encoding. Streaming sources require an
+    * explicit schema; it comes from a footer-only read of the files
+    * themselves, which keeps the stream readers in the same encoding
+    * matrix as the batch loader. */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val (path, g) = resolveFeed(spark, dir, "events.parquet")
+    val disk = spark.read.option("pathGlobFilter", g).parquet(path).schema
     normalizeEvents(
       spark.readStream
         .schema(disk)
         .option("pathGlobFilter", g)
-        .option("recursiveFileLookup", recursive.toString)
         .parquet(path))
   }
 
   /** Streaming reader over the documents feed at `dir` — same feed
     * resolution as [[eventsStream]] (single file or Spark-written
     * directory), schema from a footer-only read. */
-  def docsStream(spark: SparkSession, dir: String,
-      glob: String = "documents.parquet"): DataFrame = {
-    val (path, g) = resolveFeed(spark, dir, glob)
+  def docsStream(spark: SparkSession, dir: String): DataFrame = {
+    val (path, g) = resolveFeed(spark, dir, "documents.parquet")
     val disk = spark.read.option("pathGlobFilter", g).parquet(path).schema
     spark.readStream
       .schema(disk)

@@ -48,7 +48,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def name(): String = catalogName
 
   def mount(table: String, path: String): Unit = tables.put(table, path)
-  def unmount(table: String): Unit = tables.remove(table)
 
   override def listTables(namespace: Array[String]): Array[Identifier] =
     tables.keys.toArray.sorted.map(Identifier.of(namespace, _))

@@ -26,8 +26,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 case class LogHistogramQuantile(
     child: Expression,
     percentages: Seq[Double],
-    weight: Expression =
-      org.apache.spark.sql.catalyst.expressions.Literal(1L),
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]] {
@@ -36,7 +34,7 @@ case class LogHistogramQuantile(
 
   require(percentages.nonEmpty && percentages.forall(p => p >= 0 && p <= 1))
 
-  override def children: Seq[Expression] = Seq(child, weight)
+  override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
@@ -46,11 +44,7 @@ case class LogHistogramQuantile(
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v != null) {
-      val w = weight.eval(input)
-      if (w != null)
-        buf(slot(v.asInstanceOf[Double])) += w.asInstanceOf[Long]
-    }
+    if (v != null) buf(slot(v.asInstanceOf[Double])) += 1L
     buf
   }
 
@@ -120,7 +114,7 @@ case class LogHistogramQuantile(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0), weight = newChildren(1))
+    copy(child = newChildren(0))
 }
 
 object LogHistogramQuantile {
@@ -142,13 +136,4 @@ object LogHistogramQuantile {
     GraftSqlBridge.column(
       LogHistogramQuantile(GraftSqlBridge.expression(c), percentages)
         .toAggregateExpression())
-
-  /** Weighted form: each row counts `w` times (w: LONG). Lets the
-    * sketch consume a counted distinct-value frame instead of raw rows,
-    * so one scan feeds both the sketch and its audit via ReusedExchange. */
-  def logHistQuantileW(c: Column, percentages: Seq[Double],
-      w: Column): Column =
-    GraftSqlBridge.column(
-      LogHistogramQuantile(GraftSqlBridge.expression(c), percentages,
-        GraftSqlBridge.expression(w)).toAggregateExpression())
 }

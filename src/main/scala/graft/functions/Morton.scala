@@ -84,10 +84,9 @@ object Morton {
     * prune on, so rank resolution only bounds CLUSTERING granularity,
     * never correctness. Degenerate ranges (min == max) map to 0.
     * Values OUTSIDE [min, max] clamp to the grid edge rather than
-    * wrapping — an incremental fold computes ranks against the grid
-    * recorded at layout-write time, and rows the corpus has since
-    * outgrown must cluster at the boundary (locally coarser layout),
-    * not teleport across the curve. */
+    * wrapping, so a row beyond the grid's range clusters at the
+    * boundary (locally coarser layout) instead of teleporting across
+    * the curve; a null value ranks 0, because `greatest` skips nulls. */
   def rank16(v: Column, min: Long, max: Long): Column = {
     val span = math.max(1L, max - min)
     least(greatest(

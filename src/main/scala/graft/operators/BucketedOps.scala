@@ -35,8 +35,7 @@ object BucketedOps {
   val BucketCount = 32
 
   /** Buckets for the minute rollup — far fewer distinct rows than the
-    * fact layouts (minutes × types), and [[LayoutMaintenance]] appends
-    * one file per touched bucket per delta fold. */
+    * fact layouts (minutes × types). */
   val RollupBuckets = 8
 
   private val memo = scala.collection.concurrent.TrieMap
@@ -125,6 +124,13 @@ object BucketedOps {
       tev
     })
 
+  /** Minute-grain partials of an events-shaped frame: the rows of the
+    * [[eventsMinuteRollup]] layout. */
+  private def minutePartials(events: DataFrame): DataFrame =
+    events
+      .groupBy(col("event_type"), date_trunc("minute", col("ts")).as("m"))
+      .agg(count(lit(1)).as("n"), sum("value").as("sv"))
+
   private val memoEvRollup = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), String]
 
@@ -149,9 +155,7 @@ object BucketedOps {
       val suf = s"${ProcessHandle.current.pid}_" +
         d.replaceAll("[^a-zA-Z0-9]", "_")
       val tevr = s"bk_evr_$suf"
-      // projection shared with the O(delta) CDC fold (LayoutMaintenance)
-      writeBucketed(
-        LayoutMaintenance.minutePartials(t(s, d, "events")),
+      writeBucketed(minutePartials(t(s, d, "events")),
         tevr, Seq("event_type"), buckets = RollupBuckets,
         sortCols = Seq("event_type", "m"))
       sys.addShutdownHook {
@@ -160,6 +164,15 @@ object BucketedOps {
       }
       tevr
     })
+
+  /** Token-manifest rows of a documents-shaped frame: the rows of the
+    * [[docsTokens]] layout. */
+  private def manifestRows(docs: DataFrame): DataFrame =
+    docs
+      .filter(col("lang").isNotNull)
+      .select(col("doc_id"), col("lang"),
+        graft.functions.TokenCount.tokenCount(col("text")).as("tok"))
+      .withColumn("b", floor(col("doc_id") / 8192L))
 
   private val memoDocsTok = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), String]
@@ -182,9 +195,7 @@ object BucketedOps {
       val suf = s"${ProcessHandle.current.pid}_" +
         d.replaceAll("[^a-zA-Z0-9]", "_")
       val tdoc = s"bk_dt_$suf"
-      // projection shared with the O(delta) CDC fold (LayoutMaintenance)
-      writeBucketed(
-        LayoutMaintenance.manifestRows(t(s, d, "documents")),
+      writeBucketed(manifestRows(t(s, d, "documents")),
         tdoc, Seq("lang", "b"), sortCols = Seq("lang", "b", "doc_id"))
       sys.addShutdownHook {
         try s.sql(s"DROP TABLE IF EXISTS $tdoc")
@@ -450,11 +461,7 @@ object BucketedOps {
            |FROM events GROUP BY 1, 2""".stripMargin),
     (s, d) => s.table(eventsMinuteRollup(s, d))
       .groupBy(col("event_type"), date_trunc("hour", col("m")).as("h"))
-      .agg(sum("n").as("n"), round(sum("sv"), 2).as("sum_v"))
-      // no-op on a freshly-written rollup; on a fold-maintained one
-      // (LayoutMaintenance) it drops hours whose events were all
-      // deleted — signed partials net such groups to count 0
-      .filter(col("n") =!= 0))
+      .agg(sum("n").as("n"), round(sum("sv"), 2).as("sum_v")))
 
   /** Warm hook for Bench: ALL event-log layouts (user-bucketed,
     * minute rollup, Z-order, time-sorted) in ONE maintenance pass with
@@ -525,15 +532,9 @@ object BucketedOps {
     * written file covers a disjoint `sortCol` range. Timestamps go out
     * as TIMESTAMP_MICROS — INT96 (a Spark default elsewhere) carries no
     * parquet min/max stats and would silently disable the pruning this
-    * layout exists for. With `append = true` the new files extend the
-    * table instead: their ranges may overlap the existing files', but
-    * skipping is ROW-GROUP stats, not file metadata, so pruning
-    * degrades only as far as the delta's own spread —
-    * [[LayoutMaintenance.compactSortedLayout]] restores the
-    * disjoint-range invariant. */
+    * layout exists for. */
   private[graft] def writeSorted(df: DataFrame, name: String,
-      sortCol: org.apache.spark.sql.Column, files: Int,
-      append: Boolean = false): Unit = {
+      sortCol: org.apache.spark.sql.Column, files: Int): Unit = {
     // rows within a file are sorted, so each ROW GROUP covers a
     // contiguous sort-key range too — 4 MB groups keep the pruning
     // unit fine-grained even when decade-tier files grow past it
@@ -541,7 +542,7 @@ object BucketedOps {
     NamedQuery.withConf(df.sparkSession, MicrosTimestamps) {
       df.repartitionByRange(files, sortCol)
         .sortWithinPartitions(sortCol)
-        .write.mode(if (append) "append" else "overwrite")
+        .write.mode("overwrite")
         .option("parquet.block.size", (4L << 20).toString)
         .saveAsTable(name)
     }
@@ -558,19 +559,35 @@ object BucketedOps {
     * that measured 1.41 → 1.24 s but was refused on collision risk).
     *
     * Mechanism: for every target partition p a salt long s_p is
-    * precomputed on the driver with pmod(murmur3(s_p), cells) == p
-    * (murmur3 seed 42 — the HashPartitioning contract), and the plan
-    * repartitions on the salt looked up by cell id: every row of cell
-    * p lands in partition p, bijectively, no sampler, no collisions. */
+    * chosen on the driver so that the shuffle's own partition-id
+    * expression (`HashPartitioning.partitionIdExpression`, the one
+    * `repartition(cells, …)` evaluates per row) maps s_p to p, and the
+    * plan repartitions on the salt looked up by cell id: every row of
+    * cell p lands in partition p, bijectively, no sampler, no
+    * collisions. The search evaluates that expression, not a copy of
+    * its hash, so a change of Spark's hash function or seed moves the
+    * salts with it. For 256 cells it takes ~1.5k evaluations and no job.
+    *
+    * A null `cell` looks up a null salt, and HashPartitioning sends a
+    * null key to the partition of the hash seed alone (pmod(42, cells)
+    * in Spark 4.1), which it shares with a real cell. The Z layout's
+    * cells are never null: [[graft.functions.Morton.rank16]] maps a
+    * null coordinate to rank 0, because `greatest` skips nulls. */
   private[graft] def repartitionDirected(df: DataFrame, cells: Int,
       cell: org.apache.spark.sql.Column): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.types.LongType
+    val partitionId = HashPartitioning(
+      Seq(BoundReference(0, LongType, nullable = false)), cells)
+      .partitionIdExpression
     val salts = new Array[Long](cells)
     val found = new Array[Boolean](cells)
     var remaining = cells
     var v = 0L
     while (remaining > 0) {
-      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(v, 42)
-      val p = ((h % cells) + cells) % cells
+      val p = partitionId.eval(InternalRow(v)).asInstanceOf[Int]
       if (!found(p)) { found(p) = true; salts(p) = v; remaining -= 1 }
       v += 1
     }
@@ -596,45 +613,28 @@ object BucketedOps {
     }
   }
 
-  /** The Z-rank grid a Z-ordered layout was written against, persisted
-    * as table properties so an incremental fold ([[LayoutMaintenance]])
-    * can place delta rows on the SAME curve — z-values are only
-    * comparable within one grid. */
+  /** The rank grid of a Z-ordered layout: the (user_id, ts) ranges its
+    * 16-bit ranks scale over. */
   private[graft] case class ZBounds(minU: Long, maxU: Long,
       minT: Long, maxT: Long)
-
-  private[graft] def zBoundsOf(s: SparkSession, name: String): ZBounds = {
-    val p = s.sql(s"SHOW TBLPROPERTIES $name").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    def b(k: String): Long = p.getOrElse(s"graft.z.$k",
-      throw new IllegalStateException(
-        s"$name carries no graft.z.$k bound — not a Z-order layout")).toLong
-    ZBounds(b("minU"), b("maxU"), b("minT"), b("maxT"))
-  }
 
   private[graft] def zOf(b: ZBounds): org.apache.spark.sql.Column =
     graft.functions.Morton.zValue(
       graft.functions.Morton.rank16(col("user_id"), b.minU, b.maxU),
       graft.functions.Morton.rank16(expr("unix_micros(ts)"), b.minT, b.maxT))
 
-  /** Write an events projection as the Z-ordered layout `name` and
-    * stamp the rank grid on the table. `grid` pins the bounds
-    * explicitly (a re-layout that must stay fold-compatible with an
-    * existing grid); otherwise they come from one 1-row stats
-    * aggregate over `ev`. Returns the grid used. */
-  private[graft] def writeZOrder(ev: DataFrame, name: String,
-      grid: Option[ZBounds] = None): ZBounds = {
-    val s = ev.sparkSession
-    val b = grid.getOrElse {
-      val r = ev.agg(min("user_id"), max("user_id"),
-        expr("unix_micros(min(ts))"), expr("unix_micros(max(ts))")).head
-      // null aggregates (empty input) degrade to the degenerate grid
-      // rather than NPE — rank16 maps everything to 0 and the layout
-      // is a valid empty/constant-cell table
-      def l(i: Int) = Option(r.get(i))
-        .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-      ZBounds(l(0), l(1), l(2), l(3))
-    }
+  /** Write an events projection as the Z-ordered layout `name`. The
+    * rank grid comes from one 1-row stats aggregate over `ev`. Returns
+    * the grid used. */
+  private[graft] def writeZOrder(ev: DataFrame, name: String): ZBounds = {
+    val r = ev.agg(min("user_id"), max("user_id"),
+      expr("unix_micros(min(ts))"), expr("unix_micros(max(ts))")).head
+    // null aggregates (empty input) degrade to the degenerate grid
+    // rather than NPE — rank16 maps everything to 0 and the layout
+    // is a valid empty/constant-cell table
+    def l(i: Int) = Option(r.get(i))
+      .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
+    val b = ZBounds(l(0), l(1), l(2), l(3))
     // fixed Morton grid: the file id is the top 8 bits of the 32-bit
     // z-value (a 16×16 rectangle of the rank plane per file), so the
     // write needs no range sampler — [[writeSortedDirected]]. Ranks
@@ -644,9 +644,6 @@ object BucketedOps {
     writeSortedDirected(ev.withColumn("z", zOf(b)), name, col("z"),
       shiftright(col("z"), 32 - Integer.numberOfTrailingZeros(clusterFiles)),
       clusterFiles)
-    s.sql(s"ALTER TABLE $name SET TBLPROPERTIES (" +
-      s"'graft.z.minU'='${b.minU}','graft.z.maxU'='${b.maxU}'," +
-      s"'graft.z.minT'='${b.minT}','graft.z.maxT'='${b.maxT}')")
     b
   }
 

@@ -132,29 +132,6 @@ object CurationOps {
       .orderBy("lang", "shard")
   }
 
-  /** Stage-prefix plans of [[packShards]] for stage-accounted benching
-    * (BENCH_NOTES q97 floor analysis): tokenize-scan alone, + offsets
-    * frame, + the cum window, then the full query is the basket entry.
-    * Each prefix is a runnable plan; successive deltas attribute the
-    * wall time to (scan, offsets shuffle, window shuffle, final agg). */
-  private[graft] def packShardsStages(
-      docs: org.apache.spark.sql.DataFrame)
-      : Seq[(String, org.apache.spark.sql.DataFrame)] = {
-    val b = docs.filter(col("lang").isNotNull)
-      .withColumn("b", floor(col("doc_id") / 8192L))
-      .filter(col("b").isNotNull)
-      .repartition(col("lang"), col("b"))
-    val wIn = Window.partitionBy("lang", "b").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cumIn = b.withColumn("cum_in", sum("tok").over(wIn))
-    val wBuck = Window.partitionBy("lang").orderBy("b")
-    val offsets = cumIn.groupBy("lang", "b").agg(max("cum_in").as("bt"))
-      .withColumn("off", sum("bt").over(wBuck) - col("bt"))
-      .drop("bt")
-    Seq("s1_tokenize" -> docs, "s2_shuffle" -> b,
-      "s3_cum_window" -> cumIn, "s4_offsets" -> offsets)
-  }
-
   /** Token-budget shard packing: within each language, documents are
     * packed in doc_id order into shards of ≤ 2k whitespace tokens by a
     * running sum — the streaming shard assignment a training-data

@@ -72,7 +72,7 @@ object DmlOps {
       engine.table(name)
     })
 
-  /** Join-form UPDATE end-to-end ([[graft.EngineDml.updateFrom]]):
+  /** Join-form UPDATE end-to-end ([[graft.EngineDml.updateFromCore]]):
     * register a lineitem slice and a high-price orders slice as managed
     * tables, run `UPDATE … SET … FROM src WHERE …` where one SET
     * expression reads a SOURCE column, and return the target. The
@@ -114,7 +114,7 @@ object DmlOps {
       engine.table(name)
     })
 
-  /** Join-form DELETE end-to-end ([[graft.EngineDml.deleteUsing]]):
+  /** Join-form DELETE end-to-end ([[graft.EngineDml.deleteUsingCore]]):
     * `DELETE FROM t USING src WHERE …` removes target rows with a TRUE
     * join match — one anti-join, copy-on-write. The oracle expresses
     * the final state as a NOT-EXISTS filter over the base tables, so
@@ -143,7 +143,7 @@ object DmlOps {
       engine.table(name)
     })
 
-  /** Upsert end-to-end ([[graft.EngineDml.insertOnConflict]]):
+  /** Upsert end-to-end ([[graft.EngineDml.insertOnConflictCore]]):
     * `INSERT … ON CONFLICT (key) DO UPDATE SET … ` over a managed
     * orders slice, with one SET expression reading the incoming row
     * through the standard `excluded` alias. The source holds existing

@@ -285,9 +285,7 @@ object SimilarityOps extends SimilarityPq {
     * shows occupancy sd 5.1 (strided) vs 4.8 (k-means++) with probe
     * scan parity (669 vs 671 of 2000), and the k-means++ arm measured
     * q171 consistently ~0.13 s WORSE (different cell boundaries move
-    * the dedup groups) with q189 a wash — so the strided init stays,
-    * and the k-means++ path remains available in [[parallelKMeans]]
-    * for the probe's A/B. */
+    * the dedup groups) with q189 a wash — so the strided init stays. */
   def ivfCentroids(s: SparkSession, e: DataFrame, nlist: Int,
       sampleCap: Int = 65536): DataFrame = {
     val spark = s
@@ -313,23 +311,16 @@ object SimilarityOps extends SimilarityPq {
   }
 
   /** Deterministic multi-threaded Lloyd over a metadata-sized sample:
-    * seeded k-means++ init (D² sampling — each next center drawn with
-    * probability proportional to squared distance from the chosen set;
-    * deterministic given the sorted sample and the fixed seed), point
-    * assignment parallelized over FIXED index chunks, per-chunk partial
-    * sums folded sequentially in chunk order — bit-reproducible for any
-    * thread count. Empty clusters keep their center (the
+    * centers start evenly strided over the sorted sample, point
+    * assignment is parallelized over FIXED index chunks, and per-chunk
+    * partial sums fold sequentially in chunk order — bit-reproducible
+    * for any thread count. Empty clusters keep their center (the
     * [[SimilarityPq.localKMeans]] convention, which this generalizes
     * with a thread pool because the coarse quantizer's k·sample·dim is
-    * ~100× the codebooks'). The default init is evenly-strided over
-    * the sorted sample; `stridedInit = false` switches to a seeded
-    * deterministic k-means++ (D² sampling, one extra
-    * Lloyd-iteration-equivalent) — kept for the Q189Probe occupancy
-    * A/B, which REFUTED the r18-verdict skew hypothesis (occupancy and
-    * probe-scan parity at sf0.1; q171 measured ~0.13 s worse under
-    * k-means++), so strided remains the production init. */
+    * ~100× the codebooks'). Why strided and not k-means++: see
+    * [[ivfCentroids]]. */
   private[graft] def parallelKMeans(data: Array[Array[Double]], k: Int,
-      iters: Int, stridedInit: Boolean = true): Array[Array[Double]] = {
+      iters: Int): Array[Array[Double]] = {
     val n = data.length
     require(n > 0 && k > 0, s"parallelKMeans on n=$n k=$k")
     val dim = data(0).length
@@ -337,64 +328,9 @@ object SimilarityOps extends SimilarityPq {
     val bounds = Array.tabulate(nChunks + 1)(c => ((c.toLong * n) / nChunks).toInt)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, Runtime.getRuntime.availableProcessors - 1))
-    def seedPlusPlus(): Array[Array[Double]] = {
-      val rnd = new java.util.Random(9781L)
-      val out = new Array[Array[Double]](k)
-      out(0) = data(rnd.nextInt(n)).clone()
-      val minD2 = new Array[Double](n)
-      java.util.Arrays.fill(minD2, Double.MaxValue)
-      var c = 0
-      while (c < k - 1) {
-        val cent = out(c)
-        // parallel element-wise min-distance update: each chunk owns a
-        // disjoint index range, so the result is thread-count-invariant
-        val tasks = (0 until nChunks).map { ch =>
-          pool.submit(new java.util.concurrent.Callable[Double] {
-            def call(): Double = {
-              var sum = 0.0
-              var p = bounds(ch)
-              while (p < bounds(ch + 1)) {
-                val v = data(p)
-                var dsq = 0.0; var i = 0
-                while (i < dim) {
-                  val df = v(i) - cent(i); dsq += df * df; i += 1
-                }
-                if (dsq < minD2(p)) minD2(p) = dsq
-                sum += minD2(p)
-                p += 1
-              }
-              sum
-            }
-          })
-        }
-        // fold chunk partials in chunk order: deterministic total
-        var total = 0.0
-        tasks.foreach(t => total += t.get())
-        if (total <= 0.0) {
-          // all remaining points coincide with chosen centers —
-          // duplicate-center fallback (empty clusters keep centers)
-          out(c + 1) = out(0).clone()
-        } else {
-          var r = rnd.nextDouble() * total
-          var pick = -1
-          var p = 0
-          while (pick < 0 && p < n) {
-            r -= minD2(p)
-            if (r <= 0.0) pick = p
-            p += 1
-          }
-          if (pick < 0) pick = n - 1
-          out(c + 1) = data(pick).clone()
-        }
-        c += 1
-      }
-      out
-    }
     try {
       val cents =
-        if (stridedInit)
-          Array.tabulate(k)(i => data(((i.toLong * n) / k).toInt).clone())
-        else seedPlusPlus()
+        Array.tabulate(k)(i => data(((i.toLong * n) / k).toInt).clone())
       var it = 0
       while (it < iters) {
         val tasks = (0 until nChunks).map { c =>

@@ -43,9 +43,9 @@ private[graft] object StreamSinks {
   }
 
   /** State-store provider for the keyed-per-entity streams (q109 dedup:
-    * one state row per event_id inside the watermark; sessionization:
-    * one per user; LSH buckets: one per (band, hash)). The default
-    * HDFS-backed provider keeps every key ON-HEAP in the executor JVM —
+    * one state row per event_id inside the watermark; LSH buckets: one
+    * per (band, hash)). The default HDFS-backed provider keeps every
+    * key ON-HEAP in the executor JVM —
     * measured at sf10 (≈60 M live event_ids inside the 2 h watermark)
     * q109 OOMs the default 8 GB local heap and needs 24 GB. RocksDB
     * (`spark.sql.streaming.stateStore.providerClass`, public Spark
@@ -57,7 +57,7 @@ private[graft] object StreamSinks {
       "RocksDBStateStoreProvider"
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  // write-path tuning for write-dominated keyed state (dedup/session):
+  // write-path tuning for write-dominated keyed state (dedup):
   //  - trackTotalNumberOfRows=false: every put on a tracked store pays
   //    a get to maintain the row-count metric (numRowsTotal reads -1 in
   //    progress metrics — a metrics trade, not a semantics one;

@@ -5,8 +5,8 @@ package graft.tools
   * default 32) and Bench's timed run ([[graft.Bench.runQuery]]):
   * `runMain graft.tools.RunQ <sfDir> <query>...` with
   * SPARK_GRAFT_REPEATS repeats (default 3), medians printed.
-  * Shared corpus stages (shingle index) warm untimed first, like
-  * Bench. */
+  * A query's shared stage (shingle index, layouts, serving indexes)
+  * warms untimed before every repeat, like Bench. */
 object RunQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
@@ -27,10 +27,14 @@ object RunQ {
       }
       once(name, "/root/testdata/sf0.001") // codegen warmup
       val ts = (1 to reps).map { _ =>
-        val t = once(name, sfDir)
-        spark.catalog.clearCache()
+        // warm the stage (untimed) BEFORE each repeat: the codegen
+        // warmup re-points a serving artifact, which remembers one
+        // corpus dir, to sf0.001, and clearCache drops what a repeat
+        // cached
         graft.SparkEntry.benchSharedStages.get(name)
           .foreach { case (_, warm) => warm(spark, sfDir) }
+        val t = once(name, sfDir)
+        spark.catalog.clearCache()
         t
       }.sorted
       println(f"[runq] $name%-28s med ${ts(ts.size / 2)}%8.2f " +

@@ -1569,283 +1569,6 @@ class EngineSpec extends SparkSpec {
     engine.unregisterTable("ev_asof")
   }
 
-  // ---- incremental layout maintenance from the CDC feed ----------------
-  // VERDICT r10 item 2: the bucketed layouts are rewrite-per-snapshot;
-  // a production pipeline maintains them O(delta) from table_changes.
-  // LAW: mutate base → incremental fold ≡ full rewrite from the current
-  // snapshot (content-identical), with touched-row count O(delta).
-
-  private def rollupRows(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map { r =>
-      (String.valueOf(r.getAs[String]("event_type")),
-        String.valueOf(r.getAs[java.sql.Timestamp]("m")),
-        r.getAs[Long]("n"),
-        // sum order differs between partial-fold and direct aggregation;
-        // compare at fixed precision like every float oracle row does
-        math.round(r.getAs[Double]("sv") * 1e6))
-    }.sortBy(t => (t._1, t._2))
-
-  test("layout maintenance LAW: minute-rollup CDC fold (insert + delete " +
-    "commits) is content-identical to a full rewrite, touching O(delta)") {
-    import graft.operators.{BucketedOps, LayoutMaintenance}
-    val events = graft.Tables.t(spark, sf, "events")
-    val t = s"lay_ev_${System.nanoTime()}"
-    val layInc = s"lay_inc_${System.nanoTime()}"
-    val layFull = s"lay_full_${System.nanoTime()}"
-    // base snapshot = all but 40 events; the held-out 40 arrive as a
-    // delta commit, then 25 early events are deleted (a retention purge)
-    engine.registerTable(t, events.filter(col("event_id") >= 40))
-    BucketedOps.writeBucketed(
-      LayoutMaintenance.minutePartials(engine.table(t)), layInc,
-      Seq("event_type"), buckets = BucketedOps.RollupBuckets,
-      sortCols = Seq("event_type", "m"))
-    val basePartials = spark.table(layInc).count()
-    engine.insertInto(t, events.filter(col("event_id") < 40))   // v1
-    engine.deleteFrom(t, col("event_id") < 25)                  // v2
-    val feed = engine.tableChanges(t, 0)
-    val feedRows = feed.count()
-    val touched = LayoutMaintenance.foldMinuteDelta(feed, layInc)
-    // O(delta): each change row lands in at most one partial per step
-    assert(touched <= feedRows && feedRows <= 40 + 25)
-    assert(touched < basePartials,
-      s"fold touched $touched rows vs $basePartials base partials")
-    BucketedOps.writeBucketed(
-      LayoutMaintenance.minutePartials(engine.table(t)), layFull,
-      Seq("event_type"), buckets = BucketedOps.RollupBuckets,
-      sortCols = Seq("event_type", "m"))
-    val inc = rollupRows(LayoutMaintenance.canonicalRollup(spark, layInc))
-    val full = rollupRows(spark.table(layFull))
-    assert(inc.nonEmpty && inc.sameElements(full))
-    // OPTIMIZE: compaction restores canonical content AND the
-    // one-file-per-bucket invariant the sort-metadata plans rely on
-    LayoutMaintenance.compactMinuteRollup(spark, layInc)
-    assert(rollupRows(spark.table(layInc)).sameElements(full))
-    val dataFiles = new java.io.File(s"spark-warehouse/$layInc")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(dataFiles <= BucketedOps.RollupBuckets,
-      s"compaction left $dataFiles files for ${BucketedOps.RollupBuckets} buckets")
-    Seq(layInc, layFull).foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    engine.unregisterTable(t)
-  }
-
-  test("layout maintenance LAW: per-commit folds COMPOSE — folding each " +
-    "commit's feed as it lands ≡ one fold of the whole range ≡ rewrite") {
-    import graft.operators.{BucketedOps, LayoutMaintenance}
-    val events = graft.Tables.t(spark, sf, "events")
-    val t = s"lay_seq_${System.nanoTime()}"
-    val layInc = s"lay_seq_inc_${System.nanoTime()}"
-    val layFull = s"lay_seq_full_${System.nanoTime()}"
-    engine.registerTable(t, events.filter(col("event_id") >= 60))
-    BucketedOps.writeBucketed(
-      LayoutMaintenance.minutePartials(engine.table(t)), layInc,
-      Seq("event_type"), buckets = BucketedOps.RollupBuckets,
-      sortCols = Seq("event_type", "m"))
-    engine.insertInto(t, events.filter(col("event_id") < 30))            // v1
-    engine.deleteFrom(t, col("event_id").between(10, 19))                // v2
-    engine.insertInto(t,
-      events.filter(col("event_id") >= 30 && col("event_id") < 60))     // v3
-    // the ingest cadence: one fold per landed commit, not one per range
-    (0L until 3L).foreach { v =>
-      LayoutMaintenance.foldMinuteDelta(
-        engine.tableChanges(t, v, v + 1), layInc)
-    }
-    BucketedOps.writeBucketed(
-      LayoutMaintenance.minutePartials(engine.table(t)), layFull,
-      Seq("event_type"), buckets = BucketedOps.RollupBuckets,
-      sortCols = Seq("event_type", "m"))
-    val inc = rollupRows(LayoutMaintenance.canonicalRollup(spark, layInc))
-    val full = rollupRows(spark.table(layFull))
-    assert(inc.nonEmpty && inc.sameElements(full))
-    Seq(layInc, layFull).foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    engine.unregisterTable(t)
-  }
-
-  test("layout maintenance LAW: event-log INSERT fold ≡ rewrite; the " +
-    "multi-file plan stays exchange-free; compaction restores zero-sort") {
-    import graft.operators.{BucketedOps, LayoutMaintenance}
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val events = graft.Tables.t(spark, sf, "events")
-    val t = s"lay_evlog_${System.nanoTime()}"
-    val eInc = s"evlog_inc_${System.nanoTime()}"
-    val eFull = s"evlog_full_${System.nanoTime()}"
-    engine.registerTable(t, events.filter(col("event_id") % 4 =!= 0))
-    BucketedOps.writeBucketed(engine.table(t), eInc, Seq("user_id"),
-      sortCols = Seq("user_id", "ts"))
-    engine.insertInto(t, events.filter(col("event_id") % 4 === 0))  // v1
-    val deltaN = events.filter(col("event_id") % 4 === 0).count()
-    val touched =
-      LayoutMaintenance.foldEventsDelta(engine.tableChanges(t, 0), eInc)
-    assert(touched == deltaN && touched > 0)
-    BucketedOps.writeBucketed(engine.table(t), eFull, Seq("user_id"),
-      sortCols = Seq("user_id", "ts"))
-    def rows(n: String) = spark.table(n)
-      .select("event_id").collect().map(_.getLong(0)).sorted
-    assert(rows(eInc).nonEmpty && rows(eInc).sameElements(rows(eFull)))
-    // plan law on the sessionization shape (q161's window): run it over
-    // the layout and walk the executed plan
-    def deep(p: SparkPlan): Seq[SparkPlan] = p.collect {
-      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-      case q: QueryStageExec => deep(q.plan)
-      case other => Seq(other)
-    }.flatten
-    // (the session's own bucket sort trust: GraftSession sets it)
-    def windowNodes(n: String): Seq[SparkPlan] =
-      graft.operators.NamedQuery.withConf(spark, Map(
-        "spark.sql.adaptive.enabled" -> "false")) {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy("ts")
-        val df = spark.table(n)
-          .withColumn("rn", row_number().over(w))
-          .groupBy("user_id").agg(max("rn").as("n_events"))
-        df.collect()
-        deep(org.apache.spark.sql.classic.ClassicConversions
-          .castToImpl(df).queryExecution.executedPlan)
-      }
-    // with a second file per bucket: clustering survives (no exchange),
-    // sort metadata is rightly DISTRUSTED (a sort comes back)
-    val degraded = windowNodes(eInc)
-    assert(!degraded.exists(_.isInstanceOf[ShuffleExchangeExec]),
-      "multi-file buckets must keep the zero-exchange clustering")
-    assert(degraded.exists(_.isInstanceOf[SortExec]),
-      "multi-file buckets must NOT be trusted for sort order")
-    // compaction restores the one-file-per-bucket zero-sort plan
-    LayoutMaintenance.compactEventsByUser(spark, eInc)
-    assert(rows(eInc).sameElements(rows(eFull)))
-    val restored = windowNodes(eInc)
-    assert(!restored.exists(_.isInstanceOf[ShuffleExchangeExec]) &&
-      !restored.exists(_.isInstanceOf[SortExec]),
-      "compaction must restore the zero-exchange zero-sort plan")
-    // a purge step has no O(delta) per-row fold: fail loudly
-    engine.deleteFrom(t, col("event_id") === 1)                     // v2
-    val ex = intercept[IllegalStateException](
-      LayoutMaintenance.foldEventsDelta(engine.tableChanges(t, 1), eInc))
-    assert(ex.getMessage.contains("INSERT deltas only"))
-    Seq(eInc, eFull).foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    engine.unregisterTable(t)
-  }
-
-  test("layout maintenance LAW: token-manifest INSERT fold ≡ rewrite; " +
-    "a delta with deletes raises instead of corrupting") {
-    import graft.operators.{BucketedOps, LayoutMaintenance}
-    val docs = graft.Tables.t(spark, sf, "documents")
-      .select("doc_id", "text", "lang", "source", "n_chars")
-    val t = s"lay_doc_${System.nanoTime()}"
-    val mInc = s"man_inc_${System.nanoTime()}"
-    val mFull = s"man_full_${System.nanoTime()}"
-    engine.registerTable(t, docs.filter(col("doc_id") % 5 =!= 0))
-    BucketedOps.writeBucketed(
-      LayoutMaintenance.manifestRows(engine.table(t)), mInc,
-      Seq("lang", "b"), sortCols = Seq("lang", "b", "doc_id"))
-    engine.insertInto(t, docs.filter(col("doc_id") % 5 === 0))  // v1
-    val touched = LayoutMaintenance.foldManifestDelta(
-      engine.tableChanges(t, 0), mInc)
-    val deltaManifest = LayoutMaintenance
-      .manifestRows(docs.filter(col("doc_id") % 5 === 0)).count()
-    assert(touched == deltaManifest && touched > 0)
-    BucketedOps.writeBucketed(
-      LayoutMaintenance.manifestRows(engine.table(t)), mFull,
-      Seq("lang", "b"), sortCols = Seq("lang", "b", "doc_id"))
-    def rows(n: String) = spark.table(n).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .sortBy(x => (x._1, x._2))
-    assert(rows(mInc).nonEmpty && rows(mInc).sameElements(rows(mFull)))
-    // a delete step has no O(delta) per-row fold: fail loudly
-    engine.deleteFrom(t, col("doc_id") === 10)                  // v2
-    val ex = intercept[IllegalStateException](
-      LayoutMaintenance.foldManifestDelta(engine.tableChanges(t, 1), mInc))
-    assert(ex.getMessage.contains("INSERT deltas only"))
-    // compaction restores the single-file-per-bucket invariant — check
-    // the FILES, not just content (the autoBucketedScan elision bug
-    // left multi-file buckets here with content intact, r11)
-    LayoutMaintenance.compactTokenManifest(spark, mInc)
-    assert(rows(mInc).sameElements(rows(mFull)))
-    val manFiles = new java.io.File(s"spark-warehouse/$mInc")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(manFiles <= BucketedOps.BucketCount,
-      s"manifest compaction left $manFiles files for " +
-        s"${BucketedOps.BucketCount} buckets")
-    Seq(mInc, mFull).foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    engine.unregisterTable(t)
-  }
-
-  test("layout maintenance LAW: sort-clustered INSERT folds (Z-order + " +
-    "time-sorted) ≡ rewrite on the recorded grid; appended generations " +
-    "keep row-group skipping; compaction restores the disjoint ranges") {
-    import graft.operators.{BucketedOps, LayoutMaintenance}
-    import org.apache.spark.sql.DataFrame
-    // sf0.01 (10k events) like ZOrderSpec: at 1k rows file-boundary
-    // quantization would drown the skipping ratios the law pins
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    val ev = graft.Tables.t(spark, "/root/testdata/sf0.01", "events")
-      .select(cols.map(col): _*)
-    val t = s"lay_sorted_${System.nanoTime()}"
-    val zInc = s"zlay_inc_${System.nanoTime()}"
-    val zFull = s"zlay_full_${System.nanoTime()}"
-    val tlInc = s"tlay_inc_${System.nanoTime()}"
-    val tlFull = s"tlay_full_${System.nanoTime()}"
-    engine.registerTable(t, ev.filter(col("event_id") % 4 =!= 0))
-    def snap: DataFrame = engine.table(t).select(cols.map(col): _*)
-    val grid = BucketedOps.writeZOrder(snap, zInc)
-    BucketedOps.writeSorted(snap, tlInc, col("ts"), BucketedOps.clusterFiles)
-    engine.insertInto(t, ev.filter(col("event_id") % 4 === 0))      // v1
-    val deltaN = ev.filter(col("event_id") % 4 === 0).count()
-    val touchedZ =
-      LayoutMaintenance.foldZOrderDelta(engine.tableChanges(t, 0), zInc)
-    val touchedT =
-      LayoutMaintenance.foldTimeSortedDelta(engine.tableChanges(t, 0), tlInc)
-    assert(touchedZ == deltaN && touchedT == deltaN && deltaN > 0)
-    // rewrite pinned to the SAME grid ⇒ content identity INCLUDES the
-    // z column (z-values are grid-relative; the fold reused the
-    // table's recorded grid, so the rewrite must too)
-    BucketedOps.writeZOrder(snap, zFull, grid = Some(grid))
-    BucketedOps.writeSorted(snap, tlFull, col("ts"), BucketedOps.clusterFiles)
-    def rows(n: String) = spark.table(n).collect()
-      .map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    assert(rows(zInc).nonEmpty && rows(zInc).sameElements(rows(zFull)))
-    assert(rows(tlInc).sameElements(rows(tlFull)))
-    // skipping through the fold (scanRows from SparkSpec): the delta
-    // generation appended as ONE file whose row group spans the whole
-    // plane, so a 2-D box reads at most (pruned base + whole delta) —
-    // never the whole table
-    val w = (grid.maxU + 1L) / 8L
-    def box(n: String) = spark.table(n)
-      .filter(col("user_id") >= lit(2L * w) && col("user_id") < lit(3L * w)
-        && col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp")
-        && col("ts") < lit("2024-01-13 00:00:00").cast("timestamp"))
-      .groupBy("event_type").agg(count(lit(1)).as("n"))
-    val total = spark.table(zInc).count()
-    val foldedRead = scanRows(box(zInc))
-    assert(foldedRead <= deltaN + total / 4,
-      s"folded Z layout read $foldedRead of $total rows — the base " +
-        "generation's row groups stopped pruning")
-    // compaction re-sorts the generations into disjoint ranges: the
-    // ZOrderSpec quarter-law bound applies again, and the grid
-    // properties survive the swap so later folds stay on the curve
-    LayoutMaintenance.compactSortedLayout(spark, zInc, "z")
-    assert(rows(zInc).sameElements(rows(zFull)))
-    assert(BucketedOps.zBoundsOf(spark, zInc) == grid,
-      "compaction dropped the recorded Z grid")
-    val compactRead = scanRows(box(zInc))
-    assert(compactRead * 4 <= total,
-      s"compacted Z layout read $compactRead of $total rows for a " +
-        "~1.2% box")
-    // a purge has no O(delta) per-row fold on either layout: fail loudly
-    engine.deleteFrom(t, col("event_id") === 1)                     // v2
-    Seq(
-      () => LayoutMaintenance.foldZOrderDelta(engine.tableChanges(t, 1), zInc),
-      () => LayoutMaintenance.foldTimeSortedDelta(
-        engine.tableChanges(t, 1), tlInc)
-    ).foreach { f =>
-      val ex = intercept[IllegalStateException](f())
-      assert(ex.getMessage.contains("INSERT deltas only"))
-    }
-    Seq(zInc, zFull, tlInc, tlFull)
-      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    engine.unregisterTable(t)
-  }
-
   test("persisted BPE tokenizer: train once, encode many, merges frozen") {
     import org.apache.spark.sql.functions.{col, sum => fsum}
     val t = s"bpe_docs_${System.nanoTime()}"

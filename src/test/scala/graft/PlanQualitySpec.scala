@@ -485,6 +485,16 @@ class PlanQualitySpec extends SparkSpec {
       case _ => false
     }, "q163 sorted the corpus: the manifest's (lang, b, doc_id) sort " +
       "metadata must satisfy the window ordering")
+    // the manifest write lands one file per bucket
+    val files = nodes.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths
+            .exists(_.toString.contains("bk_dt_")) =>
+        f.relation.location.inputFiles.toSeq
+    }.flatten.distinct.length
+    assert(files > 0 && files <= graft.operators.BucketedOps.BucketCount,
+      s"manifest holds $files files for " +
+        s"${graft.operators.BucketedOps.BucketCount} buckets")
     val q97 = SparkEntry.queries("q97_shard_packing")(spark, sf)
     assert(q163.exceptAll(q97).count() == 0 &&
       q97.exceptAll(q163).count() == 0,
@@ -510,6 +520,14 @@ class PlanQualitySpec extends SparkSpec {
     }
     assert(scanned.nonEmpty && scanned.forall(_.contains("bk_evr_")),
       s"q164 read outside the rollup artifact: $scanned")
+    // the rollup write lands one file per bucket
+    val files = nodes.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.inputFiles.toSeq
+    }.flatten.distinct.length
+    assert(files > 0 && files <= graft.operators.BucketedOps.RollupBuckets,
+      s"rollup holds $files files for " +
+        s"${graft.operators.BucketedOps.RollupBuckets} buckets")
     val q30 = SparkEntry.queries("q30_events_hourly")(spark, sf)
     assert(q164.exceptAll(q30).count() == 0 &&
       q30.exceptAll(q164).count() == 0,

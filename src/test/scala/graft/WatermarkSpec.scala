@@ -78,37 +78,4 @@ class WatermarkSpec extends SparkSpec {
     assert(r.getLong(0) == 3L, s"expected 3 unique events, got $r")
     assert(r.getDouble(1) == 23.0, s"retry payload leaked into sum: $r")
   }
-
-  test("stream-stream interval join attributes purchases to clicks") {
-    import spark.implicits._
-    implicit val sq: org.apache.spark.sql.classic.SQLContext =
-      org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
-        .sqlContext
-    val events = MemoryStream[(Long, String, Timestamp, Double)]
-    val df = events.toDF().toDF("user_id", "event_type", "ts", "value")
-    val joined = graft.streaming.AttributionStream.attribute(df, df)
-    val name = s"graft_attr_${System.nanoTime()}"
-    val q = joined.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(name).start()
-
-    def t(s: String) = Timestamp.valueOf(s)
-    events.addData(
-      (1L, "click", t("2024-01-01 10:00:00"), 0.0),
-      (2L, "click", t("2024-01-01 10:05:00"), 0.0),
-      (1L, "purchase", t("2024-01-01 10:20:00"), 9.99), // 20 min after
-      (2L, "purchase", t("2024-01-01 11:00:00"), 5.0))  // 55 min after
-    q.processAllAvailable()
-    // advance both watermarks far enough to emit all joined pairs
-    events.addData((99L, "click", t("2024-01-01 14:00:00"), 0.0),
-      (99L, "purchase", t("2024-01-01 14:00:00"), 1.0))
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table(name)
-      .filter(col("user_id") < 99).collect()
-    // user 1 attributed (20 min < 30-min lookback); user 2 not (55 min)
-    assert(rows.length == 1, rows.mkString(","))
-    assert(rows.head.getLong(0) == 1L)
-    assert(rows.head.getDouble(3) == 9.99)
-  }
 }

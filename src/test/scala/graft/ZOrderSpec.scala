@@ -61,6 +61,16 @@ class ZOrderSpec extends SparkSpec {
       Morton.rank(lit(-5L), 0L, 99L, 8).as("lo"),
       Morton.rank(lit(1000L), 0L, 99L, 8).as("hi")).head
     assert(clamped.getLong(0) == 0L && clamped.getLong(1) == 255L)
+    // rank16 clamps the same way: values past the grid on BOTH axes
+    // land in the single top Z-cell 0xFFFFFFFF instead of wrapping to
+    // low z, and values below it in cell 0
+    val edge = spark.range(1).select(
+      Morton.zValue(Morton.rank16(lit(5000L), 0L, 99L),
+        Morton.rank16(lit(1000000L), 0L, 99L)).as("hi"),
+      Morton.zValue(Morton.rank16(lit(-5L), 0L, 99L),
+        Morton.rank16(lit(-1000L), 0L, 99L)).as("lo")).head
+    assert(edge.getLong(0) == 0xFFFFFFFFL && edge.getLong(1) == 0L,
+      s"out-of-grid z values: $edge")
   }
 
   test("q174 on the Z-order layout ≡ the same box on the raw events") {
@@ -147,31 +157,17 @@ class ZOrderSpec extends SparkSpec {
       s"layout scan reads extra columns: $schema")
   }
 
-  test("Z-order fold CLAMPS out-of-grid rows to the curve's top cell — " +
-    "they must not wrap to low z and teleport across the layout") {
-    import graft.operators.{BucketedOps, LayoutMaintenance}
-    val name = s"zclamp_${System.nanoTime()}"
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    val ev = graft.Tables.t(spark, dir, "events").select(cols.map(col): _*)
-    val grid = BucketedOps.writeZOrder(ev, name)
-    // a delta the corpus has outgrown on BOTH dimensions: user ids past
-    // the recorded max, timestamps a decade past the horizon
-    val delta = ev.limit(50)
-      .withColumn("event_id", col("event_id") + lit(10000000L))
-      .withColumn("user_id", col("user_id") + lit(grid.maxU + 1000000L))
-      .withColumn("ts", expr("ts + INTERVAL 10 YEARS"))
-      .withColumn("_change_type", lit("insert"))
-      .withColumn("_commit_version", lit(1L))
-    assert(LayoutMaintenance.foldZOrderDelta(delta, name) == 50L)
-    val zs = spark.table(name).filter(col("user_id") > grid.maxU)
-      .select("z").collect().map(_.getLong(0))
-    // both ranks clamp to 65535, so every out-of-grid row lands in the
-    // single top Z-cell 0xFFFFFFFF; a wrapping rank16 (the pre-r11
-    // behavior) would scatter them across low z instead
-    assert(zs.length == 50 && zs.forall(_ == 0xFFFFFFFFL),
-      s"out-of-grid z values: ${zs.distinct.take(5).mkString(",")}")
-    // and the grid the table records is untouched by the fold
-    assert(BucketedOps.zBoundsOf(spark, name) == grid)
-    spark.sql(s"DROP TABLE IF EXISTS $name")
+  test("repartitionDirected routes every row to the partition named by " +
+    "its cell, for the Z layout's clusterFiles cells") {
+    val cells = BucketedOps.clusterFiles
+    assert(cells == 256)
+    val df = spark.range(20000)
+      .select(pmod(xxhash64(col("id")), lit(cells.toLong)).as("cell"))
+    val routed = BucketedOps.repartitionDirected(df, cells, col("cell"))
+      .select(col("cell"), spark_partition_id().as("pid"))
+    assert(routed.rdd.getNumPartitions == cells)
+    val stray = routed.filter(col("cell") =!= col("pid")).count()
+    assert(stray == 0L, s"$stray rows landed outside their cell's partition")
+    assert(routed.select("pid").distinct().count() == cells)
   }
 }
