@@ -1,20 +1,15 @@
 package graft
 
-import java.sql.Timestamp
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import scala.collection.concurrent.TrieMap
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.AliasIdentifier
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DayTimeIntervalType, StructType,
+import org.apache.spark.sql.types.{DayTimeIntervalType,
   YearMonthIntervalType}
-import org.apache.spark.sql.util.QueryExecutionListener
-
-import graft.plans.PlanClassifier
 
 /** A registered materialized aggregate: partials of `measures` grouped
   * by `dims` over managed table `base`, persisted at `path` (see
@@ -63,7 +58,9 @@ private[graft] final class TableEntry(val df: DataFrame, known: Long = -1L,
   * *is* that topology, so `Engine` keeps only the observable surface:
   *
   *  - a table registry (≈ `duckherder_register_remote_table`,
-  *    duckherder_pragmas.cpp:16-60)
+  *    duckherder_pragmas.cpp:16-60), which SQL reads as `t` or `dh.t`
+  *    through [[GraftExtensions.EngineRelations]] — one catalog, no
+  *    session temp views
   *  - `sql()` with per-query execution stats (≈
   *    `duckherder_get_query_execution_stats()`,
   *    query_execution_stats_query_function.cpp:22-60)
@@ -161,7 +158,6 @@ class Engine private[graft] (val spark: SparkSession)
     registry.remove(name)
     versions.remove(name)
     versionSeq.remove(name)
-    spark.catalog.dropTempView(name)
   }
 
   // serializes registry+versions mutation: snapshot-then-replace is a
@@ -192,30 +188,18 @@ class Engine private[graft] (val spark: SparkSession)
         appendOf = appendDelta.flatMap(d => prevEntry.map((_, d))),
         sourcePath = sourcePath))
       versionSeq.put(name, versionSeq.getOrElse(name, -1L) + 1L)
-      df.createOrReplaceTempView(name)
     }
   def table(name: String): DataFrame =
     registry.getOrElse(name, missing(name)).df
 
   /** Footer statistics (row count + exact integer min/max for `cols`)
-    * for a bare scan of a path-registered parquet table, if `child` IS
-    * exactly that scan (post alias-stripping, plan-identity via
-    * `sameResult` — any Filter/Project/DML lineage in between
-    * disqualifies). None when any requested column lacks exact chunk
-    * statistics. Backs [[graft.plans.FooterAggRewrite]]. */
-  private[graft] def metadataAgg(
-      child: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      cols: Seq[String]): Option[(Long, Map[String, (Long, Long)])] = {
-    import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
-    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-    registry.values.collectFirst {
-      case e if e.sourcePath.isDefined &&
-          EliminateSubqueryAliases(
-            castToImpl(e.df).queryExecution.analyzed).sameResult(child) =>
-        e
-    }.flatMap { e =>
-      val r = graft.operators.FooterStats
-        .tableStats(spark, e.sourcePath.get, cols)
+    * of `e`, a path-registered parquet table read as its bare scan. None
+    * for a table with no source path, or when any requested column lacks
+    * exact chunk statistics. Backs [[graft.plans.FooterAggRewrite]]. */
+  private[graft] def metadataAgg(e: TableEntry,
+      cols: Seq[String]): Option[(Long, Map[String, (Long, Long)])] =
+    e.sourcePath.flatMap { path =>
+      val r = graft.operators.FooterStats.tableStats(spark, path, cols)
       r.foreach { case (rows, _) =>
         if (e.rowsIfKnown < 0L) () // rows caches lazily via its own path
         else require(e.rowsIfKnown == rows,
@@ -223,6 +207,35 @@ class Engine private[graft] (val spark: SparkSession)
       }
       r
     }
+
+  /** The one name rule: `t` or `dh.t` (the reference's attached-database
+    * alias, `ATTACH 'dh' (TYPE duckherder)`) names registry key `t`,
+    * matched with the session resolver, so case-insensitively by
+    * default, as Spark matches its own names. A name with any other
+    * qualifier is Spark's (None); an unregistered `t` keeps its
+    * spelling. Relation resolution, write ownership, `table_changes`
+    * and time travel all name tables through it. */
+  private[graft] def keyOf(parts: Seq[String]): Option[String] = {
+    val same = spark.sessionState.conf.resolver
+    val name = parts match {
+      case Seq(n) => Some(n)
+      case Seq(db, n) if same(db, Engine.Database) => Some(n)
+      case _ => None
+    }
+    name.map(n => if (registry.contains(n)) n
+      else registry.keys.find(same(_, n)).getOrElse(n))
+  }
+
+  /** `entry`, a version of table `key` written as `parts`, as a query
+    * relation: its analyzed plan under an alias tagged with the entry
+    * ([[Engine.TableTag]]), which the plan rewrites and the classifier
+    * read instead of matching names or plans. */
+  private[graft] def relation(parts: Seq[String], key: String,
+      entry: TableEntry): LogicalPlan = {
+    val alias = SubqueryAlias(AliasIdentifier(key, parts.init),
+      castToImpl(entry.df).queryExecution.analyzed)
+    alias.setTagValue(Engine.TableTag, entry)
+    alias
   }
 
   def tableNames: Seq[String] = registry.keys.toSeq.sorted
@@ -258,6 +271,13 @@ class Engine private[graft] (val spark: SparkSession)
       s"Catalog Error: Table with name $name does not exist!")
 
 
+  /** Train-once/probe-many memo for serving-index helpers
+    * (TextRetrieval): index name → corpus dir its artifacts were built
+    * over IN THIS ENGINE. Lives on the engine because the artifacts
+    * live in this engine's registry — a fresh Engine starts empty and
+    * must rebuild. */
+  private[graft] val servedIndexDir = TrieMap.empty[String, String]
+
   // Per-table WRITER lock: every DML verb is a read-modify-write of the
   // table's plan (read current df → build new df → put); without
   // serialization two concurrent writers on one table both read state S
@@ -267,13 +287,6 @@ class Engine private[graft] (val spark: SparkSession)
   // validation probes: single-table writer serialization, the semantics
   // Delta/Iceberg provide via optimistic commit-retry. Readers are
   // never blocked (they hold a plan reference).
-  /** Train-once/probe-many memo for serving-index helpers
-    * (TextRetrieval): index name → corpus dir its artifacts were built
-    * over IN THIS ENGINE. Lives on the engine because the artifacts
-    * live in this engine's registry — a fresh Engine starts empty and
-    * must rebuild. */
-  private[graft] val servedIndexDir = TrieMap.empty[String, String]
-
   private val tableLocks = TrieMap.empty[String, Object]
   private[graft] def withTableLock[A](name: String)(f: => A): A =
     tableLocks.getOrElseUpdate(name, new Object).synchronized(f)
@@ -284,6 +297,13 @@ object Engine {
     * versions are lazy plan objects over their predecessors, so the cap
     * bounds how many plans are retained, not data. */
   val MaxVersions = 10
+
+  /** The database alias engine tables may be qualified with (`dh.t`). */
+  private[graft] val Database = "dh"
+
+  /** Marks the alias an engine table resolves under in a query
+    * ([[Engine.relation]]): the registry entry (version) it reads. */
+  private[graft] val TableTag = TreeNodeTag[TableEntry]("graft.table")
 
   // ---- tmpdir artifact lifecycle ------------------------------------
   // ONE JVM-wide shutdown hook over a growing set of paths (compaction
@@ -430,9 +450,10 @@ object Engine {
 
   /** An engine that does NOT become the session's serving engine
     * ([[forSession]] keeps resolving to the previous one): for
-    * query-local catalogs (q197 export round-trip, q198 index
-    * maintenance) whose construction must not hijack the memoized
-    * hyb_* serving artifacts out from under q188/q189/q196. */
+    * query-local catalogs (the DmlOps queries, q198 index maintenance)
+    * whose construction must not hijack the memoized hyb_* serving
+    * artifacts out from under q188/q189/q196. Its tables are visible
+    * only to its own `sql`/`explain`. */
   def scratch(spark: SparkSession): Engine =
     new Engine(requireExtensions(spark))
 

@@ -369,7 +369,7 @@ private[graft] trait EngineIndexes { self: Engine =>
     * artifact ASIDE before installing — a crash or failed rename
     * between steps never leaves the durable artifact missing (worst
     * case the old artifact survives under one of the two names). */
-  private def writeSwapped(df: org.apache.spark.sql.DataFrame,
+  private[graft] def writeSwapped(df: org.apache.spark.sql.DataFrame,
       path: String): Unit = {
     writeTmp(df, path)
     installTmp(path)
@@ -390,10 +390,10 @@ private[graft] trait EngineIndexes { self: Engine =>
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(old, true)
     if (fs.exists(hp) && !fs.rename(hp, old))
-      throw new java.io.IOException(s"OPTIMIZE: could not move $hp aside")
+      throw new java.io.IOException(s"could not move $hp aside")
     if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), hp)) {
       fs.rename(old, hp) // restore the original artifact
-      throw new java.io.IOException(s"OPTIMIZE: could not install $tmp")
+      throw new java.io.IOException(s"could not install $tmp")
     }
     fs.delete(old, true)
     ()
@@ -496,17 +496,10 @@ private[graft] trait EngineIndexes { self: Engine =>
       if (hotDelta.isEmpty) {
         newSh.write.mode("append").parquet(path)
       } else {
-        val tmp = path + "_refresh_tmp"
         // the using-column join fronts `s` — restore the (doc_id, s)
         // artifact schema before writing
-        combined.join(hotDelta, Seq("s"), "left_anti")
-          .select("doc_id", "s")
-          .write.mode("overwrite").parquet(tmp)
-        val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-          spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(path))
+        writeSwapped(combined.join(hotDelta, Seq("s"), "left_anti")
+          .select("doc_id", "s"), path)
       }
       put(indexName, spark.read.parquet(path))
     }

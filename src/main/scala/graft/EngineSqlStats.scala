@@ -1,12 +1,14 @@
 package graft
 
+import java.lang.ref.WeakReference
 import java.sql.Timestamp
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -17,8 +19,7 @@ import graft.plans.PlanClassifier
 /** `sql()` with per-execution stats capture (≈
   * duckherder_get_query_execution_stats / get_query_history), the
   * listener that attributes action durations back to engine queries,
-  * and `explain` classification. Split from Engine.scala along its
-  * section seam; state and semantics unchanged. */
+  * and `explain` classification. */
 private[graft] trait EngineSqlStats { self: Engine =>
 
   // ---- SQL with stats capture -----------------------------------------
@@ -27,39 +28,16 @@ private[graft] trait EngineSqlStats { self: Engine =>
       durationMs: Long, workers: Long, tasks: Long, start: Timestamp)
   private val stats = new ConcurrentLinkedQueue[StatRow]()
   private val history = new ConcurrentLinkedQueue[(String, Long)]()
-  // engine.sql() parks (query text, its own QueryExecution) here; the
-  // listener matches when an action executes the plan (stats are
-  // per-execution, like the reference's RecordQueryExecution). Actions
-  // like count() wrap the query in their own plan, so matching is by
-  // semantic hash over the action plan's subtrees — and classification
-  // uses the original query's plan, not the action wrapper.
-  private val pending = TrieMap.empty[Long, (String, QueryExecution)]
 
-  private val listener = new QueryExecutionListener {
-    override def onSuccess(funcName: String, qe: QueryExecution,
-        durationNs: Long): Unit = {
-      val subtreeHashes = qe.analyzed.collect {
-        case p => p.semanticHash().toLong
-      }.toSet
-      // remove on match: un-evicted entries accumulate over a long
-      // session and a colliding 32-bit hash could mis-attribute stats
-      subtreeHashes.iterator
-        .flatMap(h => pending.remove(h).iterator).take(1).foreach {
-        case (sqlText, origQe) =>
-          record(sqlText, origQe, durationNs)
-          history.add((sqlText, durationNs / 1000L))
-      }
-    }
-    override def onFailure(funcName: String, qe: QueryExecution,
-        exception: Exception): Unit = ()
-  }
-  spark.listenerManager.register(listener)
-
-  private def record(sqlText: String, qe: QueryExecution, durNs: Long): Unit = {
+  /** Records an action's execution of a query this engine's [[sql]]
+    * returned ([[EngineSqlStats.park]]). */
+  private[graft] def recordExecution(sqlText: String, qe: QueryExecution,
+      durNs: Long): Unit = {
     val (mode, merge, tasks) = classify(qe)
     stats.add(StatRow(sqlText, mode, merge, durNs / 1000000L,
       math.min(workerCount.toLong, tasks), tasks,
       new Timestamp(System.currentTimeMillis() - durNs / 1000000L)))
+    history.add((sqlText, durNs / 1000L))
   }
 
   /** (execution mode, merge strategy, tasks): recorded and explained. */
@@ -72,21 +50,12 @@ private[graft] trait EngineSqlStats { self: Engine =>
 
   /** Largest registered-table cardinality referenced by the plan — the
     * analog of the reference's table-scan cardinality estimate
-    * (query_plan_analyzer.cpp:58-71). */
-  private def scanRows(qe: QueryExecution): Long = {
-    // registered tables are temp views; after analysis each appears as a
-    // SubqueryAlias carrying its identifier — exact-match those instead
-    // of substring-scanning the plan text (a table named `t` would match
-    // every plan containing the letter)
-    val names = qe.analyzed.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-        a.identifier.name.toLowerCase(java.util.Locale.ROOT)
-    }.toSet
-    val hit = registry.filter { case (n, _) =>
-      names.contains(n.toLowerCase(java.util.Locale.ROOT))
-    }
-    if (hit.isEmpty) 0L else hit.values.map(_.rows).max
-  }
+    * (query_plan_analyzer.cpp:58-71): the entries the tagged aliases of
+    * its engine tables read ([[Engine.relation]]). */
+  private def scanRows(qe: QueryExecution): Long =
+    qe.analyzed.collect {
+      case a: SubqueryAlias => a.getTagValue(Engine.TableTag)
+    }.flatten.map(_.rows).maxOption.getOrElse(0L)
 
   /** Run SQL against the engine catalog, recording execution stats when an
     * action executes the plan: `spark.sql` with graft's semantics from
@@ -98,7 +67,7 @@ private[graft] trait EngineSqlStats { self: Engine =>
     val df = spark.sql(q)
     val qe = castToImpl(df).queryExecution
     if (!qe.analyzed.isInstanceOf[GraftCommand])
-      pending.put(qe.analyzed.semanticHash().toLong, (q, qe))
+      EngineSqlStats.park(this, q, qe)
     df
   }
 
@@ -167,5 +136,56 @@ private[graft] trait EngineSqlStats { self: Engine =>
     }
     Seq(row).toDF("sql", "execution_mode", "merge_strategy", "num_tasks",
       "plan")
+  }
+}
+
+private[graft] object EngineSqlStats {
+
+  private final class Parked(val engine: WeakReference[Engine],
+      val sql: String, val qe: QueryExecution)
+
+  /** One per session: attributes action durations back to the queries
+    * engines' `sql` returned. Stats are per-execution, like the
+    * reference's RecordQueryExecution. Actions like count() wrap the
+    * query in their own plan, so matching is by semantic hash over the
+    * action plan's subtrees — and classification uses the original
+    * query's plan, not the action wrapper. An entry holds its engine
+    * weakly: an engine nothing else reaches is collected. */
+  private final class Listener extends QueryExecutionListener {
+    val pending = TrieMap.empty[Long, List[Parked]]
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit =
+      if (pending.nonEmpty) {
+        val subtreeHashes = qe.analyzed.collect {
+          case p => p.semanticHash().toLong
+        }.toSet
+        // remove on match: un-evicted entries accumulate over a long
+        // session and a colliding 32-bit hash could mis-attribute stats
+        subtreeHashes.iterator
+          .flatMap(h => pending.remove(h).iterator).take(1).flatten
+          .foreach(p => Option(p.engine.get)
+            .foreach(_.recordExecution(p.sql, p.qe, durationNs)))
+      }
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+  }
+
+  private val listeners = TrieMap.empty[SparkSession, Listener]
+
+  /** Parks `e`'s query `q` until an action executes it; one entry per
+    * engine and plan. */
+  private[graft] def park(e: Engine, q: String, qe: QueryExecution): Unit = {
+    val l = listeners.synchronized {
+      listeners.getOrElseUpdate(e.spark, {
+        val l = new Listener
+        e.spark.listenerManager.register(l)
+        l
+      })
+    }
+    val p = new Parked(new WeakReference(e), q, qe)
+    l.pending.updateWith(qe.analyzed.semanticHash().toLong) { ps =>
+      Some(p :: ps.getOrElse(Nil).filterNot(_.engine.get eq e))
+    }
+    ()
   }
 }

@@ -3,7 +3,6 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
@@ -39,12 +38,16 @@ private[graft] trait EngineVersioning { self: Engine =>
     * layered on [[tableAt]]'s relative back-steps. Raises on a future
     * version or one beyond the bounded retention. */
   def tableAtVersion(name: String, v: Long): DataFrame = {
+    checkVersion(name, v)
+    entryAtVersion(name, v).df
+  }
+
+  private def checkVersion(name: String, v: Long): Unit = {
     val cur = currentVersion(name)
     if (v < 0 || v > cur)
       throw new IllegalArgumentException(
         s"Catalog Error: table $name is at version $cur, " +
           s"asked for version $v")
-    tableAt(name, (cur - v).toInt)
   }
 
   /** Version catalog for a managed table: one row per addressable
@@ -227,10 +230,10 @@ private[graft] trait EngineVersioning { self: Engine =>
     if (args.size < 2 || args.size > 4)
       throw new IllegalArgumentException("Parser Error: " +
         "table_changes(table, startVersion[, endVersion[, idColumns]])")
-    val name = argStr(args(0), "table name")
-    if (!registry.contains(name))
-      throw new IllegalArgumentException(
-        s"Catalog Error: table $name does not exist")
+    val written = argStr(args(0), "table name")
+    val name = keyOf(written.split('.').toSeq).filter(registry.contains)
+      .getOrElse(throw new IllegalArgumentException(
+        s"Catalog Error: table $written does not exist"))
     val start = argLong(args(1), "startVersion")
     val end = if (args.size >= 3) argLong(args(2), "endVersion") else -1L
     val idCol =
@@ -254,26 +257,23 @@ private[graft] trait EngineVersioning { self: Engine =>
     castToImpl(feed).queryExecution.analyzed
   }
 
-  /** `t VERSION AS OF v` on managed tables, swapped for the retained
-    * snapshot's plan in a PARSED plan ([[GraftParser]]); unmanaged
-    * relations pass through, TIMESTAMP AS OF on a managed table raises
-    * (in-session snapshots are version-numbered). */
-  private[graft] def resolveTimeTravel(parsed: LogicalPlan): LogicalPlan =
-    parsed.transformDownWithSubqueries {
-      case RelationTimeTravel(r: UnresolvedRelation, ts, ver)
-          if registry.contains(r.multipartIdentifier.mkString(".")) =>
-        val name = r.multipartIdentifier.mkString(".")
-        if (ts.nonEmpty)
-          throw new IllegalArgumentException("Parser Error: TIMESTAMP " +
-            s"AS OF is not supported on managed table $name — " +
-            "in-session snapshots are version-numbered; use " +
-            "VERSION AS OF <n>")
-        val v = ver.getOrElse(throw new IllegalArgumentException(
-          s"Parser Error: missing version for time travel on $name"))
-        val vNum = v.toLongOption.getOrElse(throw new IllegalArgumentException(
-          s"Parser Error: VERSION AS OF expects an integer version, got '$v'"))
-        castToImpl(tableAtVersion(name, vNum)).queryExecution.analyzed
-    }
+  /** The entry `t VERSION AS OF v` reads ([[GraftExtensions]]' relation
+    * rule). TIMESTAMP AS OF raises: in-session snapshots are
+    * version-numbered. */
+  private[graft] def entryAsOf(name: String, ts: Option[Expression],
+      ver: Option[String]): TableEntry = {
+    if (ts.nonEmpty)
+      throw new IllegalArgumentException("Parser Error: TIMESTAMP " +
+        s"AS OF is not supported on managed table $name — " +
+        "in-session snapshots are version-numbered; use " +
+        "VERSION AS OF <n>")
+    val v = ver.getOrElse(throw new IllegalArgumentException(
+      s"Parser Error: missing version for time travel on $name"))
+    val vNum = v.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"Parser Error: VERSION AS OF expects an integer version, got '$v'"))
+    checkVersion(name, vNum)
+    entryAtVersion(name, vNum)
+  }
 
   /** Number of retained PRIOR versions (current is not counted). */
   def versionCount(name: String): Int = {

@@ -121,13 +121,7 @@ private[graft] trait EngineViews { self: Engine =>
           .groupBy(d.dims.map(col): _*).agg(merge.head, merge.tail: _*)
           .select(old.schema.fields.toIndexedSeq
             .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-        val tmp = d.path + "_refresh_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-          spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(d.path), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(d.path))
+        writeSwapped(merged, d.path)
         put(name, spark.read.parquet(d.path))
         matViews.put(name, (d, current))
         "incremental"
@@ -138,13 +132,6 @@ private[graft] trait EngineViews { self: Engine =>
         "rebuild"
     }
   }
-
-  /** MVs whose base is untouched since their build — the only ones the
-    * rewrite may use. Correctness never depends on freshness. */
-  private[graft] def freshMatViews: Seq[MatViewDef] =
-    matViews.values.collect {
-      case (d, stamp) if registry.get(d.base).exists(_ eq stamp) => d
-    }.toSeq
 
   private[graft] def analyzedPlanOf(name: String)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -4,6 +4,7 @@ import java.util.Locale
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{ArrayContains, ArrayPosition, Cast, ElementAt, Explode, Expression, ExpressionInfo, Literal, NullIf, Size}
 import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -19,10 +20,11 @@ import graft.plans.{EnumOrderRewrite, FooterAggRewrite, MatViewRewrite}
   * this class or by `builder().withExtensions(new GraftExtensions)`:
   * the engine's functions and DuckDB aliases,
   * `enum_ord`, the `table_changes`/`graft_probe_stats` table functions,
-  * [[GraftParser]], and the post-hoc resolution [[GraftExtensions.rules]]
-  * (on the ANALYZED plan, before the optimizer collapses filters into
-  * literal relations). Catalog-dependent pieces act for
-  * [[GraftExtensions.engineFor]] the session: one with no engine (a
+  * [[GraftParser]], the relation rule that resolves engine tables
+  * ([[GraftExtensions.EngineRelations]]), and the post-hoc resolution
+  * [[GraftExtensions.rules]] (on the ANALYZED plan, before the optimizer
+  * collapses filters into literal relations). Catalog-dependent pieces
+  * act for [[GraftExtensions.engineFor]] the session: one with no engine (a
   * `newSession()` clone too) gets functions and spellings, no rewrite. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -36,6 +38,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectTableFunction((FunctionIdentifier(n), info(n), b))
     }
     ext.injectParser((session, spark) => new GraftParser(session, spark))
+    ext.injectHintResolutionRule(session =>
+      GraftExtensions.EngineRelations(session))
     GraftExtensions.rules.foreach { case (name, rewrite) =>
       ext.injectPostHocResolutionRule(session =>
         GraftExtensions.EngineRule(name, rewrite, session))
@@ -87,6 +91,30 @@ object GraftExtensions {
     "MatViewRewrite" -> MatViewRewrite.rewrite,
     "EnumOrderRewrite" -> EnumOrderRewrite.rewrite)
 
+  /** The engine's catalog, acting for [[engineFor]] `session`: `t`,
+    * `dh.t` ([[Engine.keyOf]]) and `t VERSION AS OF n` resolve to the
+    * table's plan, or the retained version's, under an alias tagged with
+    * its registry entry ([[Engine.relation]]). A hint-batch rule, so it
+    * runs after CTE substitution (a CTE named `t` shadows the table) and
+    * before Spark's relation lookup (the engine's `t` wins over a
+    * same-named warehouse table or temp view, as it does for writes —
+    * [[SqlRouter]]). */
+  private[graft] final case class EngineRelations(session: SparkSession)
+      extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      engineFor(session).fold(plan) { e =>
+        def resolve(r: UnresolvedRelation)(entry: String => TableEntry) =
+          e.keyOf(r.multipartIdentifier).filter(e.tableExists)
+            .map(k => e.relation(r.multipartIdentifier, k, entry(k)))
+        plan.resolveOperators {
+          case tt @ RelationTimeTravel(r: UnresolvedRelation, ts, ver) =>
+            resolve(r)(e.entryAsOf(_, ts, ver)).getOrElse(tt)
+          case r: UnresolvedRelation if !r.isStreaming =>
+            resolve(r)(e.registry).getOrElse(r)
+        }
+      }
+  }
+
   /** A plan rewrite acting for [[engineFor]] `session`. */
   private[graft] final case class EngineRule(override val ruleName: String,
       rewrite: (LogicalPlan, Engine) => LogicalPlan, session: SparkSession)
@@ -131,9 +159,8 @@ object GraftExtensions {
 
 /** Spark's parser plus graft's SQL surface: DuckDB literal spellings
   * ([[DuckSyntax]]; INTERVAL literals only when the engine owns INTERVAL
-  * columns), `VERSION AS OF` on engine tables (not a rule: Spark rejects
-  * time travel on temp views before injected rules run), and — for a
-  * session with an engine — the engine's DDL/DML verbs as
+  * columns) and — for a session with an engine — the engine's DDL/DML
+  * verbs as
   * [[GraftCommand]]s ([[SqlRouter]]). Everything else delegates; a
   * session with no engine gets the spellings and plain Spark. */
 private[graft] final class GraftParser(session: SparkSession,
@@ -150,9 +177,8 @@ private[graft] final class GraftParser(session: SparkSession,
 
   private def plan(q: String)(parse: String => LogicalPlan): LogicalPlan = {
     val engine = GraftExtensions.engineFor(session)
-    def parsed(s: String) = engine.fold(parse(s))(_.resolveTimeTravel(parse(s)))
     val s = spell(q, engine)
-    engine.fold(parsed(s))(SqlRouter.plan(_, q, s, parsed))
+    engine.fold(parse(s))(SqlRouter.plan(_, q, s, parse))
   }
 
   override def parsePlan(s: String): LogicalPlan = plan(s)(delegate.parsePlan)

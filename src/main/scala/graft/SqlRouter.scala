@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, EqualTo
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.execution.command.{DescribeQueryCommand, LeafRunnableCommand}
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
@@ -42,8 +42,9 @@ private[graft] final case class GraftCommand(sql: String, engine: Engine,
   *    subquery can route a query.
   *
   * A statement becomes a command only when its target is an engine
-  * table or unknown to the session catalog's warehouse (the engine then
-  * raises its catalog error): warehouse tables keep Spark's DDL.
+  * table, or a `t`/`dh.t` name unknown to the session catalog (the
+  * engine then raises its catalog error): warehouse tables keep Spark's
+  * DDL. `DESCRIBE` of an engine table describes its query schema.
   */
 private[graft] object SqlRouter {
 
@@ -145,52 +146,52 @@ private[graft] object SqlRouter {
     def count(c: String)(n: => Long) = Some(command(e, sql, c)(Seq(n)))
     s match {
       case CreateTable(ifNot, n, cols) if owns(e, n) => ok {
-        if (ifNot == null || !e.tableExists(unq(n))) e.createTable(unq(n), cols)
+        if (ifNot == null || !e.tableExists(unq(e, n))) e.createTable(unq(e, n), cols)
       }
       case AlterAdd(n, ifNot, c, typ, default) if owns(e, n) => ok {
-        e.addColumn(unq(n), c, typ, Option(default).map(d =>
+        e.addColumn(unq(e, n), c, typ, Option(default).map(d =>
           e.spark.sql(s"SELECT ($d) AS v").head().get(0)),
           ifNotExists = ifNot != null)
       }
       case AlterColType(n, c, typ) if owns(e, n) =>
-        ok(e.alterColumnType(unq(n), c, typ))
+        ok(e.alterColumnType(unq(e, n), c, typ))
       case CreateType(n, values) =>
         ok(e.createEnum(n, "'([^']*)'".r.findAllMatchIn(values).map(_.group(1)).toSeq))
       case DropType(ifEx, n) => ok(e.dropEnum(n, ifExists = ifEx != null))
-      case DropIndex(ifEx, n) => ok(e.dropIndex(unq(n), ifExists = ifEx != null))
-      case Truncate(n) => Some(delete(e, sql, unq(n), lit(true), None))
-      case RefreshMatView(n) => ok(e.refreshMaterializedAggregate(unq(n)))
+      case DropIndex(ifEx, n) => ok(e.dropIndex(unq(e, n), ifExists = ifEx != null))
+      case Truncate(n) => Some(delete(e, sql, unq(e, n), lit(true), None))
+      case RefreshMatView(n) => ok(e.refreshMaterializedAggregate(unq(e, n)))
       case DropMatView(ifEx, n) =>
-        ok(e.dropMaterializedAggregate(unq(n), ifExists = ifEx != null))
+        ok(e.dropMaterializedAggregate(unq(e, n), ifExists = ifEx != null))
       case OptimizeIndex(kind, n) => ok {
-        if (kind.equalsIgnoreCase("TEXT")) e.optimizeTextIndex(unq(n))
-        else e.optimizeAnnIndex(unq(n))
+        if (kind.equalsIgnoreCase("TEXT")) e.optimizeTextIndex(unq(e, n))
+        else e.optimizeAnnIndex(unq(e, n))
       }
       case Optimize(n, files, zcols) => ok {
         val k = Option(files).map(_.toInt).getOrElse(0)
         // arity is validated engine-side (1 or 2 columns) so the user
         // gets a clear constraint error, not a parse fallthrough
-        Option(zcols).fold(e.compact(unq(n), k))(cs => e.compactZOrder(unq(n),
+        Option(zcols).fold(e.compact(unq(e, n), k))(cs => e.compactZOrder(unq(e, n),
           cs.split(",").map(_.trim.stripPrefix("`").stripSuffix("`"))
             .filter(_.nonEmpty).toSeq, k))
       }
       case CreateClassifier(n, t, label, text, vocab) =>
-        ok(e.trainClassifier(unq(n), unq(t), label, Option(text).getOrElse("text"),
+        ok(e.trainClassifier(unq(e, n), unq(e, t), label, Option(text).getOrElse("text"),
           Option(vocab).map(_.toInt)
             .getOrElse(graft.operators.CurationOps.NbVocabCap)))
       case DropClassifier(ifEx, n) =>
-        ok(e.dropClassifier(unq(n), ifExists = ifEx != null))
+        ok(e.dropClassifier(unq(e, n), ifExists = ifEx != null))
       // scoring writes nothing: the lazy plan, never a driver collect
       case Classify(n, t) =>
-        Some(castToImpl(e.classify(unq(n), unq(t))).queryExecution.analyzed)
-      case CreateTextIndex(n, t, textCol) => ok(e.buildTextIndex(unq(n), unq(t),
-        e.defaultIndexPath(unq(n)), textCol = Option(textCol).getOrElse("text")))
-      case CreateAnnIndex(n, t, embCol, pq) => ok(e.buildAnnIndex(unq(n), unq(t),
+        Some(castToImpl(e.classify(unq(e, n), unq(e, t))).queryExecution.analyzed)
+      case CreateTextIndex(n, t, textCol) => ok(e.buildTextIndex(unq(e, n), unq(e, t),
+        e.defaultIndexPath(unq(e, n)), textCol = Option(textCol).getOrElse("text")))
+      case CreateAnnIndex(n, t, embCol, pq) => ok(e.buildAnnIndex(unq(e, n), unq(e, t),
         embCol = Option(embCol).getOrElse("embedding"), pq = pq != null))
-      case CreateShingleIndex(n, t, mdf) => ok(e.buildShingleIndex(unq(n), unq(t),
-        e.defaultIndexPath(unq(n)), maxDf = Option(mdf).map(_.toInt).getOrElse(1000)))
+      case CreateShingleIndex(n, t, mdf) => ok(e.buildShingleIndex(unq(e, n), unq(e, t),
+        e.defaultIndexPath(unq(e, n)), maxDf = Option(mdf).map(_.toInt).getOrElse(1000)))
       case RefreshIndex(kind, n0) =>
-        val n = unq(n0)
+        val n = unq(e, n0)
         kind.toUpperCase(Locale.ROOT) match {
           case "TEXT" => count("indexed_docs") {
             // refresh against the path and columns the index was BUILT
@@ -206,8 +207,8 @@ private[graft] object SqlRouter {
           case _ => count("indexed_docs")(e.refreshShingleIndex(n))
         }
       case CopyTable(n, dir, path, opts) => count("copied_rows") {
-        if (dir.equalsIgnoreCase("TO")) e.copyTo(e.table(unq(n)), path, copyOpts(opts))
-        else e.copyFrom(unq(n), path, copyOpts(opts))
+        if (dir.equalsIgnoreCase("TO")) e.copyTo(e.table(unq(e, n)), path, copyOpts(opts))
+        else e.copyFrom(unq(e, n), path, copyOpts(opts))
       }
       case CopyQuery(rest) =>
         val close = DuckSyntax.matchParen(rest, 0)
@@ -227,7 +228,7 @@ private[graft] object SqlRouter {
       }
       case ImportDb(path) => count("tables_imported")(e.importDatabase(path))
       case InsertOr(mode, into) =>
-        val h = insertHead(s"INSERT $into", parse)
+        val h = insertHead(e, s"INSERT $into", parse)
         val replace = mode.equalsIgnoreCase("REPLACE")
         Some(upsert(e, sql, h, returning) {
           val keys = soleKeys(e, h.name, s"INSERT OR ${mode.toUpperCase}",
@@ -241,7 +242,7 @@ private[graft] object SqlRouter {
         })
       case _ if s.regionMatches(true, 0, "INSERT", 0, 6) =>
         DuckSyntax.findTop(s, OnConflict).map { case (i, _) =>
-          val h = insertHead(s.substring(0, i), parse)
+          val h = insertHead(e, s.substring(0, i), parse)
           val (keys, sets) = s.substring(i) match {
             case ConflictTail(k, st) => (Option(k), Option(st).map(st =>
               assignments(h.name, parse(s"UPDATE ${h.name} SET $st"),
@@ -259,7 +260,7 @@ private[graft] object SqlRouter {
         // the FROM source sits between the SET list and the WHERE
         val (head, where) = splitAt(rest, WhereKw)
         DuckSyntax.findTop(head, FromKw).map { case (i, j) =>
-          val n = unq(n0)
+          val n = unq(e, n0)
           val sets = assignments(n, parse(s"UPDATE $n SET ${head.substring(0, i)}"),
             "UPDATE SET")
           val cond = where.map(w => column(e.spark.sessionState.sqlParser
@@ -271,7 +272,7 @@ private[graft] object SqlRouter {
           }
         }
       case DeleteUsing(n0, rest) =>
-        val n = unq(n0)
+        val n = unq(e, n0)
         val (src, where) = splitAt(rest, WhereKw)
         val cond = where.map(w =>
           column(e.spark.sessionState.sqlParser.parseExpression(w)))
@@ -289,9 +290,10 @@ private[graft] object SqlRouter {
   private def positionalMergeInsert(e: Engine, s: String): String = {
     val target = """(?is)MERGE\s+INTO\s+([\w.]+).*""".r
     (s, DuckSyntax.findTop(s, InsertValues)) match {
-      case (target(n), Some((i, _))) if e.tableExists(unq(n)) =>
+      case (target(n), Some((i, _)))
+          if e.keyOf(n.split('.').toSeq).exists(e.tableExists) =>
         val at = i + "INSERT".length
-        s.substring(0, at) + e.table(unq(n)).columns
+        s.substring(0, at) + e.table(unq(e, n)).columns
           .map(c => s"`$c`").mkString(" (", ", ", ")") + s.substring(at)
       case _ => s
     }
@@ -309,24 +311,23 @@ private[graft] object SqlRouter {
     case _ => None
   }
 
-  /** A statement on `parts` is the engine's unless it names a table of
-    * the session catalog that the engine does not own. Engines register
-    * their tables as temp views (another engine's or a stale one
-    * included), so only a persistent warehouse table stays Spark's. */
+  /** A statement on `parts` is the engine's when it names an engine
+    * table, or a `t`/`dh.t` name the session catalog does not know (the
+    * engine then creates it or raises its catalog error). */
   private def owns(e: Engine, parts: Seq[String]): Boolean =
-    e.tableExists(parts.last) || e.spark.sessionState.catalog.isTempView(parts) ||
-      !e.spark.catalog.tableExists(parts.mkString("."))
+    e.keyOf(parts).exists(k => e.tableExists(k) ||
+      !e.spark.catalog.tableExists(parts.mkString(".")))
   private def owns(e: Engine, name: String): Boolean = owns(e, name.split('.').toSeq)
 
   private def fromTree(e: Engine, sql: String, p: LogicalPlan,
-      returning: Option[Seq[String]]): Option[GraftCommand] = {
+      returning: Option[Seq[String]]): Option[LogicalPlan] = {
     val target = p match {
       case i: InsertIntoStatement => Some(i.table)
       case c: Command => c.children.headOption
       case _ => None
     }
     target.flatMap(nameParts).filter(owns(e, _)).flatMap { parts =>
-      val n = parts.last
+      val n = unq(e, parts)
       def ok(act: => Unit) = Some(done(e, sql)(act))
       def fieldName(f: FieldName) = f.name.last
       p match {
@@ -372,6 +373,10 @@ private[graft] object SqlRouter {
             e.createTableAs(n, frame(e, c.query)))
         case c: CreateMaterializedViewAsSelect =>
           ok(createMatView(e, n, c.query, c.ifNotExists))
+        // the rows DESCRIBE gives a view: the table's query schema
+        case d: DescribeRelation
+            if d.partitionSpec.isEmpty && e.tableExists(n) =>
+          Some(DescribeQueryCommand(sql, UnresolvedRelation(parts)))
         case _ => None
       }
     }
@@ -469,10 +474,11 @@ private[graft] object SqlRouter {
       query: LogicalPlan)
 
   /** The INSERT before an upsert clause, as Spark parses it. */
-  private def insertHead(s: String, parse: String => LogicalPlan): InsertHead =
+  private def insertHead(e: Engine, s: String,
+      parse: String => LogicalPlan): InsertHead =
     parse(DuckSyntax.insertValues(s)) match {
       case i: InsertIntoStatement if !i.overwrite =>
-        InsertHead(nameParts(i.table).get.last, i.userSpecifiedCols, i.query)
+        InsertHead(unq(e, nameParts(i.table).get), i.userSpecifiedCols, i.query)
       case _ => parseErr("malformed INSERT before ON CONFLICT")
     }
 
@@ -519,13 +525,9 @@ private[graft] object SqlRouter {
     }
   }
 
-  /** A parsed query or table as a frame; the reference qualifies tables
-    * with its attached-database alias (`dh.t`), and this engine IS that
-    * database. */
-  private def frame(e: Engine, p: LogicalPlan): DataFrame = p match {
-    case r: UnresolvedRelation => e.spark.table(r.multipartIdentifier.last)
-    case _ => GraftSqlBridge.ofRows(e.spark, p)
-  }
+  /** A parsed query or table as a frame. */
+  private def frame(e: Engine, p: LogicalPlan): DataFrame =
+    GraftSqlBridge.ofRows(e.spark, p)
 
   /** A FROM/USING source and the alias its columns bind under. */
   private def source(p: LogicalPlan): (LogicalPlan, String) = p match {
@@ -662,7 +664,7 @@ private[graft] object SqlRouter {
           case other => parseErr("materialized view output must be " +
             s"dimension columns or aggregate calls, got: ${other.sql}")
         }.distinct
-        e.createMaterializedAggregate(name, rel.multipartIdentifier.last,
+        e.createMaterializedAggregate(name, unq(e, rel.multipartIdentifier),
           dims, measures, e.defaultMvPath(name))
       case _ => parseErr("materialized view definition must be a " +
         "grouped aggregate directly over a single table (no " +
@@ -670,11 +672,14 @@ private[graft] object SqlRouter {
     }
   }
 
-  /** The reference qualifies tables with its attached-database alias
-    * (`dh.enum_test_table` — enum_type_support.test:22); this engine IS
-    * that database, so a single leading qualifier drops. */
-  private def unq(name: String): String =
-    name.substring(name.lastIndexOf('.') + 1)
+  /** The engine name `name` spells ([[Engine.keyOf]]): the reference
+    * qualifies tables with its attached-database alias
+    * (`dh.enum_test_table` — enum_type_support.test:22), and this engine
+    * IS that database. Any other qualifier is a catalog error. */
+  private def unq(e: Engine, name: String): String =
+    unq(e, name.split('.').toSeq)
+  private def unq(e: Engine, parts: Seq[String]): String =
+    e.keyOf(parts).getOrElse(e.missing(parts.mkString(".")))
 
   private def parseErr(msg: String): Nothing =
     throw new IllegalArgumentException(s"Parser Error: $msg")

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Engine, Tables}
@@ -10,20 +9,10 @@ import graft.{Engine, Tables}
   * read back. The oracle expresses the same final state as pure SQL over
   * the base table, so the engine's copy-on-write DML is hash-checked
   * against DuckDB (ref semantics: distributed_insert.cpp:26-100,
-  * distributed_delete.cpp:27-126). */
+  * distributed_delete.cpp:27-126). Each query builds its tables on its
+  * own [[graft.Engine.scratch]] engine: only that engine's `sql` sees
+  * them, so a second run in one JVM starts from an empty catalog. */
 object DmlOps {
-
-  /** Runs a query body on a scratch engine (a query-local catalog that
-    * keeps the session's serving memo) and unregisters every table it
-    * registered before returning. The frame the body returns keeps its
-    * analyzed plan; the session keeps no temp view of the query, so a
-    * second run in one JVM starts from the same empty catalog. */
-  private def onScratch(s: SparkSession)(
-      body: Engine => DataFrame): DataFrame = {
-    val engine = Engine.scratch(s)
-    try body(engine)
-    finally engine.tableNames.foreach(engine.unregisterTable)
-  }
 
   val dmlRoundtrip: NamedQuery = NamedQuery("q32_dml_roundtrip",
     Some("""SELECT l_orderkey, l_linenumber, round(l_quantity, 2) AS qty
@@ -31,9 +20,9 @@ object DmlOps {
            |UNION ALL
            |SELECT l_orderkey, l_linenumber, round(l_quantity, 2) AS qty
            |FROM lineitem WHERE l_orderkey <= 50""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val name = "graft_dml_roundtrip"
-      engine.dropTable(name, ifExists = true)
       val base = Tables.t(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("l_quantity"), 2).as("qty"))
@@ -58,9 +47,9 @@ object DmlOps {
            |CASE WHEN l_orderkey <= 100 THEN 'bumped'
            |     ELSE l_returnflag END AS f
            |FROM lineitem WHERE l_orderkey <= 300""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val name = "graft_update_roundtrip"
-      engine.dropTable(name, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "lineitem")
         .filter(col("l_orderkey") <= 300)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -93,11 +82,10 @@ object DmlOps {
            |  (SELECT * FROM orders WHERE o_totalprice > 150000) o
            |  ON l.l_orderkey = o.o_orderkey
            |WHERE l.l_orderkey <= 300""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val name = "graft_updfrom_tgt"
       val src = "graft_updfrom_src"
-      engine.dropTable(name, ifExists = true)
-      engine.dropTable(src, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "lineitem")
         .filter(col("l_orderkey") <= 300)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -126,11 +114,10 @@ object DmlOps {
            |  SELECT 1 FROM orders o
            |  WHERE o.o_orderkey = l.l_orderkey
            |    AND o.o_totalprice > 150000)""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val name = "graft_delu_tgt"
       val src = "graft_delu_src"
-      engine.dropTable(name, ifExists = true)
-      engine.dropTable(src, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "lineitem")
         .filter(col("l_orderkey") <= 300)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -172,9 +159,9 @@ object DmlOps {
            |FROM src s WHERE NOT EXISTS (
            |  SELECT 1 FROM orders t2 WHERE t2.o_orderkey <= 400
            |    AND t2.o_orderkey = s.o_orderkey)""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val name = "graft_conf_tgt"
-      engine.dropTable(name, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "orders")
         .filter(col("o_orderkey") <= 400)
         .select(col("o_orderkey"), col("o_custkey"),
@@ -189,12 +176,11 @@ object DmlOps {
           col("o_custkey"),
           round(col("o_totalprice"), 2).as("price"),
           lit("upsert").as("tag"))
-      src.createOrReplaceTempView("graft_conf_src")
+      engine.registerTable("graft_conf_src", src)
       engine.sql(s"INSERT INTO $name SELECT * FROM graft_conf_src " +
         "ON CONFLICT (o_orderkey) DO UPDATE SET " +
         s"price = round(excluded.price + 1, 2), " +
         s"tag = concat($name.tag, '+', excluded.tag)")
-      s.catalog.dropTempView("graft_conf_src")
       engine.table(name)
     })
 
@@ -216,11 +202,10 @@ object DmlOps {
            |count(*) AS n
            |FROM lineitem WHERE l_returnflag IN ('A', 'R')
            |GROUP BY l_returnflag, l_linestatus""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val base = "graft_mv_lineitem"
       val mv = "graft_mv_li_agg"
-      engine.dropTable(mv, ifExists = true)
-      engine.dropTable(base, ifExists = true)
       engine.createTableAs(base, Tables.t(s, d, "lineitem"))
       // the SQL spelling (routed to createMaterializedAggregate), so
       // the oracle gate exercises the CREATE MATERIALIZED VIEW path
@@ -258,11 +243,10 @@ object DmlOps {
            |FROM (SELECT * FROM lineitem UNION ALL
            |      SELECT * FROM lineitem WHERE l_orderkey <= 100) u
            |GROUP BY l_returnflag, l_linestatus""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val base = "graft_mvr_lineitem"
       val mv = "graft_mvr_li_agg"
-      engine.dropTable(mv, ifExists = true)
-      engine.dropTable(base, ifExists = true)
       val li = Tables.t(s, d, "lineitem")
       engine.createTableAs(base, li)
       engine.sql(
@@ -307,11 +291,10 @@ object DmlOps {
            |  round(sum(round(c_acctbal, 2)), 2) AS total,
            |  CAST(0 AS BIGINT) AS n_mismatch
            |FROM customer GROUP BY c_mktsegment""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val name = "graft_copy_src"
       val back = "graft_copy_back"
-      engine.dropTable(name, ifExists = true)
-      engine.dropTable(back, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"),
           round(col("c_acctbal"), 2).as("bal")))
@@ -351,14 +334,14 @@ object DmlOps {
            |UNION ALL
            |SELECT o_orderkey + 10000, round(o_totalprice, 2), 'del'
            |FROM orders WHERE o_orderkey <= 50""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val name = "graft_ret_tgt"
-      engine.dropTable(name, ifExists = true)
       engine.createTableAs(name, Tables.t(s, d, "orders")
         .filter(col("o_orderkey") <= 300)
         .select(col("o_orderkey").as("k"),
           round(col("o_totalprice"), 2).as("price")))
-      Tables.t(s, d, "orders").createOrReplaceTempView("graft_ret_orders")
+      engine.registerTable("graft_ret_orders", Tables.t(s, d, "orders"))
       val ins = engine.sql(s"INSERT INTO $name SELECT o_orderkey + 10000, " +
         "round(o_totalprice, 2) FROM graft_ret_orders " +
         "WHERE o_orderkey <= 50 " +
@@ -368,7 +351,6 @@ object DmlOps {
       // >= : the smallest shifted key is o_orderkey 0 → exactly 10000
       val del = engine.sql(s"DELETE FROM $name WHERE k >= 10000 " +
         "RETURNING k, price AS val, 'del' AS verb")
-      s.catalog.dropTempView("graft_ret_orders")
       ins.unionAll(upd).unionAll(del)
     })
 
@@ -385,7 +367,8 @@ object DmlOps {
            |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum,
            |  CAST(2 AS BIGINT) AS n_tables
            |FROM nation GROUP BY n_regionkey""".stripMargin),
-    (s, d) => onScratch(s) { engine =>
+    (s, d) => {
+      val engine = Engine.scratch(s)
       val dir = s"${sys.props("java.io.tmpdir")}/graft_export_rt"
       engine.createTableAs("graft_exp_nation", Tables.t(s, d, "nation"))
       engine.sql("CREATE TABLE graft_exp_meta (id INT, tag STRING)")
@@ -397,26 +380,25 @@ object DmlOps {
       val exported =
         engine.sql(s"EXPORT DATABASE '$dir'").head().getLong(0)
       // restore into a FRESH engine — nothing session-side may leak
-      onScratch(s) { e2 =>
-        val imported = e2.sql(s"IMPORT DATABASE '$dir'").head().getLong(0)
-        require(exported == 2 && imported == 2,
-          s"catalog scope drifted: exported $exported, imported $imported")
-        // constraint metadata survived the manifest round-trip
-        val nnHeld =
-          try { e2.sql("INSERT INTO graft_exp_meta VALUES (NULL, 'x')")
-            false }
-          catch { case _: IllegalArgumentException => true }
-        require(nnHeld, "NOT NULL did not survive IMPORT DATABASE")
-        e2.sql("INSERT INTO graft_exp_meta (id) VALUES (2)")
-        require(e2.table("graft_exp_meta").filter(col("id") === 2)
-          .head().getString(1) == "dft",
-          "SET DEFAULT did not survive IMPORT DATABASE")
-        e2.table("graft_exp_nation")
-          .groupBy(col("n_regionkey"))
-          .agg(count(lit(1)).as("n"),
-            sum("n_nationkey").cast("long").as("key_sum"),
-            lit(2L).as("n_tables"))
-      }
+      val e2 = Engine.scratch(s)
+      val imported = e2.sql(s"IMPORT DATABASE '$dir'").head().getLong(0)
+      require(exported == 2 && imported == 2,
+        s"catalog scope drifted: exported $exported, imported $imported")
+      // constraint metadata survived the manifest round-trip
+      val nnHeld =
+        try { e2.sql("INSERT INTO graft_exp_meta VALUES (NULL, 'x')")
+          false }
+        catch { case _: IllegalArgumentException => true }
+      require(nnHeld, "NOT NULL did not survive IMPORT DATABASE")
+      e2.sql("INSERT INTO graft_exp_meta (id) VALUES (2)")
+      require(e2.table("graft_exp_meta").filter(col("id") === 2)
+        .head().getString(1) == "dft",
+        "SET DEFAULT did not survive IMPORT DATABASE")
+      e2.table("graft_exp_nation")
+        .groupBy(col("n_regionkey"))
+        .agg(count(lit(1)).as("n"),
+          sum("n_nationkey").cast("long").as("key_sum"),
+          lit(2L).as("n_tables"))
     })
 
   def defs: Seq[NamedQuery] =

@@ -22,8 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - col <,≤,>,≥ 'lit'/col₂   → key(col) ⊕ key(lit)/key(col₂)
   *
   * Column resolution binds each attribute to the registered table it
-  * actually comes from (the SubqueryAlias node wrapping the table's plan),
-  * never by name alone — a column in an unrelated table that merely shares
+  * actually comes from (the tagged SubqueryAlias wrapping the table's
+  * plan — [[graft.Engine.relation]]), never by name alone — a column in
+  * an unrelated table, or under a user alias or CTE, that merely shares
   * a name with an enum column keeps Spark's lexical semantics. Catalogs
   * are per-[[graft.Engine]]; this [[graft.GraftExtensions]] rule acts
   * for [[graft.GraftExtensions.engineFor]] the session. Equality is
@@ -37,11 +38,13 @@ object EnumOrderRewrite {
       engine: graft.Engine): LogicalPlan = {
     if (engine.enumCols.isEmpty && engine.typeOrigins.isEmpty) return plan
 
-    // attribute → (registered table, column) via the SubqueryAlias each
-    // table reference resolves through (user aliases wrap further
-    // SubqueryAlias nodes outside; exprIds are stable through them)
+    // attribute → (registered table, column) via the tagged alias each
+    // table reference resolves through (user aliases and CTEs wrap
+    // further SubqueryAlias nodes outside; exprIds are stable through
+    // them)
     val binding: Map[ExprId, (String, String)] = plan.collect {
-      case sa: SubqueryAlias if engine.tableExists(sa.alias) =>
+      case sa: SubqueryAlias
+          if sa.getTagValue(graft.Engine.TableTag).isDefined =>
         sa.output.map(a => a.exprId -> ((sa.alias, a.name)))
     }.flatten.toMap
 

@@ -1,13 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LeafNode, LocalRelation, LogicalPlan, View}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LeafNode, LocalRelation, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
 
-import graft.Engine
+import graft.{Engine, TableEntry}
 
 /** Bare metadata-answerable aggregates over a path-registered parquet
   * table fold to FOOTER statistics — no data pages, no scan job (the
@@ -22,8 +21,8 @@ import graft.Engine
   *    unconditionally exact — strings truncate, floats have NaN
   *    ordering caveats),
   *  - the input is the registered table's scan, unmodified — any
-  *    Filter/Project/DML-rewrite in between makes the plans diverge
-  *    and the rewrite stays out (a table mutated through the engine's
+  *    Filter/Project/DML-rewrite in between keeps the rewrite out (a
+  *    table mutated through the engine's
   *    copy-on-write DML re-registers WITHOUT a source path, so a
   *    post-INSERT aggregate always recomputes the real lineage),
   *  - every chunk of every referenced column carries exact non-null
@@ -54,18 +53,19 @@ object FooterAggRewrite {
       case _ => None
     }
 
-  /** A scan behind aliases/views, the only input a path-registered table
-    * can equal — checked before canonicalizing a whole DML lineage. */
-  private def isScan(p: LogicalPlan): Boolean =
-    EliminateSubqueryAliases(p) match {
-      case v: View => isScan(v.child)
-      case _: LeafNode => true
-      case _ => false
+  /** The table a bare scan behind aliases reads: an engine table's
+    * tagged alias ([[Engine.relation]]) directly over its leaf. */
+  private def scanned(p: LogicalPlan): Option[TableEntry] = p match {
+    case a: SubqueryAlias => a.getTagValue(Engine.TableTag) match {
+      case None => scanned(a.child)
+      case e => e.filter(_ => a.child.isInstanceOf[LeafNode])
     }
+    case _ => None
+  }
 
   def rewrite(plan: LogicalPlan, engine: Engine): LogicalPlan = plan match {
     case agg @ Aggregate(Nil, exprs, child, _)
-        if exprs.nonEmpty && isScan(child) && exprs.forall {
+        if exprs.nonEmpty && exprs.forall {
           case Alias(ae: AggregateExpression, _) => foldKey(ae).isDefined
           case _ => false
         } =>
@@ -73,7 +73,7 @@ object FooterAggRewrite {
         case Alias(ae: AggregateExpression, _) => foldKey(ae).get
       }
       val cols = keys.flatten.distinct
-      engine.metadataAgg(EliminateSubqueryAliases(child), cols) match {
+      scanned(child).flatMap(engine.metadataAgg(_, cols)) match {
         case Some((rows, mm)) =>
           val values = exprs.zip(keys).map {
             case (_, None) => rows

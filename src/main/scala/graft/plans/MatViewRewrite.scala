@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, Expression, If, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, SubqueryAlias}
@@ -38,12 +37,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * exactly the non-empty groups of the base, so re-aggregation is
   * semantics-preserving with no empty-group special case.
   *
-  * Staleness: the rewrite consults only MVs whose base table entry is
-  * the SAME registry snapshot the MV was built from
-  * ([[graft.Engine.freshMatViews]]); any DML/ALTER on the base swaps
-  * the entry and silently disables the rewrite until
-  * `refreshMaterializedAggregate`. Correctness never depends on the
-  * MV being fresh.
+  * Staleness: the rewrite matches only a base read whose registry
+  * entry is the SAME snapshot the MV was built from (the tag on the
+  * table's alias); any DML/ALTER on the base swaps the entry and
+  * silently disables the rewrite until `refreshMaterializedAggregate`.
+  * Correctness never depends on the MV being fresh.
   * A [[graft.GraftExtensions]] rule; its output aggregates the MV, not
   * the base, so re-applying it changes nothing.
   */
@@ -51,28 +49,29 @@ object MatViewRewrite {
 
   private[graft] def rewrite(plan: LogicalPlan,
       engine: graft.Engine): LogicalPlan = {
-    val mvs = engine.freshMatViews
+    val mvs = engine.matViews.values.toSeq
     if (mvs.isEmpty) return plan
     plan.transformWithPruning(_.containsPattern(AGGREGATE)) {
       case agg: Aggregate =>
-        mvs.view.flatMap(tryRewrite(agg, _, engine)).headOption.getOrElse(agg)
+        mvs.view.flatMap { case (mv, stamp) =>
+          tryRewrite(agg, mv, stamp, engine)
+        }.headOption.getOrElse(agg)
     }
   }
 
-  /** The base-table reference under an Aggregate: the temp-view
-    * SubqueryAlias (possibly under further user aliases), optionally
-    * below a WHERE Filter — by name AND plan: a same-named view someone
-    * else registered on the session is not the base. */
-  private def baseOf(child: LogicalPlan, base: String,
-      engine: graft.Engine): Option[Option[Expression]] = {
-    def named(p: LogicalPlan): Boolean = p match {
+  /** The base-table reference under an Aggregate, optionally below a
+    * WHERE Filter: an engine table's alias (possibly under further user
+    * aliases) tagged with `stamp`, the entry the MV was built from
+    * ([[graft.Engine.relation]]). Any later write swaps the entry, so a
+    * stale MV matches nothing. */
+  private def baseOf(child: LogicalPlan,
+      stamp: graft.TableEntry): Option[Option[Expression]] = {
+    def isBase(p: LogicalPlan): Boolean = p match {
       case sa: SubqueryAlias =>
-        sa.alias.equalsIgnoreCase(base) || named(sa.child)
+        sa.getTagValue(graft.Engine.TableTag).exists(_ eq stamp) ||
+          isBase(sa.child)
       case _ => false
     }
-    def isBase(sa: SubqueryAlias): Boolean = named(sa) &&
-      EliminateSubqueryAliases(sa).sameResult(
-        EliminateSubqueryAliases(engine.analyzedPlanOf(base)))
     child match {
       case sa: SubqueryAlias if isBase(sa) => Some(None)
       case Filter(cond, sa: SubqueryAlias) if isBase(sa) => Some(Some(cond))
@@ -81,11 +80,11 @@ object MatViewRewrite {
   }
 
   private def tryRewrite(agg: Aggregate, mv: graft.MatViewDef,
-      engine: graft.Engine): Option[Aggregate] = {
+      stamp: graft.TableEntry, engine: graft.Engine): Option[Aggregate] = {
     val dims = mv.dims.map(_.toLowerCase).toSet
     def isDim(a: Attribute): Boolean = dims.contains(a.name.toLowerCase)
 
-    baseOf(agg.child, mv.base, engine).flatMap { cond =>
+    baseOf(agg.child, stamp).flatMap { cond =>
       // grouping: plain dimension columns only
       val groupOk = agg.groupingExpressions.forall {
         case a: Attribute => isDim(a)

@@ -28,9 +28,12 @@ object PlanClassifier {
     // keep the *label* for stats parity.
     val hasSort = plan.exists { case _: Sort => true; case _ => false }
     val hasOffset = plan.exists { case _: Offset => true; case _ => false }
+    // an engine table reads as a scan whatever its plan (a `range` or
+    // VALUES table too), as does a view
     val hasScan = plan.exists {
       case _: LogicalRelation => true
       case _: View => true
+      case a: SubqueryAlias => a.getTagValue(graft.Engine.TableTag).isDefined
       case _ => false
     }
     if (!hasScan || hasSort || hasOffset) "LOCAL"

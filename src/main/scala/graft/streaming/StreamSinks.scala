@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Shared sink/checkpoint placement for the drain-to-files stream
-  * helpers ([[ClassifierStream.drained]], [[DedupStream.drainedPairs]]).
+  * helper ([[ClassifierStream.drained]]).
   *
   * On a real cluster the EXECUTORS write the parquet sink and the driver
   * plans the read-back, so the base path must be shared storage — a

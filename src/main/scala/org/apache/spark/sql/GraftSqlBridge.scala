@@ -16,15 +16,4 @@ object GraftSqlBridge {
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Build the V2 parquet Table for a path (internal constructor —
-    * bridged for the GraftCatalog TableCatalog plugin). */
-  def parquetTable(name: String, path: String): connector.catalog.Table =
-    execution.datasources.v2.parquet.ParquetTable(
-      name,
-      classic.SparkSession.active,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("path", path)),
-      Seq(path),
-      None,
-      classOf[execution.datasources.parquet.ParquetFileFormat])
 }

@@ -314,6 +314,8 @@ class EngineSpec extends SparkSpec {
     val added = engine.refreshShingleIndex("shref", t, s"$dir/index",
       maxDf = 2)
     assert(added == 2)
+    // the hot-delta rewrite swapped the artifact in whole
+    assert(EngineSpec.swapLeftovers(s"$dir/index").isEmpty)
     // the refreshed artifact must be row-identical to building from
     // scratch over the grown corpus — same new-doc rows, and the
     // now-hot 'common words here' shingle swept from docs 1 and 2 too
@@ -1128,6 +1130,7 @@ class EngineSpec extends SparkSpec {
     engine.sql(s"INSERT INTO $t VALUES ('c', 0.75, NULL), ('a', -2.0, 8)")
     engine.sql(s"INSERT INTO $t VALUES ('b', 3.25, 6)")
     assert(engine.refreshMaterializedAggregate(mv) == "incremental")
+    assert(EngineSpec.swapLeftovers(path).isEmpty)
     // merged artifact is identical to a from-scratch build over the
     // current base — schema (post-cast) and rows
     engine.createMaterializedAggregate(mvRef, t, dims = Seq("grp"),
@@ -1343,7 +1346,7 @@ class EngineSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     engine.mergeInto(t,
       spark.createDataFrame(
-        Seq(Row(2, "B"), Row(4, "d")).asJava, spark.table(t).schema),
+        Seq(Row(2, "B"), Row(4, "d")).asJava, engine.table(t).schema),
       Seq("id"))
     val feed = engine.tableChanges(t, 1, 2, idColumns = Seq("id"))
     val got = feed.collect()
@@ -1366,19 +1369,19 @@ class EngineSpec extends SparkSpec {
     val t = s"cmp_${System.nanoTime()}"
     engine.createTable(t, "id INT, name STRING")
     (1 to 8).foreach(i => engine.insertValues(t, Seq(Row(i, s"r$i"))))
-    val before = spark.table(t).queryExecution.analyzed
+    val before = engine.table(t).queryExecution.analyzed
     assert(before.collect { case u: org.apache.spark.sql.catalyst
         .plans.logical.Union => u }.nonEmpty,
       "pre-compaction plan should carry the append chain")
-    val preRows = spark.table(t).collect().map(_.toString).toSet
+    val preRows = engine.table(t).collect().map(_.toString).toSet
     engine.compact(t, 2)
-    val after = spark.table(t).queryExecution.analyzed
+    val after = engine.table(t).queryExecution.analyzed
     // the live plan is now a plain scan: no Union layer survives
     assert(after.collect { case u: org.apache.spark.sql.catalyst
         .plans.logical.Union => u }.isEmpty,
       s"compaction did not collapse the plan:\n$after")
-    assert(spark.table(t).collect().map(_.toString).toSet == preRows)
-    assert(spark.table(t).rdd.getNumPartitions == 2)
+    assert(engine.table(t).collect().map(_.toString).toSet == preRows)
+    assert(engine.table(t).rdd.getNumPartitions == 2)
     // retained history still addresses the pre-compaction snapshot
     assert(engine.tableAt(t, 1).count() == 8)
     engine.dropTable(t)
@@ -1389,7 +1392,7 @@ class EngineSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val t = s"cdc_law_${System.nanoTime()}"
     engine.createTable(t, "id INT, name STRING")
-    def schema = spark.table(t).schema
+    def schema = engine.table(t).schema
     // a deterministic mixed DML history: appends, a delete, an
     // update-shaped merge, a COMPACTION (OPTIMIZE — rewrites every file
     // but changes no row: its feed step must be empty), another append
@@ -1435,7 +1438,7 @@ class EngineSpec extends SparkSpec {
     engine.insertValues(t, Seq(Row(1, 1, "a"), Row(1, 2, "b"), Row(2, 1, "c")))
     // update (1,2) only — rows sharing k1 must NOT collide
     engine.mergeInto(t,
-      spark.createDataFrame(Seq(Row(1, 2, "B")).asJava, spark.table(t).schema),
+      spark.createDataFrame(Seq(Row(1, 2, "B")).asJava, engine.table(t).schema),
       Seq("k1", "k2"))
     val v = engine.currentVersion(t)
     val got = engine.tableChanges(t, v - 1, v,
@@ -1547,7 +1550,7 @@ class EngineSpec extends SparkSpec {
     engine.compact(t, 1)
     assert(!first.exists(),
       "unreferenced compaction artifact was not reclaimed")
-    assert(spark.table(t).count() == 1 + 2 * (Engine.MaxVersions + 1))
+    assert(engine.table(t).count() == 1 + 2 * (Engine.MaxVersions + 1))
     // DROP restarts history → everything reclaimable
     engine.dropTable(t)
     assert(artifacts.isEmpty,
@@ -1822,6 +1825,10 @@ class EngineSpec extends SparkSpec {
     engine.sql(s"DELETE FROM $et WHERE id = 3")           // v2
     val ev = s"op_ev_$id"
     engine.registerTable(ev, graft.Tables.t(spark, sf, "events"))
+    val cu = s"op_cu_$id"
+    val na = s"op_na_$id"
+    engine.registerTable(cu, s"$sf/customer.parquet")
+    engine.registerTable(na, s"$sf/nation.parquet")
     val corpus = Seq(
       s"SELECT count(*) AS n, max(l_orderkey) AS hi FROM $li",
       s"SELECT g, sum(x) AS s, count(*) AS n FROM $base GROUP BY g",
@@ -1835,7 +1842,17 @@ class EngineSpec extends SparkSpec {
       s"""SELECT e.event_id, s.ts AS signup_ts
          |FROM (SELECT * FROM $ev WHERE event_type = 'error') e
          |ASOF JOIN (SELECT * FROM $ev WHERE event_type = 'signup') s
-         |ON e.user_id = s.user_id AND e.ts >= s.ts""".stripMargin)
+         |ON e.user_id = s.user_id AND e.ts >= s.ts""".stripMargin,
+      // the reference's attached-database spelling (`dh.t`)
+      s"SELECT id, m FROM dh.$et ORDER BY m",
+      s"SELECT id, m FROM dh.$et VERSION AS OF 1",
+      s"SELECT id, _change_type, _commit_version " +
+        s"FROM table_changes('dh.$et', 1)",
+      s"SELECT count(*) AS n FROM dh.$li",
+      s"SELECT l_orderkey, l_quantity FROM dh.$li " +
+        "WHERE l_quantity BETWEEN 10 AND 12",
+      s"SELECT n_name, count(*) AS n FROM dh.$cu " +
+        s"JOIN dh.$na ON c_nationkey = n_nationkey GROUP BY n_name")
     corpus.foreach { q =>
       val viaEngine = engine.sql(q)
       val viaSpark = engine.spark.sql(q)
@@ -1857,8 +1874,76 @@ class EngineSpec extends SparkSpec {
     assert(spark.sql(corpus(2)).collect().map(_.getString(0)).toSeq ==
       Seq("happy", "sad"))
     engine.dropTable(mv); engine.dropTable(base); engine.dropTable(et)
-    engine.unregisterTable(li); engine.unregisterTable(ev)
+    Seq(li, ev, cu, na).foreach(engine.unregisterTable)
   }
+
+  /** The write one-path script on table names prefixed `p`: every
+    * routed verb family. SELECTs check contents mid-script, and callers
+    * compare the tables at the end (the copy-on-write lineage makes
+    * per-statement reads slow). */
+  private def writeScript(p: String, dir: String): Seq[String] = Seq(
+    s"CREATE TYPE ${p}_mood AS ENUM ('sad', 'ok')",
+    s"CREATE TABLE ${p}_t (id INT, v INT, tag STRING)",
+    s"CREATE TABLE ${p}_s (id INT, v INT)",
+    s"INSERT INTO ${p}_t VALUES (1, 10, 'a'), (2, 20, 'b'), (3, 30, NULL)",
+    s"INSERT INTO ${p}_s VALUES (1, 100), (4, 400)",
+    s"INSERT INTO ${p}_t (id, v) VALUES (5, 50) RETURNING id, tag",
+    s"UPDATE ${p}_t SET v = v + 1 WHERE id <= 2",
+    s"UPDATE ${p}_t SET v = s.v FROM ${p}_s s WHERE ${p}_t.id = s.id " +
+      "RETURNING id, v",
+    s"DELETE FROM ${p}_t WHERE id = 5",
+    s"MERGE INTO ${p}_t AS t USING ${p}_s AS s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v + 1 " +
+      "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)",
+    s"MERGE INTO ${p}_s AS t USING (SELECT id, v * 2 AS v FROM ${p}_s) " +
+      "AS s ON t.id = s.id WHEN MATCHED THEN UPDATE SET * " +
+      "WHEN NOT MATCHED THEN INSERT *",
+    s"CREATE INDEX ${p}_ix ON ${p}_t (id)",
+    s"INSERT INTO ${p}_t VALUES (1, 7, 'c'), (6, 60, 'f') " +
+      "ON CONFLICT (id) DO UPDATE SET v = excluded.v",
+    s"INSERT OR IGNORE INTO ${p}_t VALUES (2, 0, 'x'), (7, 70, 'g')",
+    s"INSERT OR REPLACE INTO ${p}_t VALUES (2, 22, 'r')",
+    s"DELETE FROM ${p}_t USING ${p}_s s WHERE ${p}_t.id = s.id " +
+      "AND s.v > 700",
+    // the reference's attached-database spelling (`dh.t`)
+    s"INSERT INTO dh.${p}_t VALUES (9, 90, 'd')",
+    s"UPDATE dh.${p}_t SET v = v + 1 WHERE id = 9",
+    s"MERGE INTO dh.${p}_t AS t USING ${p}_s AS s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET tag = 'm'",
+    s"DELETE FROM dh.${p}_t WHERE id = 9",
+    s"SELECT * FROM ${p}_t",
+    s"OPTIMIZE ${p}_t INTO 1 FILES",
+    s"ALTER TABLE ${p}_t ADD COLUMN w INT DEFAULT 7",
+    s"ALTER TABLE ${p}_t ALTER COLUMN w SET DEFAULT 8",
+    s"INSERT INTO ${p}_t (id) VALUES (8)",
+    s"ALTER TABLE ${p}_t ALTER COLUMN w TYPE BIGINT",
+    s"ALTER TABLE ${p}_t RENAME COLUMN w TO w2",
+    s"SELECT * FROM ${p}_t",
+    s"ALTER TABLE ${p}_t DROP COLUMN w2",
+    s"CREATE MATERIALIZED VIEW ${p}_mv AS SELECT tag, sum(v) AS sv " +
+      s"FROM ${p}_t GROUP BY tag",
+    s"REFRESH MATERIALIZED VIEW ${p}_mv",
+    s"SELECT * FROM ${p}_mv",
+    s"DROP MATERIALIZED VIEW ${p}_mv",
+    s"CREATE TABLE ${p}_c AS SELECT id, v FROM ${p}_t WHERE id < 4",
+    s"ALTER TABLE ${p}_c RENAME TO ${p}_c2",
+    s"SELECT * FROM ${p}_c2",
+    s"TRUNCATE TABLE ${p}_c2",
+    s"SELECT * FROM ${p}_c2",
+    s"DROP TABLE ${p}_c2",
+    s"COPY ${p}_t TO '$dir/${p}_t.parquet'",
+    s"CREATE TABLE ${p}_back (id INT, v INT, tag STRING)",
+    s"COPY ${p}_back FROM '$dir/${p}_t.parquet'",
+    s"COPY (SELECT id FROM ${p}_t WHERE id > 1) TO '$dir/${p}_q.parquet'",
+    s"CREATE TABLE ${p}_docs (doc_id BIGINT, text STRING)",
+    s"INSERT INTO ${p}_docs VALUES (1, 'alpha beta'), (2, 'beta gamma')",
+    s"CREATE TEXT INDEX ${p}_tix ON ${p}_docs (text)",
+    s"INSERT INTO ${p}_docs VALUES (3, 'gamma gamma')",
+    s"REFRESH TEXT INDEX ${p}_tix",
+    s"OPTIMIZE TEXT INDEX ${p}_tix",
+    s"DROP INDEX ${p}_ix",
+    s"EXPORT DATABASE '$dir/${p}_db'",
+    s"DROP TYPE ${p}_mood")
 
   test("write one-path law: every routed verb family through plain " +
       "spark.sql on the serving engine's session ≡ engine.sql on a " +
@@ -1867,71 +1952,11 @@ class EngineSpec extends SparkSpec {
     val scratch = Engine.scratch(spark)
     val id = System.nanoTime()
     val dir = java.nio.file.Files.createTempDirectory("graft_w1p").toString
-    // the same script per engine, on its own table names (one session);
-    // SELECTs check contents mid-script, and the tables are compared at
-    // the end (the copy-on-write lineage makes per-statement reads slow)
-    def script(p: String): Seq[String] = Seq(
-      s"CREATE TYPE ${p}_mood AS ENUM ('sad', 'ok')",
-      s"CREATE TABLE ${p}_t (id INT, v INT, tag STRING)",
-      s"CREATE TABLE ${p}_s (id INT, v INT)",
-      s"INSERT INTO ${p}_t VALUES (1, 10, 'a'), (2, 20, 'b'), (3, 30, NULL)",
-      s"INSERT INTO ${p}_s VALUES (1, 100), (4, 400)",
-      s"INSERT INTO ${p}_t (id, v) VALUES (5, 50) RETURNING id, tag",
-      s"UPDATE ${p}_t SET v = v + 1 WHERE id <= 2",
-      s"UPDATE ${p}_t SET v = s.v FROM ${p}_s s WHERE ${p}_t.id = s.id " +
-        "RETURNING id, v",
-      s"DELETE FROM ${p}_t WHERE id = 5",
-      s"MERGE INTO ${p}_t AS t USING ${p}_s AS s ON t.id = s.id " +
-        "WHEN MATCHED THEN UPDATE SET v = s.v + 1 " +
-        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)",
-      s"MERGE INTO ${p}_s AS t USING (SELECT id, v * 2 AS v FROM ${p}_s) " +
-        "AS s ON t.id = s.id WHEN MATCHED THEN UPDATE SET * " +
-        "WHEN NOT MATCHED THEN INSERT *",
-      s"CREATE INDEX ${p}_ix ON ${p}_t (id)",
-      s"INSERT INTO ${p}_t VALUES (1, 7, 'c'), (6, 60, 'f') " +
-        "ON CONFLICT (id) DO UPDATE SET v = excluded.v",
-      s"INSERT OR IGNORE INTO ${p}_t VALUES (2, 0, 'x'), (7, 70, 'g')",
-      s"INSERT OR REPLACE INTO ${p}_t VALUES (2, 22, 'r')",
-      s"DELETE FROM ${p}_t USING ${p}_s s WHERE ${p}_t.id = s.id " +
-        "AND s.v > 700",
-      s"SELECT * FROM ${p}_t",
-      s"OPTIMIZE ${p}_t INTO 1 FILES",
-      s"ALTER TABLE ${p}_t ADD COLUMN w INT DEFAULT 7",
-      s"ALTER TABLE ${p}_t ALTER COLUMN w SET DEFAULT 8",
-      s"INSERT INTO ${p}_t (id) VALUES (8)",
-      s"ALTER TABLE ${p}_t ALTER COLUMN w TYPE BIGINT",
-      s"ALTER TABLE ${p}_t RENAME COLUMN w TO w2",
-      s"SELECT * FROM ${p}_t",
-      s"ALTER TABLE ${p}_t DROP COLUMN w2",
-      s"CREATE MATERIALIZED VIEW ${p}_mv AS SELECT tag, sum(v) AS sv " +
-        s"FROM ${p}_t GROUP BY tag",
-      s"REFRESH MATERIALIZED VIEW ${p}_mv",
-      s"SELECT * FROM ${p}_mv",
-      s"DROP MATERIALIZED VIEW ${p}_mv",
-      s"CREATE TABLE ${p}_c AS SELECT id, v FROM ${p}_t WHERE id < 4",
-      s"ALTER TABLE ${p}_c RENAME TO ${p}_c2",
-      s"SELECT * FROM ${p}_c2",
-      s"TRUNCATE TABLE ${p}_c2",
-      s"SELECT * FROM ${p}_c2",
-      s"DROP TABLE ${p}_c2",
-      s"COPY ${p}_t TO '$dir/${p}_t.parquet'",
-      s"CREATE TABLE ${p}_back (id INT, v INT, tag STRING)",
-      s"COPY ${p}_back FROM '$dir/${p}_t.parquet'",
-      s"COPY (SELECT id FROM ${p}_t WHERE id > 1) TO '$dir/${p}_q.parquet'",
-      s"CREATE TABLE ${p}_docs (doc_id BIGINT, text STRING)",
-      s"INSERT INTO ${p}_docs VALUES (1, 'alpha beta'), (2, 'beta gamma')",
-      s"CREATE TEXT INDEX ${p}_tix ON ${p}_docs (text)",
-      s"INSERT INTO ${p}_docs VALUES (3, 'gamma gamma')",
-      s"REFRESH TEXT INDEX ${p}_tix",
-      s"OPTIMIZE TEXT INDEX ${p}_tix",
-      s"DROP INDEX ${p}_ix",
-      s"EXPORT DATABASE '$dir/${p}_db'",
-      s"DROP TYPE ${p}_mood")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     val a = s"w1p_a_$id"
     val b = s"w1p_b_$id"
-    script(a).zip(script(b)).foreach { case (qa, qb) =>
+    writeScript(a, dir).zip(writeScript(b, dir)).foreach { case (qa, qb) =>
       // plain Spark on the session acts for its serving engine …
       val viaSpark = rows(spark.sql(qa))
       // … and engine.sql for the engine it is called on
@@ -1948,6 +1973,88 @@ class EngineSpec extends SparkSpec {
     Seq(serving -> a, scratch -> b).foreach { case (e, p) =>
       e.tableNames.filter(_.startsWith(p)).foreach(e.unregisterTable)
     }
+  }
+
+  test("catalog law: the write script's verb families, q159 and q197 " +
+      "leave no session temp view named like an engine table") {
+    val serving = Engine(spark)
+    val id = System.nanoTime()
+    val dir = java.nio.file.Files.createTempDirectory("graft_ntv").toString
+    val p = s"ntv_$id"
+    writeScript(p, dir).foreach(q => spark.sql(q).collect())
+    // the DmlOps queries build their tables on scratch engines
+    Seq("q159_matview_agg", "q197_export_import").foreach(q =>
+      SparkEntry.queries(q)(spark, sf).collect())
+    val engineTables = (serving.tableNames ++ Seq("graft_mv_lineitem",
+      "graft_mv_li_agg", "graft_exp_nation", "graft_exp_meta"))
+      .map(_.toLowerCase).toSet
+    val leaked = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && engineTables(t.name.toLowerCase))
+    assert(leaked.isEmpty, leaked.map(_.name).mkString(", "))
+    serving.tableNames.filter(_.startsWith(p)).foreach(serving.unregisterTable)
+  }
+
+  test("precedence law: an engine table beats a same-named warehouse " +
+      "table for reads, as it does for writes; a CTE beats the engine " +
+      "table") {
+    val engine = Engine(spark)
+    val t = s"prec_${System.nanoTime()}"
+    spark.range(100).selectExpr("id").write.saveAsTable(t)
+    try {
+      engine.registerTable(t, spark.range(10).selectExpr("id"))
+      def n(df: org.apache.spark.sql.DataFrame) = df.head().getLong(0)
+      Seq[String => org.apache.spark.sql.DataFrame](spark.sql, engine.sql)
+        .foreach { run =>
+          assert(n(run(s"SELECT count(*) FROM $t")) == 10L)
+          assert(n(run(s"WITH $t AS (SELECT 1 AS id) " +
+            s"SELECT count(*) FROM $t")) == 1L)
+        }
+      assert(spark.table(t).count() == 10L)
+      spark.sql(s"INSERT INTO $t VALUES (10)")
+      assert(engine.table(t).count() == 11L)
+      // a qualified warehouse name stays Spark's
+      assert(spark.table(s"spark_catalog.default.$t").count() == 100L)
+    } finally {
+      engine.unregisterTable(t)
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
+
+  test("DESCRIBE law: an engine table describes as its columns, " +
+      "spelled t or dh.t") {
+    val engine = Engine(spark)
+    val t = s"desc_${System.nanoTime()}"
+    engine.sql(s"CREATE TABLE $t (id INT, name STRING, amount DOUBLE)")
+    val want = Seq("[id,int,null]", "[name,string,null]",
+      "[amount,double,null]")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq
+    assert(spark.sql(s"DESCRIBE $t").columns.toSeq ==
+      Seq("col_name", "data_type", "comment"))
+    Seq(s"DESCRIBE $t", s"DESCRIBE TABLE $t", s"DESCRIBE dh.$t").foreach { q =>
+      assert(rows(spark.sql(q)) == want, q)
+      assert(rows(engine.sql(q)) == want, q)
+    }
+    engine.dropTable(t)
+  }
+
+  test("lifetime law: a scratch engine that ran CREATE, INSERT and " +
+      "SELECT is collected once nothing reaches it") {
+    def run(): java.lang.ref.WeakReference[Engine] = {
+      val e = Engine.scratch(spark)
+      val t = s"life_${System.nanoTime()}"
+      e.sql(s"CREATE TABLE $t (id INT)")
+      e.sql(s"INSERT INTO $t VALUES (1), (2)")
+      assert(e.sql(s"SELECT count(*) FROM $t").head().getLong(0) == 2L)
+      new java.lang.ref.WeakReference(e)
+    }
+    val ref = run()
+    org.apache.spark.GraftSparkBridge.waitForListeners(spark.sparkContext)
+    var tries = 0
+    while (ref.get != null && tries < 20) {
+      System.gc(); Thread.sleep(100); tries += 1
+    }
+    assert(ref.get == null, "an unreachable scratch engine stayed reachable")
   }
 
   test("Spark catalog DDL stays Spark's: warehouse tables drop and " +
@@ -2307,6 +2414,13 @@ class EngineSpec extends SparkSpec {
     Seq("postings", "doclens", "stats", "termstats").foreach(s =>
       engine.unregisterTable(s"tiedbm_$s"))
   }
+}
+
+object EngineSpec {
+  /** Tmp and aside directories an artifact rewrite left beside `path`. */
+  def swapLeftovers(path: String): Seq[String] =
+    Seq("_refresh_tmp", "_opt_tmp", "_opt_old").map(path + _)
+      .filter(new java.io.File(_).exists)
 }
 
 /** A local filesystem under a custom scheme, registered only through

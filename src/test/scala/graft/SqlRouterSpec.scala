@@ -1480,15 +1480,15 @@ class SqlRouterSpec extends SparkSpec {
     val exp = engine.explain(s"OPTIMIZE $t INTO 2 FILES").head()
     assert(exp.getAs[String]("execution_mode") == "LOCAL")
     assert(exp.getAs[String]("plan") == "routed DDL/DML")
-    assert(spark.table(t).queryExecution.analyzed.collect {
+    assert(engine.table(t).queryExecution.analyzed.collect {
       case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
     }.nonEmpty, "explain('OPTIMIZE …') must not compact")
     engine.sql(s"OPTIMIZE $t INTO 2 FILES")
-    assert(spark.table(t).queryExecution.analyzed.collect {
+    assert(engine.table(t).queryExecution.analyzed.collect {
       case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
     }.isEmpty, "OPTIMIZE did not collapse the append chain")
-    assert(spark.table(t).rdd.getNumPartitions == 2)
-    assert(spark.table(t).collect().map(_.getInt(0)).toSet == (1 to 5).toSet)
+    assert(engine.table(t).rdd.getNumPartitions == 2)
+    assert(engine.table(t).collect().map(_.getInt(0)).toSet == (1 to 5).toSet)
     intercept[IllegalArgumentException](engine.sql("OPTIMIZE no_such_tbl"))
     engine.dropTable(t)
   }
