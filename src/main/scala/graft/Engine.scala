@@ -4,7 +4,9 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.AliasIdentifier
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.analysis.ResolvedInlineTable
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan,
+  Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
@@ -12,17 +14,21 @@ import org.apache.spark.sql.types.{DayTimeIntervalType,
   YearMonthIntervalType}
 
 /** A registered materialized aggregate: partials of `measures` grouped
-  * by `dims` over managed table `base`, persisted at `path` (see
+  * by `dims` over managed table `base`, persisted at `path` with the
+  * artifact `schema` recorded at create (see
   * [[Engine.createMaterializedAggregate]] /
   * [[graft.plans.MatViewRewrite]]). */
 case class MatViewDef(name: String, base: String, dims: Seq[String],
-    measures: Seq[String], path: String)
+    measures: Seq[String], path: String,
+    schema: org.apache.spark.sql.types.StructType)
 
 /** Registry entry. The row count is lazy: DDL verbs (register/alter/
   * insert) must not scan the table — at 100 TB an ALTER TABLE ADD COLUMN
-  * must stay metadata-only. The count materializes on first classifier
-  * or introspection use, and DML verbs that already counted pass the
-  * number forward. */
+  * must stay metadata-only. Writes pass an exact count forward whenever
+  * they know one (literal inserts, MERGE and DELETE counters, UPDATE);
+  * an entry none could count materializes on first classifier or
+  * introspection use, on the caller's thread ([[Engine.sql]] counts
+  * the entries a query reads when it parks it). */
 private[graft] final class TableEntry(val df: DataFrame, known: Long = -1L,
     val appendOf: Option[(TableEntry, DataFrame)] = None,
     val sourcePath: Option[String] = None) {
@@ -189,6 +195,46 @@ class Engine private[graft] (val spark: SparkSession)
         sourcePath = sourcePath))
       versionSeq.put(name, versionSeq.getOrElse(name, -1L) + 1L)
     }
+
+  /** The deltas appended to a table since its version `stamp`, oldest
+    * first, found by walking the [[put]] append-lineage chain back from
+    * `current`: Some(Nil) when nothing was written since, None when a
+    * row-rewriting write broke the chain. Incremental refreshes (MV,
+    * text index) read only these deltas. */
+  private[graft] def appendedSince(stamp: TableEntry,
+      current: TableEntry): Option[List[DataFrame]] = {
+    @annotation.tailrec
+    def walk(e: TableEntry, acc: List[DataFrame]): Option[List[DataFrame]] =
+      if (e eq stamp) Some(acc)
+      else e.appendOf match {
+        case Some((parent, delta)) => walk(parent, delta :: acc)
+        case None => None
+      }
+    walk(current, Nil)
+  }
+
+  /** Rows of `df` when its plan states them without a scan: literal rows
+    * (VALUES, local rows), or a row-preserving projection of an
+    * engine table version whose count is known or in its parquet
+    * footers. -1 otherwise. */
+  private[graft] def rowsWithoutJob(df: DataFrame): Long = {
+    @annotation.tailrec
+    def of(p: LogicalPlan): Long = p match {
+      case l: LocalRelation => l.data.size.toLong
+      case t: ResolvedInlineTable => t.rows.size.toLong
+      case a: SubqueryAlias => a.getTagValue(Engine.TableTag) match {
+        case Some(e) if e.rowsIfKnown >= 0L => e.rowsIfKnown
+        case Some(e) => e.sourcePath
+          .flatMap(graft.operators.FooterStats.rowCount(spark, _))
+          .getOrElse(-1L)
+        case None => of(a.child)
+      }
+      case Project(_, child) => of(child)
+      case _ => -1L
+    }
+    of(castToImpl(df).queryExecution.analyzed)
+  }
+
   def table(name: String): DataFrame =
     registry.getOrElse(name, missing(name)).df
 

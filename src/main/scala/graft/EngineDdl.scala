@@ -76,14 +76,14 @@ private[graft] trait EngineDdl { self: Engine =>
     }
     val schema = StructType.fromDDL(ddl)
     put(name, spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), 0L)
   }
 
   def createTableAs(name: String, df: DataFrame): Unit = {
     if (registry.contains(name))
       throw new IllegalArgumentException(
         s"Catalog Error: Table with name \"$name\" already exists!")
-    put(name, df)
+    put(name, df, rowsWithoutJob(df))
   }
 
   def dropTable(name: String, ifExists: Boolean = false): Unit = {
@@ -95,6 +95,7 @@ private[graft] trait EngineDdl { self: Engine =>
     indexRegistry.toSeq.collect { case (ix, (t, _)) if t == name => ix }
       .foreach { ix =>
         annMeta.remove(ix); annPath.remove(ix); textMeta.remove(ix)
+        textSeen.remove(ix)
         tokenizerMeta.remove(ix); classifierMeta.remove(ix)
         servingIndexes.remove(ix)
       }
@@ -129,7 +130,7 @@ private[graft] trait EngineDdl { self: Engine =>
         typeOrigins.put((name, col), o))
       val v = default.map(lit).getOrElse(lit(null))
         .cast(Engine.normalizeType(typeDdl))
-      put(name, e.df.withColumn(col, v))
+      put(name, e.df.withColumn(col, v), e.rowsIfKnown)
     }
   }
 
@@ -142,7 +143,7 @@ private[graft] trait EngineDdl { self: Engine =>
           s"Catalog Error: Column with name $col does not exist!")
     } else {
       rekeyColumnMeta(name, col, None)
-      put(name, e.df.drop(col))
+      put(name, e.df.drop(col), e.rowsIfKnown)
     }
   }
 
@@ -153,7 +154,7 @@ private[graft] trait EngineDdl { self: Engine =>
       throw new IllegalArgumentException(
         s"Catalog Error: Column with name $from does not exist!")
     rekeyColumnMeta(name, from, Some(to))
-    put(name, e.df.withColumnRenamed(from, to))
+    put(name, e.df.withColumnRenamed(from, to), e.rowsIfKnown)
   }
 
   /** Locks the SOURCE name: a racing DML on `from` serializes with the
@@ -170,7 +171,7 @@ private[graft] trait EngineDdl { self: Engine =>
       }
     rekey(defaults); rekey(notNullCols); rekey(enumCols); rekey(typeOrigins)
     unregisterTable(from)
-    put(to, e.df)
+    put(to, e.df, e.rowsIfKnown)
   }
 
   /** ALTER COLUMN c TYPE t (catalog_utils.cpp:59-62): in-place cast
@@ -186,7 +187,7 @@ private[graft] trait EngineDdl { self: Engine =>
       case None => typeOrigins.remove((name, colName))
     }
     put(name, e.df.withColumn(colName,
-      e.df.col(colName).cast(Engine.normalizeType(typeDdl))))
+      e.df.col(colName).cast(Engine.normalizeType(typeDdl))), e.rowsIfKnown)
   }
 
   /** ALTER COLUMN c SET DEFAULT expr (catalog_utils.cpp:63-68): the

@@ -44,12 +44,16 @@ private[graft] trait EngineDml { self: Engine =>
     * coercions applied) — the rows `INSERT … RETURNING` projects. The
     * frame is a lazy plan over the PRE-swap lineage, so it stays a
     * correct snapshot of exactly what was appended even after later
-    * DML replaces the table. */
+    * DML replaces the table. A known count stays known when the delta
+    * states its rows (literal VALUES). */
   private[graft] def insertIntoReturning(name: String,
       df: DataFrame): DataFrame = withTableLock(name) {
     val e = registry.getOrElse(name, missing(name))
     val delta = coerceAndValidate(name, e, df)
-    put(name, e.df.unionByName(delta), appendDelta = Some(delta))
+    val added = rowsWithoutJob(delta)
+    put(name, e.df.unionByName(delta),
+      if (e.rowsIfKnown >= 0L && added >= 0L) e.rowsIfKnown + added else -1L,
+      appendDelta = Some(delta))
     delta
   }
 
@@ -135,10 +139,11 @@ private[graft] trait EngineDml { self: Engine =>
     * matched target rows are replaced by the single matching source row
     * — an explicit N-to-1 whole-row collapse, counted as ONE updated
     * source row. Returns (updated = matched source rows, inserted =
-    * unmatched source rows); both counters and the duplicate probe come
-    * from ONE aggregation action (group source by key, left-join the
-    * target keys that semi-join into the source's, fold to a single
-    * row) so a MERGE in a loop pays one job, not three. */
+    * unmatched source rows); both counters, the matched target rows
+    * (for the table's new count) and the duplicate probe come from ONE
+    * aggregation action (group source by key, left-join the per-key
+    * counts of the target rows that semi-join into the source's, fold
+    * to a single row) so a MERGE in a loop pays one job, not three. */
   def mergeInto(name: String, source: DataFrame,
       keys: Seq[String]): (Long, Long) = withTableLock(name) {
     require(keys.nonEmpty, "MERGE requires at least one key column")
@@ -149,36 +154,43 @@ private[graft] trait EngineDml { self: Engine =>
           s"Binder Error: key column $k not in table $name")
     }
     val src = coerceAndValidate(name, e, source)
-    val (updated, inserted) = mergeStats(e, src, keys)
+    val (updated, inserted, replaced) = mergeStats(e, src, keys)
     val untouched = e.df.join(src, keys, "left_anti")
-    put(name, untouched.unionByName(src))
+    // every source row lands; the matched target rows are replaced
+    put(name, untouched.unionByName(src),
+      if (e.rowsIfKnown >= 0L) e.rowsIfKnown - replaced + updated + inserted
+      else -1L)
     (updated, inserted)
   }
 
   /** Shared MERGE statistics: (matched source rows, unmatched source
-    * rows) from ONE aggregation action. When `forbidDupMatches`, a
-    * source with duplicate non-NULL keys raises — one target row would
-    * otherwise be updated twice (nondeterministically). */
+    * rows, matched target rows) from ONE aggregation action. When
+    * `forbidDupMatches`, a source with duplicate non-NULL keys raises —
+    * one target row would otherwise be updated twice
+    * (nondeterministically). */
   private def mergeStats(e: TableEntry, src: DataFrame, keys: Seq[String],
-      forbidDupMatches: Boolean = true): (Long, Long) = {
+      forbidDupMatches: Boolean = true): (Long, Long, Long) = {
     // keysNonNull evaluated AFTER the groupBy: all rows in a group share
     // the key values, so the group-level predicate is well-defined
     val keysNonNull = keys.map(col(_).isNotNull).reduce(_ && _)
     val perKey = src.groupBy(keys.map(src.col): _*)
       .agg(count(lit(1)).as("__n"))
-    // matched keys: the target's keys semi-joined against the source's,
-    // so the target is scanned and filtered, never shuffled whole; the
-    // distinct runs over at most the source's key count
+    // matched keys with their target row counts: the target's keys
+    // semi-joined against the source's, so the target is scanned and
+    // filtered, never shuffled whole; the grouping runs over at most
+    // the source's key count, and a duplicate target key counts every
+    // row it replaces
     val tgtKeys = e.df.select(keys.map(e.df.col): _*)
-      .join(perKey.select(keys.map(col): _*), keys, "left_semi").distinct()
-      .withColumn("__m", lit(1))
+      .join(perKey.select(keys.map(col): _*), keys, "left_semi")
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__m"))
     val stats = perKey.join(tgtKeys, keys, "left_outer").agg(
       // duplicate probe: only non-NULL-key groups can collide on a target
       max(when(keysNonNull && col("__n") > 1, col("__n"))).as("__dup"),
       coalesce(sum(when(col("__m").isNotNull, col("__n"))), lit(0L))
         .as("__upd"),
       coalesce(sum(when(col("__m").isNull, col("__n"))), lit(0L))
-        .as("__ins")).head()
+        .as("__ins"),
+      coalesce(sum(col("__m")), lit(0L)).as("__tgt")).head()
     if (forbidDupMatches && !stats.isNullAt(0)) {
       // failure path only: re-probe for the offending key value so the
       // error is actionable (mirrors the reference's constraint message)
@@ -187,7 +199,7 @@ private[graft] trait EngineDml { self: Engine =>
         "Constraint Error: MERGE source matches the same target row " +
           s"more than once (key ${bad.toSeq.init.mkString(",")})")
     }
-    (stats.getLong(1), stats.getLong(2))
+    (stats.getLong(1), stats.getLong(2), stats.getLong(3))
   }
 
   /** Column-wise MERGE — the `UPDATE SET c = expr, …` / `INSERT (cols)
@@ -260,7 +272,7 @@ private[graft] trait EngineDml { self: Engine =>
       .map { case (c, ex) => canon(c) -> ex }.toMap
     // dup-source probe only matters when matched rows are rewritten;
     // an insert-only MERGE legitimately inserts duplicate-key sources
-    val (updated, inserted) =
+    val (updated, inserted, _) =
       mergeStats(e, source, keys, forbidDupMatches = updateSet.isDefined)
     val fields = e.df.schema.fields.toIndexedSeq
     val t = e.df.alias(ta)
@@ -298,7 +310,10 @@ private[graft] trait EngineDml { self: Engine =>
     // were valid already)
     val delta = (updatedRows.toSeq ++ insertedRows).reduce(_ unionByName _)
     validate(name, e, delta)
-    put(name, insertedRows.fold(kept)(kept.unionByName(_)))
+    // matched rows are assigned in place: only the inserts add rows
+    put(name, insertedRows.fold(kept)(kept.unionByName(_)),
+      if (e.rowsIfKnown < 0L) -1L
+      else e.rowsIfKnown + (if (insertSpec.isDefined) inserted else 0L))
     ((if (updateSet.isDefined) updated else 0L,
       if (insertSpec.isDefined) inserted else 0L), delta)
   }

@@ -4,6 +4,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 /** The index surface: the metadata index registry (≈
   * duckherder_index_catalog_entry), persisted IVF / IVF-PQ ANN
@@ -33,7 +35,8 @@ private[graft] trait EngineIndexes { self: Engine =>
     invalidateTextCaches(indexName)
     invalidateAnnCaches(indexName)
     annMeta.remove(indexName); annPath.remove(indexName)
-    textMeta.remove(indexName); tokenizerMeta.remove(indexName)
+    textMeta.remove(indexName); textSeen.remove(indexName)
+    tokenizerMeta.remove(indexName)
     classifierMeta.remove(indexName); servingIndexes.remove(indexName)
     shingleMeta.remove(indexName)
     indexTail.remove(indexName)
@@ -293,7 +296,7 @@ private[graft] trait EngineIndexes { self: Engine =>
       throw new IllegalArgumentException(
         s"""Catalog Error: "$indexName" is not a persisted ANN index"""))
     requireArtifact(s"$p/cells", indexName, "ANN")
-    resortParquet(s"$p/cells", Seq("cell"))
+    resortParquet(spark.read.parquet(s"$p/cells"), s"$p/cells", Seq("cell"))
     put(s"${indexName}_cells", spark.read.parquet(s"$p/cells"))
     invalidateAnnCaches(indexName)
     indexTail.put(indexName, (0L,
@@ -305,8 +308,9 @@ private[graft] trait EngineIndexes { self: Engine =>
   /** [[optimizeAnnIndex]] for a text index: re-sorts the postings back
     * into (term, impact-bucket, doc_id) pruning order, recomputes the
     * probe metadata (termstats/impacts/stats) exactly from the
-    * postings — which also UPGRADES a pre-qi artifact and recovers a
-    * crashed refresh — and clears the refresh-dirty marker.
+    * postings — which compacts the refresh partials to one row per
+    * key, UPGRADES a pre-qi artifact and recovers a crashed refresh —
+    * and clears the refresh-dirty marker.
     *
     * Reader isolation: OPTIMIZE is a maintenance verb. The swap is
     * crash-safe (the old artifact survives under one of two names at
@@ -320,9 +324,11 @@ private[graft] trait EngineIndexes { self: Engine =>
     val (p, _, _) = textIndexMeta(indexName)
     requireArtifact(s"$p/postings", indexName, "TEXT")
     val wasDirty = isDirty(p)
-    val hasQi = spark.read.parquet(s"$p/postings").columns.contains("qi")
-    resortParquet(s"$p/postings", Seq("w", "qi", "doc_id"),
-      addQi = !hasQi)
+    val id = textIdType(indexName)
+    // qi is a pure function of (tf, dl): recomputing it is the identity
+    // on a current artifact and upgrades a pre-qi one
+    resortParquet(textPart(p, "postings", id).withColumn("qi", qiCol),
+      s"$p/postings", Seq("w", "qi", "doc_id"))
     // a crashed refresh can die between the postings append and the
     // doclens append — postings then carry batch docs doclens doesn't.
     // Recomputing termstats/impacts from the postings but leaving the
@@ -332,8 +338,8 @@ private[graft] trait EngineIndexes { self: Engine =>
     // clearing the marker: every postings doc gets its (one) dl; docs
     // with zero postings (possible only for null-text rows) keep their
     // existing doclens row.
-    if (wasDirty) reconcileDoclens(p)
-    writeTextMeta(p)
+    if (wasDirty) reconcileDoclens(p, id)
+    writeTextMeta(p, id)
     clearDirty(p)
     registerTextIndex(indexName, p)
     invalidateTextCaches(indexName)
@@ -347,44 +353,34 @@ private[graft] trait EngineIndexes { self: Engine =>
     * dl per doc — every posting of a doc carries the same value),
     * keeping any doclens-only docs (zero-posting null-text rows). Used
     * by [[optimizeTextIndex]] to repair a crashed refresh. */
-  private def reconcileDoclens(path: String): Unit = {
-    val fromPost = spark.read.parquet(s"$path/postings")
+  private def reconcileDoclens(path: String, id: DataType): Unit = {
+    val fromPost = textPart(path, "postings", id)
       .groupBy("doc_id").agg(max("dl").as("dl"))
-    val orphan = spark.read.parquet(s"$path/doclens")
+    val orphan = textPart(path, "doclens", id)
       .join(fromPost.select("doc_id"), Seq("doc_id"), "left_anti")
     writeSwapped(fromPost.unionByName(orphan), s"$path/doclens")
   }
 
-  private def resortParquet(path: String, sortCols: Seq[String],
-      addQi: Boolean = false): Unit = {
-    val base = spark.read.parquet(path)
-    val upgraded = if (addQi) base.withColumn("qi", qiCol) else base
-    writeSwapped(upgraded
+  /** Rewrite `base`, a read of the artifact at `path`, back into
+    * range-sorted pruning order. */
+  private def resortParquet(base: DataFrame, path: String,
+      sortCols: Seq[String]): Unit =
+    writeSwapped(base
       .repartitionByRange(col(sortCols.head))
       .sortWithinPartitions(sortCols.map(col): _*), path)
-  }
 
   /** Write `df` to `path` crash-safely even when the plan READS from
     * `path`: materialize to a tmp dir first, then swap the old
     * artifact ASIDE before installing — a crash or failed rename
     * between steps never leaves the durable artifact missing (worst
     * case the old artifact survives under one of the two names). */
-  private[graft] def writeSwapped(df: org.apache.spark.sql.DataFrame,
-      path: String): Unit = {
-    writeTmp(df, path)
-    installTmp(path)
-  }
-
-  private def writeTmp(df: org.apache.spark.sql.DataFrame,
-      path: String): Unit =
+  private[graft] def writeSwapped(df: DataFrame, path: String): Unit = {
+    val tmp = path + "_opt_tmp"
     // same 8 MB row groups as the build writers: OPTIMIZE must not
     // coarsen the pruning grain it exists to restore (no effect on
     // the sub-8 MB metadata files)
     df.write.mode("overwrite").option("parquet.block.size", 8L << 20)
-      .parquet(path + "_opt_tmp")
-
-  private def installTmp(path: String): Unit = {
-    val tmp = path + "_opt_tmp"
+      .parquet(tmp)
     val hp = new org.apache.hadoop.fs.Path(path)
     val old = new org.apache.hadoop.fs.Path(path + "_opt_old")
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -534,11 +530,13 @@ private[graft] trait EngineIndexes { self: Engine =>
     *    `w`, so parquet row-group min/max statistics prune a per-query
     *    term filter to the touched groups — per-query lexical cost is
     *    O(Σ df(term)), not O(corpus).
-    *  - `<idx>_doclens` (doc_id, dl): feeds exact stats recompute on
-    *    refresh (and keeps refresh ≡ rebuild bit-exact: Σdl is exact
-    *    integer arithmetic, avgdl is that sum in ONE IEEE division).
+    *  - `<idx>_doclens` (doc_id, dl): the indexed doc set a refresh
+    *    anti-joins against, and the live stats source while a crashed
+    *    refresh awaits OPTIMIZE.
     *  - `<idx>_stats` (n, avgdl): the 1-row corpus frame every scoring
-    *    probe broadcasts.
+    *    probe broadcasts, folded from the persisted stats partials (Σdl
+    *    is exact integer arithmetic and avgdl that sum in ONE IEEE
+    *    division, so refresh ≡ rebuild stays bit-exact).
     *
     * Per-term document frequency is NOT stored — it derives exactly
     * from the probed postings slice (count per term), so appends can
@@ -546,26 +544,36 @@ private[graft] trait EngineIndexes { self: Engine =>
   def buildTextIndex(indexName: String, docsTable: String, path: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
       withTableLock(indexName) {
-    val docs = table(docsTable).select(col(idCol).as("doc_id"),
-      col(textCol).as("text"))
-    writeTextIndex(docs, path, append = false)
+    val seen = registry.getOrElse(docsTable, missing(docsTable))
+    val docs = seen.df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    writePostingsAndDoclens(textPostings(docs), docs, path, append = false)
     clearDirty(path)
-    writeTextMeta(path)
-    registerTextIndex(indexName, path)
+    writeTextMeta(path, docs.schema("doc_id").dataType)
     createIndex(indexName, docsTable, Seq(textCol), ifNotExists = true)
     textMeta.put(indexName, (path, idCol, textCol))
+    textSeen.put(indexName, seen)
+    registerTextIndex(indexName, path)
     servingIndexes.put(indexName, ())
     invalidateTextCaches(indexName)
     indexTail.put(indexName, (0L, statsOf(indexName).map(_._1).getOrElse(0L)))
     ()
   }
 
+  /** The docs-table version a text index last indexed: a refresh reads
+    * only the rows appended since ([[appendedSince]]). */
+  private[graft] val textSeen = TrieMap.empty[String, TableEntry]
+
   /** Incremental refresh after new documents arrived: only docs absent
-    * from the doclens table are tokenized and appended (anti-join on
-    * doc_id — O(batch) marginal cost, the corpus is never re-exploded);
-    * stats recompute from the doclens table, which is bit-exact vs a
-    * from-scratch build (exact-integer Σdl, one division). Returns
-    * newly indexed docs. */
+    * from the doclens table are tokenized and appended (O(batch)
+    * marginal cost, the corpus is never re-exploded). The batch is the
+    * rows appended to the docs table since the index last saw it
+    * ([[appendedSince]]), anti-joined on doc_id against doclens; a
+    * row-rewriting write on the docs table breaks that chain, and then
+    * the whole table is anti-joined. The batch's metadata partials
+    * (termstats, impacts, stats) are APPENDED beside its postings, so
+    * no existing artifact file is read or rewritten; readers fold the
+    * partials with exact-integer sum/max/min, which is bit-exact vs a
+    * from-scratch build. Returns newly indexed docs. */
   def refreshTextIndex(indexName: String, docsTable: String, path: String,
       idCol: String = "doc_id", textCol: String = "text"): Long =
       withTableLock(indexName) {
@@ -588,51 +596,45 @@ private[graft] trait EngineIndexes { self: Engine =>
         s"""IO Error: a previous refresh of text index "$indexName" """ +
           "did not complete — run OPTIMIZE TEXT INDEX " +
           s"$indexName to repair the artifact before refreshing again")
-    val docs = table(docsTable).select(col(idCol).as("doc_id"),
-      col(textCol).as("text"))
+    val current = registry.getOrElse(docsTable, missing(docsTable))
+    val appended = textSeen.get(indexName).flatMap(appendedSince(_, current))
+    if (appended.contains(Nil)) return 0L
+    val rows = appended.fold(current.df)(_.reduce(_ unionByName _))
+    val docs = rows.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val known = table(s"${indexName}_doclens").select("doc_id")
-    // persist before the count: the count IS the cache
-    // materialization, so the corpus-scale anti-join runs once per
-    // refresh, not twice
+    // persist before the first action: it IS the cache materialization,
+    // so the anti-join runs once per refresh, not twice. That action is
+    // the batch's corpus-stats aggregate: the count and the stats
+    // partial in one job
     val batch = docs.join(known, Seq("doc_id"), "left_anti").persist()
     try {
-      val added = batch.count()
+      val stats = corpusStats(dlOf(batch)).head()
+      val added = stats.getLong(0)
       if (added > 0) {
-        if (spark.read.parquet(s"$path/postings").columns.contains("qi")) {
-          // marker bounds the merge→append→install window: a crash
-          // inside leaves probes on the classic live-stats path
-          // (correct), never on stale metadata; OPTIMIZE recomputes
-          // from the postings and clears it. The merge STAGES before
-          // the append (see [[mergeTextMetaToTmp]]).
-          // tokenize the batch ONCE: the persisted postings frame
-          // feeds both the metadata merge and the artifact append
-          val bp = textPostings(batch).persist()
-          try {
-            setDirty(path)
-            mergeTextMetaToTmp(path, bp, batch)
-            writePostingsAndDoclens(bp, batch, path, append = true,
-              withQi = true)
-            installTextMeta(path)
-            clearDirty(path)
-          } finally { bp.unpersist(); () }
-        } else {
-          // pre-qi artifact: append in its own layout (a mixed-schema
-          // parquet dir would corrupt read-back); OPTIMIZE upgrades it.
-          // The same postings-then-doclens crash window exists here, so
-          // the same dirty marker bounds it — a crash mid-append leaves
-          // refresh refusing until OPTIMIZE reconciles the doclens
-          // (instead of silently re-appending the batch next refresh)
+        // tokenize the batch ONCE: the persisted postings frame feeds
+        // the postings append and the metadata partials
+        val bp = textPostings(batch).persist()
+        try {
+          // the marker bounds the append window: a crash inside leaves
+          // probes on the classic live-stats path (correct), never on
+          // partial metadata; OPTIMIZE recomputes from the postings and
+          // clears it. An artifact without metadata (the pre-qi layout)
+          // gets none until OPTIMIZE writes it.
           setDirty(path)
-          writePostingsAndDoclens(textPostings(batch), batch, path,
-            append = true, withQi = false)
+          val partials =
+            if (!artifactExists(s"$path/termstats")) Nil
+            else textMetaOf(bp) :+ ("stats" -> spark.createDataFrame(
+              java.util.List.of(stats), textPartSchema("stats", LongType)))
+          writePostingsAndDoclens(bp, batch, path, append = true, partials)
           clearDirty(path)
-        }
+        } finally { bp.unpersist(); () }
         registerTextIndex(indexName, path)
         invalidateTextCaches(indexName)
         indexTail.put(indexName, indexTail.get(indexName)
           .map { case (tail, base) => (tail + added, base) }
           .getOrElse((added, 0L)))
       }
+      textSeen.put(indexName, current)
       added
     } finally { batch.unpersist(); () }
   }
@@ -672,11 +674,8 @@ private[graft] trait EngineIndexes { self: Engine =>
   /** The (w, doc_id, tf, dl, qi) postings frame for a docs batch —
     * shared by build and refresh so appended rows carry the same
     * impact buckets as built ones. */
-  private def textPostings(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      graft.functions.TokenCount.tokenCount(col("text")).cast("long")
-        .as("dl"),
+  private def textPostings(docs: DataFrame): DataFrame = {
+    val toks = docs.select(col("doc_id"), dlCol,
       explode(split(col("text"), " ")).as("w"))
     // Range-exchange BEFORE the aggregation, not after it: range
     // partitioning on `w` satisfies the (w, doc_id) clustering the
@@ -692,27 +691,58 @@ private[graft] trait EngineIndexes { self: Engine =>
       .withColumn("qi", qiCol)
   }
 
-  private def writeTextIndex(docs: org.apache.spark.sql.DataFrame,
-      path: String, append: Boolean): Unit =
-    writePostingsAndDoclens(textPostings(docs), docs, path, append,
-      withQi = true)
+  /** A document's length in tokens: the `dl` of its postings and its
+    * doclens row. */
+  private def dlCol: org.apache.spark.sql.Column =
+    graft.functions.TokenCount.tokenCount(col("text")).cast("long").as("dl")
 
-  /** One pipeline for builds and BOTH refresh branches (qi and pre-qi
-    * legacy layouts), so tokenization can never diverge between them.
-    * Range-sort on the term so row-group stats prune term probes, qi
-    * second so an impact-cut probe prunes a term's own suffix, doc_id
-    * third so a shortlist fetch prunes within (term, bucket); 32
-    * partitions on the small tiers, data-proportional via AQE. */
-  private def writePostingsAndDoclens(post: org.apache.spark.sql.DataFrame,
-      docs: org.apache.spark.sql.DataFrame, path: String,
-      append: Boolean, withQi: Boolean): Unit = {
+  private def dlOf(docs: DataFrame): DataFrame = docs.select(dlCol)
+
+  /** The schema of each part of a text-index artifact, as its writers
+    * below produce it; `id` is the docs table's id column type. Every
+    * read of an artifact part goes through [[textPart]] with it, so no
+    * read infers a schema (one Spark job per read). */
+  private def textPartSchema(part: String, id: DataType): StructType = {
+    def f(n: String, t: DataType) = StructField(n, t)
+    StructType(part match {
+      case "postings" => Seq(f("w", StringType), f("doc_id", id),
+        f("tf", LongType), f("dl", LongType), f("qi", IntegerType))
+      case "doclens" => Seq(f("doc_id", id), f("dl", LongType))
+      case "termstats" => Seq(f("w", StringType), f("df", LongType),
+        f("max_tf", LongType), f("min_dl", LongType))
+      case "impacts" => Seq(f("w", StringType), f("qi", IntegerType),
+        f("cnt", LongType))
+      case "stats" => Seq(f("n", LongType), f("sumdl", LongType))
+    })
+  }
+
+  /** One part of the text-index artifact at `path`, read with its
+    * [[textPartSchema]]; the metadata parts carry no doc id. */
+  private def textPart(path: String, part: String,
+      id: DataType = LongType): DataFrame =
+    spark.read.schema(textPartSchema(part, id)).parquet(s"$path/$part")
+
+  /** The docs id column type of text index `indexName`. */
+  private def textIdType(indexName: String): DataType = {
+    val (_, idCol, _) = textIndexMeta(indexName)
+    table(indexTable(indexName)).select(col(idCol)).schema.head.dataType
+  }
+
+  /** One pipeline for builds and refreshes, so tokenization can never
+    * diverge between them. Range-sort on the term so row-group stats
+    * prune term probes, qi second so an impact-cut probe prunes a
+    * term's own suffix, doc_id third so a shortlist fetch prunes within
+    * (term, bucket); 32 partitions on the small tiers, data-proportional
+    * via AQE. `partials` are a refresh's metadata partials, appended to
+    * the artifact parts they name. */
+  private def writePostingsAndDoclens(post: DataFrame, docs: DataFrame,
+      path: String, append: Boolean,
+      partials: Seq[(String, DataFrame)] = Nil): Unit = {
     val mode = if (append) "append" else "overwrite"
-    val (p, sorts) =
-      if (withQi) (post, Seq("w", "qi", "doc_id")) else (post.drop("qi"), Seq("w"))
     val writePostings = () => {
       // [[textPostings]] already range-partitioned on w — only the
       // within-partition sort remains before the write
-      p.sortWithinPartitions(sorts.map(col): _*)
+      post.sortWithinPartitions("w", "qi", "doc_id")
         .write.mode(mode)
         // 8 MB row groups (vs the 128 MB default): the probes' (w, qi)
         // min/max pruning works at row-group grain, and a sf100 term
@@ -723,24 +753,33 @@ private[graft] trait EngineIndexes { self: Engine =>
         .parquet(s"$path/postings")
     }
     val writeDoclens = () => {
-      docs.select(col("doc_id"),
-          graft.functions.TokenCount.tokenCount(col("text")).cast("long")
-            .as("dl"))
-        .write.mode(mode).parquet(s"$path/doclens")
+      docs.select(col("doc_id"), dlCol).write.mode(mode)
+        .parquet(s"$path/doclens")
     }
     // A fresh build overlaps the two independent writes (different
-    // output dirs; a failed build registers nothing). A REFRESH must
-    // keep postings-before-doclens: the dirty-marker recovery
-    // (reconcileDoclens) assumes the postings doc set is always a
-    // superset of the appended doclens docs — parallel appends could
-    // crash with doclens ahead of postings and the batch would never
-    // re-append. sf0.1 A/B (StagesProbe2): build 1.47 → 1.31 s.
-    if (append) { writePostings(); writeDoclens() }
-    else graft.operators.NamedQuery.inParallel(writePostings, writeDoclens)
+    // output dirs; a failed build registers nothing). A REFRESH appends
+    // the postings first: that write materializes the persisted batch
+    // postings, so the metadata partials planned after it see their
+    // range partitioning and aggregate without an exchange of their own.
+    // The partials then append together (different output dirs; the
+    // dirty marker covers a crash in any of them, and OPTIMIZE
+    // recomputes the metadata from the postings). Doclens goes LAST:
+    // the recovery (reconcileDoclens) assumes the postings doc set is
+    // always a superset of the appended doclens docs — a doclens append
+    // that landed before a crashed postings append would hide the batch
+    // from the next refresh's anti-join, and it would never re-append.
+    // sf0.1 A/B (StagesProbe2): build 1.47 → 1.31 s.
+    if (append) {
+      writePostings()
+      graft.operators.NamedQuery.inParallel(partials.map { case (part, df) =>
+        () => df.write.mode("append").parquet(s"$path/$part") }: _*)
+      writeDoclens()
+    } else graft.operators.NamedQuery.inParallel(writePostings, writeDoclens)
   }
 
   /** Probe-serving metadata, persisted beside the postings so a probe
-    * never runs corpus-sized jobs for it (VERDICT r16 #1):
+    * never runs corpus-sized jobs for it (VERDICT r16 #1), as (part,
+    * frame) over postings `post` (and [[corpusStats]] for `stats`):
     *  - `termstats` (w, df, max_tf, min_dl): exact per-term document
     *    frequency (deletes the probe's groupBy-df job) and the
     *    monotone bound inputs for the term's maximum possible score.
@@ -749,70 +788,36 @@ private[graft] trait EngineIndexes { self: Engine =>
     *  - `stats` (n, sumdl): exact-integer corpus stats; avgdl is ONE
     *    IEEE division of them, bit-equal to avg(dl) over doclens
     *    (every partial sum of longs < 2^53 is exact in a double).
-    * All three are derivable from the postings, so a crashed refresh
-    * recovers via OPTIMIZE (full recompute); [[refreshTextIndex]]
-    * merges them at O(vocab), never O(corpus). */
-  private def writeTextMeta(path: String): Unit = {
-    val post = spark.read.parquet(s"$path/postings")
-    // three independent aggregate+swap writes over the already-written
-    // postings/doclens, overlapped (guide §2.6): disjoint output dirs,
-    // and a crash mid-way leaves the same partially-swapped metadata a
-    // sequential crash would — OPTIMIZE recomputes all three and the
-    // dirty marker (set by the callers that need it) keeps probes on
-    // the classic live-stats path. sf0.1: 1.10 s sequential → ~0.5 s.
-    graft.operators.NamedQuery.inParallel(
-      () => writeSwapped(post.repartitionByRange(col("w"))
-        .groupBy("w").agg(count(lit(1)).as("df"),
-          max("tf").as("max_tf"), min("dl").as("min_dl"))
-        .sortWithinPartitions("w"),
-        s"$path/termstats"),
-      () => writeSwapped(post.repartitionByRange(col("w"))
-        .groupBy("w", "qi").agg(count(lit(1)).as("cnt"))
-        .sortWithinPartitions("w", "qi"),
-        s"$path/impacts"),
-      () => writeSwapped(spark.read.parquet(s"$path/doclens")
-        .agg(count(lit(1)).as("n"), sum("dl").as("sumdl")).coalesce(1),
-        s"$path/stats"))
-  }
+    * A build writes them over the whole artifact; a refresh appends
+    * them over its batch as PARTIALS, which every reader folds
+    * ([[foldedTermstats]], [[statsOf]], [[termMetasOf]]) with
+    * exact-integer sum/max/min — associative, so the fold is bit-equal
+    * to a from-scratch compute. All three are derivable from the
+    * postings, so a crashed refresh recovers via OPTIMIZE (full
+    * recompute, which also compacts the partials to one row per key). */
+  private def textMetaOf(post: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "termstats" -> post.groupBy("w").agg(count(lit(1)).as("df"),
+      max("tf").as("max_tf"), min("dl").as("min_dl"))
+      .sortWithinPartitions("w"),
+    "impacts" -> post.groupBy("w", "qi").agg(count(lit(1)).as("cnt"))
+      .sortWithinPartitions("w", "qi"))
 
-  /** O(vocab) metadata merge for a refresh batch: batch aggregates
-    * union-merge into the persisted files with exact-integer
-    * sum/max/min — associative, so the merged metadata is bit-equal to
-    * a from-scratch [[writeTextMeta]] over the grown corpus.
-    *
-    * The merge MATERIALIZES (to the `_opt_tmp` staging dirs) BEFORE the
-    * caller appends the batch to postings/doclens: the batch frame is
-    * an anti-join against the live doclens, and Spark's recache-by-path
-    * on the append would otherwise silently recompute it as EMPTY
-    * mid-merge. [[installTextMeta]] swaps the staged files in after the
-    * append. */
-  private def mergeTextMetaToTmp(path: String,
-      bp: org.apache.spark.sql.DataFrame,
-      batchDocs: org.apache.spark.sql.DataFrame): Unit = {
-    val ts = spark.read.parquet(s"$path/termstats").unionByName(
-        bp.groupBy("w").agg(count(lit(1)).as("df"),
-          max("tf").as("max_tf"), min("dl").as("min_dl")))
-      .groupBy("w").agg(sum("df").as("df"), max("max_tf").as("max_tf"),
-        min("min_dl").as("min_dl"))
-    writeTmp(ts.repartitionByRange(col("w")).sortWithinPartitions("w"),
-      s"$path/termstats")
-    val im = spark.read.parquet(s"$path/impacts").unionByName(
-        bp.groupBy("w", "qi").agg(count(lit(1)).as("cnt")))
-      .groupBy("w", "qi").agg(sum("cnt").as("cnt"))
-    writeTmp(im.repartitionByRange(col("w"))
-      .sortWithinPartitions("w", "qi"), s"$path/impacts")
-    val bst = batchDocs.select(
-        graft.functions.TokenCount.tokenCount(col("text")).cast("long")
-          .as("dl"))
-      .agg(count(lit(1)).as("n"), sum("dl").as("sumdl"))
-    writeTmp(spark.read.parquet(s"$path/stats").unionByName(bst)
-      .agg(sum("n").as("n"), sum("sumdl").as("sumdl")).coalesce(1),
-      s"$path/stats")
-  }
+  /** The one-row `stats` (n, Σdl) of document lengths `lens`. */
+  private def corpusStats(lens: DataFrame): DataFrame =
+    lens.agg(count(lit(1)).as("n"), sum("dl").as("sumdl"))
 
-  private def installTextMeta(path: String): Unit =
-    Seq("termstats", "impacts", "stats")
-      .foreach(s => installTmp(s"$path/$s"))
+  /** Full recompute of the metadata from the written postings/doclens
+    * (build and OPTIMIZE): three independent aggregate+swap writes,
+    * overlapped (guide §2.6): disjoint output dirs, and a crash mid-way
+    * leaves the same partially-swapped metadata a sequential crash
+    * would — OPTIMIZE recomputes all three and the dirty marker (set by
+    * the callers that need it) keeps probes on the classic live-stats
+    * path. sf0.1: 1.10 s sequential → ~0.5 s. */
+  private def writeTextMeta(path: String, id: DataType): Unit =
+    graft.operators.NamedQuery.inParallel((textMetaOf(
+        textPart(path, "postings", id).repartitionByRange(col("w"))) :+
+      ("stats" -> corpusStats(textPart(path, "doclens", id)).coalesce(1)))
+      .map { case (part, df) => () => writeSwapped(df, s"$path/$part") }: _*)
 
   private[graft] def hadoopFs(path: String) = {
     val hp = new org.apache.hadoop.fs.Path(path)
@@ -823,7 +828,7 @@ private[graft] trait EngineIndexes { self: Engine =>
     val (fs, hp) = hadoopFs(path); fs.exists(hp)
   }
 
-  /** A refresh appends postings and THEN merges the metadata; the
+  /** A refresh appends postings, metadata partials and doclens; the
     * marker bounds the window where a crash leaves them inconsistent.
     * While it exists, probes take the classic live-stats path (always
     * correct) and [[fastBm25]] declines; OPTIMIZE recomputes the
@@ -840,24 +845,33 @@ private[graft] trait EngineIndexes { self: Engine =>
     artifactExists(dirtyMarker(path))
 
   private[graft] def registerTextIndex(indexName: String, path: String): Unit = {
-    put(s"${indexName}_postings", spark.read.parquet(s"$path/postings"))
-    put(s"${indexName}_doclens", spark.read.parquet(s"$path/doclens"))
-    // corpus stats serve from the persisted 1-row file when the
-    // artifact carries one (and is clean): n and Σdl are exact longs,
+    val id = textIdType(indexName)
+    put(s"${indexName}_postings", textPart(path, "postings", id))
+    put(s"${indexName}_doclens", textPart(path, "doclens", id))
+    // corpus stats serve from the persisted stats partials when the
+    // artifact carries them (and is clean): n and Σdl are exact longs,
     // avgdl their single IEEE division — value-equal to avg(dl) over
     // doclens, without the per-probe corpus-sized doclens job
     if (artifactExists(s"$path/stats") && !isDirty(path)) {
-      put(s"${indexName}_stats", spark.read.parquet(s"$path/stats")
+      put(s"${indexName}_stats", foldedStats(path)
         .select(col("n"), (col("sumdl") / col("n")).as("avgdl")))
-      put(s"${indexName}_termstats",
-        spark.read.parquet(s"$path/termstats"))
+      put(s"${indexName}_termstats", foldedTermstats(path))
     } else {
-      put(s"${indexName}_stats",
-        spark.read.parquet(s"$path/doclens")
-          .agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")))
+      put(s"${indexName}_stats", textPart(path, "doclens", id)
+        .agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")))
       unregisterTable(s"${indexName}_termstats")
     }
   }
+
+  /** The artifact's metadata with its refresh partials folded to one
+    * row per key: the exact-integer sum/max/min a from-scratch
+    * [[textMetaOf]] computes. */
+  private[graft] def foldedTermstats(path: String): DataFrame =
+    textPart(path, "termstats").groupBy("w").agg(sum("df").as("df"),
+      max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
+
+  private[graft] def foldedStats(path: String): DataFrame =
+    textPart(path, "stats").agg(sum("n").as("n"), sum("sumdl").as("sumdl"))
 
   /** Probe a [[buildTextIndex]] artifact: BM25 top-k for `terms`
     * (Robertson k1/b defaults, the q165 formulation). The postings scan
@@ -1036,7 +1050,7 @@ private[graft] trait EngineIndexes { self: Engine =>
 
   // ---- BM25 fast probe: persisted metadata + impact-ordered cut ---------
 
-  private case class TermMeta(df: Long, maxTf: Long, minDl: Long,
+  private[graft] case class TermMeta(df: Long, maxTf: Long, minDl: Long,
       hist: Array[(Int, Long)])
 
   /** Per-(index, term) metadata and per-index corpus stats, collected
@@ -1057,36 +1071,43 @@ private[graft] trait EngineIndexes { self: Engine =>
       .foreach(textFracCache.remove)
   }
 
-  /** (n, Σdl) from the persisted stats file — exact longs. None for
-    * legacy artifacts, dirty artifacts, or a non-text index. */
+  /** (n, Σdl) summed over the persisted stats partials — exact longs.
+    * None for legacy artifacts, dirty artifacts, or a non-text index. */
   private[graft] def statsOf(indexName: String): Option[(Long, Long)] =
     textStatsCache.get(indexName).orElse {
       textMeta.get(indexName).flatMap { case (p, _, _) =>
         if (!artifactExists(s"$p/stats") || isDirty(p)) None
-        else spark.read.parquet(s"$p/stats").collect().headOption.map { r =>
-          val v = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-          textStatsCache.put(indexName, v)
-          v
+        else {
+          val rows = textPart(p, "stats").collect()
+          Option.when(rows.nonEmpty) {
+            val v = (rows.map(_.getLong(0)).sum,
+              rows.map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum)
+            textStatsCache.put(indexName, v)
+            v
+          }
         }
       }
     }
 
-  private def termMetasOf(indexName: String, path: String,
+  private[graft] def termMetasOf(indexName: String, path: String,
       terms: Seq[String]): Map[String, Option[TermMeta]] = {
     val missing = terms.distinct
       .filterNot(t => textTermCache.contains((indexName, t)))
     if (missing.nonEmpty) {
       // two row-group-pruned lookups over vocab-sized artifacts (both
-      // term-sorted), collected driver-side: ≤ |terms|·(1 + buckets)
-      val ts = spark.read.parquet(s"$path/termstats")
+      // term-sorted per partial), collected and folded driver-side:
+      // ≤ |terms|·(1 + buckets) rows per partial
+      val ts = textPart(path, "termstats")
         .filter(col("w").isin(missing: _*)).collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      val hs = spark.read.parquet(s"$path/impacts")
+        .groupBy(_.getString(0))
+        .map { case (w, rows) => w -> ((rows.map(_.getLong(1)).sum,
+          rows.map(_.getLong(2)).max, rows.map(_.getLong(3)).min)) }
+      val hs = textPart(path, "impacts")
         .filter(col("w").isin(missing: _*)).collect()
         .groupBy(_.getString(0))
         .map { case (w, rows) =>
-          w -> rows.map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1) }
+          w -> rows.groupMapReduce(_.getInt(1))(_.getLong(2))(_ + _)
+            .toArray.sortBy(_._1) }
       missing.foreach { t =>
         textTermCache.put((indexName, t),
           ts.get(t).map { case (df, mtf, mdl) =>

@@ -30,10 +30,12 @@ private[graft] trait EngineSqlStats { self: Engine =>
   private val history = new ConcurrentLinkedQueue[(String, Long)]()
 
   /** Records an action's execution of a query this engine's [[sql]]
-    * returned ([[EngineSqlStats.park]]). */
+    * returned ([[EngineSqlStats.park]]); `rows` is its [[scanRows]],
+    * counted when it was parked. Runs on the listener bus, so it starts
+    * no job. */
   private[graft] def recordExecution(sqlText: String, qe: QueryExecution,
-      durNs: Long): Unit = {
-    val (mode, merge, tasks) = classify(qe)
+      rows: Long, durNs: Long): Unit = {
+    val (mode, merge, tasks) = classify(qe, rows)
     stats.add(StatRow(sqlText, mode, merge, durNs / 1000000L,
       math.min(workerCount.toLong, tasks), tasks,
       new Timestamp(System.currentTimeMillis() - durNs / 1000000L)))
@@ -41,8 +43,8 @@ private[graft] trait EngineSqlStats { self: Engine =>
   }
 
   /** (execution mode, merge strategy, tasks): recorded and explained. */
-  private def classify(qe: QueryExecution): (String, String, Long) = {
-    val rows = scanRows(qe)
+  private def classify(qe: QueryExecution,
+      rows: Long): (String, String, Long) = {
     val mode = PlanClassifier.executionMode(qe, rows, workerCount)
     (mode, PlanClassifier.mergeStrategy(qe),
       PlanClassifier.numTasks(mode, rows, workerCount))
@@ -51,8 +53,9 @@ private[graft] trait EngineSqlStats { self: Engine =>
   /** Largest registered-table cardinality referenced by the plan — the
     * analog of the reference's table-scan cardinality estimate
     * (query_plan_analyzer.cpp:58-71): the entries the tagged aliases of
-    * its engine tables read ([[Engine.relation]]). */
-  private def scanRows(qe: QueryExecution): Long =
+    * its engine tables read ([[Engine.relation]]). An entry no write
+    * could count counts here, once, on the caller's thread. */
+  private[graft] def scanRows(qe: QueryExecution): Long =
     qe.analyzed.collect {
       case a: SubqueryAlias => a.getTagValue(Engine.TableTag)
     }.flatten.map(_.rows).maxOption.getOrElse(0L)
@@ -131,7 +134,7 @@ private[graft] trait EngineSqlStats { self: Engine =>
       case _: GraftCommand => (q, "LOCAL", "CONCATENATE", 1L, "routed DDL/DML")
       case parsed =>
         val qe = castToImpl(spark).sessionState.executePlan(parsed)
-        val (mode, merge, tasks) = classify(qe)
+        val (mode, merge, tasks) = classify(qe, scanRows(qe))
         (q, mode, merge, tasks, qe.optimizedPlan.toString)
     }
     Seq(row).toDF("sql", "execution_mode", "merge_strategy", "num_tasks",
@@ -142,7 +145,7 @@ private[graft] trait EngineSqlStats { self: Engine =>
 private[graft] object EngineSqlStats {
 
   private final class Parked(val engine: WeakReference[Engine],
-      val sql: String, val qe: QueryExecution)
+      val sql: String, val qe: QueryExecution, val rows: Long)
 
   /** One per session: attributes action durations back to the queries
     * engines' `sql` returned. Stats are per-execution, like the
@@ -164,7 +167,7 @@ private[graft] object EngineSqlStats {
         subtreeHashes.iterator
           .flatMap(h => pending.remove(h).iterator).take(1).flatten
           .foreach(p => Option(p.engine.get)
-            .foreach(_.recordExecution(p.sql, p.qe, durationNs)))
+            .foreach(_.recordExecution(p.sql, p.qe, p.rows, durationNs)))
       }
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
@@ -173,7 +176,10 @@ private[graft] object EngineSqlStats {
   private val listeners = TrieMap.empty[SparkSession, Listener]
 
   /** Parks `e`'s query `q` until an action executes it; one entry per
-    * engine and plan. */
+    * engine and plan. The row counts the classifier needs are taken
+    * here, on the caller's thread: a count on the listener bus would
+    * race the caller's next statement (and fail once the session
+    * stops). */
   private[graft] def park(e: Engine, q: String, qe: QueryExecution): Unit = {
     val l = listeners.synchronized {
       listeners.getOrElseUpdate(e.spark, {
@@ -182,7 +188,7 @@ private[graft] object EngineSqlStats {
         l
       })
     }
-    val p = new Parked(new WeakReference(e), q, qe)
+    val p = new Parked(new WeakReference(e), q, qe, e.scanRows(qe))
     l.pending.updateWith(qe.analyzed.semanticHash().toLong) { ps =>
       Some(p :: ps.getOrElse(Nil).filterNot(_.engine.get eq e))
     }

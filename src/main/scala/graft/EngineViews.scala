@@ -27,7 +27,8 @@ private[graft] trait EngineViews { self: Engine =>
     * ([[graft.plans.MatViewRewrite]]) — at 100 TB the fact scan+shuffle
     * collapses to a dims-cardinality parquet scan. The MV is built from
     * the registry plan directly (no temp-view alias), so its own build
-    * and refresh can never match the rewrite pattern. */
+    * and refresh can never match the rewrite pattern. The artifact
+    * schema is recorded here, so no later read infers it. */
   def createMaterializedAggregate(name: String, base: String,
       dims: Seq[String], measures: Seq[String], path: String): Unit =
     withTableLock(name) {
@@ -41,16 +42,43 @@ private[graft] trait EngineViews { self: Engine =>
       if (overlap.nonEmpty)
         throw new IllegalArgumentException("Binder Error: a column " +
           s"cannot be both dimension and measure: ${overlap.mkString(", ")}")
-      val aggs = measures.flatMap(mcol => Seq(
-        sum(col(mcol)).as(s"sum_$mcol"), min(col(mcol)).as(s"min_$mcol"),
-        max(col(mcol)).as(s"max_$mcol"),
-        count(col(mcol)).as(s"cnt_$mcol"))) :+ count(lit(1)).as("n_rows")
-      entry.df.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
-        .write.mode("overwrite").parquet(path)
-      put(name, spark.read.parquet(path))
-      matViews.put(name, (MatViewDef(name, base, dims, measures, path),
-        entry))
+      val parts = matViewPartials(entry.df, dims, measures)
+      parts.write.mode("overwrite").parquet(path)
+      val d = MatViewDef(name, base, dims, measures, path, parts.schema)
+      registerMatView(d)
+      matViews.put(name, (d, entry))
     }
+
+  /** One partial row per `dims` group of `rows`: the artifact's row
+    * shape, for the build and for every refresh delta. */
+  private def matViewPartials(rows: DataFrame, dims: Seq[String],
+      measures: Seq[String]): DataFrame = {
+    val aggs = measures.flatMap(m => Seq(
+      sum(col(m)).as(s"sum_$m"), min(col(m)).as(s"min_$m"),
+      max(col(m)).as(s"max_$m"),
+      count(col(m)).as(s"cnt_$m"))) :+ count(lit(1)).as("n_rows")
+    rows.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Register MV `d` as the fold of the partials under its path (a build
+    * writes one per group, each incremental refresh appends its delta's):
+    * sums and counts add, mins and maxes combine, and the result is cast
+    * back to the artifact schema — re-summing a sum widens decimals, and
+    * the rewrite must keep producing the direct plan's result types. */
+  private def registerMatView(d: MatViewDef): Unit = {
+    val fold = d.measures.flatMap(m => Seq(
+      sum(col(s"sum_$m")).as(s"sum_$m"),
+      min(col(s"min_$m")).as(s"min_$m"),
+      max(col(s"max_$m")).as(s"max_$m"),
+      sum(col(s"cnt_$m")).as(s"cnt_$m"))) :+
+      sum(col("n_rows")).as("n_rows")
+    put(d.name, spark.read.schema(d.schema).parquet(d.path)
+      .groupBy(d.dims.map(col): _*).agg(fold.head, fold.tail: _*)
+      .select(castTo(d.schema): _*))
+  }
+
+  private def castTo(schema: org.apache.spark.sql.types.StructType) =
+    schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name))
 
   /** Storage path for SQL-created MVs (`CREATE MATERIALIZED VIEW`) —
     * per-JVM so concurrent benches never collide, same discipline as
@@ -75,14 +103,15 @@ private[graft] trait EngineViews { self: Engine =>
   /** Bring an MV up to the CURRENT base state and re-arm the rewrite
     * (the daily-ingest cadence: DML lands, MVs refresh). INCREMENTAL
     * when every base mutation since the MV's stamp was a pure INSERT
-    * (the [[put]] append-lineage chain reaches the stamp): the deltas'
-    * partials merge into the stored artifact — sums/counts add,
-    * mins/maxes combine — so the refresh scans the DELTA plus the
-    * dims-cardinality artifact, never the corpus. At 100 TB with a
-    * daily append that is the difference between a corpus rescan and a
-    * seconds-long merge. Any row-rewriting verb (DELETE/MERGE/ALTER)
+    * ([[appendedSince]] reaches the stamp): the deltas' partials are
+    * APPENDED to the artifact and the MV re-registers as the fold of
+    * all partials, so the refresh reads the DELTA only — never the
+    * corpus, never the existing artifact files. At 100 TB with a daily
+    * append that is the difference between a corpus rescan and a
+    * delta-sized write. Any row-rewriting verb (DELETE/MERGE/ALTER)
     * breaks the chain and the refresh falls back to a full rebuild
-    * (min/max are not differentiable under deletion).
+    * (min/max are not differentiable under deletion), which also
+    * compacts the partials to one row per group.
     * @return the path taken: "noop" | "incremental" | "rebuild" */
   def refreshMaterializedAggregate(name: String): String = {
     val (d, stamp) = matViews.getOrElse(name,
@@ -90,39 +119,12 @@ private[graft] trait EngineViews { self: Engine =>
         s"Catalog Error: materialized aggregate $name does not exist"))
     val current = registry.getOrElse(d.base, missing(d.base))
     if (current eq stamp) return "noop"
-    @annotation.tailrec
-    def deltasBackTo(e: TableEntry, acc: List[DataFrame])
-        : Option[List[DataFrame]] =
-      if (e eq stamp) Some(acc)
-      else e.appendOf match {
-        case Some((parent, delta)) => deltasBackTo(parent, delta :: acc)
-        case None => None
-      }
-    deltasBackTo(current, Nil) match {
+    appendedSince(stamp, current) match {
       case Some(deltas) => withTableLock(name) {
-        val deltaDf = deltas.reduce(_ unionByName _)
-        val aggs = d.measures.flatMap(m => Seq(
-          sum(col(m)).as(s"sum_$m"), min(col(m)).as(s"min_$m"),
-          max(col(m)).as(s"max_$m"),
-          count(col(m)).as(s"cnt_$m"))) :+ count(lit(1)).as("n_rows")
-        val deltaPart = deltaDf.groupBy(d.dims.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-        val old = spark.read.parquet(d.path)
-        val merge = d.measures.flatMap(m => Seq(
-          sum(col(s"sum_$m")).as(s"sum_$m"),
-          min(col(s"min_$m")).as(s"min_$m"),
-          max(col(s"max_$m")).as(s"max_$m"),
-          sum(col(s"cnt_$m")).as(s"cnt_$m"))) :+
-          sum(col("n_rows")).as("n_rows")
-        // cast back to the artifact's exact schema: re-summing a sum
-        // widens decimals, and the rewrite must keep producing the same
-        // result types as the direct plan
-        val merged = old.unionByName(deltaPart)
-          .groupBy(d.dims.map(col): _*).agg(merge.head, merge.tail: _*)
-          .select(old.schema.fields.toIndexedSeq
-            .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-        writeSwapped(merged, d.path)
-        put(name, spark.read.parquet(d.path))
+        matViewPartials(deltas.reduce(_ unionByName _), d.dims, d.measures)
+          .select(castTo(d.schema): _*)
+          .write.mode("append").parquet(d.path)
+        registerMatView(d)
         matViews.put(name, (d, current))
         "incremental"
       }

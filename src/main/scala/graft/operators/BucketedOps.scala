@@ -642,9 +642,19 @@ object BucketedOps {
     // the fixed grid is also near-balanced wherever the sampled grid
     // was.
     writeSortedDirected(ev.withColumn("z", zOf(b)), name, col("z"),
-      shiftright(col("z"), 32 - Integer.numberOfTrailingZeros(clusterFiles)),
-      clusterFiles)
+      zCell(col("z"), clusterFiles), clusterFiles)
     b
+  }
+
+  /** The file of 32-bit z-value `z` among `cells` files: its top
+    * log2(cells) bits. Only a power of two splits the z range into
+    * `cells` equal cells — any other count would leave ids past the
+    * last file or files no id names, so it is refused. */
+  private[graft] def zCell(z: org.apache.spark.sql.Column,
+      cells: Int): org.apache.spark.sql.Column = {
+    require(Integer.bitCount(cells) == 1,
+      s"Z-order cell count must be a power of two, got $cells")
+    shiftright(z, 32 - Integer.numberOfTrailingZeros(cells))
   }
 
   private val memoZ = scala.collection.concurrent.TrieMap

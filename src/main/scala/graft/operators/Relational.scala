@@ -68,10 +68,13 @@ object NamedQuery {
     * sequentially; a later job's tasks back-fill executors freed by an
     * earlier job's straggler tail). Only for tasks with independent
     * inputs and disjoint output paths, and only where a partial failure
-    * has no recovery contract tied to ordering (fresh builds — never
-    * the refresh/append paths, whose dirty-marker recovery assumes
-    * postings-before-doclens ordering). The pool is task-sized, every
-    * task runs to completion before return, first failure propagates. */
+    * has no recovery contract tied to ordering: fresh builds, and a
+    * text-index refresh's metadata-partial appends (the dirty marker
+    * covers a crash in any of them, and OPTIMIZE recomputes the
+    * metadata from the postings) — but never its doclens append, which
+    * must land after the postings because the crash recovery assumes
+    * the postings doc set is a superset of the doclens'. The pool is task-sized, every task runs to
+    * completion before return, first failure propagates. */
   def inParallel(tasks: (() => Unit)*): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)

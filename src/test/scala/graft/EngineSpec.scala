@@ -333,6 +333,311 @@ class EngineSpec extends SparkSpec {
     engine.unregisterTable("shref"); engine.unregisterTable("shref_full")
   }
 
+  /** The impacts partials under a text-index artifact, folded to one row
+    * per (w, qi) — the reference for the fold the probe does on the
+    * driver. */
+  private def foldedImpacts(path: String): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(s"$path/impacts").groupBy("w", "qi")
+      .agg(sum("cnt").as("cnt"))
+
+  /** Sorted string rendering of a frame's rows — bit-level equality of
+    * doubles and longs without a tolerance. */
+  private def rowStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+
+  /** Parquet files an execution reads: its file relations, and those of
+    * any cached frame it scans. */
+  private def inputFilesOf(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] =
+    p.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.inputFiles.toSeq
+          case _ => Nil
+        }
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        inputFilesOf(m.cacheBuilder.logicalPlan)
+    }.flatten
+
+  /** Runs `body` and returns (its input files, the jobs it started that
+    * infer a parquet schema, all jobs it started), listener buses
+    * drained. A schema-inference job is the one `spark.read.parquet`
+    * starts without a user schema: its stages' call site is the
+    * reader's `parquet` method. */
+  private def watched(body: => Unit): (Seq[String], Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val files = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val inference = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        inputFilesOf(qe.optimizedPlan).foreach(files.add)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sl = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (js.stageInfos.exists(_.details.contains("DataFrameReader.parquet")))
+          inference.incrementAndGet()
+      }
+    }
+    org.apache.spark.GraftSparkBridge.waitForListeners(spark.sparkContext)
+    spark.listenerManager.register(ql)
+    spark.sparkContext.addSparkListener(sl)
+    try {
+      body
+      org.apache.spark.GraftSparkBridge.waitForListeners(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(sl)
+      spark.listenerManager.unregister(ql)
+    }
+    import scala.jdk.CollectionConverters._
+    (files.asScala.toSeq, inference.get, jobs.get)
+  }
+
+  /** The parquet files now under `dirs`, as paths without a scheme. */
+  private def filesUnder(dirs: String*): Set[String] =
+    dirs.flatMap { d =>
+      Option(new java.io.File(d).listFiles).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
+    }.toSet
+
+  private def pathOnly(f: String): String =
+    new org.apache.hadoop.fs.Path(f).toUri.getPath
+
+  test("text index: three refreshes with no OPTIMIZE ≡ a rebuild — " +
+      "postings, doclens, folded metadata, probe inputs and probes " +
+      "bit-equal; OPTIMIZE compacts each metadata key to one row") {
+    val t = s"threeref_docs_${System.nanoTime()}"
+    engine.registerTable(t, Tables.t(spark, sf, "documents")
+      .select("doc_id", "text"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_threeref")
+      .toString
+    engine.buildTextIndex("threeref", t, s"$dir/index")
+    (1 to 3).foreach { i =>
+      // copies of existing documents (their terms' partials overlap the
+      // build's) plus one document with a term the corpus lacks
+      val copies = engine.table(t).orderBy("doc_id").limit(2 * i)
+        .select((col("doc_id") + i * 10000000L).as("doc_id"), col("text"))
+      val fresh = spark.range(1).select(lit(i * 10000000L - 1).as("doc_id"),
+        lit(s"zzfresh$i join vector").as("text"))
+      engine.insertInto(t, copies.unionByName(fresh))
+      assert(engine.refreshTextIndex("threeref", t, s"$dir/index") ==
+        2L * i + 1)
+    }
+    // the refreshes left partials: more metadata rows than keys
+    def raw(part: String) = spark.read.parquet(s"$dir/index/$part")
+    assert(raw("termstats").count() >
+      raw("termstats").select("w").distinct().count())
+    assert(raw("stats").count() == 4L)
+    engine.buildTextIndex("threeref_full", t, s"$dir/index_full")
+    def sameAsRebuild(): Unit = {
+      Seq("postings", "doclens", "stats", "termstats").foreach { p =>
+        assert(rowStrings(engine.table(s"threeref_$p")) ==
+          rowStrings(engine.table(s"threeref_full_$p")), s"$p diverged")
+      }
+      assert(rowStrings(foldedImpacts(s"$dir/index")) ==
+        rowStrings(foldedImpacts(s"$dir/index_full")))
+      assert(rowStrings(engine.foldedStats(s"$dir/index")) ==
+        rowStrings(engine.foldedStats(s"$dir/index_full")))
+      assert(engine.statsOf("threeref").isDefined &&
+        engine.statsOf("threeref") == engine.statsOf("threeref_full"))
+      val vocab = engine.table("threeref_full_termstats")
+        .orderBy(col("df").desc, col("w")).limit(25).collect()
+        .map(_.getString(0)).toSeq :+ "zzfresh2" :+ "absentterm"
+      def metas(ix: String, p: String) = engine.termMetasOf(ix, p, vocab)
+        .map { case (w, m) =>
+          w -> m.map(x => (x.df, x.maxTf, x.minDl, x.hist.toSeq)) }
+      assert(metas("threeref", s"$dir/index") ==
+        metas("threeref_full", s"$dir/index_full"))
+      val terms = Seq("join", "vector", "stream")
+      def top(o: Option[org.apache.spark.sql.DataFrame]) = o.map(
+        _.orderBy(col("bm25").desc, col("doc_id")).limit(10).collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      spark.conf.set("graft.bm25.fastPathMinRows", "0")
+      try {
+        val fast = top(engine.fastBm25("threeref", terms, 10))
+        assert(fast.isDefined, "fast probe declined on the refreshed index")
+        assert(fast == top(engine.fastBm25("threeref_full", terms, 10)))
+        assert(top(engine.litMatched("threeref", terms)) ==
+          top(engine.litMatched("threeref_full", terms)))
+      } finally spark.conf.unset("graft.bm25.fastPathMinRows")
+    }
+    sameAsRebuild()
+    engine.optimizeTextIndex("threeref")
+    assert(raw("termstats").count() ==
+      raw("termstats").select("w").distinct().count())
+    assert(raw("impacts").count() ==
+      raw("impacts").select("w", "qi").distinct().count())
+    assert(raw("stats").count() == 1L)
+    sameAsRebuild()
+    Seq("threeref", "threeref_full").foreach { ix =>
+      engine.dropIndex(ix)
+      Seq("postings", "doclens", "stats", "termstats").foreach(s =>
+        engine.unregisterTable(s"${ix}_$s"))
+    }
+    engine.unregisterTable(t)
+  }
+
+  test("REFRESH TEXT INDEX and REFRESH MATERIALIZED VIEW read no existing " +
+      "postings, metadata or MV file; they and the next probe start no " +
+      "parquet schema-inference job") {
+    val e = Engine.scratch(spark)
+    val u = System.nanoTime()
+    val (docs, ix, ords, mv) = (s"nr_docs_$u", s"nr_tix_$u", s"nr_o_$u",
+      s"nr_mv_$u")
+    e.registerTable(s"nr_src_$u", s"$sf/documents.parquet")
+    e.registerTable(s"nr_orders_$u", s"$sf/orders.parquet")
+    Seq(s"CREATE TABLE $docs AS SELECT doc_id, text FROM nr_src_$u " +
+        "WHERE doc_id < 200",
+      s"CREATE TEXT INDEX $ix ON $docs (text)",
+      s"CREATE TABLE $ords AS SELECT o_orderkey, o_orderpriority, " +
+        s"o_totalprice FROM nr_orders_$u",
+      s"CREATE MATERIALIZED VIEW $mv AS SELECT o_orderpriority, " +
+        s"sum(o_totalprice) AS s, count(*) AS n FROM $ords " +
+        "GROUP BY o_orderpriority",
+      s"INSERT INTO $docs VALUES (900001, 'zqmark join vector'), " +
+        "(900002, 'zqmark value value')",
+      s"INSERT INTO $ords VALUES (900001, '1-URGENT', 1.5), " +
+        "(900002, '5-LOW', 2.25)").foreach(q => e.sql(q).collect())
+    val ixPath = e.textIndexMeta(ix)._1
+    val mvPath = e.matViews(mv)._1.path
+    val existing = filesUnder(Seq("postings", "termstats", "impacts",
+      "stats").map(p => s"$ixPath/$p") :+ mvPath: _*)
+    assert(existing.nonEmpty)
+    // the detector sees an inferring read
+    assert(watched { spark.read.parquet(s"$ixPath/stats"); () }._2 >= 1)
+    val (textFiles, textInf, _) = watched {
+      assert(e.sql(s"REFRESH TEXT INDEX $ix").head().getLong(0) == 2L)
+    }
+    val (_, probeInf, _) = watched {
+      assert(e.bm25Search(ix, Seq("zqmark"), 2).collect()
+        .map(_.getLong(0)).toSet == Set(900001L, 900002L))
+    }
+    val (mvFiles, mvInf, _) = watched {
+      assert(e.refreshMaterializedAggregate(mv) == "incremental")
+    }
+    val read = (textFiles ++ mvFiles).map(pathOnly).toSet
+    assert(read.intersect(existing).isEmpty,
+      s"refresh read existing artifact files: ${read.intersect(existing)}")
+    assert((textInf, probeInf, mvInf) == ((0, 0, 0)),
+      "parquet schema-inference jobs (refresh, probe, MV refresh)")
+    // the appended partials serve: the covered read equals the direct one
+    val q = s"SELECT o_orderpriority, count(*) AS n FROM $ords " +
+      "GROUP BY o_orderpriority"
+    assert(e.sql(q).collect().toSet == direct(e, q, ords))
+    Seq(mv, ords, docs).foreach(t => e.sql(s"DROP TABLE $t"))
+  }
+
+  test("writes carry exact row counts: a SELECT after INSERT, UPDATE, " +
+      "DELETE and both MERGE forms counts nothing and starts no listener " +
+      "job") {
+    val e = Engine.scratch(spark)
+    val t = s"wcnt_${System.nanoTime()}"
+    // key 1 twice: the whole-row MERGE below replaces both rows by one
+    Seq(s"CREATE TABLE $t (k INT, v STRING)",
+      s"INSERT INTO $t VALUES (1, 'a'), (1, 'b'), (2, 'c'), (3, 'd')")
+      .foreach(q => e.sql(q).collect())
+    def exact(after: String): Unit = {
+      val known = e.registry(t).rowsIfKnown
+      assert(known >= 0L, s"no count carried after $after")
+      assert(known == e.table(t).count(), s"inexact count after $after")
+    }
+    exact("INSERT")
+    Seq(s"INSERT INTO $t VALUES (4, 'e'), (5, 'f')",
+      s"UPDATE $t SET v = 'u' WHERE k = 2",
+      s"DELETE FROM $t WHERE k = 3",
+      s"MERGE INTO $t AS t USING (SELECT * FROM (VALUES (1, 'm'), " +
+        "(9, 'n')) AS v(k, v)) AS s ON t.k = s.k WHEN MATCHED THEN " +
+        "UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+      s"MERGE INTO $t AS t USING (SELECT * FROM (VALUES (4, 'x'), " +
+        "(10, 'y')) AS v(k, v)) AS s ON t.k = s.k WHEN MATCHED THEN " +
+        "UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k)")
+      .foreach { q => e.sql(q).collect(); exact(q) }
+    assert(e.registry(t).rowsIfKnown == 6L)
+    e.clearStats()
+    val q = s"SELECT k, count(*) AS n FROM $t GROUP BY k"
+    // the same query as a plain frame: the jobs the SELECT itself needs
+    val (_, _, own) = watched(e.table(t).groupBy("k")
+      .agg(count(lit(1)).as("n")).collect())
+    var df: org.apache.spark.sql.DataFrame = null
+    val (_, _, parked) = watched { df = e.sql(q) }
+    assert(parked == 0, s"sql() started $parked jobs before any action")
+    // watched() drains the listener buses: the stats listener's record
+    // of this action runs inside the window
+    val (_, _, ran) = watched(df.collect())
+    assert(ran == own, s"the SELECT ran $ran jobs, its own plan $own")
+    val stats = e.executionStats.collect()
+    assert(stats.length == 1)
+    val ex = e.explain(q).head()
+    assert(stats.head.getAs[String]("execution_mode") ==
+      ex.getAs[String]("execution_mode"))
+    assert(stats.head.getAs[Long]("num_tasks_generated") ==
+      ex.getAs[Long]("num_tasks"))
+    e.sql(s"DROP TABLE $t")
+  }
+
+  test("EXPORT → IMPORT carries unfolded refresh partials: probes, folded " +
+      "metadata and the MV read equal the source engine's, and a third " +
+      "refresh on the restored engine stays ≡ a rebuild") {
+    val base = java.nio.file.Files.createTempDirectory("graft_unfolded")
+      .toString
+    val u = System.nanoTime()
+    val (docs, ix, ords, mv) = (s"uf_docs_$u", s"uf_tix_$u", s"uf_o_$u",
+      s"uf_mv_$u")
+    val e1 = Engine.scratch(spark)
+    Seq(s"CREATE TABLE $docs (doc_id BIGINT, text STRING)",
+      s"INSERT INTO $docs VALUES (1, 'alpha beta gamma'), " +
+        "(2, 'beta beta delta'), (3, 'gamma alpha alpha')",
+      s"CREATE TEXT INDEX $ix ON $docs (text)",
+      s"CREATE TABLE $ords (g STRING, x BIGINT)",
+      s"INSERT INTO $ords VALUES ('a', 1), ('b', 2)",
+      s"CREATE MATERIALIZED VIEW $mv AS SELECT g, sum(x) AS s, " +
+        s"count(*) AS n, min(x) AS lo, max(x) AS hi FROM $ords GROUP BY g")
+      .foreach(q => e1.sql(q).collect())
+    Seq(("(4, 'alpha delta epsilon')", "('a', 5), ('c', 7)"),
+      ("(5, 'epsilon epsilon beta'), (6, 'zeta')", "('b', -3)"))
+      .foreach { case (d, o) =>
+        e1.sql(s"INSERT INTO $docs VALUES $d").collect()
+        e1.sql(s"REFRESH TEXT INDEX $ix").collect()
+        e1.sql(s"INSERT INTO $ords VALUES $o").collect()
+        assert(e1.refreshMaterializedAggregate(mv) == "incremental")
+      }
+    // no OPTIMIZE: both artifacts still hold their refresh partials
+    val ixPath = e1.textIndexMeta(ix)._1
+    assert(spark.read.parquet(s"$ixPath/stats").count() == 3L)
+    assert(spark.read.parquet(e1.matViews(mv)._1.path).count() == 5L)
+    def probe(e: Engine) = e.bm25Search(ix, Seq("alpha", "epsilon"), 3)
+      .collect().map(_.toString).toSeq
+    def state(e: Engine) = (probe(e),
+      rowStrings(e.table(s"${ix}_stats")),
+      rowStrings(e.table(s"${ix}_termstats")),
+      rowStrings(e.sql(s"SELECT * FROM $mv")))
+    val source = state(e1)
+    e1.sql(s"EXPORT DATABASE '$base/db'").collect()
+    val e2 = Engine.scratch(spark)
+    e2.sql(s"IMPORT DATABASE '$base/db'").collect()
+    assert(state(e2) == source)
+    // a third refresh on the restored engine: ≡ a rebuild over the
+    // grown corpus
+    e2.sql(s"INSERT INTO $docs VALUES (7, 'alpha eta eta')").collect()
+    assert(e2.sql(s"REFRESH TEXT INDEX $ix").head().getLong(0) == 1L)
+    e2.buildTextIndex(s"${ix}_full", docs, s"$base/full")
+    Seq("postings", "doclens", "stats", "termstats").foreach { p =>
+      assert(rowStrings(e2.table(s"${ix}_$p")) ==
+        rowStrings(e2.table(s"${ix}_full_$p")), s"$p diverged")
+    }
+    val restored = e2.textIndexMeta(ix)._1
+    assert(rowStrings(foldedImpacts(restored)) ==
+      rowStrings(foldedImpacts(s"$base/full")))
+    assert(e2.bm25Search(ix, Seq("alpha", "eta"), 3).collect().toSeq ==
+      e2.bm25Search(s"${ix}_full", Seq("alpha", "eta"), 3).collect().toSeq)
+  }
+
   test("text index crash repair: a refresh that died between the " +
       "postings and doclens appends reconciles fully under OPTIMIZE — " +
       "the next refresh re-appends NOTHING (no duplicate postings)") {
@@ -473,13 +778,16 @@ class EngineSpec extends SparkSpec {
     assert(viaIndex == engine.bm25Search("txtidx_full",
       Seq("join", "vector"), 3).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-    // refresh-merged probe metadata ≡ a rebuild's from-scratch compute
-    // (exact-integer sum/max/min merges are associative)
-    Seq("termstats", "impacts", "stats").foreach { m =>
-      def art(d: String) = spark.read.parquet(s"$d/$m").collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-      assert(art(s"$dir/index") == art(s"$dir/index_full"),
-        s"refresh-merged $m diverged from rebuild")
+    // refresh-appended probe metadata, folded, ≡ a rebuild's
+    // from-scratch compute (exact-integer sum/max/min are associative)
+    def folded(d: String) = Seq(engine.foldedTermstats(d),
+      foldedImpacts(d), engine.foldedStats(d))
+    folded(s"$dir/index").zip(folded(s"$dir/index_full")).foreach {
+      case (got, want) =>
+        def art(df: org.apache.spark.sql.DataFrame) = df.collect()
+          .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+        assert(art(got) == art(want),
+          s"refreshed ${got.columns.mkString(",")} diverged from rebuild")
     }
     // no-op refresh
     assert(engine.refreshTextIndex("txtidx", t, s"$dir/index") == 0)

@@ -170,4 +170,16 @@ class ZOrderSpec extends SparkSpec {
     assert(stray == 0L, s"$stray rows landed outside their cell's partition")
     assert(routed.select("pid").distinct().count() == cells)
   }
+
+  test("the Z cell shift splits a power-of-two cell count into equal " +
+    "z ranges and refuses any other count") {
+    val z = spark.range(1).select(
+      lit(0L).as("lo"), lit((1L << 32) - 1).as("hi"), lit(1L << 24).as("p1"))
+    val r = z.select(Seq("lo", "hi", "p1").map(c =>
+      BucketedOps.zCell(col(c), 256)): _*).head()
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((0L, 255L, 1L)))
+    Seq(0, 3, 100, 255, 257).foreach { n =>
+      intercept[IllegalArgumentException](BucketedOps.zCell(col("lo"), n))
+    }
+  }
 }
