@@ -551,7 +551,7 @@ private[graft] trait EngineIndexes { self: Engine =>
     writeTextMeta(path, docs.schema("doc_id").dataType)
     createIndex(indexName, docsTable, Seq(textCol), ifNotExists = true)
     textMeta.put(indexName, (path, idCol, textCol))
-    textSeen.put(indexName, seen)
+    textSeen.put(indexName, (docsTable, seen))
     registerTextIndex(indexName, path)
     servingIndexes.put(indexName, ())
     invalidateTextCaches(indexName)
@@ -559,21 +559,27 @@ private[graft] trait EngineIndexes { self: Engine =>
     ()
   }
 
-  /** The docs-table version a text index last indexed: a refresh reads
-    * only the rows appended since ([[appendedSince]]). */
-  private[graft] val textSeen = TrieMap.empty[String, TableEntry]
+  /** The docs table and its version a text index last indexed: a
+    * refresh reads only the rows appended since ([[appendedSince]]). */
+  private[graft] val textSeen = TrieMap.empty[String, (String, TableEntry)]
 
   /** Incremental refresh after new documents arrived: only docs absent
     * from the doclens table are tokenized and appended (O(batch)
     * marginal cost, the corpus is never re-exploded). The batch is the
     * rows appended to the docs table since the index last saw it
-    * ([[appendedSince]]), anti-joined on doc_id against doclens; a
-    * row-rewriting write on the docs table breaks that chain, and then
-    * the whole table is anti-joined. The batch's metadata partials
-    * (termstats, impacts, stats) are APPENDED beside its postings, so
-    * no existing artifact file is read or rewritten; readers fold the
-    * partials with exact-integer sum/max/min, which is bit-exact vs a
-    * from-scratch build. Returns newly indexed docs. */
+    * ([[appendedSince]]), anti-joined on doc_id against doclens (the
+    * whole table for an index restored without that version, or when
+    * the docs come from another table than it last indexed). The
+    * batch's metadata partials (termstats, impacts, stats) are APPENDED
+    * beside its postings, so no existing artifact file is read or
+    * rewritten; readers fold the partials with exact-integer
+    * sum/max/min, which is bit-exact vs a from-scratch build, and a
+    * cached corpus total takes the batch's stats partial. Returns newly
+    * indexed docs. A row-rewriting write on the docs table since the
+    * index last saw it (UPDATE, DELETE, MERGE, ALTER) breaks the chain:
+    * an anti-join would keep serving the old postings of changed and
+    * deleted documents, so the refresh rebuilds through
+    * [[buildTextIndex]] and returns the rebuilt index's document count. */
   def refreshTextIndex(indexName: String, docsTable: String, path: String,
       idCol: String = "doc_id", textCol: String = "text"): Long =
       withTableLock(indexName) {
@@ -597,8 +603,17 @@ private[graft] trait EngineIndexes { self: Engine =>
           "did not complete — run OPTIMIZE TEXT INDEX " +
           s"$indexName to repair the artifact before refreshing again")
     val current = registry.getOrElse(docsTable, missing(docsTable))
-    val appended = textSeen.get(indexName).flatMap(appendedSince(_, current))
+    val seen = textSeen.get(indexName).collect {
+      case (t, e) if t == docsTable => e }
+    val appended = seen.flatMap(appendedSince(_, current))
     if (appended.contains(Nil)) return 0L
+    // a row-rewriting write since the index last saw this table broke
+    // the append chain: indexed documents may have changed or gone,
+    // which a doc_id anti-join cannot see — rebuild from the table
+    if (seen.isDefined && appended.isEmpty) {
+      buildTextIndex(indexName, docsTable, path, idCol, textCol)
+      return statsOf(indexName).map(_._1).getOrElse(0L)
+    }
     val rows = appended.fold(current.df)(_.reduce(_ unionByName _))
     val docs = rows.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val known = table(s"${indexName}_doclens").select("doc_id")
@@ -607,6 +622,9 @@ private[graft] trait EngineIndexes { self: Engine =>
     // the batch's corpus-stats aggregate: the count and the stats
     // partial in one job
     val batch = docs.join(known, Seq("doc_id"), "left_anti").persist()
+    val withMeta = artifactExists(s"$path/termstats")
+    // the corpus stats as they stand before this batch lands
+    val prior = textStatsCache.get(indexName)
     try {
       val stats = corpusStats(dlOf(batch)).head()
       val added = stats.getLong(0)
@@ -622,7 +640,7 @@ private[graft] trait EngineIndexes { self: Engine =>
           // gets none until OPTIMIZE writes it.
           setDirty(path)
           val partials =
-            if (!artifactExists(s"$path/termstats")) Nil
+            if (!withMeta) Nil
             else textMetaOf(bp) :+ ("stats" -> spark.createDataFrame(
               java.util.List.of(stats), textPartSchema("stats", LongType)))
           writePostingsAndDoclens(bp, batch, path, append = true, partials)
@@ -630,11 +648,17 @@ private[graft] trait EngineIndexes { self: Engine =>
         } finally { bp.unpersist(); () }
         registerTextIndex(indexName, path)
         invalidateTextCaches(indexName)
+        // the appended stats partial is exact: fold it into a cached
+        // total instead of re-reading every partial on the next probe
+        if (withMeta) prior.foreach { case (n0, sum0) =>
+          textStatsCache.put(indexName, (n0 + added,
+            sum0 + (if (stats.isNullAt(1)) 0L else stats.getLong(1))))
+        }
         indexTail.put(indexName, indexTail.get(indexName)
           .map { case (tail, base) => (tail + added, base) }
           .getOrElse((added, 0L)))
       }
-      textSeen.put(indexName, current)
+      textSeen.put(indexName, (docsTable, current))
       added
     } finally { batch.unpersist(); () }
   }
@@ -790,7 +814,8 @@ private[graft] trait EngineIndexes { self: Engine =>
     *    (every partial sum of longs < 2^53 is exact in a double).
     * A build writes them over the whole artifact; a refresh appends
     * them over its batch as PARTIALS, which every reader folds
-    * ([[foldedTermstats]], [[statsOf]], [[termMetasOf]]) with
+    * ([[foldedTermstats]], [[statsOf]], [[termStatsOf]],
+    * [[termHistsOf]]) with
     * exact-integer sum/max/min — associative, so the fold is bit-equal
     * to a from-scratch compute. All three are derivable from the
     * postings, so a crashed refresh recovers via OPTIMIZE (full
@@ -963,10 +988,11 @@ private[graft] trait EngineIndexes { self: Engine =>
     }
   }
 
+  /** Collected rows as a frame over a local relation: reading it back
+    * starts no job. */
   private def localFrame(rows: Array[org.apache.spark.sql.Row],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** The lazy matched-docs scoring plan behind [[bm25Search]] — the
     * per-(term,doc) postings probe pivoted to one fixed-term-order
@@ -1022,7 +1048,7 @@ private[graft] trait EngineIndexes { self: Engine =>
     val (n, sumdl) = statsOf(indexName).getOrElse(return None)
     if (n == 0L) return None
     val avgdl = sumdl.toDouble / n
-    val metas = termMetasOf(indexName, path, terms)
+    val metas = termStatsOf(indexName, path, terms)
     val present = terms.distinct.filter(t => metas.get(t).exists(_.isDefined))
     if (present.isEmpty) return None // empty slice: classic is as cheap
     val dfByW = present.tail.foldLeft(when(col("w") === present.head,
@@ -1050,14 +1076,16 @@ private[graft] trait EngineIndexes { self: Engine =>
 
   // ---- BM25 fast probe: persisted metadata + impact-ordered cut ---------
 
-  private[graft] case class TermMeta(df: Long, maxTf: Long, minDl: Long,
-      hist: Array[(Int, Long)])
+  /** A term's folded `termstats` row. */
+  private[graft] case class TermStat(df: Long, maxTf: Long, minDl: Long)
 
   /** Per-(index, term) metadata and per-index corpus stats, collected
     * once from the metadata artifacts and cached — index metadata, not
     * query results, so a serving deployment would cache it the same
-    * way. Invalidated on build/refresh/OPTIMIZE/drop. */
-  private val textTermCache = TrieMap.empty[(String, String), Option[TermMeta]]
+    * way. Invalidated on build/refresh/OPTIMIZE/drop; a refresh then
+    * folds its batch's exact stats partial into a cached corpus total. */
+  private val textTermCache = TrieMap.empty[(String, String), Option[TermStat]]
+  private val textHistCache = TrieMap.empty[(String, String), Array[(Int, Long)]]
   private val textStatsCache = TrieMap.empty[String, (Long, Long)]
   private val textFracCache = TrieMap.empty[String, Double]
   /** [[textFracCache]] value for a term set no cut depth certifies. */
@@ -1067,6 +1095,8 @@ private[graft] trait EngineIndexes { self: Engine =>
     textStatsCache.remove(indexName)
     textTermCache.keySet.filter(_._1 == indexName)
       .foreach(textTermCache.remove)
+    textHistCache.keySet.filter(_._1 == indexName)
+      .foreach(textHistCache.remove)
     textFracCache.keySet.filter(_.startsWith(indexName + "|"))
       .foreach(textFracCache.remove)
   }
@@ -1089,32 +1119,43 @@ private[graft] trait EngineIndexes { self: Engine =>
       }
     }
 
-  private[graft] def termMetasOf(indexName: String, path: String,
-      terms: Seq[String]): Map[String, Option[TermMeta]] = {
+  /** Each term's folded `termstats` (None for a term the index lacks):
+    * one row-group-pruned lookup over the vocab-sized artifact
+    * (term-sorted per partial), collected and folded driver-side, for
+    * the terms not cached yet. */
+  private[graft] def termStatsOf(indexName: String, path: String,
+      terms: Seq[String]): Map[String, Option[TermStat]] = {
     val missing = terms.distinct
       .filterNot(t => textTermCache.contains((indexName, t)))
     if (missing.nonEmpty) {
-      // two row-group-pruned lookups over vocab-sized artifacts (both
-      // term-sorted per partial), collected and folded driver-side:
-      // ≤ |terms|·(1 + buckets) rows per partial
       val ts = textPart(path, "termstats")
         .filter(col("w").isin(missing: _*)).collect()
         .groupBy(_.getString(0))
-        .map { case (w, rows) => w -> ((rows.map(_.getLong(1)).sum,
-          rows.map(_.getLong(2)).max, rows.map(_.getLong(3)).min)) }
+        .map { case (w, rows) => w -> TermStat(rows.map(_.getLong(1)).sum,
+          rows.map(_.getLong(2)).max, rows.map(_.getLong(3)).min) }
+      missing.foreach(t => textTermCache.put((indexName, t), ts.get(t)))
+    }
+    terms.distinct.map(t => t -> textTermCache((indexName, t))).toMap
+  }
+
+  /** Each term's folded `impacts` histogram (qi, postings), ascending
+    * qi — the same kind of lookup over the impacts artifact, ≤
+    * |terms|·(1 + buckets) rows per partial. */
+  private[graft] def termHistsOf(indexName: String, path: String,
+      terms: Seq[String]): Map[String, Array[(Int, Long)]] = {
+    val missing = terms.distinct
+      .filterNot(t => textHistCache.contains((indexName, t)))
+    if (missing.nonEmpty) {
       val hs = textPart(path, "impacts")
         .filter(col("w").isin(missing: _*)).collect()
         .groupBy(_.getString(0))
         .map { case (w, rows) =>
           w -> rows.groupMapReduce(_.getInt(1))(_.getLong(2))(_ + _)
             .toArray.sortBy(_._1) }
-      missing.foreach { t =>
-        textTermCache.put((indexName, t),
-          ts.get(t).map { case (df, mtf, mdl) =>
-            TermMeta(df, mtf, mdl, hs.getOrElse(t, Array.empty)) })
-      }
+      missing.foreach(t =>
+        textHistCache.put((indexName, t), hs.getOrElse(t, Array.empty)))
     }
-    terms.distinct.map(t => t -> textTermCache((indexName, t))).toMap
+    terms.distinct.map(t => t -> textHistCache((indexName, t))).toMap
   }
 
   /** Early-terminating EXACT top-k over the impact-bucketed artifact —
@@ -1159,7 +1200,7 @@ private[graft] trait EngineIndexes { self: Engine =>
     val (n, sumdl) = statsOf(indexName).getOrElse(return None)
     if (n == 0L) return None
     val avgdl = sumdl.toDouble / n
-    val metas = termMetasOf(indexName, path, terms)
+    val metas = termStatsOf(indexName, path, terms)
     val present = terms.filter(t => metas.get(t).exists(_.isDefined))
     if (present.isEmpty) return None // nothing matches: classic pads
     // cost gate: the cut saves (slice − prefix) shuffle+aggregation but
@@ -1172,6 +1213,8 @@ private[graft] trait EngineIndexes { self: Engine =>
       .getOption("graft.bm25.fastPathMinRows").map(_.toLong)
       .getOrElse(4000000L)
     if (metas.valuesIterator.flatten.map(_.df).sum < minRows) return None
+    // the impact histograms only the cut reads, so only past the gate
+    val hists = termHistsOf(indexName, path, present)
     def idfOf(df: Long): Double = math.log(1 + (n - df + 0.5) / (df + 0.5))
     def gOf(tf: Double, dl: Double): Double =
       tf * (k1 + 1) / (tf + (1 - b + b * dl / avgdl) * k1)
@@ -1205,11 +1248,12 @@ private[graft] trait EngineIndexes { self: Engine =>
       val cuts: Map[String, (Int, Double)] = present.map { t =>
         val m = metas(t).get
         val target = math.max(1024L, math.ceil(m.df * targetFrac).toLong)
-        val maxBucket = m.hist.lastOption.map(_._1).getOrElse(QiMax)
+        val hist = hists(t)
+        val maxBucket = hist.lastOption.map(_._1).getOrElse(QiMax)
         var cum = 0L
         var cut = maxBucket
         var found = false
-        m.hist.foreach { case (qi, cnt) =>
+        hist.foreach { case (qi, cnt) =>
           if (!found) { cum += cnt; if (cum >= target) { cut = qi; found = true } }
         }
         val sb = if (cut >= maxBucket) 0.0 else {

@@ -449,9 +449,8 @@ class EngineSpec extends SparkSpec {
       val vocab = engine.table("threeref_full_termstats")
         .orderBy(col("df").desc, col("w")).limit(25).collect()
         .map(_.getString(0)).toSeq :+ "zzfresh2" :+ "absentterm"
-      def metas(ix: String, p: String) = engine.termMetasOf(ix, p, vocab)
-        .map { case (w, m) =>
-          w -> m.map(x => (x.df, x.maxTf, x.minDl, x.hist.toSeq)) }
+      def metas(ix: String, p: String) = (engine.termStatsOf(ix, p, vocab),
+        engine.termHistsOf(ix, p, vocab).map { case (w, h) => w -> h.toSeq })
       assert(metas("threeref", s"$dir/index") ==
         metas("threeref_full", s"$dir/index_full"))
       val terms = Seq("join", "vector", "stream")
@@ -2533,19 +2532,25 @@ class EngineSpec extends SparkSpec {
     engine.registerTable(t, s"$dir/base")
     engine.createIndex(s"${t}_ix", t, Seq("id"))
     // merge and join sources are engine tables over one VALUES list
-    // each, so every file scan in the target's plan is a read of its
-    // prior version (a source that is itself a union would repeat the
-    // source anti-join's target read once per branch)
+    // each (literal rows) or, for s3, over a range (not literal), so
+    // every file scan in the target's plan is a read of its prior
+    // version (a source that is itself a union would repeat the source
+    // anti-join's target read once per branch)
     val Seq(s1, s2, s3) = Seq(1, 2, 3).map(i => s"${t}_src$i")
     Seq(s1 -> "(1, 100, 'x'), (2, 200, 'y'), (30, 300, 'z')",
-        s2 -> "(3, 7, 'p'), (40, 400, 'p')",
-        s3 -> "(8, 1, 'd'), (80, 2, 'd'), (80, 3, 'd'), (NULL, 4, 'd')")
+        s2 -> "(3, 7, 'p'), (40, 400, 'p')")
       .foreach { case (n, values) => engine.registerTable(n, spark.sql(
         s"SELECT CAST(id AS INT) id, CAST(v AS INT) v, s FROM VALUES $values AS r(id, v, s)")) }
+    // (8, 1, 'd'), (80, 2, 'd'), (80, 3, 'd'), (NULL, 4, 'd')
+    engine.registerTable(s3, spark.sql("SELECT CAST(CASE id WHEN 0 THEN 8 " +
+      "WHEN 3 THEN NULL ELSE 80 END AS INT) id, CAST(id + 1 AS INT) v, " +
+      "'d' s FROM range(4)"))
     // (statement, reads of the prior version in the stored plan): one
-    // whole-row read each; a column-wise MERGE insert clause (ON CONFLICT
-    // and INSERT OR REPLACE included) adds the source anti-join's
-    // key-only probe — see EngineDml.mergeIntoColumns
+    // whole-row read each; a column-wise MERGE insert clause over a
+    // source that is not literal rows adds the source anti-join's
+    // key-only probe, while a literal source's unmatched rows come from
+    // its key probe at statement time (ON CONFLICT and INSERT OR
+    // REPLACE included) — see EngineDml.mergeIntoColumns
     val script: Seq[(String => String, Int)] = Seq(
       (n => s"INSERT INTO $n VALUES (21, 210, 'i'), (22, 220, 'i')", 1),
       (n => s"UPDATE $n SET v = v + 1, s = 'u' WHERE id % 3 = 0", 1),
@@ -2556,14 +2561,14 @@ class EngineSpec extends SparkSpec {
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *", 1),
       (n => s"MERGE INTO $n AS t USING $s2 AS s ON t.id = s.id " +
         "WHEN MATCHED THEN UPDATE SET v = t.v + s.v " +
-        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)", 2),
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)", 1),
       (n => s"MERGE INTO $n AS t USING $s2 AS s ON t.id = s.id " +
         "WHEN MATCHED THEN UPDATE SET s = 'm'", 1),
       (n => s"INSERT INTO $n VALUES (4, 44, 'q'), (50, 500, 'q') " +
-        "ON CONFLICT (id) DO UPDATE SET v = excluded.v, s = 'c'", 2),
+        "ON CONFLICT (id) DO UPDATE SET v = excluded.v, s = 'c'", 1),
       (n => s"INSERT INTO $n VALUES (6, 66, 'n'), (60, 600, 'n'), " +
-        "(60, 601, 'n2') ON CONFLICT (id) DO NOTHING", 2),
-      (n => s"INSERT OR REPLACE INTO $n VALUES (7, 77, 'r'), (70, 700, 'r')", 2),
+        "(60, 601, 'n2') ON CONFLICT (id) DO NOTHING", 1),
+      (n => s"INSERT OR REPLACE INTO $n VALUES (7, 77, 'r'), (70, 700, 'r')", 1),
       // insert-only: repeated and NULL source keys all insert when unmatched
       (n => s"MERGE INTO $n AS t USING $s3 AS s ON t.id = s.id " +
         "WHEN NOT MATCHED THEN INSERT (id, v, s) VALUES (s.id, s.v, 'ins')", 2),
@@ -2722,6 +2727,197 @@ class EngineSpec extends SparkSpec {
     Seq("postings", "doclens", "stats", "termstats").foreach(s =>
       engine.unregisterTable(s"tiedbm_$s"))
   }
+
+  test("literal-delta MERGE: a VALUES-sourced whole-row MERGE runs at most " +
+      "2 jobs, and after 3 rounds of INSERT, UPDATE, DELETE and literal " +
+      "MERGE the table's plan has no join and its read runs as many jobs " +
+      "as after round 1") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val dir = java.nio.file.Files.createTempDirectory("graft_litmerge").toString
+    val t = s"litm_${System.nanoTime()}"
+    spark.range(1, 2001).select(col("id"),
+        (col("id") % 7).cast("string").as("s"), (col("id") * 1.5).as("p"))
+      .write.parquet(s"$dir/base")
+    engine.registerTable(s"${t}_base", s"$dir/base")
+    engine.sql(s"CREATE TABLE $t AS SELECT * FROM ${t}_base").collect()
+    def merge(r: Int) = s"MERGE INTO $t AS t USING (SELECT * FROM (VALUES " +
+      s"(${r}0L, 'm', 1.0D), (${r}1L, 'm', 2.0D), (${5000 + r}L, 'n', 3.0D)) " +
+      "AS v(id, s, p)) AS s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    val readJobs = (1 to 3).map { r =>
+      engine.sql(s"INSERT INTO $t VALUES (${9000 + r}L, 'i', 0.5D)").collect()
+      engine.sql(s"UPDATE $t SET p = p + 1 WHERE id IN (${r}2, ${r}3)").collect()
+      engine.sql(s"DELETE FROM $t WHERE id IN (${r}4, ${r}5)").collect()
+      var counts = Seq.empty[Any]
+      val (_, _, jobs) = watched {
+        counts = engine.sql(merge(r)).head().toSeq
+      }
+      assert(counts == Seq(2L, 1L), s"round $r MERGE counts $counts")
+      assert(jobs <= 2, s"round $r: the literal MERGE ran $jobs jobs")
+      val plan = castToImpl(engine.table(t)).queryExecution.optimizedPlan
+      assert(plan.collectFirst { case j: Join => j }.isEmpty,
+        s"round $r: the stored plan joins\n$plan")
+      var got = Seq.empty[Any]
+      val (_, _, read) = watched {
+        got = engine.sql(s"SELECT count(*) AS n, count_if(s = 'm') AS m " +
+          s"FROM $t").head().toSeq
+      }
+      assert(got == Seq(2000L, 2L * r), s"round $r read $got")
+      read
+    }
+    assert(readJobs.forall(_ == readJobs.head), s"read jobs per round $readJobs")
+    Seq(t, s"${t}_base").foreach(engine.dropTable(_))
+  }
+
+  test("literal-delta MERGE law: literal and non-literal sources give the " +
+      "same rows, counts and errors — NULL keys, duplicate target keys, " +
+      "duplicate source keys, a widened key type and a two-column key") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val dir = java.nio.file.Files.createTempDirectory("graft_litlaw").toString
+    val p = s"litlaw_${System.nanoTime()}"
+    // target: duplicate key (2, 'x'), a NULL in each key column
+    spark.sql("SELECT CAST(a AS BIGINT) a, b, CAST(v AS INT) v FROM VALUES " +
+        "(1, 'x', 10), (2, 'x', 20), (2, 'x', 21), (3, 'y', 30), " +
+        "(NULL, 'x', 40), (5, NULL, 50) AS r(a, b, v)")
+      .coalesce(1).write.parquet(s"$dir/target")
+    // each source both as literal rows (an engine table over VALUES) and
+    // as a parquet table; `a` is INT in the source, BIGINT in the target
+    def source(n: String, values: String): Unit = {
+      val df = spark.sql("SELECT CAST(a AS INT) a, b, CAST(v AS INT) v " +
+        s"FROM VALUES $values AS r(a, b, v)")
+      engine.registerTable(s"${p}_${n}_lit", df)
+      // one file, so the parquet source reads in statement order
+      df.coalesce(1).write.parquet(s"$dir/$n")
+      engine.registerTable(s"${p}_${n}_pq", s"$dir/$n")
+    }
+    source("keys", "(1, 'x', 100), (2, 'x', 200), (NULL, 'x', 300), " +
+      "(NULL, 'z', 301), (7, 'y', 700), (5, NULL, 500), (3, 'z', 302)")
+    source("dup", "(1, 'x', 1), (1, 'y', 2), (8, 'y', 3)")
+    source("dup2", "(2, 'x', 1), (2, 'x', 2)")
+    source("batch", "(3, 'q', 31), (9, 'q', 90), (9, 'r', 91), " +
+      "(NULL, 'q', 92), (NULL, 'q', 93)")
+    val whole = "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    // (case, statement over a target and a source stem → table name)
+    val statements: Seq[(String, (String, String => String) => String)] = Seq(
+      "whole-row" -> ((t, s) => s"MERGE INTO $t AS t USING ${s("keys")} " +
+        s"AS s ON t.a = s.a $whole"),
+      "whole-row two keys" -> ((t, s) => s"MERGE INTO $t AS t USING " +
+        s"${s("keys")} AS s ON t.a = s.a AND t.b = s.b $whole"),
+      "duplicate source" -> ((t, s) => s"MERGE INTO $t AS t USING " +
+        s"${s("dup")} AS s ON t.a = s.a $whole"),
+      "duplicate source, two keys" -> ((t, s) => s"MERGE INTO $t AS t USING " +
+        s"${s("dup2")} AS s ON t.a = s.a AND t.b = s.b $whole"),
+      "column-wise" -> ((t, s) => s"MERGE INTO $t AS t USING " +
+        s"${s("keys")} AS s ON t.a = s.a " +
+        "WHEN MATCHED THEN UPDATE SET v = t.v + s.v " +
+        "WHEN NOT MATCHED THEN INSERT (a, v) VALUES (s.a, s.v)"),
+      "column-wise two keys" -> ((t, s) => s"MERGE INTO $t AS t USING " +
+        s"${s("keys")} AS s ON t.a = s.a AND t.b = s.b " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (a, b, v) VALUES (s.a, s.b, s.v)"),
+      "insert-only" -> ((t, s) => s"MERGE INTO $t AS t USING " +
+        s"${s("batch")} AS s ON t.a = s.a " +
+        "WHEN NOT MATCHED THEN INSERT (a, b, v) VALUES (s.a, s.b, s.v)"),
+      "ON CONFLICT DO UPDATE" -> ((t, s) => s"INSERT INTO $t SELECT * FROM " +
+        s"${s("keys")} ON CONFLICT (a) DO UPDATE SET v = excluded.v + 1"),
+      "ON CONFLICT DO NOTHING" -> ((t, s) => s"INSERT INTO $t SELECT * FROM " +
+        s"${s("batch")} ON CONFLICT (a) DO NOTHING"),
+      "ON CONFLICT DO UPDATE, duplicate source" -> ((t, s) =>
+        s"INSERT INTO $t SELECT * FROM ${s("dup")} " +
+          "ON CONFLICT (a) DO UPDATE SET v = excluded.v"))
+    def rows(n: String) = engine.table(n).collect().map(_.toString).sorted.toSeq
+    def joins(n: String) = castToImpl(engine.table(n)).queryExecution
+      .optimizedPlan.collect { case j: Join => j }.size
+    statements.zipWithIndex.foreach { case ((what, stmt), i) =>
+      val out = Seq("lit", "pq").map { kind =>
+        val t = s"${p}_t${i}_$kind"
+        engine.registerTable(t, s"$dir/target")
+        val res = scala.util.Try(engine.sql(stmt(t, n => s"${p}_${n}_$kind"))
+          .collect().toSeq)
+        val r = (res.map(_.map(_.toString)).toEither.left.map(_.getMessage),
+          rows(t), joins(t))
+        engine.dropTable(t)
+        r
+      }
+      val Seq((litRes, litRows, litJoins), (pqRes, pqRows, pqJoins)) = out
+      assert(litRes == pqRes, s"$what: results differ")
+      assert(litRows == pqRows, s"$what: rows differ")
+      if (what.startsWith("whole-row") && litRes.isRight)
+        assert(litJoins == 0 && pqJoins == 1,
+          s"$what: joins literal $litJoins, parquet $pqJoins")
+      if (what.contains("duplicate"))
+        assert(litRes.left.exists(_.contains("more than once (key ")),
+          s"$what: $litRes")
+    }
+    Seq("keys", "dup", "dup2", "batch").foreach { n =>
+      engine.dropTable(s"${p}_${n}_lit"); engine.dropTable(s"${p}_${n}_pq")
+    }
+  }
+
+  test("text index refresh after UPDATE and DELETE of indexed documents " +
+      "≡ a rebuild: same postings and top-k, bit-equal stats") {
+    val t = s"stale_docs_${System.nanoTime()}"
+    engine.createTable(t, "doc_id BIGINT, text STRING")
+    engine.insertValues(t, Seq(Row(1L, "alpha beta alpha"),
+      Row(2L, "alpha gamma"), Row(3L, "beta delta alpha")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_stale").toString
+    engine.buildTextIndex("staleix", t, s"$dir/index")
+    engine.sql(s"UPDATE $t SET text = 'omega omega' WHERE doc_id = 1")
+    engine.sql(s"DELETE FROM $t WHERE doc_id = 2")
+    engine.insertValues(t, Seq(Row(4L, "alpha omega")))
+    assert(engine.refreshTextIndex("staleix", t, s"$dir/index") == 3L)
+    engine.buildTextIndex("staleix_full", t, s"$dir/index_full")
+    Seq("postings", "doclens", "stats", "termstats").foreach { part =>
+      assert(rowStrings(engine.table(s"staleix_$part")) ==
+        rowStrings(engine.table(s"staleix_full_$part")), s"$part diverged")
+    }
+    assert(engine.statsOf("staleix").contains((3L, 7L)) &&
+      engine.statsOf("staleix") == engine.statsOf("staleix_full"))
+    def top(ix: String, terms: String*) = engine.bm25Search(ix, terms, 3)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    Seq(Seq("alpha"), Seq("omega"), Seq("alpha", "beta")).foreach { q =>
+      assert(top("staleix", q: _*) == top("staleix_full", q: _*), q)
+    }
+    // the changed and the deleted document no longer match alpha
+    assert(top("staleix", "alpha").filter(_._2 > 0).map(_._1).toSet ==
+      Set(3L, 4L))
+    // an append after the rebuild takes the incremental path again
+    engine.insertValues(t, Seq(Row(5L, "omega beta")))
+    assert(engine.refreshTextIndex("staleix", t, s"$dir/index") == 1L)
+    engine.dropIndex("staleix"); engine.dropIndex("staleix_full")
+    engine.dropTable(t)
+    Seq("staleix", "staleix_full").foreach(ix =>
+      Seq("postings", "doclens", "stats", "termstats").foreach(s =>
+        engine.unregisterTable(s"${ix}_$s")))
+  }
+
+  test("a BM25 probe right after REFRESH TEXT INDEX runs at most 3 jobs, " +
+      "and its scores equal a rebuilt index's") {
+    val e = Engine.scratch(spark)
+    val u = System.nanoTime()
+    val (docs, ix, full) = (s"pj_docs_$u", s"pj_tix_$u", s"pj_full_$u")
+    e.registerTable(s"pj_src_$u", s"$sf/documents.parquet")
+    Seq(s"CREATE TABLE $docs AS SELECT doc_id, text FROM pj_src_$u " +
+        "WHERE doc_id < 200",
+      s"CREATE TEXT INDEX $ix ON $docs (text)",
+      s"INSERT INTO $docs VALUES (900001, 'zqmark join vector'), " +
+        "(900002, 'zqmark value value'), (900003, 'scan zqmark zqmark')",
+      s"REFRESH TEXT INDEX $ix").foreach(q => e.sql(q).collect())
+    var got = Seq.empty[(Long, Double)]
+    val (_, _, jobs) = watched {
+      got = e.bm25Search(ix, Seq("zqmark"), 3).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
+    assert(jobs <= 3, s"the probe ran $jobs jobs")
+    e.sql(s"CREATE TEXT INDEX $full ON $docs (text)").collect()
+    assert(got == e.bm25Search(full, Seq("zqmark"), 3).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    assert(got.map(_._1).toSet == Set(900001L, 900002L, 900003L))
+    e.sql(s"DROP TABLE $docs").collect()
+  }
+
 }
 
 object EngineSpec {

@@ -667,6 +667,36 @@ class PlanQualitySpec extends SparkSpec {
     Seq(t, s"${t}_src").foreach(eng.dropTable(_))
   }
 
+  test("literal upserts read the prior version once: four VALUES ON " +
+      "CONFLICT DO UPDATE leave one base scan, not 16, and a key-filtered " +
+      "read still reaches it pushed") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val eng = Engine(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_pqlitups").toString
+    val t = s"pq_litups_${System.nanoTime()}"
+    spark.range(1000).select(col("id").cast("int").as("id"),
+        (col("id") * 3).cast("int").as("v"))
+      .write.parquet(s"$dir/base")
+    eng.registerTable(t, s"$dir/base")
+    (1 to 4).foreach { r =>
+      val got = eng.sql(s"INSERT INTO $t VALUES ($r, ${r * 100}), " +
+        s"(${1000 + r}, $r) ON CONFLICT (id) DO UPDATE SET v = excluded.v")
+        .head().toSeq
+      assert(got == Seq(1L, 1L), s"upsert $r counts $got")
+    }
+    val plan = castToImpl(eng.table(t)).queryExecution.optimizedPlan
+    val leaves = plan.collectLeaves().count(_.isInstanceOf[LogicalRelation])
+    assert(leaves == 1, s"$leaves base scans after four upserts\n$plan")
+    assert(scans(eng.table(t)).size == 1)
+    val read = eng.table(t).filter(col("id") === 3)
+    scans(read).foreach(f => assert(f.metadata.getOrElse("PushedFilters", "")
+      .contains("EqualTo(id,3)"), f.metadata))
+    assert(read.collect().map(_.toString).toSeq == Seq("[3,300]"))
+    assert(eng.table(t).count() == 1004L)
+    eng.dropTable(t)
+  }
+
   test("q1_agg runs with exactly one shuffle") {
     val df = SparkEntry.queries("q1_agg")(spark, sf)
     df.collect()

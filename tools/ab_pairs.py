@@ -22,7 +22,12 @@ medians differ by more than the parent's interquartile range; "worse
 beyond bound" when the change's median is worse than the parent's by
 more than the metric's bound; otherwise "no claim". `failed_frac` and
 any `--detail` figures (from the run's detail line) are printed as
-medians. This script only calls perfbench; it never edits it.
+medians. Beside the verdict, the "beyond bound" column says whether the
+change of the medians exceeds the metric's bound in either direction:
+"better" or "worse" when |change| > bound, "within" otherwise, "-" for a
+metric with no bound. A claimed gain has to clear both: the pair rule's
+"gain" and "better" here. This script only calls perfbench; it never
+edits it.
 """
 import argparse
 import json
@@ -107,7 +112,7 @@ def main():
     print(f"workload {args.workload}, seed {args.seed}, {args.pairs} pairs, "
           f"{args.seconds:g} s runs")
     print(f"{'metric':<20} {'parent q1/med/q3':>28} {'change q1/med/q3':>28}"
-          f" {'won':>7} {'change':>8}  verdict")
+          f" {'won':>7} {'change':>8} {'beyond bound':>12}  verdict")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         pv = [r["e2e"][name] for r in runs["parent"]]
@@ -118,15 +123,22 @@ def main():
         better = gap < 0 if lower else gap > 0
         rel = gap / pq[1] if pq[1] else float("nan")
         worse_rel = rel if lower else -rel
+        bound = m.get("bound")
+        if bound is None:
+            beyond = "-"
+        elif abs(worse_rel) > bound:
+            beyond = "worse" if worse_rel > 0 else "better"
+        else:
+            beyond = "within"
         if won * 10 >= 9 * len(pv) and better and abs(gap) > pq[2] - pq[0]:
             verdict = "gain"
-        elif worse_rel > m.get("bound", float("inf")):
+        elif beyond == "worse":
             verdict = "worse beyond bound"
         else:
             verdict = "no claim"
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
         print(f"{name:<20} {fmt(pq):>28} {fmt(cq):>28} "
-              f"{won:>3}/{len(pv):<3} {rel:>+8.1%}  {verdict}")
+              f"{won:>3}/{len(pv):<3} {rel:>+8.1%} {beyond:>12}  {verdict}")
     for side in ("parent", "change"):
         ff = statistics.median(r["failed_frac"] for r in runs[side])
         print(f"failed_frac median {side}: {ff:g}")
