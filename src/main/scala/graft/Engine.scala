@@ -2,16 +2,15 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.AliasIdentifier
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.{AliasIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.ResolvedInlineTable
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan,
   Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DayTimeIntervalType,
-  YearMonthIntervalType}
+import org.apache.spark.sql.types._
 
 /** A registered materialized aggregate: partials of `measures` grouped
   * by `dims` over managed table `base`, persisted at `path` with the
@@ -233,6 +232,84 @@ class Engine private[graft] (val spark: SparkSession)
       case _ => -1L
     }
     of(castToImpl(df).queryExecution.analyzed)
+  }
+
+  /** The optimized plan of `df` when it is literal rows — VALUES, an
+    * INSERT … VALUES batch, local rows, or a projection or filter of
+    * them, which the optimizer folds — so reading it starts no job. DML
+    * and the incremental refreshes share this one test for "literal". */
+  private[graft] def literalPlan(df: DataFrame): Option[LocalRelation] =
+    castToImpl(df).queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l)
+      case _ => None
+    }
+
+  /** `dfs` (same schema, e.g. the deltas of an append chain) as ONE frame
+    * over one literal plan when every one of them is literal rows: their
+    * union would not fold and reading it would start a job. */
+  private[graft] def literalRows(dfs: Seq[DataFrame]): Option[DataFrame] = {
+    val plans = dfs.flatMap(literalPlan)
+    val types = plans.headOption.map(_.output.map(_.dataType))
+    if (dfs.isEmpty || plans.size < dfs.size ||
+        plans.exists(p => !types.contains(p.output.map(_.dataType))))
+      None
+    else Some(GraftSqlBridge.ofRows(spark, LocalRelation(
+      // a column is nullable when it is in any part: one delta's rows
+      // may hold a NULL where another's never do
+      plans.head.output.zipWithIndex.map { case (a, i) =>
+        a.newInstance().withNullability(plans.exists(_.output(i).nullable))
+      }, plans.flatMap(_.data))))
+  }
+
+  /** Key types whose collected values the driver compares exactly as
+    * Spark's equi-join does (`==` on the values): integral, decimal,
+    * boolean, date, timestamp and UTF8_BINARY text. Floating keys (NaN,
+    * -0.0), binary, nested and collated keys keep the plan-side path. */
+  private[graft] def driverComparable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         DateType | TimestampType | TimestampNTZType | StringType |
+         _: DecimalType => true
+    case _ => false
+  }
+
+  /** Append `rows` (Catalyst rows of `rowSchema`) to the parquet directory
+    * `dir` as ONE file, written on the driver through Spark's own
+    * parquet writer (`ParquetFileFormat.prepareWrite`, the session's
+    * codec and conf, `blockSize`-byte row groups): no Spark job, where a
+    * `write.mode("append")` of a few rows costs a job and ~0.1 s of SQL
+    * command overhead. The file is written under a hidden name that
+    * readers skip and committed by one rename to `part-…`, so a reader
+    * or a crash sees the whole file or none of it. Every column is
+    * stored nullable, as Spark's own file writes store them. */
+  private[graft] def appendParquetFile(dir: String, rowSchema: StructType,
+      rows: Iterator[InternalRow], blockSize: Long = 128L << 20): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val schema = StructType(rowSchema.fields.map(_.copy(nullable = true)))
+    val conf = spark.sessionState.newHadoopConf()
+    conf.setLong("parquet.block.size", blockSize)
+    val job = Job.getInstance(conf)
+    val factory = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val uuid = java.util.UUID.randomUUID()
+    val tmp = new Path(dir, s".graft-tmp-$uuid")
+    val fs = tmp.getFileSystem(job.getConfiguration)
+    val w = factory.newInstance(tmp.toString, schema, ctx)
+    try { rows.foreach(w.write); w.close() }
+    catch { case e: Throwable =>
+      try w.close() catch { case _: Throwable => () }
+      fs.delete(tmp, false)
+      throw e
+    }
+    val part = new Path(dir,
+      s"part-00000-$uuid-c000${factory.getFileExtension(ctx)}")
+    if (!fs.rename(tmp, part)) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"could not commit $part")
+    }
   }
 
   def table(name: String): DataFrame =

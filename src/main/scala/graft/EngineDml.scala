@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -196,27 +195,6 @@ private[graft] trait EngineDml { self: Engine =>
     /** The source rows no target row matched — literal rows again. */
     def unmatched: DataFrame = literalFrame(rows, i => !matched(i))
   }
-
-  /** Key types whose collected values the driver compares exactly as
-    * Spark's equi-join does (`==` on the external values): integral,
-    * decimal, boolean, date, timestamp and UTF8_BINARY text. Floating
-    * keys (NaN, -0.0), binary, nested and collated keys keep the
-    * plan-side path. */
-  private def driverComparable(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | BooleanType |
-         DateType | TimestampType | TimestampNTZType | StringType |
-         _: DecimalType => true
-    case _ => false
-  }
-
-  /** The optimized plan of `df` when it is literal rows — VALUES, an
-    * INSERT … VALUES batch, local rows, or a projection or filter of
-    * them, which the optimizer folds — so reading it starts no job. */
-  private def literalPlan(df: DataFrame): Option[LocalRelation] =
-    castToImpl(df).queryExecution.optimizedPlan match {
-      case l: LocalRelation => Some(l)
-      case _ => None
-    }
 
   /** The rows of literal plan `l` whose position passes `keep`, as a
     * frame over a new literal plan (fresh attribute ids, same names and

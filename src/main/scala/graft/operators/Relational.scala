@@ -78,24 +78,18 @@ object NamedQuery {
   def inParallel(tasks: (() => Unit)*): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
     val fs = tasks.map(t =>
-      pool.submit(new java.util.concurrent.Callable[Unit] {
+      done.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = t()
       }))
     try {
-      // await COMPLETION-ORDER-INDEPENDENTLY of submission order: a
-      // sibling that failed instantly must surface even while an
-      // earlier task is still running (ADVICE r18 — the old
-      // fs.foreach(_.get()) blocked on task 1 for up to an hour while
-      // task 2's real error sat unobserved)
-      var pending = fs.toSet
-      while (pending.nonEmpty) {
-        val done = pending.find(_.isDone)
-        done match {
-          case Some(f) => f.get(); pending -= f
-          case None => Thread.sleep(10)
-        }
-      }
+      // await in COMPLETION order, not submission order: a sibling that
+      // failed instantly must surface even while an earlier task is
+      // still running (ADVICE r18 — the old fs.foreach(_.get()) blocked
+      // on task 1 for up to an hour while task 2's real error sat
+      // unobserved), and take() wakes the moment any task ends
+      fs.foreach(_ => done.take().get())
     } catch {
       case e: java.util.concurrent.ExecutionException =>
         // fail FAST: cancel the surviving siblings (their partial

@@ -108,7 +108,10 @@ object MatViewRewrite {
       }
       if (!(groupOk && condOk && aggsOk)) None
       else {
-        val mvPlan = engine.analyzedPlanOf(mv.name)
+        // the stored partials themselves, not the MV's fold of them:
+        // re-aggregating the raw scan is one Aggregate, the same
+        // sum/min/max/sum-of-counts the fold would compute first
+        val mvPlan = engine.matViewScanPlan(mv.name)
         val mvOut: Map[String, Attribute] =
           mvPlan.output.map(a => a.name.toLowerCase -> a).toMap
         def dimAttr(a: Attribute): Attribute = mvOut(a.name.toLowerCase)

@@ -2918,6 +2918,180 @@ class EngineSpec extends SparkSpec {
     e.sql(s"DROP TABLE $docs").collect()
   }
 
+  /** The same rows as a frame the optimizer cannot fold to literal rows
+    * (a union of `range`-built projections): a refresh of them takes the
+    * Spark path. */
+  private def nonLiteral(rows: Seq[(Long, String)]) =
+    rows.map { case (d, t) =>
+      spark.range(1).select(lit(d).as("doc_id"), lit(t).as("text"))
+    }.reduce(_ unionByName _)
+
+  test("a literal REFRESH TEXT INDEX writes from the driver: 0 jobs when " +
+      "the batch ids lie outside doclens' footer range, 1 otherwise; " +
+      "≡ the same rows from a non-literal table ≡ a rebuild") {
+    val e = Engine.scratch(spark)
+    val u = System.nanoTime()
+    val dir = java.nio.file.Files.createTempDirectory("graft_litref").toString
+    val (lt, nt) = (s"lr_lit_$u", s"lr_nl_$u")
+    val (li, ni, fi) = (s"lr_lix_$u", s"lr_nix_$u", s"lr_fix_$u")
+    val seed = Seq((1L, "alpha beta alpha gamma"), (2L, "beta beta delta"),
+      (3L, "gamma alpha alpha"))
+    def values(rows: Seq[(Long, String)]) = rows.map { case (d, t) =>
+      s"($d, ${if (t == null) "NULL" else s"'$t'"})" }.mkString(", ")
+    Seq(lt, nt).foreach { t =>
+      e.sql(s"CREATE TABLE $t (doc_id BIGINT, text STRING)").collect()
+      e.sql(s"INSERT INTO $t VALUES ${values(seed)}").collect()
+    }
+    e.buildTextIndex(li, lt, s"$dir/lit")
+    e.buildTextIndex(ni, nt, s"$dir/nl")
+    def parts(ix: String, path: String) =
+      Seq("postings", "doclens", "stats", "termstats")
+        .map(p => rowStrings(e.table(s"${ix}_$p"))) :+
+        rowStrings(foldedImpacts(path)) :+ rowStrings(e.foldedStats(path))
+    def top(ix: String) = e.bm25Search(ix, Seq("alpha", "zeta", "omega"), 5)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // round 1: new ids above doclens' range — a NULL text, a trailing
+    // space (an empty token), a duplicate id inside the batch (both
+    // rows 2 tokens long), split over two INSERTs; round 2: an id
+    // inside the range; round 3: an already-indexed id, which the
+    // refresh skips as it always has (a rebuild indexes both rows of
+    // that id, so the rebuild law stops at round 2)
+    Seq((Seq(Seq((10L, "omega omega "), (11L, null)),
+        Seq((12L, "alpha zeta"), (12L, "zeta eta"))), 0, 4L),
+      (Seq(Seq((5L, "zeta alpha zeta"))), 1, 1L),
+      (Seq(Seq((2L, "beta omega"), (4L, "omega alpha"))), 1, 1L))
+      .zipWithIndex.foreach { case ((inserts, jobs, added), round) =>
+        inserts.foreach { rows =>
+          e.sql(s"INSERT INTO $lt VALUES ${values(rows)}").collect()
+          e.insertInto(nt, nonLiteral(rows))
+        }
+        var got = -1L
+        val (_, _, ran) = watched {
+          got = e.sql(s"REFRESH TEXT INDEX $li").head().getLong(0)
+        }
+        assert(ran == jobs, s"the literal refresh of $inserts ran $ran jobs")
+        assert(got == added)
+        assert(e.refreshTextIndex(ni, nt, s"$dir/nl") == added)
+        assert(EngineSpec.tempLeftovers(s"$dir/lit").isEmpty)
+        val lit = parts(li, s"$dir/lit")
+        assert(lit == parts(ni, s"$dir/nl"), s"literal ≠ non-literal")
+        assert(e.statsOf(li) == e.statsOf(ni) && e.statsOf(li).isDefined)
+        assert(top(li) == top(ni))
+        if (round < 2) {
+          e.buildTextIndex(fi, lt, s"$dir/full_$round")
+          assert(lit == parts(fi, s"$dir/full_$round"), s"literal ≠ rebuild")
+          assert(e.statsOf(li) == e.statsOf(fi))
+          assert(top(li) == top(fi))
+        }
+      }
+    // the already-indexed id 2 kept its build posting only
+    assert(e.table(s"${li}_postings").filter(col("doc_id") === 2L &&
+      col("w") === "omega").isEmpty)
+    Seq(lt, nt).foreach(t => e.sql(s"DROP TABLE $t").collect())
+  }
+
+  test("a literal REFRESH MATERIALIZED VIEW starts no Spark job and " +
+      "≡ the same rows from a non-literal table ≡ a rebuild") {
+    val e = Engine.scratch(spark)
+    val u = System.nanoTime()
+    val (lt, nt, lm, nm, fm) = (s"lm_lit_$u", s"lm_nl_$u", s"lm_lmv_$u",
+      s"lm_nmv_$u", s"lm_fmv_$u")
+    // binary-exact doubles: the partials' summation order cannot drift
+    val rows0 = "('a', 1.25, 3), ('a', 2.5, NULL), ('b', 4.0, 1)"
+    def mvSql(mv: String, t: String) = s"CREATE MATERIALIZED VIEW $mv AS " +
+      "SELECT g, sum(x) AS s, min(x) AS lo, max(x) AS hi, count(y) AS c, " +
+      s"count(*) AS n FROM $t GROUP BY g"
+    Seq(lt -> lm, nt -> nm).foreach { case (t, mv) =>
+      Seq(s"CREATE TABLE $t (g STRING, x DOUBLE, y INT)",
+        s"INSERT INTO $t VALUES $rows0", mvSql(mv, t))
+        .foreach(q => e.sql(q).collect())
+    }
+    val batches = Seq(Seq(("c", 0.75, None), ("a", -2.0, Some(8))),
+      Seq(("b", 3.25, Some(6)), (null, 0.5, Some(2))))
+    batches.foreach { b =>
+      e.sql(s"INSERT INTO $lt VALUES " + b.map { case (g, x, y) =>
+        s"(${Option(g).fold("NULL")(v => s"'$v'")}, $x, " +
+          s"${y.fold("NULL")(_.toString)})" }.mkString(", ")).collect()
+      e.insertInto(nt, b.map { case (g, x, y) =>
+        spark.range(1).select(lit(g).cast("string").as("g"), lit(x).as("x"),
+          lit(y.map(Int.box).orNull).cast("int").as("y"))
+      }.reduce(_ unionByName _))
+    }
+    val (_, _, jobs) = watched {
+      assert(e.refreshMaterializedAggregate(lm) == "incremental")
+    }
+    assert(jobs == 0, s"the literal MV refresh ran $jobs jobs")
+    assert(e.refreshMaterializedAggregate(nm) == "incremental")
+    assert(EngineSpec.tempLeftovers(e.matViews(lm)._1.path).isEmpty)
+    e.sql(mvSql(fm, lt)).collect()
+    assert(e.table(lm).schema == e.table(fm).schema)
+    assert(rowStrings(e.table(lm)) == rowStrings(e.table(nm)))
+    assert(rowStrings(e.table(lm)) == rowStrings(e.table(fm)))
+    val q = s"SELECT g, sum(x) AS s, min(x) AS lo, max(x) AS hi, " +
+      s"count(y) AS c, count(*) AS n FROM $lt GROUP BY g"
+    assert(e.sql(q).collect().toSet == direct(e, q, lt))
+    Seq(fm, lm, nm, lt, nt).foreach(t => e.sql(s"DROP TABLE $t").collect())
+  }
+
+  test("a literal text refresh that fails after its postings land and " +
+      "before doclens leaves only complete part files, the dirty marker " +
+      "and a refusing REFRESH; OPTIMIZE restores ≡ a rebuild") {
+    val e = Engine.scratch(spark)
+    val u = System.nanoTime()
+    val (t, ix, full) = (s"lc_docs_$u", s"lc_tix_$u", s"lc_full_$u")
+    val dir = java.nio.file.Files.createTempDirectory("graft_litcrash")
+      .toString
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.failing.impl", classOf[FailingFileSystem].getName)
+    hc.set("fs.failing.impl.disable.cache", "true")
+    try {
+      Seq(s"CREATE TABLE $t (doc_id BIGINT, text STRING)",
+        s"INSERT INTO $t VALUES (1, 'alpha beta alpha'), (2, 'beta gamma')")
+        .foreach(q => e.sql(q).collect())
+      e.buildTextIndex(ix, t, s"failing://$dir/index")
+      e.sql(s"INSERT INTO $t VALUES (7, 'alpha omega omega'), " +
+        "(8, 'gamma eta')").collect()
+      // every file created under a `doclens` directory fails
+      FailingFileSystem.failUnder = Some("doclens")
+      val err = try intercept[Exception](
+          e.sql(s"REFRESH TEXT INDEX $ix").collect())
+        finally FailingFileSystem.failUnder = None
+      assert(err.getMessage.contains("injected"), err)
+      val path = s"$dir/index"
+      assert(e.isDirty(s"failing://$path"), "no dirty marker")
+      def files(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles.toSeq.flatMap(files) else Seq(f)
+      files(new java.io.File(path)).map(_.getName).foreach { n =>
+        assert(n.startsWith(".") || n.startsWith("_") ||
+          n == "REFRESH_DIRTY" || n.startsWith("part-"), s"stray file $n")
+      }
+      files(new java.io.File(path)).filter(_.getName.startsWith("part-"))
+        .foreach(f => graft.operators.FooterStats.fileRows(f.getPath, hc))
+      assert(spark.read.parquet(s"$path/postings")
+        .filter(col("w") === "omega").count() == 1L,
+        "the postings append did not land before the failure")
+      assert(spark.read.parquet(s"$path/doclens").count() == 2L)
+      val refused = intercept[Exception](
+        e.sql(s"REFRESH TEXT INDEX $ix").collect())
+      assert(refused.getMessage.contains("did not complete"), refused)
+      e.sql(s"OPTIMIZE TEXT INDEX $ix").collect()
+      assert(!e.isDirty(s"failing://$path"))
+      assert(e.sql(s"REFRESH TEXT INDEX $ix").head().getLong(0) == 0L)
+      e.buildTextIndex(full, t, s"$dir/full")
+      Seq("postings", "doclens", "stats", "termstats").foreach { p =>
+        assert(rowStrings(e.table(s"${ix}_$p")) ==
+          rowStrings(e.table(s"${full}_$p")), s"$p diverged")
+      }
+      assert(rowStrings(foldedImpacts(path)) ==
+        rowStrings(foldedImpacts(s"$dir/full")))
+      assert(e.bm25Search(ix, Seq("alpha", "omega"), 3).collect().toSeq ==
+        e.bm25Search(full, Seq("alpha", "omega"), 3).collect().toSeq)
+      e.sql(s"DROP TABLE $t").collect()
+    } finally {
+      hc.unset("fs.failing.impl"); hc.unset("fs.failing.impl.disable.cache")
+    }
+  }
+
 }
 
 object EngineSpec {
@@ -2925,6 +3099,15 @@ object EngineSpec {
   def swapLeftovers(path: String): Seq[String] =
     Seq("_refresh_tmp", "_opt_tmp", "_opt_old").map(path + _)
       .filter(new java.io.File(_).exists)
+
+  /** Uncommitted driver-side parquet writes (hidden temp files) left
+    * anywhere under `path`. */
+  def tempLeftovers(path: String): Seq[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      Option(f.listFiles).fold(Seq(f))(_.toSeq.flatMap(walk))
+    walk(new java.io.File(path)).map(_.getName)
+      .filter(_.contains("graft-tmp"))
+  }
 }
 
 /** A local filesystem under a custom scheme, registered only through
@@ -2934,4 +3117,51 @@ object EngineSpec {
 class ProbeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "probe"
   override def getUri: java.net.URI = java.net.URI.create("probe:///")
+}
+
+/** A local filesystem under the `failing` scheme whose `create` throws
+  * for a file directly under a directory named
+  * [[FailingFileSystem.failUnder]]: the fault of a write that dies
+  * part-way through a multi-file commit. */
+class FailingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, LocatedFileStatus, Path,
+    RemoteIterator}
+  override def getScheme: String = "failing"
+  override def getUri: java.net.URI = java.net.URI.create("failing:///")
+  // the local statuses load their permissions through a `file:` URI;
+  // a listing states none, as Spark's own listing does
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    val it = listStatus(f).iterator
+    new RemoteIterator[LocatedFileStatus] {
+      def hasNext: Boolean = it.hasNext
+      def next(): LocatedFileStatus = {
+        val s = it.next()
+        new LocatedFileStatus(s.getLen, s.isDirectory, s.getReplication,
+          s.getBlockSize, s.getModificationTime, 0L, null, null, null, null,
+          s.getPath, false, false, false, null)
+      }
+    }
+  }
+  private def check(f: Path): Unit =
+    if (FailingFileSystem.failUnder.contains(f.getParent.getName))
+      throw new java.io.IOException(s"injected failure creating $f")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    check(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    check(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}
+
+object FailingFileSystem {
+  @volatile var failUnder: Option[String] = None
 }

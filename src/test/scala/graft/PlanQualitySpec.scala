@@ -576,6 +576,82 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("bm25Search pushes the term filter into the scan of postings a " +
+      "literal refresh wrote from the driver, whose footers carry the " +
+      "w range row-group pruning reads") {
+    val e = Engine.scratch(spark)
+    val u = System.nanoTime()
+    val (t, ix) = (s"pq_lit_docs_$u", s"pq_lit_tix_$u")
+    Seq(s"CREATE TABLE $t (doc_id BIGINT, text STRING)",
+      s"INSERT INTO $t VALUES (1, 'join stream join'), (2, 'vector scan')",
+      s"CREATE TEXT INDEX $ix ON $t (text)").foreach(q => e.sql(q).collect())
+    val post = s"${e.textIndexMeta(ix)._1}/postings"
+    def parts = new java.io.File(post).listFiles.map(_.getName)
+      .filter(_.startsWith("part-")).toSet
+    val built = parts
+    Seq(s"INSERT INTO $t VALUES (9, 'zulu join alpha'), (10, 'vector mike')",
+      s"REFRESH TEXT INDEX $ix").foreach(q => e.sql(q).collect())
+    val written = parts -- built
+    assert(written.size == 1, s"refresh wrote $written")
+    val probe = e.bm25Matched(ix, Seq("join", "vector"))
+    val postScan = scans(probe).filter(
+      _.metadata.getOrElse("Location", "").contains("postings"))
+    assert(postScan.nonEmpty, "no scan over the postings artifact")
+    assert(postScan.head.relation.location.inputFiles
+      .exists(_.endsWith(written.head)), "the refreshed file is not scanned")
+    val pushed = postScan.head.metadata.getOrElse("PushedFilters", "[]")
+    assert(pushed.contains("In(w") || pushed.contains("EqualTo(w"),
+      s"term filter not pushed to the postings scan: $pushed")
+    // the driver-written file states its w range per row group, sorted
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$post/${written.head}"),
+        spark.sparkContext.hadoopConfiguration))
+    try {
+      import scala.jdk.CollectionConverters._
+      val ws = reader.getFooter.getBlocks.asScala.toSeq.map(_.getColumns
+        .asScala.find(_.getPath.toDotString == "w").get.getStatistics)
+      assert(ws.nonEmpty && ws.forall(_.hasNonNullValue))
+      assert(ws.head.minAsString == "alpha" && ws.last.maxAsString == "zulu")
+    } finally reader.close()
+    assert(probe.select("doc_id").collect().map(_.getLong(0)).toSet ==
+      Set(1L, 2L, 9L, 10L))
+    e.sql(s"DROP TABLE $t").collect()
+  }
+
+  test("a covered aggregate over a refreshed MV is ONE Aggregate over the " +
+      "MV's stored partials (no fold below it), equal to the direct plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val e = Engine.scratch(spark)
+    val u = System.nanoTime()
+    val (t, mv) = (s"pq_mvb_$u", s"pq_mv_$u")
+    Seq(s"CREATE TABLE $t (g STRING, h STRING, x DOUBLE)",
+      s"INSERT INTO $t VALUES ('a', 'p', 1.5), ('a', 'q', 2.25), " +
+        "('b', 'p', 4.0)",
+      s"CREATE MATERIALIZED VIEW $mv AS SELECT g, h, sum(x) AS s, " +
+        s"min(x) AS lo, count(*) AS n FROM $t GROUP BY g, h",
+      s"INSERT INTO $t VALUES ('a', 'p', 0.5), ('c', 'q', -1.0)",
+      s"REFRESH MATERIALIZED VIEW $mv").foreach(q => e.sql(q).collect())
+    val path = e.matViews(mv)._1.path
+    Seq(s"SELECT g, sum(x) AS s, min(x) AS lo, count(*) AS n FROM $t " +
+        "GROUP BY g",
+      s"SELECT h, avg(x) AS a FROM $t WHERE g = 'a' GROUP BY h").foreach { q =>
+      val plan = castToImpl(e.sql(q)).queryExecution.optimizedPlan
+      val aggs = plan.collect { case a: Aggregate => a }
+      assert(aggs.size == 1, s"not one Aggregate:\n$plan")
+      val leaves = aggs.head.collectLeaves()
+      assert(leaves.nonEmpty && leaves.forall {
+        case r: LogicalRelation => r.relation.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.rootPaths.forall(_.toString.contains(path))
+        case _ => false
+      }, s"the Aggregate does not sit on the MV scan:\n$plan")
+      assert(e.sql(q).collect().toSet == direct(e, q, t), q)
+    }
+    e.sql(s"DROP TABLE $mv").collect(); e.sql(s"DROP TABLE $t").collect()
+  }
+
   test("q159 covered aggregate scans ONLY the MV artifact (never the " +
       "base fact files)") {
     val df = SparkEntry.queries("q159_matview_agg")(spark, sf)

@@ -16,6 +16,28 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("NamedQuery.inParallel fails fast: the first failure is rethrown " +
+      "at once and its still-running siblings are cancelled") {
+    val interrupted = new java.util.concurrent.CountDownLatch(1)
+    val started = System.nanoTime()
+    val err = intercept[IllegalStateException](
+      operators.NamedQuery.inParallel(
+        () => try Thread.sleep(60000L) catch {
+          case _: InterruptedException => interrupted.countDown()
+        },
+        () => throw new IllegalStateException("second task failed")))
+    assert(err.getMessage == "second task failed")
+    assert(interrupted.await(10, java.util.concurrent.TimeUnit.SECONDS),
+      "the running sibling was not cancelled")
+    assert(System.nanoTime() - started < 30L * 1000000000L)
+    // and a run without failure returns after every task completed
+    val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    operators.NamedQuery.inParallel((1 to 3).map(i => () => {
+      Thread.sleep(20L * i); done.incrementAndGet(); ()
+    }): _*)
+    assert(done.get == 3)
+  }
+
   test("q01_scan returns all 5 regions") {
     assert(run("q01_scan").count() == 5)
   }

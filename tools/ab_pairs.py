@@ -4,7 +4,7 @@
 Usage:
     python3 tools/ab_pairs.py <parent_checkout> <change_checkout>
         --workload W --pairs N --seed S [--seconds 10]
-        [--detail index.text_refresh_s,mv.refresh_s] [--out pairs.json]
+        [--detail index.text_refresh_s,'op.*'] [--out pairs.json]
 
 Each checkout is a full source tree with its own `perfbench/` (make the
 parent copy with `git archive` or `git clone`). Pair i runs
@@ -21,8 +21,10 @@ only when the change wins at least nine tenths of the pairs AND the
 medians differ by more than the parent's interquartile range; "worse
 beyond bound" when the change's median is worse than the parent's by
 more than the metric's bound; otherwise "no claim". `failed_frac` and
-any `--detail` figures (from the run's detail line) are printed as
-medians. Beside the verdict, the "beyond bound" column says whether the
+the `--detail` figures (from the run's detail line) are printed as
+medians. `--detail` takes names or shell-style patterns (`op.*`); without
+it a workload prints its per-operation figures (`DEFAULT_DETAIL`), so a
+plain run always shows the figures a claim is attributed to. Beside the verdict, the "beyond bound" column says whether the
 change of the medians exceeds the metric's bound in either direction:
 "better" or "worse" when |change| > bound, "within" otherwise, "-" for a
 metric with no bound. A claimed gain has to clear both: the pair rule's
@@ -30,11 +32,20 @@ metric with no bound. A claimed gain has to clear both: the pair rule's
 edits it.
 """
 import argparse
+import fnmatch
 import json
 import os
 import statistics
 import subprocess
 import sys
+
+
+# The per-operation detail figures each workload prints by default.
+DEFAULT_DETAIL = {
+    "dml_mixed": "index.text_refresh_s,mv.refresh_s,mv.covered_read_s,"
+                 "dml.merge_s",
+    "pipeline": "op.*",
+}
 
 
 def quartiles(xs):
@@ -80,8 +91,9 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, default=None,
                     help="run length (default: BENCHMARK.json run_seconds)")
-    ap.add_argument("--detail", default="",
-                    help="comma-separated detail figures to report")
+    ap.add_argument("--detail", default=None,
+                    help="comma-separated detail figures or patterns to "
+                         "report (default: the workload's DEFAULT_DETAIL)")
     ap.add_argument("--no-warmup", dest="warmup", action="store_false")
     ap.add_argument("--out", help="write every run's figures here as JSON")
     args = ap.parse_args()
@@ -142,7 +154,14 @@ def main():
     for side in ("parent", "change"):
         ff = statistics.median(r["failed_frac"] for r in runs[side])
         print(f"failed_frac median {side}: {ff:g}")
-    for d in filter(None, args.detail.split(",")):
+    detail = (DEFAULT_DETAIL.get(args.workload, "")
+              if args.detail is None else args.detail)
+    seen = sorted({k for s in runs for r in runs[s] for k in r["detail"]})
+    names = []
+    for pat in filter(None, detail.split(",")):
+        hits = fnmatch.filter(seen, pat) or [pat]
+        names += [d for d in hits if d not in names]
+    for d in names:
         vals = {s: [r["detail"][d] for r in runs[s] if d in r["detail"]]
                 for s in runs}
         meds = {s: (statistics.median(v) if v else float("nan"))
